@@ -55,24 +55,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.maxFields", "200")
-      // 50 queries × ~5-10 codegen stages each blows the DEFAULT
-      // 100-entry generated-class cache: every warm run was paying
-      // full Janino recompiles of its whole pipeline (the 128-column
-      // MinHash aggregate alone is seconds of compile), which showed
-      // up as phantom 3-7× "regressions" that no isolated profile
-      // could reproduce. Static conf — must be set before the first
-      // session is created.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     // Neutral warm-up: plain counts over the raw inputs touch the JVM,
     // codegen, and parquet footers without favoring any query's plan.
     try {

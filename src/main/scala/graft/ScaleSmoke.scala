@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Dedup, Multimodal, Sampling}
@@ -21,17 +21,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
     def sectionEnabled(name: String): Boolean = only.forall(_ == name)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.maxFields", "200")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     val docs0 = Tables.documents(spark, "/root/testdata/sf0.1")
 
     def scaled(m: Int): DataFrame =

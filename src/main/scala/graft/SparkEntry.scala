@@ -28,39 +28,34 @@ object SparkEntry {
 
   private def samples(s: SparkSession, dir: String): DataFrame = Tables.samples(s, dir)
 
-  /** Clone session whose shuffle width derives from the samples
-    * SOURCE's size instead of the session constant (guide §2.2,
-    * scale-adaptive partitioning — the same bytes-derived sizing the
-    * store layout and the streaming state widths use). The pure
-    * PromQL evaluation entries run multi-exchange aggregate/join
-    * pipelines over the samples table; at small per-query input the
-    * session-wide width is pure task-scheduling tax that AQE's
-    * parallelism-first coalescing deliberately keeps (measured:
-    * promql_group_left 1.30 s at width 32 vs 0.51 s at width 4 on the
-    * identical plan; estimator/read/ts shapes flat, never worse). Cap
-    * = the session's own width, so at cluster scale (source ≫
-    * cap·target bytes) the width is exactly today's; conf
-    * spark.graft.query.partitionBytes overrides the per-partition
-    * target. Memoized per (session, dir) so a bench pass reuses one
-    * clone; the clone shares the SparkContext, the cache manager
-    * (sqlContext.clearCache() on any session clears it) and the
-    * catalog-free operator surface. */
+  /** Clone session whose shuffle width derives from the source
+    * table's bytes ([[Width]], 512 KiB per task, floor min(cap, 4))
+    * instead of the session constant. The pure PromQL evaluation
+    * entries run multi-exchange aggregate/join pipelines over the
+    * samples table; at small per-query input the session-wide width
+    * is pure task-scheduling tax that AQE's parallelism-first
+    * coalescing deliberately keeps (measured: promql_group_left
+    * 1.30 s at width 32 vs 0.51 s at width 4 on the identical plan;
+    * estimator/read/ts shapes flat, never worse). Cap = the session's
+    * own width, so a cluster-scale source — or one whose size cannot
+    * be listed — keeps exactly today's width.
+    *
+    * Serves only this object's bench and oracle entries; the serving
+    * path never calls it. That is why the memo is unbounded: it holds
+    * one clone per (session, dir, table) a bench pass touches. Each
+    * clone shares the SparkContext and the cache manager
+    * (sqlContext.clearCache() on any session clears it). */
   private val querySessions =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), SparkSession]
   private def querySession(s: SparkSession, dir: String,
                            table: String = "events.parquet"): SparkSession =
     querySessions.computeIfAbsent((s, dir, table), _ => {
       val cap = s.sessionState.conf.numShufflePartitions
-      val target = s.conf.getOption("spark.graft.query.partitionBytes")
-        .map(_.toLong).getOrElse(512L << 10)
-      val bytes = try {
-        val p = new org.apache.hadoop.fs.Path(dir, table)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p).getLen
-      } catch { case _: Throwable => Long.MaxValue }
-      val w = math.max(math.min(cap, 4).toLong,
-        math.min(cap.toLong, (bytes + target - 1) / target)).toInt
+      val bytes = Width.dataBytes(s.sparkContext.hadoopConfiguration,
+        Seq(new org.apache.hadoop.fs.Path(dir, table)))
       val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", w.toString)
+      ss.conf.set("spark.sql.shuffle.partitions",
+        Width.of(bytes, Width.QueryTarget, 4, cap).toString)
       ss
     })
 

@@ -634,14 +634,10 @@ object SamplesStore {
     * an overestimate degrades to today's behavior. */
   private def layout(samples: DataFrame): DataFrame = {
     val spark = samples.sparkSession
-    val target = spark.conf.getOption("spark.graft.maintenance.partitionBytes")
-      .map(_.toLong).getOrElse(64L << 20)
     val cap = spark.sessionState.conf.numShufflePartitions
-    val floor = math.min(cap, 32)
     val est = samples.queryExecution.optimizedPlan.stats.sizeInBytes
-    val width = est.min(BigInt(cap) * target).toLong match {
-      case b => math.max(floor.toLong, math.min(cap.toLong, (b + target - 1) / target)).toInt
-    }
+    val width = graft.Width.of(Some(est.min(BigInt(Long.MaxValue)).toLong),
+      graft.Width.MaintenanceTarget, 32, cap)
     samples
       .withColumn("date", expr("ts_us DIV 1000000 DIV 86400 * 86400"))
       .repartition(width, col("date"))
@@ -1559,9 +1555,9 @@ object StreamIngest {
 
   /** Session for a fresh stateful stream whose shuffle/state width
     * derives from the SOURCE's size instead of the session constant
-    * (guide §2.2: scale-adaptive partitioning). Streaming aggregates
-    * and GroupState operators get NO AQE coalescing — every
-    * micro-batch pays one task + one state-store open/commit per
+    * ([[graft.Width]], 1 MiB of source per state partition).
+    * Streaming aggregates and GroupState operators get NO AQE
+    * coalescing — every micro-batch pays one task + one state-store open/commit per
     * configured shuffle partition regardless of data volume (measured
     * ~0.02 s/partition/batch at local[32]: the same one-batch
     * memory-sink aggregate runs 1.5 s at width 32 and 0.8 s at width
@@ -1580,20 +1576,11 @@ object StreamIngest {
   private[graft] def streamSession(spark: SparkSession, srcDir: String,
                                    floorCap: Int = 4): SparkSession = {
     val cap = spark.sessionState.conf.numShufflePartitions
-    val target = spark.conf.getOption("spark.graft.stream.statePartitionBytes")
-      .map(_.toLong).getOrElse(1L << 20)
-    val bytes = try {
-      val p = new org.apache.hadoop.fs.Path(srcDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).iterator
-        .filter(f => f.isFile && !f.getPath.getName.startsWith(".")
-          && !f.getPath.getName.startsWith("_"))
-        .map(_.getLen).sum
-    } catch { case _: Throwable => Long.MaxValue }
-    val width = math.max(math.min(cap, floorCap).toLong,
-      math.min(cap.toLong, (bytes + target - 1) / target)).toInt
+    val bytes = graft.Width.dataBytes(spark.sparkContext.hadoopConfiguration,
+      Seq(new Path(srcDir)))
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", width.toString)
+    ss.conf.set("spark.sql.shuffle.partitions",
+      graft.Width.of(bytes, graft.Width.StreamStateTarget, floorCap, cap).toString)
     ss
   }
 

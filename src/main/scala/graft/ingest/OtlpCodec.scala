@@ -326,18 +326,6 @@ object OtlpCodec {
         (resource ++ scopeLabels ++ attrs).sorted.distinct, 1.0))
   }
 
-  /** Count a histogram/summary message's data points (field 1)
-    * without decoding them — the skip ledger's unit. */
-  private def countPoints(r: ProtoWire.Reader): Long = {
-    var n = 0L
-    while (r.hasMore) {
-      val (f, w) = r.readTag()
-      if (f == 1 && w == 2) { r.readMessage(); n += 1 }
-      else r.skip(w)
-    }
-    n
-  }
-
   private def readMetric(r: ProtoWire.Reader, resource: List[String],
                          st: DecodeState): Unit = {
     var name = ""

@@ -133,10 +133,6 @@ object ProtoWire {
     def writeDoubleField(field: Int, v: Double): Unit =
       writeFixed64Field(field, java.lang.Double.doubleToRawLongBits(v))
 
-    /** Raw bytes, NO tag and NO length — for codecs that lay out
-      * their own framing (HistChunks' length-prefixed samples). */
-    def writeRaw(bytes: Array[Byte]): Unit = out.write(bytes, 0, bytes.length)
-
     /** Raw little-endian double, NO tag — the packed-repeated
       * element form (proto3 packed doubles are back-to-back fixed64
       * payloads inside one length-delimited field). */

@@ -170,32 +170,18 @@ object RollupStore {
   }
 
   /** Input-size-derived shuffle width for a maintenance rebuild
-    * (guide §2: derive partitioning from input size, never a local
-    * constant): ceil(inputBytes / spark.graft.maintenance.partitionBytes)
-    * clamped to [1, session shuffle partitions]. The cap keeps a bulk
-    * rebuild at the cluster's configured width; the floor keeps the
-    * common one-day incremental slice from fanning tiny row counts
-    * across every configured partition (pure task-scheduling tax —
-    * measured 2× on the bench's 5k-row rebuild). partitionBytes
-    * defaults to 64 MiB (parquet-compressed input per task ≈ one
-    * comfortable in-memory working set after decode); production
-    * deployments tune it with the same conf they size
-    * `spark.sql.shuffle.partitions` with. */
-  private[graft] def scaledShuffleParts(spark: SparkSession, fs: FileSystem,
-                                        root: Path,
-                                        files: Seq[String]): Int = {
-    val target = spark.conf.getOption("spark.graft.maintenance.partitionBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    val bytes = files.groupBy(_.takeWhile(_ != '/')).iterator.map {
-      case (day, fls) =>
-        val names = fls.map(_.drop(day.length + 1)).toSet
-        try fs.listStatus(new Path(root, day)).iterator
-          .filter(s => names.contains(s.getPath.getName)).map(_.getLen).sum
-        catch { case _: java.io.FileNotFoundException => 0L }
-    }.sum
-    val cap = spark.sessionState.conf.numShufflePartitions
-    math.max(1L, math.min(cap.toLong, (bytes + target - 1) / target)).toInt
-  }
+    * ([[graft.Width]] at 64 MiB of source files per task, floor 1).
+    * The cap keeps a bulk rebuild at the cluster's configured width;
+    * the floor lets the common one-day incremental slice run narrow
+    * instead of fanning tiny row counts across every configured
+    * partition (pure task-scheduling tax — measured 2× on the bench's
+    * 5k-row rebuild). */
+  private[graft] def scaledShuffleParts(spark: SparkSession, root: Path,
+                                        files: Seq[String]): Int =
+    graft.Width.of(
+      graft.Width.dataBytes(spark.sparkContext.hadoopConfiguration,
+        files.map(new Path(root, _))),
+      graft.Width.MaintenanceTarget, 1, spark.sessionState.conf.numShufflePartitions)
 
   /** md5 digest of a day's sorted source-file list — the exact
     * invalidation key: any append/compact/delete that touches the
@@ -262,7 +248,7 @@ object RollupStore {
           // slice is one appended day, which must not fan out across
           // the full configured shuffle width — while a bulk rebuild
           // at cluster scale still caps at the session's own setting.
-          val parts = scaledShuffleParts(spark, srcFs, srcRoot, srcFiles)
+          val parts = scaledShuffleParts(spark, srcRoot, srcFiles)
           // Per-second dedup (the read path's GROUP BY max) computed
           // ON the bucket-keyed partitioning instead of its own
           // t_sec-keyed exchange: within (date, metric, labels,

@@ -58,9 +58,6 @@ object TextAnalysis {
 
   private def tokensCol: Column = split(col("text"), " ")
 
-  private def inList(words: Seq[String]): String =
-    words.map(w => s"'$w'").mkString("(", ", ", ")")
-
   private def withToks(df: DataFrame): DataFrame =
     if (df.columns.contains("toks")) df else df.withColumn("toks", tokensCol)
 

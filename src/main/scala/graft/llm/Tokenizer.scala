@@ -98,10 +98,6 @@ object Tokenizer {
         }
       })
 
-  /** Single-merge form of [[applyMerges]]. */
-  private[llm] def applyMerge(syms: Column, a: String, b: String): Column =
-    applyMerges(syms, Seq((a, b)))
-
   /** Greedily split a RANKED merge list into maximal runs of
     * pairwise-disjoint merges — each run can apply as one combined
     * [[applyMerges]] scan with sequential semantics. A merge starts

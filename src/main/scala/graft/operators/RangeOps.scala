@@ -41,33 +41,12 @@ object RangeOps {
     * count_values) still add their own exchange, as before. The
     * regrouping cannot change results: downstream aggregates are
     * max/min/count/arg-max or sums of 2-decimal values rounded
-    * orders-of-magnitude away from any half-up midpoint.
-    *
-    * The raw-row exchange trades away the map-side partial aggregate:
-    * measured at 16M rows with one series carrying 50% of rows AND 4×
-    * sub-second duplication (the HA-pair/retry-heavy adversarial
-    * shape), this form runs ~1.4× SLOWER than dedup-then-repartition
-    * (the hot series' raw rows fold in one task), while at the
-    * duplication factor ≤2 of a normal remote-write corpus it is the
-    * faster shape (one exchange of ~the same bytes instead of two).
-    * `spark.graft.seriesKeyedDedup=false` flips a dup-heavy
-    * deployment to the partial-agg-first form — downstream still sees
-    * the same (metric, labels) partitioning either way, so plans and
-    * results are unchanged. */
+    * orders-of-magnitude away from any half-up midpoint. See
+    * [[SeriesRead.seriesMax]] for the dedup kernel and its
+    * measured trade against a partial-aggregate-first form. */
   def dedupPerSecond(samples: DataFrame): DataFrame =
-    if (samples.sparkSession.conf.getOption("spark.graft.seriesKeyedDedup")
-          .forall(_.toBoolean))
-      samples
-        .withColumn("t_sec", Downsample.bucketSec("ts_us", 1L))
-        .repartition(col("metric"), col("labels"))
-        .groupBy(col("metric"), col("labels"), col("t_sec"))
-        .agg(max(col("value")).as("value"))
-    else
-      samples
-        .withColumn("t_sec", Downsample.bucketSec("ts_us", 1L))
-        .groupBy(col("metric"), col("labels"), col("t_sec"))
-        .agg(max(col("value")).as("value"))
-        .repartition(col("metric"), col("labels"))
+    SeriesRead.seriesMax(
+      samples.withColumn("t_sec", Downsample.bucketSec("ts_us", 1L)), "value")
 
   /** [[dedupPerSecond]] WITHOUT the series pre-partitioning — for
     * consumers whose first downstream key set is NOT series-subsumed

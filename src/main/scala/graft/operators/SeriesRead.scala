@@ -80,30 +80,35 @@ object SeriesRead {
     var df = timeBound(samples, q.startMs, q.endMs)
     df = df.filter(Matchers.compile(q.matchers, ignoreLabel))
     val interval = math.max(Downsample.hintIntervalSec(q.stepMs, q.rangeMs, ignoreHints), 1L)
-    // partitioned BY SERIES: (metric, labels) is a subset of this
-    // groupBy's keys AND of every downstream consumer's — the
-    // [[assemble]]/[[assembleChunked]] per-series collects and the
-    // serve paths' per-series windows — so a select → assemble →
-    // encode read pipeline plans ONE exchange where it used to
-    // re-shuffle between the (…, t_sec) dedup grain and the series
-    // grain. Regrouping is result-invariant: the aggregate is max,
-    // and the assembly sort_array orders points explicitly.
-    // spark.graft.seriesKeyedDedup=false restores the partial-agg-
-    // first form for dup-heavy deployments (same partitioning out —
-    // see RangeOps.dedupPerSecond for the measured trade).
-    val keyed = df.withColumn("t_sec", Downsample.bucketSec("ts_us", interval))
-    if (samples.sparkSession.conf.getOption("spark.graft.seriesKeyedDedup")
-          .forall(_.toBoolean))
-      keyed
-        .repartition(col("metric"), col("labels"))
-        .groupBy(col("metric"), col("labels"), col("t_sec"))
-        .agg(max(col("value")).as("max_value"))
-    else
-      keyed
-        .groupBy(col("metric"), col("labels"), col("t_sec"))
-        .agg(max(col("value")).as("max_value"))
-        .repartition(col("metric"), col("labels"))
+    // the [[assemble]]/[[assembleChunked]] per-series collects and
+    // the serve paths' per-series windows reuse the kernel's series
+    // partitioning, so a select → assemble → encode read pipeline
+    // plans ONE exchange. Regrouping is result-invariant: the
+    // aggregate is max, and the assembly sort_array orders points
+    // explicitly.
+    seriesMax(df.withColumn("t_sec", Downsample.bucketSec("ts_us", interval)), "max_value")
   }
+
+  /** The series-keyed dedup kernel shared by every read shape
+    * (/read's [[selectKeyed]], the ts_* family's
+    * RangeOps.dedupPerSecond and PromQL's windowed evaluation):
+    * hash-partition raw rows BY SERIES, then one per-(series, t_sec)
+    * max of `value` named `out`. The caller derives `t_sec`. Every
+    * downstream consumer keys on a superset of (metric, labels), so
+    * the whole pipeline plans this ONE exchange.
+    *
+    * The raw-row exchange trades away the map-side partial aggregate:
+    * measured at 16M rows with one series carrying 50% of rows AND 4×
+    * sub-second duplication (the HA-pair/retry-heavy adversarial
+    * shape), this form runs ~1.4× SLOWER than dedup-then-repartition
+    * (the hot series' raw rows fold in one task), while at the
+    * duplication factor ≤2 of a normal remote-write corpus it is the
+    * faster shape (one exchange of ~the same bytes instead of two). */
+  def seriesMax(keyed: DataFrame, out: String): DataFrame =
+    keyed
+      .repartition(col("metric"), col("labels"))
+      .groupBy(col("metric"), col("labels"), col("t_sec"))
+      .agg(max(col("value")).as(out))
 
   /** selectKeyed with the series key flattened to scalar labels_str —
     * the oracle-facing row shape of the reference's read SQL. */

@@ -72,13 +72,6 @@ object Alerting {
         col("t"), lit(1000000L).as("v_e6"))
   }
 
-  /** [[alerts]] over a samples store. */
-  def alertsFromStore(spark: SparkSession, storePath: String,
-                      rule: AlertRule, startSec: Long,
-                      endSec: Long): DataFrame =
-    alerts(SamplesStore.read(spark, storePath), rule, startSec, endSec,
-      stale = RemoteWrite.staleStoreDf(spark, storePath))
-
   /** The current alert set at the DATA edge (store time, like the
     * recording watermark): each rule evaluated at its latest complete
     * grid point, answering (alert labels, state) rows — what

@@ -357,17 +357,6 @@ object HttpServe {
       case c             => c.toString
     }
 
-    // text EXPOSITION label-value escaping (the format /federate
-    // emits) knows exactly three escapes — \\, \", \n; a JSON-style
-    // \u00XX would fail the downstream Prometheus's parser and one
-    // bad label value would break the whole federation scrape
-    def expoEsc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '"'  => "\\\""
-      case '\n' => "\\n"
-      case c    => c.toString
-    }
-
     def jsonList(values: Seq[String]): Array[Byte] =
       values.map(v => s""""${esc(v)}"""").mkString(
         """{"status":"success","data":[""", ",", "]}").getBytes(UTF_8)

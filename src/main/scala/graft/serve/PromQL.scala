@@ -3154,10 +3154,6 @@ object PromQL {
           " * 1000000 + 0.5) AS BIGINT)").as("v_e6"))
   }
 
-  /** Matcher-filtered, time-bounded, per-second-deduped scan — the
-    * same select shape as the remote-read path (pushed ts_us bounds +
-    * day-partition pruning via SeriesRead.timeBound, per-second
-    * GROUP BY max like read.go:58). */
   /** Matcher-filtered window samples deduped to the per-second max,
     * partitioned BY SERIES: the ONE exchange every evaluation shape
     * downstream needs. Hash-partitioning on (metric, labels) is a
@@ -3180,26 +3176,10 @@ object PromQL {
     * below the half-up midpoint, so summation order cannot flip it. */
   private def dedupedWindow(samples: DataFrame, matchers: Seq[LabelMatcher],
                             loSec: Long, hiSec: Long,
-                            ignoreLabel: Option[String]): DataFrame = {
-    // spark.graft.seriesKeyedDedup=false restores the partial-agg-
-    // first form for dup-heavy deployments (same (metric, labels)
-    // partitioning out — see RangeOps.dedupPerSecond for the
-    // measured trade).
-    val bounded = SeriesRead.timeBound(samples, loSec * 1000L, hiSec * 1000L)
+                            ignoreLabel: Option[String]): DataFrame =
+    SeriesRead.seriesMax(SeriesRead.timeBound(samples, loSec * 1000L, hiSec * 1000L)
       .filter(Matchers.compilePromQL(matchers, ignoreLabel))
-      .withColumn("t_sec", expr("ts_us DIV 1000000"))
-    if (samples.sparkSession.conf.getOption("spark.graft.seriesKeyedDedup")
-          .forall(_.toBoolean))
-      bounded
-        .repartition(col("metric"), col("labels"))
-        .groupBy(col("metric"), col("labels"), col("t_sec"))
-        .agg(max(col("value")).as("value"))
-    else
-      bounded
-        .groupBy(col("metric"), col("labels"), col("t_sec"))
-        .agg(max(col("value")).as("value"))
-        .repartition(col("metric"), col("labels"))
-  }
+      .withColumn("t_sec", expr("ts_us DIV 1000000")), "value")
 
   /** Explode each deduped sample onto the grid steps whose window
     * holds it, then one (series, t) aggregate. k-bound arithmetic is

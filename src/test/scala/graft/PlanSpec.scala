@@ -139,6 +139,43 @@ class PlanSpec extends SparkSpecBase {
     assert(!p.contains("Join"), s"PromQL plan must be join-free:\n$p")
   }
 
+  test("series-keyed dedup: /read and rate() plan ONE (metric, labels) exchange below the dedup aggregate") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    spark.catalog.clearCache()
+    val path = "/tmp/graft_test/plan_dedup_kernel"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    SamplesStore.write(Tables.samples(spark, Sf), path)
+    def exchangeKeys(df: org.apache.spark.sql.DataFrame, what: String): Seq[Seq[String]] = {
+      val p = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case other => other
+      }
+      // the per-(series, t_sec) max — the dedup kernel's aggregate
+      val dedup = p.collect {
+        case a: HashAggregateExec
+            if a.groupingExpressions.map(_.name) == Seq("metric", "labels", "t_sec") &&
+               a.aggregateExpressions.exists(_.aggregateFunction.prettyName == "max") => a
+      }
+      assert(dedup.nonEmpty, s"$what: no dedup aggregate in\n$p")
+      dedup.head.collect { case e: ShuffleExchangeExec => e.outputPartitioning }.map {
+        case h: HashPartitioning => h.expressions.map(_.sql)
+        case other => Seq(other.toString)
+      }
+    }
+    val q = ReadQuery(1704499200000L, 1704585599000L, Seq(Matchers.eq("__name__", "click")))
+    val read = SeriesRead.assemble(SeriesRead.selectKeyed(SamplesStore.read(spark, path), q))
+    assert(exchangeKeys(read, "/read") == Seq(Seq("metric", "labels")))
+    val e = graft.serve.PromQL.parse("rate(click[5m])").getOrElse(sys.error("must parse"))
+    val rate = graft.serve.PromQL.eval(SamplesStore.read(spark, path), e,
+      1704499200L, 1704585600L, 900L)
+    assert(exchangeKeys(rate, "rate(click[5m])") == Seq(Seq("metric", "labels")))
+  }
+
   test("read path scans only the columns it needs") {
     // other suites cache the samples view; drop caches so the
     // assertions see the parquet scan, not an InMemoryTableScan
