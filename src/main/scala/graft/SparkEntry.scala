@@ -685,8 +685,8 @@ object SparkEntry {
 
     // Day-selective compaction — the serving store's actual merge
     // path (maybeCompact): only day partitions over the file-count
-    // threshold rewrite, behind per-day crash-safe swaps; results
-    // invariant. At 100 TB this is O(fragmented days), never the
+    // threshold rewrite, published by one atomic manifest commit;
+    // results invariant. At 100 TB this is O(fragmented days), never the
     // whole-store rewrite above.
     "store_compact_days" -> ((s, dir) => {
       val path = workDir("compactdays", dir)

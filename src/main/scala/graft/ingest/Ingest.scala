@@ -148,7 +148,8 @@ object Ingest {
   *    and let GC reclaim them after `GcGraceMs`. A reader that
   *    planned on manifest G keeps scanning G's files successfully
   *    while G+1 lands; it must only finish within the grace window
-  *    (the Iceberg/Delta snapshot-expiry contract).
+  *    (the Iceberg/Delta snapshot-expiry contract). The offline
+  *    [[compact]] alone reclaims at once (grace 0).
   */
 object SamplesStore {
   private val DaySec = 86400L
@@ -184,34 +185,32 @@ object SamplesStore {
     *
     * MUTATION lock — one exclusive lock per store: the HTTP front
     * door serves handlers concurrently, and two Spark jobs staging
-    * into the same directory tree would race their staging dirs and
-    * manifest generations. Mutations serialize per store within this
-    * JVM (the serving process is one JVM, like the reference's one
-    * Go process in front of ClickHouse); their expensive distributed
-    * phases (compaction's STAGE) run OUTSIDE it.
+    * into the same directory tree would race their manifest
+    * generations. Mutations serialize per store within this JVM (the
+    * serving process is one JVM, like the reference's one Go process
+    * in front of ClickHouse); their expensive distributed phases
+    * (compaction's STAGE) run OUTSIDE it.
     *
     * VISIBILITY lock — a fair read-write lock. Snapshot manifests
-    * carry almost all of the visibility story (readers plan one
-    * committed snapshot with no lock at all), so the write side
-    * survives in exactly two places: the grace-expired GC's file
-    * deletions (taken with a BOUNDED tryLock — GC defers to a
-    * long-running reader, never the reverse) and [[compact]]'s
-    * offline whole-store directory swap. [[readLocked]] (the serving
-    * `/read`) holds the READ side for its whole query execution,
-    * which lets even a grace-0 force-expiry never yank files from an
-    * in-flight in-JVM plan; out-of-process readers rely on the grace
-    * window instead (they cannot take an in-JVM lock). Lock order is
-    * always mutation → visibility, and readers take only the
-    * visibility side, so no cycle exists. Bare [[read]] is entirely
-    * lock-free. */
+    * carry the visibility story (readers plan one committed snapshot
+    * with no lock at all), so the write side has exactly one taker:
+    * the grace-expired GC's file deletions, taken with a BOUNDED
+    * tryLock (GC defers to a long-running reader, never the reverse).
+    * [[readLocked]] (the serving `/read`) holds the READ side for its
+    * whole query execution, which lets even a grace-0 force-expiry
+    * never yank files from an in-flight in-JVM plan; out-of-process
+    * readers rely on the grace window instead (they cannot take an
+    * in-JVM lock). Lock order is always mutation → visibility, and
+    * readers take only the visibility side, so no cycle exists. Bare
+    * [[read]] is entirely lock-free. */
   /** EVERY lock map keys through this normalization. Store paths
     * reach the lock sites in two spellings — the caller's raw string
     * (`/tmp/store`, what `readLocked` sees) and filesystem-qualified
     * (`file:/tmp/store`, what `fs.listStatus` children report via
     * `.getParent`) — and `new Path(path).toString` preserves that
     * difference, so keying on it hands the two spellings DIFFERENT
-    * locks: a swap "excluding" readers then excludes nobody and a
-    * concurrent read can observe the day mid-rename. Keying on the
+    * locks: a GC "excluding" readers then excludes nobody and deletes
+    * files right out from under a concurrent read. Keying on the
     * URI path component collapses both spellings (two stores on
     * different filesystems with the same path would share a lock —
     * harmless over-locking, and a serving JVM fronts one filesystem). */
@@ -240,19 +239,6 @@ object SamplesStore {
     * resolve to ONE lock object. */
   private[graft] def visibilityLockHandle(path: String) = visibilityFor(path)
 
-  /** Wrap a transient-invisibility window — excludes [[readLocked]]
-    * readers for its duration. Post-manifest, the only blocking user
-    * is [[compact]]'s offline whole-store directory swap; everything
-    * deferrable (GC deletions) goes through [[visibleTry]], because
-    * the lock is FAIR and a waiting writer blocks new readers behind
-    * the longest in-flight read. Always entered while holding the
-    * mutation lock. */
-  private def visible[T](path: String)(f: => T): T = {
-    val l = visibilityFor(path).writeLock()
-    l.lock()
-    try f finally l.unlock()
-  }
-
   /** How long a DEFERRABLE visibility-lock taker (grace-expired GC)
     * waits before giving up and leaving the cleanup for the next
     * pass. Bounds the fair-lock coupling: a queued writer blocks new
@@ -260,11 +246,11 @@ object SamplesStore {
     * unbounded wait would let one slow dashboard query stall every
     * concurrent reader for its whole duration — with the timeout the
     * stall is capped and the reclaim is simply retried later. */
-  val SwapLockTimeoutMs: Long = 5000L
+  val GcLockTimeoutMs: Long = 5000L
 
-  /** [[visible]] with a bounded wait: returns false WITHOUT running
-    * `f` when the write lock cannot be taken inside `timeoutMs` (a
-    * long-running reader has it parked). */
+  /** Run `f` under the visibility write lock, waiting at most
+    * `timeoutMs`: returns false WITHOUT running `f` when a
+    * long-running reader keeps the lock parked. */
   private def visibleTry(path: String, timeoutMs: Long)(f: => Unit): Boolean = {
     val l = visibilityFor(path).writeLock()
     if (!l.tryLock(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)) false
@@ -273,11 +259,11 @@ object SamplesStore {
 
   /** Run `f` (a read's full plan-to-action execution) holding the
     * store's visibility read lock: concurrent with other reads and
-    * with append/compaction REWRITE jobs, excluded only from the
-    * ms-scale swap windows. In-JVM serving reads can thus never
-    * observe a half-swapped store, and their latency is decoupled
-    * from concurrent write jobs. Must never wrap anything that
-    * mutates the same store (read→write upgrade deadlocks). */
+    * with every mutation, excluded only from GC file deletions. An
+    * in-JVM serving read can thus never lose a planned file, even to
+    * a grace-0 expiry. Must never wrap anything that mutates the same
+    * store (GC's write side cannot be taken while a read side is
+    * held on the same thread). */
   def readLocked[T](path: String)(f: => T): T = {
     val l = visibilityFor(path).readLock()
     l.lock()
@@ -573,40 +559,6 @@ object SamplesStore {
     latestSnapshot(fs, root).getOrElse(
       commitSnapshot(fs, root, -1L, listingFiles(fs, root), 0L))
 
-  private val RewriteDayPrefix = ".rewrite_" // hidden per-day rewrite staging
-
-  /** Repair a store left inside [[compact]]'s whole-store swap window
-    * by a crash — run at the start of every mutation (under the store
-    * lock), because an unaware writer would otherwise re-create an
-    * empty live path while a later compact's cleanup deletes `.old`,
-    * the only complete copy:
-    *  - live path missing, `.old` present → the crash hit between the
-    *    two swap renames; restore `.old` (the rewrite in `.compacting`
-    *    is redone later).
-    *  - live path AND `.old` present → the swap completed (the new
-    *    layout carries its own `_manifests`, written before the swap,
-    *    so nothing needs carrying) — drop `.old`.
-    *  - `.compacting` remnants are an incomplete rewrite — disposable.
-    * Day-level rewrites need NO crash repair: they only ADD files, and
-    * a crash before the manifest commit leaves them unreferenced —
-    * invisible garbage that [[expireSnapshots]] reclaims by age.
-    *
-    * Deliberately NOT under the visibility lock: every transition
-    * either restores data a reader already could not see or touches
-    * hidden paths — readers can only gain from it. */
-  private def recoverSwap(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val dst = new Path(path)
-    val tmp = new Path(dst.getParent, dst.getName + ".compacting")
-    val old = new Path(dst.getParent, dst.getName + ".old")
-    if (fs.exists(old)) {
-      if (!fs.exists(dst)) {
-        if (!fs.rename(old, dst))
-          throw new java.io.IOException(s"recoverSwap: restore $old -> $dst failed")
-      } else fs.delete(old, true)
-    }
-    fs.delete(tmp, true)
-  }
-
   private def fsFor(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -644,29 +596,42 @@ object SamplesStore {
       .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("ts_us"))
   }
 
-  /** Stage `samples` in the canonical layout under a hidden dir, then
-    * MOVE the parquet files into their live day partitions — pure
-    * metadata renames; Spark part-file names carry a per-job UUID, so
-    * moved names never collide, and a crashed attempt's files are
-    * never referenced by any manifest (invisible, GC'd by age).
-    * Returns the moved files' relative paths. Caller holds the
-    * mutation lock and commits the manifest. */
-  private def stageAndMove(samples: DataFrame, path: String,
-                           fs: org.apache.hadoop.fs.FileSystem,
-                           prefix: String): Vector[String] = {
-    val staging = new Path(path, s".staging-${java.util.UUID.randomUUID()}")
-    fs.delete(staging, true)
-    layout(samples).write.mode("overwrite").partitionBy("date").parquet(staging.toString)
+  /** Stage half of every store rewrite (samples and rollup stores
+    * alike): write `laidOut` — already carrying its `date` partition
+    * column, rows in their within-file order — under a fresh hidden
+    * `.staging-<uuid>` dir of `root`, one sub-dir per day. Nothing
+    * references the dir, so staging needs no lock; a crashed attempt
+    * is invisible garbage that expiry reclaims by age. */
+  private[graft] def stage(laidOut: DataFrame, root: Path): Path = {
+    val staging = new Path(root, s".staging-${java.util.UUID.randomUUID()}")
+    laidOut.write.mode("overwrite").partitionBy("date").parquet(staging.toString)
+    staging
+  }
+
+  /** Publish half: MOVE the staged parquet files of every day
+    * `keepDay` accepts into their live day dirs as `prefix + name` —
+    * pure metadata renames; Spark part-file names carry a per-job
+    * UUID, so moved names never collide — then drop the staging dir
+    * (with whatever `keepDay` rejected). Returns the moved files'
+    * relative `date=X/name` paths. The caller holds its store's
+    * mutation lock and makes them visible with ONE manifest commit;
+    * until then they are unreferenced, and a crash leaves only
+    * invisible garbage for GC. */
+  private[graft] def publish(fs: org.apache.hadoop.fs.FileSystem, staging: Path,
+                             root: Path, prefix: String,
+                             keepDay: String => Boolean = _ => true): Vector[String] = {
     val moved = Vector.newBuilder[String]
-    fs.listStatus(staging).filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
+    fs.listStatus(staging)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("date=") &&
+        keepDay(s.getPath.getName))
       .foreach { day =>
-        val dstDay = new Path(path, day.getPath.getName)
+        val dstDay = new Path(root, day.getPath.getName)
         fs.mkdirs(dstDay)
         fs.listStatus(day.getPath).filter(_.getPath.getName.endsWith(".parquet"))
           .foreach { f =>
             val name = prefix + f.getPath.getName
             if (!fs.rename(f.getPath, new Path(dstDay, name)))
-              throw new java.io.IOException(s"stageAndMove: move ${f.getPath} failed")
+              throw new java.io.IOException(s"publish: move ${f.getPath} failed")
             moved += day.getPath.getName + "/" + name
           }
       }
@@ -674,12 +639,11 @@ object SamplesStore {
     moved.result()
   }
 
-  /** Shared append path: stage + move + ONE manifest commit. For a
+  /** Shared append path: stage + publish + ONE manifest commit. For a
     * stream batch (`batchId` present) the commit also advances the
     * batch ledger, and a replayed id ≤ the ledger short-circuits
-    * BEFORE staging — the exactly-once guarantee, now a single atomic
-    * commit point instead of marker files that had to be carried
-    * across every rewrite. Returns the max live-file count across the
+    * BEFORE staging — the exactly-once guarantee, a single atomic
+    * commit point. Returns the max live-file count across the
     * touched days (manifest math, no extra listing) — the caller's
     * fragmentation signal. */
   /** Test seam: runs after an append resolves its base snapshot but
@@ -694,14 +658,13 @@ object SamplesStore {
                              batchId: Option[Long]): Int = {
     val fs = fsFor(samples.sparkSession, path)
     locked(path) {
-      recoverSwap(fs, path)
       val root = new Path(path)
       val prev = snapshotOrAdopt(fs, root)
       onAppendSnapshotResolved()
       if (batchId.exists(_ <= prev.maxBatchId)) 0 // checkpoint replay: already committed
       else {
         val prefix = batchId.map(id => s"b$id-").getOrElse("")
-        val moved = stageAndMove(samples, path, fs, prefix)
+        val moved = publish(fs, stage(layout(samples), root), root, prefix)
         val snap = commitDelta(fs, root, batchId.getOrElse(prev.maxBatchId),
           prev, moved, Set.empty)
         val touched = moved.iterator.map(_.takeWhile(_ != '/')).toSet
@@ -717,16 +680,10 @@ object SamplesStore {
     * directory (prior manifests included), so run it only on a store
     * without live readers — the serving paths are [[append]] /
     * [[appendBatch]], which commit incremental snapshots. */
-  def write(samples: DataFrame, path: String): Unit =
-    writeInternal(samples, path, -1L)
-
-  private def writeInternal(samples: DataFrame, path: String,
-                            maxBatchId: Long): Unit = locked(path) {
+  def write(samples: DataFrame, path: String): Unit = locked(path) {
     val fs = fsFor(samples.sparkSession, path)
-    recoverSwap(fs, path)
     layout(samples).write.mode("overwrite").partitionBy("date").parquet(path)
-    commitSnapshot(fs, new Path(path), maxBatchId,
-      listingFiles(fs, new Path(path)), 0L)
+    commitSnapshot(fs, new Path(path), -1L, listingFiles(fs, new Path(path)), 0L)
   }
 
   /** Append with the same layout/sort — the serving write path (each
@@ -830,51 +787,33 @@ object SamplesStore {
   /** Compaction — the ClickHouse background-merge analogue as a
     * whole-store rebuild: read the latest snapshot, re-establish the
     * layout (repartition by day + within-file (metric, labels, ts_us)
-    * sort, so row-group pruning survives), write to a shadow tree,
-    * swap the trees. The rebuilt tree carries its OWN manifest
-    * (batch ledger included) written BEFORE the swap, so the live
-    * path always holds a complete committed store even across a
-    * crash. OFFLINE-tool semantics (schema/layout migrations, the
-    * oracle query): the directory swap breaks snapshot retention for
-    * other-process readers mid-scan — the serving path compacts
-    * through [[compactFragmentedDays]], whose publish is a pure
-    * manifest commit. In-JVM readers stay safe here via the
-    * visibility lock. */
+    * sort, so row-group pruning survives: one sorted file per day),
+    * publish the new files and commit ONE checkpoint that lists only
+    * them — the same atomic manifest commit every other mutation
+    * makes, so the generation only rises and the batch ledger carries
+    * over. Then it expires every superseded snapshot at once (grace
+    * 0), releasing the old files' space eagerly: a generation pinned
+    * before the compaction fails loudly in [[readAt]] afterwards, and
+    * an other-process reader mid-scan may lose its files. OFFLINE-tool
+    * semantics (schema/layout migrations, the oracle query) — the
+    * serving path compacts through [[compactFragmentedDays]], which
+    * keeps superseded files for the grace window. */
   def compact(spark: SparkSession, path: String): Unit = locked(path) {
     val fs = fsFor(spark, path)
-    val dst = new Path(path)
-    recoverSwap(fs, path)
-    val prev = snapshotOrAdopt(fs, dst)
-    val tmp = new Path(dst.getParent, dst.getName + ".compacting")
-    val old = new Path(dst.getParent, dst.getName + ".old")
+    val root = new Path(path)
+    val prev = snapshotOrAdopt(fs, root)
     // `date` is re-derived from ts_us inside layout(), so the rewrite
     // cannot drift from the read-side partition values; the source is
     // the SNAPSHOT (via read), so crashed-append garbage is never
     // folded into committed data.
-    writeInternal(read(spark, path).drop("date"), tmp.toString, prev.maxBatchId)
-    // Swap via rename-aside (never delete-then-rename): a crash
-    // mid-swap leaves a complete copy at `path` or `path.old`, never
-    // only in the shadow dir — recoverSwap repairs either state.
-    visible(path) {
-      if (!fs.rename(dst, old))
-        throw new java.io.IOException(s"compact: rename $dst -> $old failed")
-      if (!fs.rename(tmp, dst)) {
-        fs.rename(old, dst) // roll back so the store stays readable
-        throw new java.io.IOException(s"compact: rename $tmp -> $dst failed")
-      }
-    }
-    fs.delete(old, true)
+    val moved = publish(fs, stage(layout(read(spark, path).drop("date")), root),
+      root, s"c${prev.gen + 1}-")
+    commitSnapshot(fs, root, prev.maxBatchId, moved, prev.gen)
+    expireSnapshots(spark, path, 0L)
     val m = graft.OpsMetrics(spark)
     m.compactions.add(1)
-    m.daysRewritten.add(
-      fs.listStatus(dst).count(s => s.isDirectory && s.getPath.getName.startsWith("date=")).toLong)
+    m.daysRewritten.add(moved.map(_.takeWhile(_ != '/')).distinct.size.toLong)
   }
-
-  /** Shadow dir for the staged compaction rewrite. Hidden from the
-    * parquet reader; the staging runs OUTSIDE the store lock, so
-    * [[expireSnapshots]] skips it while a compaction is in flight
-    * (single-flight guard) and reclaims stale crashed copies by age. */
-  private val StageDirName = ".stage_compact"
 
   /** One compaction in flight per store: concurrent probes return
     * immediately instead of queueing rewrites. */
@@ -900,15 +839,15 @@ object SamplesStore {
     * background-merge contract):
     *  1. SNAPSHOT (mutation lock, ms): record each fragmented day's
     *     exact file set from the manifest.
-    *  2. STAGE (no lock): rewrite the RECORDED files into a shadow
-    *     dir while appends and reads proceed.
+    *  2. STAGE (no lock): rewrite the RECORDED files into a hidden
+    *     staging dir while appends and reads proceed.
     *  3. PUBLISH (mutation lock, ms): move staged files into their
     *     live day dirs under new names (old files untouched) and
-    *     commit ONE manifest swapping every still-unchanged day's
-    *     file set; a day that gained files during staging is left for
-    *     the next probe — concurrent appends can defer a day's fold
-    *     but never lose data. Readers need no exclusion at all: the
-    *     commit is atomic, and superseded files outlive the grace
+    *     commit ONE manifest replacing each day's recorded files; a
+    *     day a concurrent delete touched is left for the next probe,
+    *     and files appended meanwhile stay live — concurrent
+    *     mutations never lose data. Readers need no exclusion at
+    *     all: the commit is atomic, and superseded files outlive the grace
     *     window for anyone mid-scan. Their deletion (grace-expired
     *     GC) is the only visibility-lock consumer left, and it defers
     *     on a bounded tryLock rather than stalling behind a
@@ -925,7 +864,6 @@ object SamplesStore {
     try {
       val fs = fsFor(spark, path)
       val root = new Path(path)
-      val shadow = new Path(root, StageDirName)
 
       // Phase 1 — SNAPSHOT under the mutation lock: fragmented days
       // and their exact file sets come from the MANIFEST, so a
@@ -933,16 +871,14 @@ object SamplesStore {
       // fragmentation count nor get folded into committed data.
       // Sizes cost one listing per fragmented day only.
       val targets: Seq[(String, Set[String], Long)] = locked(path) {
-        recoverSwap(fs, path)
-        fs.delete(shadow, true)
         if (!fs.exists(root)) Seq.empty
         else {
           val snap = snapshotOrAdopt(fs, root)
           snap.byDay.toSeq.collect { case (day, dayFiles) if dayFiles.size > maxFilesPerDay =>
-            val names = dayFiles.map(_.stripPrefix(day + "/")).toSet
+            val live = dayFiles.toSet
             val bytes = fs.listStatus(new Path(root, day))
-              .filter(f => names.contains(f.getPath.getName)).map(_.getLen).sum
-            (day, names, bytes)
+              .filter(f => live.contains(day + "/" + f.getPath.getName)).map(_.getLen).sum
+            (day, live, bytes)
           }
         }
       }
@@ -958,14 +894,12 @@ object SamplesStore {
       val totalBytes = targets.map(_._3).sum
       val nTasks = math.max(targets.length.toLong,
         (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val stagedFiles = targets.flatMap { case (dayName, names, _) =>
-        names.map(f => new Path(new Path(root, dayName), f).toString)
-      }
-      spark.read.parquet(stagedFiles: _*)
-        .withColumn("date", expr("ts_us DIV 1000000 DIV 86400 * 86400"))
-        .repartitionByRange(nTasks, col("date"), col("metric"), col("labels"), col("ts_us"))
-        .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("ts_us"))
-        .write.mode("overwrite").partitionBy("date").parquet(shadow.toString)
+      val staging = stage(
+        spark.read.parquet(targets.flatMap(_._2).map(f => new Path(root, f).toString): _*)
+          .withColumn("date", expr("ts_us DIV 1000000 DIV 86400 * 86400"))
+          .repartitionByRange(nTasks, col("date"), col("metric"), col("labels"), col("ts_us"))
+          .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("ts_us")),
+        root)
       afterStage()
 
       // Phase 3 — PUBLISH under the mutation lock: metadata renames
@@ -978,40 +912,24 @@ object SamplesStore {
       // recorded files defers the day — folding would resurrect the
       // deleted rows — and the next probe re-stages from the
       // post-delete snapshot.
-      var rewritten = 0
-      locked(path) {
+      val rewritten = locked(path) {
         val prev = snapshotOrAdopt(fs, root)
-        val added = Vector.newBuilder[String]
-        val removed = Set.newBuilder[String]
-        val replacedDays = Vector.newBuilder[String]
-        targets.foreach { case (dayName, recorded, _) =>
-          val current = prev.byDay.getOrElse(dayName, Vector.empty)
-            .map(_.stripPrefix(dayName + "/")).toSet
-          val newDay = new Path(shadow, dayName)
-          if (recorded.subsetOf(current) && fs.exists(newDay)) {
-            fs.listStatus(newDay).filter(_.getPath.getName.endsWith(".parquet"))
-              .foreach { f =>
-                val name = s"c${prev.gen + 1}-" + f.getPath.getName
-                if (!fs.rename(f.getPath, new Path(new Path(root, dayName), name)))
-                  throw new java.io.IOException(
-                    s"compactFragmentedDays: move ${f.getPath} failed")
-                added += dayName + "/" + name
-              }
-            removed ++= recorded.map(dayName + "/" + _)
-            replacedDays += dayName
-            rewritten += 1
-          } else if (!recorded.subsetOf(current)) {
-            log.info(s"compactFragmentedDays($path): $dayName lost recorded files " +
-              "during staging (concurrent delete) — leaving it for the next probe")
-          }
+        val (ok, deferred) = targets.partition { case (day, recorded, _) =>
+          recorded.subsetOf(prev.byDay.getOrElse(day, Vector.empty).toSet) }
+        deferred.foreach { case (day, _, _) =>
+          log.info(s"compactFragmentedDays($path): $day lost recorded files " +
+            "during staging (concurrent delete) — leaving it for the next probe")
         }
-        if (rewritten > 0) {
-          commitDelta(fs, root, prev.maxBatchId, prev, added.result(), removed.result())
-          // reclaim the swapped days' superseded files once the grace
+        val folds = ok.map { case (day, recorded, _) => day -> recorded }.toMap
+        val added = publish(fs, staging, root, s"c${prev.gen + 1}-", folds.contains)
+        val replaced = added.map(_.takeWhile(_ != '/')).toSet
+        if (replaced.nonEmpty) {
+          commitDelta(fs, root, prev.maxBatchId, prev, added, replaced.flatMap(folds))
+          // reclaim the folded days' superseded files once the grace
           // expires (0 = eager, for quiesced stores and specs)
-          gcDataFiles(fs, root, replacedDays.result(), gcGraceMs)
+          gcDataFiles(fs, root, replaced, gcGraceMs)
         }
-        fs.delete(shadow, true)
+        replaced.size
       }
       val m = graft.OpsMetrics(spark)
       m.compactions.add(1)
@@ -1047,31 +965,47 @@ object SamplesStore {
     * pass instead of being stalled behind it. */
   private def gcDataFiles(fs: org.apache.hadoop.fs.FileSystem, root: Path,
                           days: Iterable[String], graceMs: Long): Int = {
-    if (days.isEmpty) 0
-    else {
-      val referenced = latestSnapshot(fs, root).map(_.files.toSet).getOrElse(Set.empty)
-      val cutoff = System.currentTimeMillis() - graceMs
-      var removed = 0
-      val ok = visibleTry(root.toString, SwapLockTimeoutMs) {
-        days.foreach { day =>
-          val dir = new Path(root, day)
-          if (fs.exists(dir)) {
-            fs.listStatus(dir).foreach { f =>
-              val n = f.getPath.getName
-              if (n.endsWith(".parquet") && !referenced.contains(day + "/" + n) &&
-                  f.getModificationTime <= cutoff) {
-                fs.delete(f.getPath, false)
-                removed += 1
-              }
-            }
-            if (fs.listStatus(dir).isEmpty) fs.delete(dir, true)
-          }
-        }
-      }
-      if (!ok) log.info(s"gc($root): deferred — visibility lock busy (long-running reader)")
-      removed
+    val referenced = latestSnapshot(fs, root).map(_.files.toSet).getOrElse(Set.empty)
+    val cutoff = System.currentTimeMillis() - graceMs
+    var removed = 0
+    val ok = visibleTry(root.toString, GcLockTimeoutMs) {
+      removed = sweep(fs, root, days, referenced, cutoff)
     }
+    if (!ok) log.info(s"gc($root): deferred — visibility lock busy (long-running reader)")
+    removed
   }
+
+  /** The one GC sweep, shared by the samples and rollup stores, over
+    * the named child dirs of `root`. A `date=` dir loses every
+    * `.parquet` file that `referenced` (relative `date=X/name` paths)
+    * does not name and whose mtime is at or before `cutoff`, then goes
+    * itself once empty. A hidden dir is a crashed staging remnant
+    * (`.staging-<uuid>`, or an older build's staging name) — never
+    * referenced, dropped whole by age unless `spareStaging` (a
+    * compaction is staging outside the lock right now). Returns the
+    * number of data files deleted. */
+  private[graft] def sweep(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+                           children: Iterable[String], referenced: Set[String],
+                           cutoff: Long, spareStaging: Boolean = false): Int =
+    children.iterator.map { name =>
+      val dir = new Path(root, name)
+      if (!fs.exists(dir)) 0
+      else if (name.startsWith("date=")) {
+        val stale = fs.listStatus(dir).filter { f =>
+          val n = f.getPath.getName
+          n.endsWith(".parquet") && !referenced.contains(name + "/" + n) &&
+            f.getModificationTime <= cutoff
+        }
+        stale.foreach(f => fs.delete(f.getPath, false))
+        if (fs.listStatus(dir).isEmpty) fs.delete(dir, true)
+        stale.length
+      } else {
+        if (name.startsWith(".") && !spareStaging &&
+            fs.getFileStatus(dir).getModificationTime <= cutoff)
+          fs.delete(dir, true)
+        0
+      }
+    }.sum
 
   /** Snapshot expiry — the store-wide GC and the only place old
     * MANIFESTS are reclaimed (the Iceberg expire-snapshots analogue):
@@ -1080,9 +1014,10 @@ object SamplesStore {
     * (its base chain down to a checkpoint — dropping a base would
     * orphan the retained snapshot), delete the rest, then delete
     * every data file no kept manifest references (aged past the
-    * grace), stale staging remnants included, and drop day dirs left
-    * empty. A chain-kept old checkpoint pins its files a little
-    * longer than age-based retention alone would — bounded by the
+    * grace), stale staging remnants included (spared while a
+    * compaction stages), and drop day dirs left empty. A chain-kept
+    * old checkpoint pins its files a little longer than age-based
+    * retention alone would — bounded by the
     * [[CheckpointEvery]] cadence, the documented price of O(touched)
     * commits. `graceMs = 0` force-cleans a quiesced store (ops
     * tooling and specs); the serving path runs the default from its
@@ -1152,26 +1087,10 @@ object SamplesStore {
         // member is in `needed` by construction.
         val referenced = needed.iterator.flatMap(g => rec(g).fulls ++ rec(g).adds).toSet
         var removed = 0
-        val ok = visibleTry(root.toString, SwapLockTimeoutMs) {
-          fs.listStatus(root).filter(_.isDirectory).map(_.getPath).foreach { child =>
-            val n = child.getName
-            if (n.startsWith("date=")) {
-              fs.listStatus(child).foreach { f =>
-                val fn = f.getPath.getName
-                if (fn.endsWith(".parquet") && !referenced.contains(n + "/" + fn) &&
-                    f.getModificationTime <= cutoff) {
-                  fs.delete(f.getPath, false)
-                  removed += 1
-                }
-              }
-              if (fs.listStatus(child).isEmpty) fs.delete(child, true)
-            } else if ((n.startsWith(".staging-") || n.startsWith(RewriteDayPrefix) ||
-                        (n == StageDirName && !compactingFlag(path).get)) &&
-                       fs.getFileStatus(child).getModificationTime <= cutoff) {
-              // crashed staging remnants — never referenced, safe by age
-              fs.delete(child, true)
-            }
-          }
+        val ok = visibleTry(root.toString, GcLockTimeoutMs) {
+          removed = sweep(fs, root,
+            fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName),
+            referenced, cutoff, spareStaging = compactingFlag(path).get)
         }
         if (!ok) log.info(s"expireSnapshots($path): deferred — visibility lock busy")
         removed
@@ -1188,52 +1107,29 @@ object SamplesStore {
   def deleteRange(spark: SparkSession, path: String, startUs: Long, endUs: Long,
                   gcGraceMs: Long = GcGraceMs): Unit = locked(path) {
     val fs = fsFor(spark, path)
-    recoverSwap(fs, path)
     val root = new Path(path)
     if (fs.exists(root)) {
       val prev = snapshotOrAdopt(fs, root)
-      val added = Vector.newBuilder[String]
-      val removed = Set.newBuilder[String]
-      val touched = Vector.newBuilder[String]
-      prev.byDay.foreach { case (dayName, dayFiles) =>
-        val dayStartUs = dayName.stripPrefix("date=").toLong * 1000000L
-        val dayEndUs = dayStartUs + DaySec * 1000000L
-        val fullyInside = dayStartUs >= startUs && dayEndUs <= endUs
-        val overlaps = dayStartUs < endUs && dayEndUs > startUs
-        if (fullyInside) {
-          removed ++= dayFiles
-          touched += dayName
-        } else if (overlaps) {
-          // boundary day: rewrite from the SNAPSHOT's files
-          val remaining = spark.read
-            .parquet(dayFiles.map(f => new Path(root, f).toString): _*)
-            .filter(col("ts_us") < startUs || col("ts_us") >= endUs)
-            .sortWithinPartitions(col("metric"), col("labels"), col("ts_us"))
-          val rewrite = new Path(root, RewriteDayPrefix + dayName)
-          fs.delete(rewrite, true)
-          remaining.write.mode("overwrite").parquet(rewrite.toString)
-          val moved = Vector.newBuilder[String]
-          fs.listStatus(rewrite).filter(_.getPath.getName.endsWith(".parquet"))
-            .foreach { f =>
-              val name = s"d${prev.gen + 1}-" + f.getPath.getName
-              if (!fs.rename(f.getPath, new Path(new Path(root, dayName), name)))
-                throw new java.io.IOException(s"deleteRange: move ${f.getPath} failed")
-              moved += dayName + "/" + name
-            }
-          fs.delete(rewrite, true)
-          removed ++= dayFiles
-          added ++= moved.result()
-          touched += dayName
-        }
-      }
-      val touchedDays = touched.result()
-      if (touchedDays.nonEmpty) {
-        commitDelta(fs, root, prev.maxBatchId, prev, added.result(), removed.result())
-        gcDataFiles(fs, root, touchedDays, gcGraceMs)
+      def dayStartUs(day: String) = day.stripPrefix("date=").toLong * 1000000L
+      val dayUs = DaySec * 1000000L
+      val touched = prev.byDay.filter { case (day, _) =>
+        dayStartUs(day) < endUs && dayStartUs(day) + dayUs > startUs }
+      // boundary days (partly inside the range) rewrite their remaining
+      // rows from the SNAPSHOT's files, all in one layout() job
+      val boundary = touched.filter { case (day, _) =>
+        dayStartUs(day) < startUs || dayStartUs(day) + dayUs > endUs }
+      val added =
+        if (boundary.isEmpty) Vector.empty[String]
+        else publish(fs, stage(layout(spark.read
+          .parquet(boundary.values.flatten.map(f => new Path(root, f).toString).toSeq: _*)
+          .filter(col("ts_us") < startUs || col("ts_us") >= endUs)), root),
+          root, s"d${prev.gen + 1}-")
+      if (touched.nonEmpty) {
+        commitDelta(fs, root, prev.maxBatchId, prev, added, touched.values.flatten.toSet)
+        gcDataFiles(fs, root, touched.keys, gcGraceMs)
       }
     }
   }
-
 }
 
 /** TSV bulk import/export — the promtool-dump → `INSERT … FORMAT

@@ -309,28 +309,10 @@ object RollupStore {
                  // max, the raw path's very rule)
                  expr("max_by(t_sec, struct(v, t_sec))").as("t_vmax"),
                  expr("max_by(t_sec, struct(-v, t_sec))").as("t_vmin"))
-          val staging = new Path(rollupPath, s".staging-${java.util.UUID.randomUUID()}")
-          fs.delete(staging, true)
-          rolled
+          SamplesStore.publish(fs, SamplesStore.stage(rolled
             .repartition(col("date"))
-            .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("bucket"))
-            .write.mode("overwrite").partitionBy("date").parquet(staging.toString)
-          val out = Vector.newBuilder[String]
-          fs.listStatus(staging)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-            .foreach { day =>
-              val dstDay = new Path(root, day.getPath.getName)
-              fs.mkdirs(dstDay)
-              fs.listStatus(day.getPath).filter(_.getPath.getName.endsWith(".parquet"))
-                .foreach { f =>
-                  val name = "r-" + f.getPath.getName
-                  if (!fs.rename(f.getPath, new Path(dstDay, name)))
-                    throw new java.io.IOException(s"rollup: move ${f.getPath} failed")
-                  out += day.getPath.getName + "/" + name
-                }
-            }
-          fs.delete(staging, true)
-          out.result()
+            .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("bucket")),
+            root), root, "r-")
         }
       val invalidated = changed.keySet ++ dropped
       val keptFiles = prev.map(_.files).getOrElse(Vector.empty)
@@ -435,33 +417,11 @@ object RollupStore {
                 .withColumn("t_penult", expr("get(_cand, 1).t"))
                 .withColumn("v_penult", expr("get(_cand, 1).v"))
                 .drop("_cand")
-              val staging = new Path(coarsePath,
-                s".staging-${java.util.UUID.randomUUID()}")
-              fs.delete(staging, true)
-              rolled
+              SamplesStore.publish(fs, SamplesStore.stage(rolled
                 .repartition(col("date"))
                 .sortWithinPartitions(col("date"), col("metric"),
-                  col("labels"), col("bucket"))
-                .write.mode("overwrite").partitionBy("date")
-                .parquet(staging.toString)
-              val out = Vector.newBuilder[String]
-              fs.listStatus(staging)
-                .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-                .foreach { day =>
-                  val dstDay = new Path(root, day.getPath.getName)
-                  fs.mkdirs(dstDay)
-                  fs.listStatus(day.getPath)
-                    .filter(_.getPath.getName.endsWith(".parquet"))
-                    .foreach { f =>
-                      val name = "r-" + f.getPath.getName
-                      if (!fs.rename(f.getPath, new Path(dstDay, name)))
-                        throw new java.io.IOException(
-                          s"rollupLadder: move ${f.getPath} failed")
-                      out += day.getPath.getName + "/" + name
-                    }
-                }
-              fs.delete(staging, true)
-              out.result()
+                  col("labels"), col("bucket")),
+                root), root, "r-")
             }
           val invalidated = changed.keySet ++ dropped
           val keptFiles = prev.map(_.files).getOrElse(Vector.empty)
@@ -619,25 +579,9 @@ object RollupStore {
           .partition { case (g, s) => g == latest.gen || s.getModificationTime > cutoff }
         droppedM.foreach { case (_, s) => fs.delete(s.getPath, false) }
         val referenced = kept.flatMap { case (g, _) => readManifest(fs, root, g).files }.toSet
-        var removed = 0
-        fs.listStatus(root).filter(_.isDirectory).map(_.getPath).foreach { child =>
-          val n = child.getName
-          if (n.startsWith("date=")) {
-            fs.listStatus(child).foreach { f =>
-              val fn = f.getPath.getName
-              if (fn.endsWith(".parquet") && !referenced.contains(n + "/" + fn) &&
-                  f.getModificationTime <= cutoff) {
-                fs.delete(f.getPath, false)
-                removed += 1
-              }
-            }
-            if (fs.listStatus(child).isEmpty) fs.delete(child, true)
-          } else if (n.startsWith(".staging-") &&
-                     fs.getFileStatus(child).getModificationTime <= cutoff) {
-            fs.delete(child, true)
-          }
-        }
-        removed
+        SamplesStore.sweep(fs, root,
+          fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName),
+          referenced, cutoff)
     }
   }
 }

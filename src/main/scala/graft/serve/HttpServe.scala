@@ -268,16 +268,13 @@ object HttpServe {
       })
 
     server.createContext("/read", (ex: HttpExchange) => guarded(ex) {
-      // The store's visibility read lock excludes this query's whole
-      // execution from the ms-scale swap/restore/drop windows — a
-      // /read never sees a half-swapped store (neither the loud
-      // FileNotFound nor the silent missing-day listing) while still
-      // running CONCURRENTLY with append and compaction rewrite jobs.
-      // The retry below remains for OUT-of-process mutators (another
-      // JVM compacting the same store), whose swaps the lock can't
-      // see; a store that simply doesn't exist yet (fresh server
-      // before the first /write) fails fast instead — that miss is
-      // permanent, not a swap window.
+      // The store's visibility read lock keeps this query's planned
+      // files safe from this JVM's GC for its whole execution, while
+      // it runs CONCURRENTLY with every append and compaction. The
+      // retry below remains for OUT-of-process mutators (another JVM
+      // expiring the same store), whose GC the lock can't see; a store
+      // that simply doesn't exist yet (fresh server before the first
+      // /write) fails fast instead — that miss is permanent.
       val reqBody = body(ex)
       val rollupRoute = Option(RemoteWrite.rollupIntervalSec).filter(_ > 0)
         .map { iv =>
@@ -1340,17 +1337,15 @@ object HttpServe {
   }
 
   /** A missing-path read failure is only worth retrying when the
-    * store could be mid-swap: the live path exists (file-level miss
-    * during re-list) or its `.old` copy does (between the two swap
-    * renames). A store that was never written — the normal first-boot
-    * state, created by the first /write — has neither, and retrying
-    * that permanent miss would just burn the backoff budget on every
+    * store exists: then the miss is a planned file that another
+    * process's GC reclaimed mid-scan, and a fresh snapshot plans
+    * around it. A store that was never written — the normal
+    * first-boot state, created by the first /write — is a permanent
+    * miss, and retrying it would just burn the backoff budget on every
     * probe request. */
   private[graft] def storeSwapRecoverable(spark: SparkSession, storePath: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) ||
-      fs.exists(new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".old"))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   final class ProtoTooLargeException(msg: String) extends RuntimeException(msg)

@@ -37,8 +37,9 @@ object RemoteRead {
     * comfortably under driver heap. */
   val DefaultMaxReadSamples: Long = 10000000L
 
-  /** Backoff between transient-miss retries — compact()'s swap window
-    * is two renames long, so one short sleep normally clears it. */
+  /** Backoff between transient-miss retries — the retry re-resolves
+    * the store's latest snapshot, so one short sleep normally lets a
+    * concurrent commit settle. */
   val TransientBackoffMs: Long = 150L
 
   /** Thrown when a query would return more than maxSamples — the HTTP
@@ -133,8 +134,9 @@ object RemoteRead {
   }
 
   /** True when the failure (anywhere in the cause chain) is a missing
-    * path/file — the signature of reading through compact()'s swap
-    * window, where the whole store or one of its files is mid-rename. */
+    * path/file — the signature of scanning a snapshot whose superseded
+    * files were reclaimed between planning and scan (GC by another
+    * process, which this JVM's visibility lock cannot exclude). */
   private[graft] def isTransientMiss(e: Throwable): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8).exists { c =>
       c.isInstanceOf[java.io.FileNotFoundException] ||
@@ -149,7 +151,7 @@ object RemoteRead {
     * read_errors.
     *
     * `samples` is by-name and re-evaluated on each retry: a transient
-    * miss (per `transientClassifier`, compact()'s swap window) retries
+    * miss (per `transientClassifier`: a planned file GC'd mid-scan) retries
     * up to `transientRetries` times with a fresh store resolution —
     * the first attempt's DataFrame holds a stale file listing, so
     * re-running it could never succeed. Counters fire once per request

@@ -157,6 +157,33 @@ class StoreSpec extends SparkSpecBase {
       "replay after compaction must still short-circuit")
   }
 
+  test("compact advances the generation: a pin taken before it never reads another generation") {
+    val path = "/tmp/graft_test/store_compact_pin"
+    new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(path), true)
+    val samples = Tables.samples(spark, Sf).cache()
+    val even = samples.filter(expr("ts_us % 2 = 0"))
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("ts_us", "metric", "labels", "value").collect().map(_.toString).sorted.toSeq
+    SamplesStore.write(even, path)
+    val pinned = SamplesStore.currentGen(spark, path).get
+    val pinnedRows = rowsOf(even)
+    SamplesStore.append(samples.filter(expr("ts_us % 2 = 1")), path)
+    val beforeCompact = SamplesStore.currentGen(spark, path).get
+    SamplesStore.compact(spark, path)
+    assert(SamplesStore.currentGen(spark, path).get > beforeCompact,
+      "compact must commit a new generation, never restart the chain")
+    // compact expires superseded snapshots at once, so the pin may be
+    // gone — but it must then fail loudly, never serve other rows
+    val atPin =
+      try Some(rowsOf(SamplesStore.readAt(spark, path, pinned)))
+      catch { case _: IllegalArgumentException => None }
+    atPin.foreach(rows => assert(rows == pinnedRows,
+      s"a pinned generation must read exactly its corpus (${rows.size} rows vs ${pinnedRows.size})"))
+    assert(SamplesStore.read(spark, path).count() == samples.count())
+  }
+
   test("sustained appends keep per-day file counts bounded via auto-compaction") {
     val path = "/tmp/graft_test/store_autocompact"
     new org.apache.hadoop.fs.Path(path)
@@ -190,45 +217,6 @@ class StoreSpec extends SparkSpecBase {
       "expiry must reclaim every superseded file")
     assert(SamplesStore.read(spark, path).count() == 6 * perBatch)
     assert(sortedWithinFiles(path))
-  }
-
-  test("a crashed compaction swap is repaired by the next mutation, never lost") {
-    val path = "/tmp/graft_test/store_swapcrash"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    fs.delete(p(path), true); fs.delete(p(path + ".old"), true); fs.delete(p(path + ".compacting"), true)
-    val samples = Tables.samples(spark, Sf).cache()
-    val b0 = samples.filter(expr("ts_us % 2 = 0"))
-    val b1 = samples.filter(expr("ts_us % 2 = 1"))
-    SamplesStore.appendBatch(b0, path, 0L)
-    val rowsBefore = SamplesStore.read(spark, path).count()
-
-    // crash state 1: between the two swap renames — `.old` holds the
-    // ONLY copy, the live path is gone, a stale rewrite sits in
-    // `.compacting`. An unaware append would re-create an empty store
-    // and the next compact would delete `.old` — total data loss.
-    assert(fs.rename(p(path), p(path + ".old")))
-    fs.mkdirs(p(path + ".compacting"))
-    SamplesStore.appendBatch(b1, path, 1L) // must recover FIRST
-    assert(SamplesStore.read(spark, path).count() == samples.count(),
-      "recovery must restore the stranded .old copy before appending")
-    assert(!fs.exists(p(path + ".old")) && !fs.exists(p(path + ".compacting")))
-    // the restored markers still short-circuit replays
-    SamplesStore.appendBatch(b0, path, 0L)
-    assert(SamplesStore.read(spark, path).count() == samples.count())
-
-    // crash state 2: after the swap, before the cleanup — the live
-    // path is a complete store (its manifests, batch ledger included,
-    // were written into the rebuilt tree BEFORE the swap) and a stale
-    // `.old` copy lingers. Recovery just drops the remnant, and the
-    // ledger keeps replays no-ops.
-    assert(fs.mkdirs(p(path + ".old")))
-    SamplesStore.appendBatch(b1, path, 1L) // replay: ledger short-circuits
-    assert(SamplesStore.read(spark, path).count() == samples.count(),
-      "the manifest batch ledger must keep the replay a no-op")
-    assert(!fs.exists(p(path + ".old")))
-    assert(rowsBefore < samples.count())
   }
 
   test("compactFragmentedDays rewrites only the fragmented day, splitting by size") {
@@ -437,6 +425,29 @@ class StoreSpec extends SparkSpecBase {
     assert(sortedWithinFiles(path))
   }
 
+  test("a grace-0 expiry while compaction stages spares the staging dir; the fold still publishes") {
+    import spark.implicits._
+    val path = "/tmp/graft_test/store_expire_midstage"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    val day0 = 1704412800L
+    def rowsFor(off: Int) =
+      (0 until 30).map(i => (day0 * 1000000L + (off * 30 + i) * 1000000L,
+        s"m${i % 5}", Seq("k=v"), i.toDouble)).toDF("ts_us", "metric", "labels", "value")
+    for (i <- 0 until 3) SamplesStore.append(rowsFor(i), path)
+    val before = SamplesStore.read(spark, path).count()
+    val n = SamplesStore.compactFragmentedDays(spark, path, maxFilesPerDay = 2,
+      afterStage = () => { SamplesStore.expireSnapshots(spark, path, 0L); () })
+    assert(n == 1, "the fold must publish after a mid-stage expiry")
+    assert(SamplesStore.read(spark, path).count() == before, "no row may be lost")
+    val live = SamplesStore.latestSnapshot(fs, new org.apache.hadoop.fs.Path(path)).get
+    assert(live.byDay(s"date=$day0").size == 1)
+    assert(!new File(path).listFiles().exists(_.getName.startsWith(".")),
+      "the published fold must leave no staging dir behind")
+    assert(sortedWithinFiles(path))
+  }
+
   test("a long-running reader defers only the GC — the compaction fold never waits") {
     import spark.implicits._
     val path = "/tmp/graft_test/store_swap_defer"
@@ -615,6 +626,36 @@ class StoreSpec extends SparkSpecBase {
         col("t_sec"), col("max_value")).collect().map(_.toSeq).toSet
     assert(keyed(rolled) == keyed(raw),
       "rollup-served coarse reads must equal the raw read path")
+  }
+
+  test("expireRollups reclaims superseded rollup files and stale staging at grace 0") {
+    import graft.ingest.RollupStore
+    val path = "/tmp/graft_test/store_rollup_expire"
+    val rpath = "/tmp/graft_test/store_rollup_expire_roll"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (p <- Seq(path, rpath)) fs.delete(new org.apache.hadoop.fs.Path(p), true)
+    val samples = Tables.samples(spark, Sf).cache()
+    SamplesStore.write(samples.filter(expr("ts_us % 2 = 0")), path)
+    RollupStore.rollup(spark, path, rpath)
+    // the append touches every day, so the second rollup supersedes
+    // every file of the first
+    SamplesStore.append(samples.filter(expr("ts_us % 2 = 1")), path)
+    RollupStore.rollup(spark, path, rpath)
+    def rolled: Seq[String] = RollupStore.read(spark, rpath)
+      .drop("date").collect().map(_.toString).sorted.toSeq
+    def physical: Int = new File(rpath).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("date="))
+      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
+    val before = rolled
+    val live = RollupStore.latestRollup(fs, new org.apache.hadoop.fs.Path(rpath)).get.files.size
+    val stale = new org.apache.hadoop.fs.Path(rpath, ".staging-crashed")
+    fs.mkdirs(stale)
+    assert(physical > live, "superseded rollup files are retained until expiry")
+    val reclaimed = RollupStore.expireRollups(spark, rpath, 0L)
+    assert(reclaimed > 0 && physical == live, "expiry must reclaim every superseded file")
+    assert(!fs.exists(stale), "expiry must sweep a stale staging dir")
+    assert(rolled == before, "expiry must never change what the rollup reads")
   }
 
   test("the rollup ladder re-aggregates exactly, incrementally, and gates freshness") {
@@ -807,10 +848,10 @@ class StoreSpec extends SparkSpecBase {
   }
 
   test("lock maps key scheme-insensitively: qualified and raw store paths share one lock") {
-    // deleteRange's boundary-day swap locks via a path derived from
-    // fs.listStatus (scheme-qualified, file:/…), while serving readers
-    // lock via the caller's raw string (/…) — these MUST resolve to
-    // the same lock object or the swap excludes nobody
+    // GC locks via a path derived from fs.listStatus (scheme-qualified,
+    // file:/…), while serving readers lock via the caller's raw string
+    // (/…) — these MUST resolve to the same lock object or GC excludes
+    // nobody
     assert(SamplesStore.visibilityLockHandle("/tmp/graft_test/lockkey") eq
            SamplesStore.visibilityLockHandle("file:/tmp/graft_test/lockkey"))
     assert(SamplesStore.lockKey("file:///tmp/graft_test/lockkey") ==
