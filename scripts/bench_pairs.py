@@ -1,0 +1,162 @@
+#!/usr/bin/env python3
+"""Alternating parent/change pairs of the serving benchmark.
+
+    python3 scripts/bench_pairs.py --rev <parent> --workload ingest --pairs 10 \
+        [--seed 1] [--root DIR] [--keep]
+
+Run from the root of a checkout. The script exports `--rev` with
+`git archive` into DIR/parent and copies the working tree (tracked and
+untracked files that .gitignore does not exclude) into DIR/change. The two
+copies share no build output (`target/`, `project/target`, `.bench_build/`),
+so neither side's build can clobber the other's classes. It then runs N pairs
+of `servebench/run.py --workload W --seed S+i --seconds <run_seconds>`, with
+`run_seconds` read from BENCHMARK.json; pair i runs on seed S+i, and the side
+that goes first alternates from pair to pair. A side's first run also builds
+that tree, outside the timed window.
+
+It prints one row per end-to-end metric of BENCHMARK.json: each side's median
+and quartiles, how many pairs the change won, and whether the change's median
+is worse than the parent's by more than the metric's bound. A gain counts as
+clear when the medians differ by more than the parent's interquartile range
+(IQR). The failed-request
+share of each side is printed too. Every raw result line is kept in
+DIR/results.jsonl. The exit code is non-zero when a run fails or a bound is
+broken. DIR defaults to a fresh temporary directory; the two trees are removed
+at the end unless --keep is given, the results file is kept.
+"""
+import argparse
+import json
+import os
+import shutil
+import statistics
+import subprocess
+import sys
+import tempfile
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def log(msg):
+    print(msg, file=sys.stderr, flush=True)
+
+
+def export_parent(rev, dst):
+    os.makedirs(dst)
+    archive = subprocess.run(["git", "archive", "--format=tar", rev], cwd=ROOT,
+                             stdout=subprocess.PIPE, check=True).stdout
+    subprocess.run(["tar", "-x", "-C", dst], input=archive, check=True)
+
+
+def copy_worktree(dst):
+    """Copy the files git would see (tracked, plus untracked but not
+    ignored) — never a build output listed in .gitignore."""
+    out = subprocess.run(["git", "ls-files", "-z", "--cached", "--others", "--exclude-standard"],
+                         cwd=ROOT, stdout=subprocess.PIPE, check=True).stdout
+    for rel in sorted({p for p in out.decode().split("\0") if p}):
+        src = os.path.join(ROOT, rel)
+        if not os.path.isfile(src):  # deleted in the working tree
+            continue
+        os.makedirs(os.path.dirname(os.path.join(dst, rel)), exist_ok=True)
+        shutil.copy2(src, os.path.join(dst, rel))
+
+
+def run_once(tree, workload, seed, seconds):
+    """One servebench run in `tree`; returns its result dict (the last
+    stdout line), or None when the run produced no result."""
+    proc = subprocess.run(
+        [sys.executable, "servebench/run.py", "--workload", workload, "--seed", str(seed),
+         "--seconds", str(seconds), "--trace", "0"],
+        cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+    lines = [l for l in proc.stdout.splitlines() if l.strip()]
+    if not lines or not lines[-1].startswith("{"):
+        log(proc.stderr[-3000:])
+        return None
+    return json.loads(lines[-1])
+
+
+def quartiles(xs):
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, med, q3
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--rev", required=True, help="parent revision to compare against")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seed", type=int, default=1, help="seed of the first pair; pair i uses seed+i")
+    ap.add_argument("--root", help="scratch directory for the two trees (default: a fresh temp dir)")
+    ap.add_argument("--keep", action="store_true", help="keep the two trees")
+    a = ap.parse_args()
+
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    seconds = bench["run_seconds"]
+    metrics = bench["end_to_end"]
+
+    root = a.root or tempfile.mkdtemp(prefix="bench_pairs_")
+    parent, change = os.path.join(root, "parent"), os.path.join(root, "change")
+    for d in (parent, change):
+        shutil.rmtree(d, ignore_errors=True)
+    export_parent(a.rev, parent)
+    copy_worktree(change)
+    log(f"bench_pairs: parent={a.rev} -> {parent}; change=working tree -> {change}")
+
+    runs = {"parent": [], "change": []}
+    trees = {"parent": parent, "change": change}
+    broken = False
+    out_path = os.path.join(root, "results.jsonl")
+    try:
+        with open(out_path, "a") as out:
+            for i in range(a.pairs):
+                seed = a.seed + i
+                order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+                for side in order:
+                    r = run_once(trees[side], a.workload, seed, seconds)
+                    out.write(json.dumps({"pair": i, "seed": seed, "side": side, "result": r}) + "\n")
+                    out.flush()
+                    if r is None:
+                        log(f"pair {i} seed {seed} {side}: NO RESULT")
+                        broken = True
+                    else:
+                        runs[side].append((i, r))
+                        v = {m["name"]: r["metrics"].get(m["name"], {}).get("value") for m in metrics}
+                        log(f"pair {i} seed {seed} {side}: failed={r['failed']}/{r['attempted']} {v}")
+
+        both = sorted({i for i, _ in runs["parent"]} & {i for i, _ in runs["change"]})
+        by = {s: dict(runs[s]) for s in runs}
+        print(f"workload {a.workload}: {len(both)} complete pairs at {seconds} s, seeds {a.seed}..{a.seed + a.pairs - 1}")
+        print(f"{'metric':<24} {'parent med (q1-q3)':>26} {'change med (q1-q3)':>26} {'wins':>6} {'Δmed':>8} {'bound':>6}  >IQR  verdict")
+        for m in metrics:
+            name, lower = m["name"], m["better"] == "lower"
+            pv = [by["parent"][i]["metrics"][name]["value"] for i in both]
+            cv = [by["change"][i]["metrics"][name]["value"] for i in both]
+            if not pv:
+                continue
+            pq, cq = quartiles(pv), quartiles(cv)
+            wins = sum((c < p) if lower else (c > p) for p, c in zip(pv, cv))
+            rel = (cq[1] - pq[1]) / pq[1] if pq[1] else 0.0
+            worse = rel if lower else -rel
+            over = worse > m["bound"]
+            clear = abs(cq[1] - pq[1]) > pq[2] - pq[0]
+            broken |= over
+            print(f"{name:<24} {pq[1]:>10.3f} ({pq[0]:.3f}-{pq[2]:.3f}) {cq[1]:>10.3f} ({cq[0]:.3f}-{cq[2]:.3f})"
+                  f" {wins:>3}/{len(both):<2} {rel:>+8.1%} {m['bound']:>6.2f}  {'yes' if clear else 'no ':<4}"
+                  f" {'WORSE THAN BOUND' if over else 'ok'}")
+        for s in ("parent", "change"):
+            att = sum(r["attempted"] for _, r in runs[s])
+            fail = sum(r["failed"] for _, r in runs[s])
+            print(f"{s}: {fail}/{att} operations failed")
+            broken |= fail > 0
+        print(f"raw results: {out_path}")
+    finally:
+        if not a.keep:
+            for d in (parent, change):
+                shutil.rmtree(d, ignore_errors=True)
+    sys.exit(1 if broken else 0)
+
+
+if __name__ == "__main__":
+    main()

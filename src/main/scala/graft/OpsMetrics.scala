@@ -30,6 +30,12 @@ final class OpsMetrics private (sc: SparkContext) {
   // dashboard can see whether the background merge is keeping up
   val compactions: LongAccumulator    = sc.longAccumulator("store_compactions_total")
   val daysRewritten: LongAccumulator  = sc.longAccumulator("store_compacted_days_total")
+  // store appends and the manifest commits that landed them — plain
+  // appends group-commit under the store lock, so appends/commits is
+  // the coalescing factor behind /write latency
+  val storeAppends: LongAccumulator   = sc.longAccumulator("store_appends_total")
+  val storeAppendCommits: LongAccumulator =
+    sc.longAccumulator("store_append_commits_total")
   // reads answered from the materialized rollup instead of raw
   // samples (only ever when shape-exact AND manifest-fresh) — the
   // dashboard signal that the recording-rule path is actually used
@@ -66,6 +72,10 @@ final class OpsMetrics private (sc: SparkContext) {
     ("read_errors_total", "number of errors generated by read endpoint", readErrors),
     ("store_compactions_total", "number of store compaction jobs run", compactions),
     ("store_compacted_days_total", "number of day partitions rewritten by compaction", daysRewritten),
+    ("store_appends_total", "number of store append calls", storeAppends),
+    ("store_append_commits_total",
+      "number of manifest commits that landed store appends (concurrent appends share one)",
+      storeAppendCommits),
     ("reads_from_rollup_total", "read queries served from the materialized rollup", readsFromRollup),
     ("write_dropped_histogram_samples_total",
       "remote-write native-histogram samples dropped (float64 store holds no histograms)",

@@ -189,7 +189,12 @@ object SamplesStore {
     * generations. Mutations serialize per store within this JVM (the
     * serving process is one JVM, like the reference's one Go process
     * in front of ClickHouse); their expensive distributed phases
-    * (compaction's STAGE) run OUTSIDE it.
+    * (compaction's STAGE) run OUTSIDE it. Plain [[append]]s COALESCE
+    * under it: each caller queues its frame before taking the lock,
+    * and whoever holds it commits everything queued as one write job
+    * and one manifest generation (group commit), so callers that
+    * arrive while a commit runs share the next one instead of each
+    * paying the fixed per-append floor in line.
     *
     * VISIBILITY lock — a fair read-write lock. Snapshot manifests
     * carry the visibility story (readers plan one committed snapshot
@@ -466,6 +471,11 @@ object SamplesStore {
     StoreSnapshot(gen, chain.last.maxBatch, files.toVector.sorted)
   }
 
+  /** [[writeManifest]]'s abort: another process claimed the manifest
+    * generation this commit was about to take. No retry can fix it,
+    * so a failed group commit never retries its members alone. */
+  final class ConcurrentWriterException(msg: String) extends IllegalStateException(msg)
+
   /** Write manifest `content` for the next generation after
     * `prevGen` and RENAME it into its slot — the commit point (rename
     * fails on an existing target, so a generation can never be
@@ -489,7 +499,7 @@ object SamplesStore {
     out.close()
     if (!fs.rename(tmp, manifestFile(root, gen))) {
       fs.delete(tmp, false)
-      throw new IllegalStateException(
+      throw new ConcurrentWriterException(
         s"concurrent writer detected: manifest generation $gen already exists " +
         s"under $root/$ManifestDir — this store has a single-writer-process " +
         "contract (mutations serialize on an in-JVM lock); a second process " +
@@ -667,6 +677,7 @@ object SamplesStore {
         val moved = publish(fs, stage(layout(samples), root), root, prefix)
         val snap = commitDelta(fs, root, batchId.getOrElse(prev.maxBatchId),
           prev, moved, Set.empty)
+        graft.OpsMetrics(samples.sparkSession).storeAppendCommits.add(1)
         val touched = moved.iterator.map(_.takeWhile(_ != '/')).toSet
         if (touched.isEmpty) 0
         else touched.iterator.map(d => snap.byDay.getOrElse(d, Vector.empty).size).max
@@ -686,13 +697,64 @@ object SamplesStore {
     commitSnapshot(fs, new Path(path), -1L, listingFiles(fs, new Path(path)), 0L)
   }
 
+  /** One [[append]] caller's frame, queued for a group commit. The
+    * leader that commits it sets `outcome` under the store's mutation
+    * lock, before it releases the lock. Frames merge only within one
+    * session and one set of column names and types. */
+  private final class QueuedAppend(val frame: DataFrame) {
+    @volatile var outcome: Option[scala.util.Try[Unit]] = None
+    private val shape = frame.schema.fields.map(f => f.name -> f.dataType).toMap
+    def mergesWith(o: QueuedAppend): Boolean =
+      (frame.sparkSession eq o.frame.sparkSession) && shape == o.shape
+  }
+
+  private val appendQueues = scala.collection.concurrent.TrieMap
+    .empty[String, java.util.concurrent.ConcurrentLinkedQueue[QueuedAppend]]
+  private def appendQueue(path: String) = appendQueues.getOrElseUpdate(
+    lockKey(path), new java.util.concurrent.ConcurrentLinkedQueue[QueuedAppend])
+
+  /** Test seam: how many [[append]] callers wait for a group commit
+    * on `path` — lets specs form groups deterministically. */
+  private[graft] def queuedAppends(path: String): Int = appendQueue(path).size
+
   /** Append with the same layout/sort — the serving write path (each
     * remote-write request lands as new files in its day partitions,
     * the MergeTree-insert analogue). The manifest commit makes the
     * request atomically visible: a reader sees all of its samples or
-    * none, never a partial request. */
+    * none, never a partial request.
+    *
+    * Concurrent appends to one store COALESCE (group commit): the
+    * caller queues its frame, then takes the mutation lock. A caller
+    * whose frame an earlier lock holder already committed just
+    * returns that outcome; otherwise it leads: it drains every queued
+    * frame that can merge with its own and commits them as ONE
+    * `unionByName` write job and ONE manifest generation. The group
+    * is whatever queued while the previous commit ran — no timer, no
+    * size knob. A caller returns only after its group committed, so
+    * each request still appears whole or not at all. When a group of
+    * several fails, each member retries alone, so a bad frame fails
+    * only its own caller; a [[ConcurrentWriterException]] is never
+    * retried. */
   def append(samples: DataFrame, path: String): Unit = {
-    appendSnapshot(samples, path, None); ()
+    graft.OpsMetrics(samples.sparkSession).storeAppends.add(1)
+    val me = new QueuedAppend(samples)
+    val queue = appendQueue(path)
+    queue.add(me)
+    locked(path) {
+      if (me.outcome.isEmpty) {
+        import scala.jdk.CollectionConverters._
+        val group = me +: queue.asScala.filter(a => (a ne me) && me.mergesWith(a)).toVector
+        group.foreach(queue.remove)
+        def commit(members: Seq[QueuedAppend]) = scala.util.Try {
+          appendSnapshot(members.map(_.frame).reduce(_ unionByName _), path, None); ()
+        }
+        val together = commit(group)
+        val isolate = group.sizeIs > 1 &&
+          together.failed.toOption.exists(!_.isInstanceOf[ConcurrentWriterException])
+        group.foreach(a => a.outcome = Some(if (isolate) commit(Seq(a)) else together))
+      }
+    }
+    me.outcome.get.get
   }
 
   /** Exactly-once batch append for checkpointed streams. A bare
@@ -708,6 +770,7 @@ object SamplesStore {
     * [[append]]'s. */
   def appendBatch(samples: DataFrame, path: String, batchId: Long,
                   autoCompactFilesPerDay: Int = AutoCompactFilesPerDay): Unit = {
+    graft.OpsMetrics(samples.sparkSession).storeAppends.add(1)
     val maxTouchedDayFiles = appendSnapshot(samples, path, Some(batchId))
     // ClickHouse merges parts in the background; here the writer
     // itself folds the store once fragmentation crosses the

@@ -464,18 +464,29 @@ object RemoteWrite {
     // reads depend on it); THEN skip entries the store already holds
     val collapsed = rows.groupBy(r => (r.metric, r.labels)).values
       .map(_.maxBy(_.ts_us)).toSeq.sortBy(r => (r.metric, r.ts_us))
-    val changed = collapsed.filter { r =>
+    val claims = collapsed.flatMap { r =>
       val key = s"$storePath|${r.metric}"
-      lastMetadata.put(key, r.labels) match {
-        case Some(prev) => prev != r.labels
-        case None       => true
-      }
+      val prev = lastMetadata.put(key, r.labels)
+      if (prev.contains(r.labels)) None else Some((r, key, prev))
     }
-    if (changed.nonEmpty) {
+    if (claims.nonEmpty) {
       import spark.implicits._
-      SamplesStore.append(
-        changed.toDF("ts_us", "metric", "labels", "value"),
+      try SamplesStore.append(
+        claims.map(_._1).toDF("ts_us", "metric", "labels", "value"),
         metadataPath(storePath))
+      catch { case e: Throwable =>
+        // roll the claims back (newest first), as unclaimCtZero does:
+        // a kept claim would skip the entry on every later identical
+        // request, and it would never be written until a restart. A
+        // key another request re-claimed since keeps that claim.
+        claims.reverseIterator.foreach { case (r, key, prev) =>
+          prev match {
+            case Some(p) => lastMetadata.replace(key, r.labels, p)
+            case None    => lastMetadata.remove(key, r.labels)
+          }
+        }
+        throw e
+      }
     }
   }
 
@@ -620,8 +631,12 @@ object RemoteWrite {
 
   /** Batched form: decode+append MANY blobs as ONE store write (one
     * Spark job instead of one per request) — the shape a replay or a
-    * buffering front-end uses. Malformed blobs throw; counters as in
-    * [[serve]]. */
+    * buffering front-end uses. Concurrent [[serve]] calls get part of
+    * this on their own: `SamplesStore.append` group-commits the frames
+    * queued on one store, so requests that overlap share one write
+    * job and one manifest commit. This form still batches when the
+    * requests do not overlap, and decodes them in one distributed
+    * pass. Malformed blobs throw; counters as in [[serve]]. */
   def serveAll(spark: SparkSession, storePath: String,
                blobs: Seq[Array[Byte]],
                contentType: Option[String] = None): Long = {

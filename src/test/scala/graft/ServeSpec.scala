@@ -2003,6 +2003,15 @@ class ServeSpec extends SparkSpecBase {
     val srv = HttpServe.start(spark, store)
     try {
       val base = s"http://localhost:${srv.port}"
+      def counter(name: String): Long = {
+        val (code, body) = get(s"$base/metrics")
+        assert(code === 200)
+        body.linesIterator.collectFirst {
+          case l if l.startsWith(name + " ") => l.stripPrefix(name + " ").trim.toLong
+        }.getOrElse(fail(s"/metrics lacks $name"))
+      }
+      val (appends0, commits0) =
+        (counter("store_appends_total"), counter("store_append_commits_total"))
       // 4 overlapping writes, distinct metrics: with concurrent handler
       // threads, unsynchronized appends would race their
       // FileOutputCommitter _temporary staging and lose files
@@ -2013,7 +2022,34 @@ class ServeSpec extends SparkSpecBase {
       val back = graft.ingest.SamplesStore.read(spark, store)
       assert(back.count() === 20, "every concurrent write's rows must land")
       assert(back.select(col("metric")).distinct().count() === 4)
+      // the coalescing factor is observable: each write counted one
+      // append; overlapping ones may have shared a commit
+      val appends = counter("store_appends_total") - appends0
+      val commits = counter("store_append_commits_total") - commits0
+      assert(appends >= 4, s"appends counted: $appends")
+      assert(commits >= 1 && commits <= appends, s"$commits commits for $appends appends")
     } finally srv.stop()
+  }
+
+  test("a failed metadata append is written by the next identical request") {
+    val store = tmpStore("mdretry")
+    val blob = PromRemoteCodec.encodeWriteRequest(PromWriteRequest(Nil,
+      familyMetadata = Seq("md_retry" -> PromRemoteCodec.PromMetadata(1, "Retried help.", ""))))
+    // fail this thread's next store append (the metadata-only request
+    // runs its one append inline), once
+    val me = Thread.currentThread()
+    val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
+    graft.ingest.SamplesStore.onAppendSnapshotResolved = () =>
+      if ((Thread.currentThread() eq me) && failOnce.getAndSet(false))
+        throw new java.io.IOException("injected metadata append failure")
+    try intercept[java.io.IOException] { RemoteWrite.serve(spark, store, blob) }
+    finally graft.ingest.SamplesStore.onAppendSnapshotResolved = () => ()
+    assert(!failOnce.get, "the injected failure must have fired")
+    // the failure must not leave the entry claimed as already written
+    RemoteWrite.serve(spark, store, blob)
+    val md = graft.ingest.SamplesStore.read(spark, RemoteWrite.metadataPath(store))
+    assert(md.filter(col("metric") === "md_retry").count() === 1,
+      "the retried request must write the metadata the failed one lost")
   }
 
   test("one /read request carrying several queries answers each in order") {

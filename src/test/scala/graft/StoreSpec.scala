@@ -1116,4 +1116,160 @@ class StoreSpec extends SparkSpecBase {
       .filter(_.startsWith(".tmp-"))
     assert(litter.isEmpty, s"aborted commit left temp files: ${litter.toSeq}")
   }
+
+  // ---- group commit: concurrent plain appends share one commit ------
+
+  private def freshStore(path: String): String = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    path
+  }
+
+  private def groupRows(off: Int) = {
+    import spark.implicits._
+    (0 until 3).map(i => (1704412800L * 1000000L + (off * 3 + i) * 1000000L,
+      "m", Seq("k=v"), i.toDouble)).toDF("ts_us", "metric", "labels", "value")
+  }
+
+  /** Run `f` on its own thread; the returned call joins it (bounded)
+    * and yields its outcome. */
+  private def spawn(name: String)(f: => Unit): () => scala.util.Try[Unit] = {
+    @volatile var out: scala.util.Try[Unit] =
+      scala.util.Failure(new AssertionError(s"$name did not finish"))
+    val t = new Thread(() => out = scala.util.Try(f), name)
+    t.start()
+    () => { t.join(120000); out }
+  }
+
+  /** Park the next append's leader inside its commit (after it resolved
+    * its base snapshot), run `whileParked` — which queues the followers
+    * — then release it. Returns the leader's outcome. */
+  private def withParkedLeader(path: String, leader: => Unit)(
+      whileParked: => Unit): scala.util.Try[Unit] = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val inCommit = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val parked = new java.util.concurrent.atomic.AtomicBoolean(false)
+    SamplesStore.onAppendSnapshotResolved = () =>
+      if (parked.compareAndSet(false, true)) {
+        inCommit.countDown(); release.await(60, TimeUnit.SECONDS); ()
+      }
+    try {
+      val a = spawn("spec-leader")(leader)
+      assert(inCommit.await(60, TimeUnit.SECONDS), "the leader must reach its commit")
+      whileParked
+      release.countDown()
+      a()
+    } finally {
+      release.countDown()
+      SamplesStore.onAppendSnapshotResolved = () => ()
+    }
+  }
+
+  private def awaitQueued(path: String, n: Int): Unit = {
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (SamplesStore.queuedAppends(path) < n && System.nanoTime() < deadline)
+      Thread.sleep(5)
+    assert(SamplesStore.queuedAppends(path) >= n, s"$n appends must queue behind the leader")
+  }
+
+  test("appends queued behind a committing leader land as ONE group commit") {
+    val path = freshStore("/tmp/graft_test/store_group_commit")
+    SamplesStore.append(groupRows(0), path)
+    val gen0 = SamplesStore.currentGen(spark, path).get
+    val m = OpsMetrics(spark)
+    val (appends0, commits0) = (m.storeAppends.value, m.storeAppendCommits.value)
+    var followers = Seq.empty[() => scala.util.Try[Unit]]
+    val a = withParkedLeader(path, SamplesStore.append(groupRows(1), path)) {
+      followers = (2 to 4).map(i => spawn(s"spec-follower-$i")(SamplesStore.append(groupRows(i), path)))
+      awaitQueued(path, 3)
+    }
+    assert(a.isSuccess, a)
+    followers.foreach(f => assert(f().isSuccess))
+    // {A}, then {B, C, D}: exactly two generations for four appends
+    assert(SamplesStore.currentGen(spark, path).contains(gen0 + 2))
+    assert(SamplesStore.queuedAppends(path) === 0)
+    val back = SamplesStore.read(spark, path).select("ts_us").collect().map(_.getLong(0)).toSet
+    assert(back === (0 until 15).map(i => 1704412800L * 1000000L + i * 1000000L).toSet,
+      "every member's rows must land")
+    assert(m.storeAppends.value - appends0 === 4L)
+    assert(m.storeAppendCommits.value - commits0 === 2L)
+    assert(sortedWithinFiles(path))
+  }
+
+  test("a group member whose frame fails at execution fails alone; its group-mates land") {
+    val path = freshStore("/tmp/graft_test/store_group_isolate")
+    SamplesStore.append(groupRows(0), path)
+    val gen0 = SamplesStore.currentGen(spark, path).get
+    val bad = groupRows(3).withColumn("value",
+      expr("CASE WHEN value >= 0 THEN CAST(raise_error('group-commit boom') AS DOUBLE) ELSE value END"))
+    var members = Seq.empty[(Int, () => scala.util.Try[Unit])]
+    val a = withParkedLeader(path, SamplesStore.append(groupRows(1), path)) {
+      members = Seq(2, 3, 4).map { i =>
+        i -> spawn(s"spec-member-$i")(SamplesStore.append(if (i == 3) bad else groupRows(i), path))
+      }
+      awaitQueued(path, 3)
+    }
+    assert(a.isSuccess, a)
+    val outcomes = members.map { case (i, f) => i -> f() }.toMap
+    assert(outcomes(2).isSuccess && outcomes(4).isSuccess, outcomes)
+    val err = outcomes(3).failed.get
+    assert(Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("group-commit boom")), err)
+    // {A}, the failed {B, C, D}, then B and D alone
+    assert(SamplesStore.currentGen(spark, path).contains(gen0 + 3))
+    val back = SamplesStore.read(spark, path).select("ts_us").collect().map(_.getLong(0)).toSet
+    assert(back === Seq(0, 1, 2, 4).flatMap(o => (0 until 3).map(i =>
+      1704412800L * 1000000L + (o * 3 + i) * 1000000L)).toSet,
+      "the failing member's rows must not land, every other member's must")
+  }
+
+  test("frames from another session or with another schema never merge") {
+    val path = freshStore("/tmp/graft_test/store_group_shapes")
+    SamplesStore.append(groupRows(0), path)
+    val gen0 = SamplesStore.currentGen(spark, path).get
+    val other = spark.newSession()
+    val otherSession = other.createDataFrame(groupRows(2).rdd, groupRows(2).schema)
+    val otherSchema = groupRows(3).withColumn("note", lit("x"))
+    var queued = Seq.empty[() => scala.util.Try[Unit]]
+    val a = withParkedLeader(path, SamplesStore.append(groupRows(1), path)) {
+      queued = Seq(otherSession, otherSchema, groupRows(4), groupRows(5)).zipWithIndex.map {
+        case (df, i) => spawn(s"spec-shape-$i")(SamplesStore.append(df, path))
+      }
+      awaitQueued(path, 4)
+    }
+    assert(a.isSuccess, a)
+    queued.foreach(f => assert(f().isSuccess))
+    // {A}, {other session}, {other schema}, then the two plain frames
+    // together: four generations for five appends
+    assert(SamplesStore.currentGen(spark, path).contains(gen0 + 4))
+    assert(SamplesStore.read(spark, path).count() === 18)
+  }
+
+  test("appendBatch never joins a group; a replayed batch id stays a no-op") {
+    val path = freshStore("/tmp/graft_test/store_group_batch")
+    SamplesStore.append(groupRows(0), path)
+    val gen0 = SamplesStore.currentGen(spark, path).get
+    var others = Seq.empty[() => scala.util.Try[Unit]]
+    val a = withParkedLeader(path, SamplesStore.append(groupRows(1), path)) {
+      others = Seq(
+        spawn("spec-batch")(SamplesStore.appendBatch(groupRows(2), path, 5L)),
+        spawn("spec-plain-3")(SamplesStore.append(groupRows(3), path)),
+        spawn("spec-plain-4")(SamplesStore.append(groupRows(4), path)))
+      awaitQueued(path, 2)
+    }
+    assert(a.isSuccess, a)
+    others.foreach(f => assert(f().isSuccess))
+    // {A}, the batch alone, {3, 4}
+    assert(SamplesStore.currentGen(spark, path).contains(gen0 + 3))
+    assert(SamplesStore.read(spark, path).count() === 15)
+    SamplesStore.appendBatch(groupRows(2), path, 5L)
+    assert(SamplesStore.currentGen(spark, path).contains(gen0 + 3),
+      "a replayed batch id must not commit")
+    assert(SamplesStore.read(spark, path).count() === 15)
+    SamplesStore.appendBatch(groupRows(6), path, 6L)
+    assert(SamplesStore.currentGen(spark, path).contains(gen0 + 4))
+    assert(SamplesStore.read(spark, path).count() === 18)
+  }
 }

@@ -352,6 +352,8 @@ class StoreTortureSpec extends SparkSpecBase {
             it.toDouble, ts))))))
     }
     val nW = 4; val nIt = 5
+    val m = OpsMetrics(spark)
+    val (appends0, commits0) = (m.storeAppends.value, m.storeAppendCommits.value)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     // a racing reader: every observation must be a committed snapshot
@@ -391,7 +393,17 @@ class StoreTortureSpec extends SparkSpecBase {
     assert(SamplesStore.read(spark, store).count() === nW * nIt * 5L)
     assert(SamplesStore.read(spark, store + "_hist").count() === nW * nIt.toLong)
     assert(SamplesStore.read(spark, store + "_exemplars").count() === nW * nIt.toLong)
-    assert(SamplesStore.currentGen(spark, store).exists(_ >= nW * nIt.toLong),
-      "every main append must have committed its own generation")
+    // exact commit accounting: concurrent appends may share a commit
+    // (group commit), so generations count commits, not requests.
+    // Every generation the appends added is one counted append commit
+    // (each store's gen 1 adopts the empty tree before its first
+    // append), and every request counted one append per store it
+    // writes: main, hist and exemplars
+    val stores = Seq(store, store + "_hist", store + "_exemplars")
+    val appendGens = stores.map(p => SamplesStore.currentGen(spark, p).get - 1).sum
+    assert(m.storeAppendCommits.value - commits0 === appendGens,
+      "every generation the appends added must be exactly one counted append commit")
+    assert(m.storeAppends.value - appends0 === stores.size.toLong * nW * nIt,
+      "one counted append per request per store")
   }
 }
