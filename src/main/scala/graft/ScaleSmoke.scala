@@ -338,7 +338,6 @@ object ScaleSmoke {
     // node count) — min-label propagation's worst case vs the
     // large-star/small-star alternation's provable O(log n) rounds
     for (n <- Seq(1 << 12, 1 << 14, 1 << 16) if sectionEnabled("stars")) {
-      import spark.implicits.{newLongEncoder, rddToDatasetHolder}
       val chain = spark.range(0, n - 1)
         .select(col("id").as("doc_a"), (col("id") + 1L).as("doc_b"))
         .localCheckpoint(true)

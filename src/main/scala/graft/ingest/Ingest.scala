@@ -226,7 +226,7 @@ object SamplesStore {
 
   private val storeLocks = scala.collection.concurrent.TrieMap
     .empty[String, java.util.concurrent.locks.ReentrantLock]
-  private def locked[T](path: String)(f: => T): T = {
+  private[graft] def locked[T](path: String)(f: => T): T = {
     val l = storeLocks.getOrElseUpdate(lockKey(path),
       new java.util.concurrent.locks.ReentrantLock)
     l.lock()
@@ -296,7 +296,13 @@ object SamplesStore {
   // max id is the whole exactly-once ledger: a replay of id ≤ max
   // short-circuits, and a crash before the commit leaves files no
   // manifest references — invisible, re-staged by the replay,
-  // reclaimed by GC.
+  // reclaimed by GC. Every OTHER line is an opaque HEADER line the
+  // store's owner keeps in its manifest (a rollup store's interval,
+  // row schema and `D <day> <digest>` lines); samples stores write
+  // none. Each manifest restates its whole header, so a snapshot's
+  // header is its newest manifest's. A pre-header `graft-rollup v1`
+  // manifest parses as a checkpoint (its `F` lines are the file list,
+  // the rest its header), so older rollup stores read unchanged.
 
   private val ManifestDir = "_manifests"
   private val ManifestPattern = "^m-(\\d{20})$".r
@@ -308,12 +314,17 @@ object SamplesStore {
   private[graft] val CheckpointEvery: Long = 25L
 
   /** One committed store snapshot: manifest generation, newest
-    * committed stream batch id, and the live data files (relative
-    * paths, sorted). */
-  final case class StoreSnapshot(gen: Long, maxBatchId: Long, files: Vector[String]) {
+    * committed stream batch id, the live data files (relative paths,
+    * sorted) and the manifest's opaque header lines. */
+  final case class StoreSnapshot(gen: Long, maxBatchId: Long, files: Vector[String],
+                                 header: Vector[String] = Vector.empty) {
     /** day name (`date=X`) → its live files. */
     lazy val byDay: Map[String, Vector[String]] = files.groupBy(f => f.takeWhile(_ != '/'))
   }
+
+  /** The state before a store's first commit: a commit on top of it
+    * writes generation 1 as a checkpoint. */
+  private[graft] val NoSnapshot = StoreSnapshot(0L, -1L, Vector.empty)
 
   private def manifestFile(root: Path, gen: Long): Path =
     new Path(new Path(root, ManifestDir), f"m-$gen%020d")
@@ -413,10 +424,10 @@ object SamplesStore {
 
   /** One manifest file, unresolved: a checkpoint carries the full
     * file list (`fulls`, base None); a delta carries its base
-    * generation plus added/removed files. */
+    * generation plus added/removed files. Both carry their header. */
   private final case class ManifestRec(base: Option[Long], maxBatch: Long,
                                        fulls: Vector[String], adds: Vector[String],
-                                       removes: Vector[String])
+                                       removes: Vector[String], header: Vector[String])
 
   private def readManifestRec(fs: org.apache.hadoop.fs.FileSystem, root: Path,
                               gen: Long): ManifestRec = {
@@ -428,14 +439,18 @@ object SamplesStore {
       val fulls = Vector.newBuilder[String]
       val adds = Vector.newBuilder[String]
       val removes = Vector.newBuilder[String]
+      val header = Vector.newBuilder[String]
       lines.foreach { l =>
-        if (l.startsWith("max-batch-id ")) maxBatch = l.stripPrefix("max-batch-id ").toLong
+        if (l == FormatLine) ()
+        else if (l.startsWith("max-batch-id ")) maxBatch = l.stripPrefix("max-batch-id ").toLong
         else if (l.startsWith("base ")) base = Some(l.stripPrefix("base ").toLong)
         else if (l.startsWith("F ")) fulls += l.stripPrefix("F ")
         else if (l.startsWith("A ")) adds += l.stripPrefix("A ")
         else if (l.startsWith("R ")) removes += l.stripPrefix("R ")
+        else header += l
       }
-      ManifestRec(base, maxBatch, fulls.result(), adds.result(), removes.result())
+      ManifestRec(base, maxBatch, fulls.result(), adds.result(), removes.result(),
+        header.result())
     } finally in.close()
   }
 
@@ -468,7 +483,7 @@ object SamplesStore {
       if (r.base.isEmpty) r.fulls.toSet
       else acc -- r.removes ++ r.adds
     }
-    StoreSnapshot(gen, chain.last.maxBatch, files.toVector.sorted)
+    StoreSnapshot(gen, chain.last.maxBatch, files.toVector.sorted, chain.last.header)
   }
 
   /** [[writeManifest]]'s abort: another process claimed the manifest
@@ -510,40 +525,48 @@ object SamplesStore {
     gen
   }
 
-  /** Publish a full-checkpoint snapshot (bootstrap/adopt/rebuild, and
-    * every [[CheckpointEvery]]th incremental commit). */
+  private val FormatLine = "graft-manifest v1"
+
+  private def checkpointText(maxBatchId: Long, header: Vector[String],
+                             files: Vector[String]): String =
+    ((FormatLine +: s"max-batch-id $maxBatchId" +: header) ++
+      files.map("F " + _)).mkString("\n")
+
+  /** Publish `files` as a full checkpoint on top of `prev`, restating
+    * its batch ledger and header (bootstrap/adopt/rebuild onto
+    * [[NoSnapshot]], compaction, expiry's re-checkpoint). */
   private def commitSnapshot(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                             maxBatchId: Long, files: Seq[String],
-                             prevGen: Long): StoreSnapshot = {
+                             prev: StoreSnapshot, files: Seq[String]): StoreSnapshot = {
     val sorted = files.toVector.sorted
-    val content = ("graft-manifest v1" +: s"max-batch-id $maxBatchId" +:
-      sorted.map("F " + _)).mkString("\n")
-    val gen = writeManifest(fs, root, prevGen)(_ => content)
-    val snap = StoreSnapshot(gen, maxBatchId, sorted)
+    val gen = writeManifest(fs, root, prev.gen)(_ =>
+      checkpointText(prev.maxBatchId, prev.header, sorted))
+    val snap = prev.copy(gen = gen, files = sorted)
     snapshotCache.put(lockKey(root.toString), snap)
     snap
   }
 
   /** Publish a mutation as a DELTA on top of `prev`: the manifest
-    * write is O(files this mutation touched), never O(total store
-    * files) — the property that keeps /write metadata cost flat as
-    * the store grows. Every [[CheckpointEvery]]th generation rolls
-    * the accumulated state into a full checkpoint instead, bounding
-    * the resolve chain for cold readers. */
-  private def commitDelta(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                          maxBatchId: Long, prev: StoreSnapshot,
-                          added: Seq[String], removed: Set[String]): StoreSnapshot = {
+    * write is O(files this mutation touched) plus the header, never
+    * O(total store files) — the property that keeps /write metadata
+    * cost flat as the store grows. Every [[CheckpointEvery]]th
+    * generation (and the first) is a full checkpoint instead,
+    * bounding the resolve chain for cold readers. The batch ledger and
+    * header default to `prev`'s. Callers hold the store's mutation
+    * lock and resolved `prev` under it. */
+  private[graft] def commitDelta(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+                                 prev: StoreSnapshot, added: Seq[String],
+                                 removed: Set[String])(
+                                 maxBatchId: Long = prev.maxBatchId,
+                                 header: Vector[String] = prev.header): StoreSnapshot = {
     val files = ((prev.files.toSet -- removed) ++ added).toVector.sorted
     val gen = writeManifest(fs, root, prev.gen) { g =>
-      if (g % CheckpointEvery == 0)
-        ("graft-manifest v1" +: s"max-batch-id $maxBatchId" +:
-          files.map("F " + _)).mkString("\n")
+      if (prev.gen == 0 || g % CheckpointEvery == 0) checkpointText(maxBatchId, header, files)
       else
-        (Vector("graft-manifest v1", s"base ${prev.gen}", s"max-batch-id $maxBatchId") ++
+        (Vector(FormatLine, s"base ${prev.gen}", s"max-batch-id $maxBatchId") ++ header ++
           removed.toVector.sorted.map("R " + _) ++
           added.toVector.sorted.map("A " + _)).mkString("\n")
     }
-    val snap = StoreSnapshot(gen, maxBatchId, files)
+    val snap = StoreSnapshot(gen, maxBatchId, files, header)
     snapshotCache.put(lockKey(root.toString), snap)
     snap
   }
@@ -551,7 +574,7 @@ object SamplesStore {
   /** Full recursive data-file listing (relative paths) — the
     * O(all days) bootstrap/rebuild path only; incremental mutations
     * never call this. */
-  private def listingFiles(fs: org.apache.hadoop.fs.FileSystem, root: Path): Vector[String] =
+  private[graft] def listingFiles(fs: org.apache.hadoop.fs.FileSystem, root: Path): Vector[String] =
     if (!fs.exists(root)) Vector.empty
     else fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
@@ -567,10 +590,16 @@ object SamplesStore {
   private def snapshotOrAdopt(fs: org.apache.hadoop.fs.FileSystem,
                               root: Path): StoreSnapshot =
     latestSnapshot(fs, root).getOrElse(
-      commitSnapshot(fs, root, -1L, listingFiles(fs, root), 0L))
+      commitSnapshot(fs, root, NoSnapshot, listingFiles(fs, root)))
 
   private def fsFor(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Whether anything exists at store path `path` — one filesystem
+    * probe. A store that was never written (a fresh server, a sibling
+    * that never received a row) reads as absent rather than failing. */
+  private[graft] def exists(spark: SparkSession, path: String): Boolean =
+    fsFor(spark, path).exists(new Path(path))
 
 
   /** `date` leads the within-partition sort so the dynamic-partition
@@ -675,8 +704,8 @@ object SamplesStore {
       else {
         val prefix = batchId.map(id => s"b$id-").getOrElse("")
         val moved = publish(fs, stage(layout(samples), root), root, prefix)
-        val snap = commitDelta(fs, root, batchId.getOrElse(prev.maxBatchId),
-          prev, moved, Set.empty)
+        val snap = commitDelta(fs, root, prev, moved, Set.empty)(
+          maxBatchId = batchId.getOrElse(prev.maxBatchId))
         graft.OpsMetrics(samples.sparkSession).storeAppendCommits.add(1)
         val touched = moved.iterator.map(_.takeWhile(_ != '/')).toSet
         if (touched.isEmpty) 0
@@ -694,7 +723,7 @@ object SamplesStore {
   def write(samples: DataFrame, path: String): Unit = locked(path) {
     val fs = fsFor(samples.sparkSession, path)
     layout(samples).write.mode("overwrite").partitionBy("date").parquet(path)
-    commitSnapshot(fs, new Path(path), -1L, listingFiles(fs, new Path(path)), 0L)
+    commitSnapshot(fs, new Path(path), NoSnapshot, listingFiles(fs, new Path(path)))
   }
 
   /** One [[append]] caller's frame, queued for a group commit. The
@@ -871,7 +900,7 @@ object SamplesStore {
     // folded into committed data.
     val moved = publish(fs, stage(layout(read(spark, path).drop("date")), root),
       root, s"c${prev.gen + 1}-")
-    commitSnapshot(fs, root, prev.maxBatchId, moved, prev.gen)
+    commitSnapshot(fs, root, prev, moved)
     expireSnapshots(spark, path, 0L)
     val m = graft.OpsMetrics(spark)
     m.compactions.add(1)
@@ -987,7 +1016,7 @@ object SamplesStore {
         val added = publish(fs, staging, root, s"c${prev.gen + 1}-", folds.contains)
         val replaced = added.map(_.takeWhile(_ != '/')).toSet
         if (replaced.nonEmpty) {
-          commitDelta(fs, root, prev.maxBatchId, prev, added, replaced.flatMap(folds))
+          commitDelta(fs, root, prev, added, replaced.flatMap(folds))()
           // reclaim the folded days' superseded files once the grace
           // expires (0 = eager, for quiesced stores and specs)
           gcDataFiles(fs, root, replaced, gcGraceMs)
@@ -1121,8 +1150,7 @@ object SamplesStore {
         val latest =
           if (chain(latest0.gen).exists(g =>
               g != latest0.gen && all(g).getModificationTime <= cutoff)) {
-            val snap = commitSnapshot(fs, root, latest0.maxBatchId,
-              latest0.files, latest0.gen)
+            val snap = commitSnapshot(fs, root, latest0, latest0.files)
             all = listManifests()
             snap
           } else latest0
@@ -1188,7 +1216,7 @@ object SamplesStore {
           .filter(col("ts_us") < startUs || col("ts_us") >= endUs)), root),
           root, s"d${prev.gen + 1}-")
       if (touched.nonEmpty) {
-        commitDelta(fs, root, prev.maxBatchId, prev, added, touched.values.flatten.toSet)
+        commitDelta(fs, root, prev, added, touched.values.flatten.toSet)()
         gcDataFiles(fs, root, touched.keys, gcGraceMs)
       }
     }

@@ -25,27 +25,17 @@ import org.slf4j.LoggerFactory
   * intervalSec divides 86400). A day that left the source snapshot
   * leaves the rollup in the same commit.
   *
-  * Atomicity mirrors the samples store: rolled files stage under a
-  * hidden dir, move into day partitions, and ONE manifest rename
-  * publishes the new state; readers plan from the latest committed
-  * manifest, and superseded files are reclaimed by [[expireRollups]]
-  * after a grace window.
+  * Commits go through the samples store's own manifest: a rollup
+  * store IS a [[SamplesStore]] snapshot chain (staged files, ONE
+  * manifest commit under the store's mutation lock, grace-window
+  * expiry by [[SamplesStore.expireSnapshots]]), whose opaque header
+  * lines carry the rollup's interval, row schema and per-day source
+  * digests. Readers plan from the latest committed snapshot.
   */
 object RollupStore {
+  import SamplesStore.StoreSnapshot
 
   private val log = LoggerFactory.getLogger(getClass)
-  private val ManifestDir = "_manifests"
-  private val ManifestPattern = """m-(\d{20})""".r
-
-  /** One committed rollup state: interval, day → source-digest map,
-    * live data files. */
-  final case class RollupSnapshot(gen: Long, intervalSec: Long,
-                                  dayDigests: Map[String, String],
-                                  files: Vector[String],
-                                  schema: Int = 1) {
-    lazy val byDay: Map[String, Vector[String]] =
-      files.groupBy(f => f.takeWhile(_ != '/'))
-  }
 
   /** Rollup ROW schema version. v2 added the per-bucket edge points
     * (t_first/v_first/t_last/v_last) that let rate/increase/delta/
@@ -78,96 +68,35 @@ object RollupStore {
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def manifestFile(root: Path, gen: Long): Path =
-    new Path(new Path(root, ManifestDir), f"m-$gen%020d")
+  /** What a rollup snapshot was built as, parsed from its manifest
+    * header: bucket interval, row schema (1 when the line is absent —
+    * a pre-versioned store) and the source day → digest map. */
+  private final case class Built(intervalSec: Long, schema: Int,
+                                 dayDigests: Map[String, String])
 
-  /** In-process mutation serialization (one maintenance job per store
-    * path is the intended deployment; a cross-process double-run is
-    * safe — the generation rename arbitrates, last committer wins a
-    * complete, self-consistent state). */
-  private val locks = scala.collection.concurrent.TrieMap.empty[String, Object]
-  private def locked[T](path: String)(f: => T): T =
-    locks.getOrElseUpdate(new Path(path).toString, new Object).synchronized(f)
-
-  /** Parsed rollup manifests by store, keyed to their generation —
-    * same immutability argument as the samples-store snapshot cache:
-    * a generation's content never changes after its rename, so the
-    * cache is only ever stale, and staleness is caught by the one
-    * listing every call does. Keeps the per-request freshness gate
-    * on the read path at one listing instead of a manifest parse. */
-  private val rollupCache = scala.collection.concurrent.TrieMap.empty[String, RollupSnapshot]
-
-  private[graft] def latestRollup(fs: FileSystem, root: Path): Option[RollupSnapshot] = {
-    val dir = new Path(root, ManifestDir)
-    val gens =
-      try fs.listStatus(dir).map(_.getPath.getName)
-        .collect { case ManifestPattern(g) => g.toLong }
-      catch { case _: java.io.FileNotFoundException => Array.empty[Long] }
-    if (gens.isEmpty) { rollupCache.remove(root.toString); None }
-    else {
-      val gen = gens.max
-      rollupCache.get(root.toString).filter(_.gen == gen).orElse {
-        val snap = readManifest(fs, root, gen)
-        rollupCache.put(root.toString, snap)
-        Some(snap)
+  private def built(snap: StoreSnapshot): Built =
+    snap.header.foldLeft(Built(0L, 1, Map.empty)) { (b, l) =>
+      if (l.startsWith("interval ")) b.copy(intervalSec = l.stripPrefix("interval ").toLong)
+      else if (l.startsWith("schema ")) b.copy(schema = l.stripPrefix("schema ").toInt)
+      else if (l.startsWith("D ")) l.stripPrefix("D ").split(" ", 2) match {
+        case Array(d, dig) => b.copy(dayDigests = b.dayDigests + (d -> dig))
+        case _             => b
       }
+      else b
     }
-  }
 
-  private def readManifest(fs: FileSystem, root: Path, gen: Long): RollupSnapshot = {
-    val in = fs.open(manifestFile(root, gen))
-    try {
-      var interval = 0L
-      val days = Map.newBuilder[String, String]
-      val files = Vector.newBuilder[String]
-      var schema = 1
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines().foreach { l =>
-        if (l.startsWith("interval ")) interval = l.stripPrefix("interval ").toLong
-        else if (l.startsWith("schema ")) schema = l.stripPrefix("schema ").toInt
-        else if (l.startsWith("D ")) l.stripPrefix("D ").split(" ", 2) match {
-          case Array(d, dig) => days += d -> dig
-          case _             =>
-        }
-        else if (l.startsWith("F ")) files += l.stripPrefix("F ")
-      }
-      RollupSnapshot(gen, interval, days.result(), files.result(), schema)
-    } finally in.close()
-  }
+  private def headerOf(intervalSec: Long, dayDigests: Map[String, String]): Vector[String] =
+    Vector(s"interval $intervalSec", s"schema $SchemaVersion") ++
+      dayDigests.toVector.sorted.map { case (d, dig) => s"D $d $dig" }
 
-  private def commitManifest(fs: FileSystem, root: Path, intervalSec: Long,
-                             dayDigests: Map[String, String],
-                             files: Seq[String], prevGen: Long): RollupSnapshot = {
-    val dir = new Path(root, ManifestDir)
-    fs.mkdirs(dir)
-    val sorted = files.toVector.sorted
-    val content = (Vector("graft-rollup v1", s"interval $intervalSec",
-      s"schema $SchemaVersion") ++
-      dayDigests.toVector.sorted.map { case (d, dig) => s"D $d $dig" } ++
-      sorted.map("F " + _)).mkString("\n")
-    // prevGen comes from the FILTERED snapshot (an interval or schema
-    // change reads as None → 0); committing below the live on-disk
-    // max would shadow this manifest behind the stale one forever.
-    // Anchor at the real max so the new state always WINS the
-    // gens.max resolution.
-    val onDisk =
-      try fs.listStatus(dir).map(_.getPath.getName)
-        .collect { case ManifestPattern(g) => g.toLong }
-      catch { case _: java.io.FileNotFoundException => Array.empty[Long] }
-    var gen = math.max(prevGen, if (onDisk.isEmpty) 0L else onDisk.max) + 1
-    var done = false
-    while (!done) {
-      val tmp = new Path(dir, s".tmp-$gen-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-      if (fs.rename(tmp, manifestFile(root, gen))) done = true
-      else { fs.delete(tmp, false); gen += 1 }
-    }
-    val snap = RollupSnapshot(gen, intervalSec, dayDigests, sorted,
-      SchemaVersion)
-    rollupCache.put(root.toString, snap)
-    snap
-  }
+  /** The latest committed rollup at `path` with what it was built as,
+    * when it is at the current schema and (if given) at `intervalSec`. */
+  private def current(spark: SparkSession, path: String,
+                      intervalSec: Option[Long]): Option[(StoreSnapshot, Built)] =
+    SamplesStore.latestSnapshot(fsFor(spark, path), new Path(path))
+      .map(s => (s, built(s)))
+      .filter { case (_, b) =>
+        b.schema == SchemaVersion && intervalSec.forall(_ == b.intervalSec) }
 
   /** Input-size-derived shuffle width for a maintenance rebuild
     * ([[graft.Width]] at 64 MiB of source files per task, floor 1).
@@ -197,19 +126,59 @@ object RollupStore {
     * a plain directory listing (a parquet tree built by other
     * tools). */
   private def sourceDays(fs: FileSystem, srcRoot: Path): Map[String, Vector[String]] =
-    SamplesStore.latestSnapshot(fs, srcRoot) match {
-      case Some(snap) => snap.byDay
-      case None =>
-        if (!fs.exists(srcRoot)) Map.empty
-        else fs.listStatus(srcRoot)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-          .map { day =>
-            day.getPath.getName -> fs.listStatus(day.getPath)
-              .filter(_.getPath.getName.endsWith(".parquet"))
-              .map(f => day.getPath.getName + "/" + f.getPath.getName)
-              .toVector.sorted
-          }.toMap
+    SamplesStore.latestSnapshot(fs, srcRoot).map(_.files)
+      .getOrElse(SamplesStore.listingFiles(fs, srcRoot))
+      .groupBy(_.takeWhile(_ != '/'))
+
+  /** The incremental pass [[rollup]] and [[rollupLadder]] share, run
+    * under the rollup store's mutation lock: digest `src`'s days,
+    * re-aggregate (`build` over the changed days' source rows and
+    * files) only those whose digest differs from the latest rollup's
+    * header, and commit ONE delta on top of that latest generation —
+    * adding the rebuilt files, removing the invalidated days' files
+    * (every file when the interval or schema differs) and restating
+    * the header. Returns the days re-aggregated. */
+  private def refresh(spark: SparkSession, srcPath: String,
+                      src: Map[String, Vector[String]], path: String,
+                      intervalSec: Long)
+                     (build: (DataFrame, Seq[String]) => DataFrame): Int = {
+    val fs = fsFor(spark, path)
+    val root = new Path(path)
+    val latest = SamplesStore.latestSnapshot(fs, root).getOrElse(SamplesStore.NoSnapshot)
+    onRollupResolved()
+    val prev = Some(built(latest))
+      .filter(b => b.intervalSec == intervalSec && b.schema == SchemaVersion)
+    val srcDigests = src.map { case (d, fls) => d -> digest(fls) }
+    val prevDigests = prev.map(_.dayDigests).getOrElse(Map.empty)
+    val changed = srcDigests.filter { case (d, dig) => !prevDigests.get(d).contains(dig) }
+    val dropped = prevDigests.keySet -- srcDigests.keySet
+    if (changed.isEmpty && dropped.isEmpty && prev.nonEmpty) 0
+    else {
+      val moved =
+        if (changed.isEmpty) Vector.empty[String]
+        else {
+          val srcFiles = changed.keys.toSeq.flatMap(src(_))
+          val raw = spark.read.option("basePath", srcPath)
+            .parquet(srcFiles.map(f => new Path(new Path(srcPath), f).toString): _*)
+          SamplesStore.publish(fs, SamplesStore.stage(build(raw, srcFiles)
+            .repartition(col("date"))
+            .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("bucket")),
+            root), root, "r-")
+        }
+      val invalidated = changed.keySet ++ dropped
+      val removed = latest.files.filter(f =>
+        prev.isEmpty || invalidated.contains(f.takeWhile(_ != '/'))).toSet
+      SamplesStore.commitDelta(fs, root, latest, moved, removed)(
+        header = headerOf(intervalSec, srcDigests))
+      log.info(s"rollup($path): rebuilt ${changed.size} day(s), dropped ${dropped.size}")
+      changed.size
     }
+  }
+
+  /** Test seam: runs after a rollup pass resolves its latest snapshot
+    * under the mutation lock, before it stages and commits — lets
+    * StoreSpec overlap two passes on one rollup store. */
+  private[graft] var onRollupResolved: () => Unit = () => ()
 
   /** Bring `rollupPath` up to date with `srcPath` at `intervalSec`
     * buckets; returns the number of day partitions re-aggregated.
@@ -220,107 +189,78 @@ object RollupStore {
     * different interval rebuilds fully (the interval is part of the
     * manifest, not a hidden assumption). */
   def rollup(spark: SparkSession, srcPath: String, rollupPath: String,
-             intervalSec: Long = 3600L): Int = locked(rollupPath) {
+             intervalSec: Long = 3600L): Int = SamplesStore.locked(rollupPath) {
     require(86400L % intervalSec == 0,
       s"intervalSec=$intervalSec must divide a day: day-partitioned rebuilds depend on bucket alignment")
-    val fs = fsFor(spark, rollupPath)
-    val srcFs = fsFor(spark, srcPath)
-    val root = new Path(rollupPath)
-    val src = sourceDays(srcFs, new Path(srcPath))
-    val srcDigests = src.map { case (d, fls) => d -> digest(fls) }
-    val prev = latestRollup(fs, root)
-      .filter(s => s.intervalSec == intervalSec && s.schema == SchemaVersion)
-    val prevDigests = prev.map(_.dayDigests).getOrElse(Map.empty)
-    val changed = srcDigests.filter { case (d, dig) => !prevDigests.get(d).contains(dig) }
-    val dropped = prevDigests.keySet -- srcDigests.keySet
-    if (changed.isEmpty && dropped.isEmpty && prev.nonEmpty) 0
-    else {
-      val srcRoot = new Path(srcPath)
-      val moved =
-        if (changed.isEmpty) Vector.empty[String]
-        else {
-          val srcFiles = changed.keys.toSeq.flatMap(src(_))
-          val paths = srcFiles.map(f => new Path(srcRoot, f).toString)
-          val raw = spark.read.option("basePath", srcPath).parquet(paths: _*)
-          // ONE exchange for the whole rebuild, its width derived
-          // from the CHANGED INPUT's bytes (guide §2: scale-adaptive
-          // partitioning, never a constant): the common maintenance
-          // slice is one appended day, which must not fan out across
-          // the full configured shuffle width — while a bulk rebuild
-          // at cluster scale still caps at the session's own setting.
-          val parts = scaledShuffleParts(spark, srcRoot, srcFiles)
-          // Per-second dedup (the read path's GROUP BY max) computed
-          // ON the bucket-keyed partitioning instead of its own
-          // t_sec-keyed exchange: within (date, metric, labels,
-          // bucket) sorted by (t_sec, v), the LAST row of each t_sec
-          // run IS the per-second max — a lead() probe keeps exactly
-          // that row. The rank-from-newest (_rk, for the penultimate
-          // point) is the running count of kept rows from the current
-          // row to the partition end — same partition+order spec, so
-          // no second sort and no second exchange; the bucket
-          // aggregate then reuses the same clustering. Net plan:
-          // Exchange → Sort → Window → Filter → HashAggregate, where
-          // the previous shape paid an extra full exchange+aggregate
-          // of the raw rows (t_sec groupBy) before the window's.
-          val bucketKeys = Seq(col("date"), col("metric"), col("labels"),
-            col("bucket"))
-          val wAsc = org.apache.spark.sql.expressions.Window
-            .partitionBy(bucketKeys: _*)
-            .orderBy(col("t_sec").asc, col("value").asc)
-          val rolled = raw
-            .withColumn("t_sec", expr("ts_us DIV 1000000"))
-            .withColumn("bucket", expr(s"t_sec DIV $intervalSec * $intervalSec"))
-            .repartition(parts, bucketKeys: _*)
-            .withColumn("_nt", lead(col("t_sec"), 1).over(wAsc))
-            .withColumn("_kept",
-              when(col("_nt").isNull || col("_nt") =!= col("t_sec"), 1L)
-                .otherwise(0L))
-            .withColumn("_rk", sum(col("_kept")).over(
-              wAsc.rowsBetween(org.apache.spark.sql.expressions.Window.currentRow,
-                org.apache.spark.sql.expressions.Window.unboundedFollowing)))
-            .filter(col("_kept") === 1L)
-            .withColumn("v", col("value"))
-            .groupBy(col("date"), col("metric"), col("labels"), col("bucket"))
-            // schema v2: the bucket's EDGE points ride along so
-            // rate/increase/delta/last_over_time re-aggregate exactly
-            // (window first = earliest bucket's first, last = latest
-            // bucket's last — the raw path's very samples); schema
-            // v3: the penultimate point joins them for irate/idelta
-            // (_rk==2 matches at most one row, so the two max(when)s
-            // read the SAME row — never torn)
-            .agg(min(col("v")).as("min_value"), max(col("v")).as("max_value"),
-                 sum(col("v")).as("sum_value"), count(lit(1)).as("n_points"),
-                 min(col("t_sec")).as("t_first"), max(col("t_sec")).as("t_last"),
-                 min_by(col("v"), col("t_sec")).as("v_first"),
-                 max_by(col("v"), col("t_sec")).as("v_last"),
-                 max(when(col("_rk") === 2, col("t_sec"))).as("t_penult"),
-                 max(when(col("_rk") === 2, col("v"))).as("v_penult"),
-                 // schema v4: exact integer moments (per-sample e2
-                 // snap then integer sums — associative, so window
-                 // re-aggregation reproduces the raw moments exactly).
-                 // The square fits BIGINT but its sum can wrap (v6),
-                 // so syy_e4 sums in DECIMAL(38,0) — still exact
-                 sum(expr("CAST(floor(v * 100 + 0.5) AS BIGINT)")).as("sy_e2"),
-                 sum(expr("CAST(CAST(floor(v * 100 + 0.5) AS BIGINT) * " +
-                   "CAST(floor(v * 100 + 0.5) AS BIGINT) AS DECIMAL(38,0))"))
-                   .as("syy_e4"),
-                 // schema v5: argmax timestamps (value ties → the
-                 // LATEST sample — lexicographic (v, t) / (-v, t)
-                 // max, the raw path's very rule)
-                 expr("max_by(t_sec, struct(v, t_sec))").as("t_vmax"),
-                 expr("max_by(t_sec, struct(-v, t_sec))").as("t_vmin"))
-          SamplesStore.publish(fs, SamplesStore.stage(rolled
-            .repartition(col("date"))
-            .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("bucket")),
-            root), root, "r-")
-        }
-      val invalidated = changed.keySet ++ dropped
-      val keptFiles = prev.map(_.files).getOrElse(Vector.empty)
-        .filterNot(f => invalidated.contains(f.takeWhile(_ != '/')))
-      commitManifest(fs, root, intervalSec, srcDigests,
-        keptFiles ++ moved, prev.map(_.gen).getOrElse(0L))
-      log.info(s"rollup($rollupPath): rebuilt ${changed.size} day(s), dropped ${dropped.size}")
-      changed.size
+    val src = sourceDays(fsFor(spark, srcPath), new Path(srcPath))
+    refresh(spark, srcPath, src, rollupPath, intervalSec) { (raw, srcFiles) =>
+      // ONE exchange for the whole rebuild, its width derived
+      // from the CHANGED INPUT's bytes (guide §2: scale-adaptive
+      // partitioning, never a constant): the common maintenance
+      // slice is one appended day, which must not fan out across
+      // the full configured shuffle width — while a bulk rebuild
+      // at cluster scale still caps at the session's own setting.
+      val parts = scaledShuffleParts(spark, new Path(srcPath), srcFiles)
+      // Per-second dedup (the read path's GROUP BY max) computed
+      // ON the bucket-keyed partitioning instead of its own
+      // t_sec-keyed exchange: within (date, metric, labels,
+      // bucket) sorted by (t_sec, v), the LAST row of each t_sec
+      // run IS the per-second max — a lead() probe keeps exactly
+      // that row. The rank-from-newest (_rk, for the penultimate
+      // point) is the running count of kept rows from the current
+      // row to the partition end — same partition+order spec, so
+      // no second sort and no second exchange; the bucket
+      // aggregate then reuses the same clustering. Net plan:
+      // Exchange → Sort → Window → Filter → HashAggregate, where
+      // the previous shape paid an extra full exchange+aggregate
+      // of the raw rows (t_sec groupBy) before the window's.
+      val bucketKeys = Seq(col("date"), col("metric"), col("labels"),
+        col("bucket"))
+      val wAsc = org.apache.spark.sql.expressions.Window
+        .partitionBy(bucketKeys: _*)
+        .orderBy(col("t_sec").asc, col("value").asc)
+      raw
+        .withColumn("t_sec", expr("ts_us DIV 1000000"))
+        .withColumn("bucket", expr(s"t_sec DIV $intervalSec * $intervalSec"))
+        .repartition(parts, bucketKeys: _*)
+        .withColumn("_nt", lead(col("t_sec"), 1).over(wAsc))
+        .withColumn("_kept",
+          when(col("_nt").isNull || col("_nt") =!= col("t_sec"), 1L)
+            .otherwise(0L))
+        .withColumn("_rk", sum(col("_kept")).over(
+          wAsc.rowsBetween(org.apache.spark.sql.expressions.Window.currentRow,
+            org.apache.spark.sql.expressions.Window.unboundedFollowing)))
+        .filter(col("_kept") === 1L)
+        .withColumn("v", col("value"))
+        .groupBy(col("date"), col("metric"), col("labels"), col("bucket"))
+        // schema v2: the bucket's EDGE points ride along so
+        // rate/increase/delta/last_over_time re-aggregate exactly
+        // (window first = earliest bucket's first, last = latest
+        // bucket's last — the raw path's very samples); schema
+        // v3: the penultimate point joins them for irate/idelta
+        // (_rk==2 matches at most one row, so the two max(when)s
+        // read the SAME row — never torn)
+        .agg(min(col("v")).as("min_value"), max(col("v")).as("max_value"),
+             sum(col("v")).as("sum_value"), count(lit(1)).as("n_points"),
+             min(col("t_sec")).as("t_first"), max(col("t_sec")).as("t_last"),
+             min_by(col("v"), col("t_sec")).as("v_first"),
+             max_by(col("v"), col("t_sec")).as("v_last"),
+             max(when(col("_rk") === 2, col("t_sec"))).as("t_penult"),
+             max(when(col("_rk") === 2, col("v"))).as("v_penult"),
+             // schema v4: exact integer moments (per-sample e2
+             // snap then integer sums — associative, so window
+             // re-aggregation reproduces the raw moments exactly).
+             // The square fits BIGINT but its sum can wrap (v6),
+             // so syy_e4 sums in DECIMAL(38,0) — still exact
+             sum(expr("CAST(floor(v * 100 + 0.5) AS BIGINT)")).as("sy_e2"),
+             sum(expr("CAST(CAST(floor(v * 100 + 0.5) AS BIGINT) * " +
+               "CAST(floor(v * 100 + 0.5) AS BIGINT) AS DECIMAL(38,0))"))
+               .as("syy_e4"),
+             // schema v5: argmax timestamps (value ties → the
+             // LATEST sample — lexicographic (v, t) / (-v, t)
+             // max, the raw path's very rule)
+             expr("max_by(t_sec, struct(v, t_sec))").as("t_vmax"),
+             expr("max_by(t_sec, struct(-v, t_sec))").as("t_vmin"))
     }
   }
 
@@ -348,89 +288,53 @@ object RollupStore {
     * re-aggregated; 0 when the fine rollup is absent, stale-schema,
     * or nothing changed. */
   def rollupLadder(spark: SparkSession, finePath: String, coarsePath: String,
-                   coarseIntervalSec: Long): Int = locked(coarsePath) {
+                   coarseIntervalSec: Long): Int = SamplesStore.locked(coarsePath) {
     require(86400L % coarseIntervalSec == 0,
       s"coarseIntervalSec=$coarseIntervalSec must divide a day")
-    val fineFs = fsFor(spark, finePath)
-    val fineRoot = new Path(finePath)
-    latestRollup(fineFs, fineRoot)
-      .filter(_.schema == SchemaVersion) match {
+    current(spark, finePath, None) match {
       case None => 0
-      case Some(fineSnap) =>
-        require(coarseIntervalSec % fineSnap.intervalSec == 0 &&
-            coarseIntervalSec > fineSnap.intervalSec,
+      case Some((fineSnap, fine)) =>
+        require(coarseIntervalSec % fine.intervalSec == 0 &&
+            coarseIntervalSec > fine.intervalSec,
           s"coarse interval $coarseIntervalSec must be a proper multiple " +
-            s"of the fine rollup's ${fineSnap.intervalSec}")
-        val fs = fsFor(spark, coarsePath)
-        val root = new Path(coarsePath)
-        val srcByDay = fineSnap.byDay
-        val srcDigests = srcByDay.map { case (d, fls) => d -> digest(fls) }
-        val prev = latestRollup(fs, root)
-          .filter(s => s.intervalSec == coarseIntervalSec &&
-            s.schema == SchemaVersion)
-        val prevDigests = prev.map(_.dayDigests).getOrElse(Map.empty)
-        val changed = srcDigests.filter { case (d, dig) =>
-          !prevDigests.get(d).contains(dig) }
-        val dropped = prevDigests.keySet -- srcDigests.keySet
-        if (changed.isEmpty && dropped.isEmpty && prev.nonEmpty) 0
-        else {
-          val moved =
-            if (changed.isEmpty) Vector.empty[String]
-            else {
-              val paths = changed.keys.toSeq.flatMap(srcByDay(_))
-                .map(f => new Path(fineRoot, f).toString)
-              val fine = spark.read.option("basePath", finePath)
-                .parquet(paths: _*)
-              val rolled = fine
-                .withColumn("cbucket",
-                  expr(s"bucket DIV $coarseIntervalSec * $coarseIntervalSec"))
-                .groupBy(col("date"), col("metric"), col("labels"),
-                  col("cbucket").as("bucket"))
-                .agg(
-                  min(col("min_value")).as("min_value"),
-                  max(col("max_value")).as("max_value"),
-                  sum(col("sum_value")).as("sum_value"),
-                  sum(col("n_points")).as("n_points"),
-                  min(col("t_first")).as("t_first"),
-                  max(col("t_last")).as("t_last"),
-                  expr("min_by(v_first, t_first)").as("v_first"),
-                  expr("max_by(v_last, t_last)").as("v_last"),
-                  // the coarse penult is the 2nd-newest SAMPLE:
-                  // candidates = each fine bucket's last two (the
-                  // per-second dedup makes times unique per series,
-                  // so a time-desc sort's second element IS it);
-                  // bounded by 2·(interval ratio) elements
-                  expr("""
-                    array_sort(
-                      filter(
-                        flatten(collect_list(array(
-                          struct(t_last AS t, v_last AS v),
-                          struct(t_penult AS t, v_penult AS v)))),
-                        x -> x.t IS NOT NULL),
-                      (a, b) -> CASE WHEN a.t > b.t THEN -1
-                                     WHEN a.t < b.t THEN 1 ELSE 0 END)
-                  """).as("_cand"),
-                  sum(col("sy_e2")).as("sy_e2"),
-                  sum(col("syy_e4")).as("syy_e4"),
-                  expr("max_by(t_vmax, struct(max_value, t_vmax))").as("t_vmax"),
-                  expr("max_by(t_vmin, struct(-min_value, t_vmin))").as("t_vmin"))
-                .withColumn("t_penult", expr("get(_cand, 1).t"))
-                .withColumn("v_penult", expr("get(_cand, 1).v"))
-                .drop("_cand")
-              SamplesStore.publish(fs, SamplesStore.stage(rolled
-                .repartition(col("date"))
-                .sortWithinPartitions(col("date"), col("metric"),
-                  col("labels"), col("bucket")),
-                root), root, "r-")
-            }
-          val invalidated = changed.keySet ++ dropped
-          val keptFiles = prev.map(_.files).getOrElse(Vector.empty)
-            .filterNot(f => invalidated.contains(f.takeWhile(_ != '/')))
-          commitManifest(fs, root, coarseIntervalSec, srcDigests,
-            keptFiles ++ moved, prev.map(_.gen).getOrElse(0L))
-          log.info(s"rollupLadder($coarsePath): rebuilt ${changed.size} day(s), " +
-            s"dropped ${dropped.size}")
-          changed.size
+            s"of the fine rollup's ${fine.intervalSec}")
+        refresh(spark, finePath, fineSnap.byDay, coarsePath, coarseIntervalSec) { (fine, _) =>
+          fine
+            .withColumn("cbucket",
+              expr(s"bucket DIV $coarseIntervalSec * $coarseIntervalSec"))
+            .groupBy(col("date"), col("metric"), col("labels"),
+              col("cbucket").as("bucket"))
+            .agg(
+              min(col("min_value")).as("min_value"),
+              max(col("max_value")).as("max_value"),
+              sum(col("sum_value")).as("sum_value"),
+              sum(col("n_points")).as("n_points"),
+              min(col("t_first")).as("t_first"),
+              max(col("t_last")).as("t_last"),
+              expr("min_by(v_first, t_first)").as("v_first"),
+              expr("max_by(v_last, t_last)").as("v_last"),
+              // the coarse penult is the 2nd-newest SAMPLE:
+              // candidates = each fine bucket's last two (the
+              // per-second dedup makes times unique per series,
+              // so a time-desc sort's second element IS it);
+              // bounded by 2·(interval ratio) elements
+              expr("""
+                array_sort(
+                  filter(
+                    flatten(collect_list(array(
+                      struct(t_last AS t, v_last AS v),
+                      struct(t_penult AS t, v_penult AS v)))),
+                    x -> x.t IS NOT NULL),
+                  (a, b) -> CASE WHEN a.t > b.t THEN -1
+                                 WHEN a.t < b.t THEN 1 ELSE 0 END)
+              """).as("_cand"),
+              sum(col("sy_e2")).as("sy_e2"),
+              sum(col("syy_e4")).as("syy_e4"),
+              expr("max_by(t_vmax, struct(max_value, t_vmax))").as("t_vmax"),
+              expr("max_by(t_vmin, struct(-min_value, t_vmin))").as("t_vmin"))
+            .withColumn("t_penult", expr("get(_cand, 1).t"))
+            .withColumn("v_penult", expr("get(_cand, 1).v"))
+            .drop("_cand")
         }
     }
   }
@@ -442,22 +346,21 @@ object RollupStore {
     * freshFor(raw→fine) && freshLadder(fine→coarse). */
   def freshLadder(spark: SparkSession, finePath: String, coarsePath: String,
                   coarseIntervalSec: Long, startSec: Long,
-                  endSec: Long): Boolean = {
-    val fineSnap = latestRollup(fsFor(spark, finePath), new Path(finePath))
-      .filter(_.schema == SchemaVersion)
-    val coarseSnap = latestRollup(fsFor(spark, coarsePath), new Path(coarsePath))
-      .filter(s => s.intervalSec == coarseIntervalSec &&
-        s.schema == SchemaVersion)
-    (fineSnap, coarseSnap) match {
-      case (Some(f), Some(c)) =>
-        f.byDay.forall { case (day, files) =>
-          val overlaps = day.stripPrefix("date=").toLongOption.forall(ds =>
-            (endSec <= 0 || ds <= endSec) && ds + 86400 > startSec)
-          !overlaps || c.dayDigests.get(day).contains(digest(files))
-        }
+                  endSec: Long): Boolean =
+    (current(spark, finePath, None), current(spark, coarsePath, Some(coarseIntervalSec))) match {
+      case (Some((f, _)), Some((_, c))) => covers(c, f.byDay, startSec, endSec)
       case _ => false
     }
-  }
+
+  /** `b` was built from `src`'s current files for every day
+    * overlapping [startSec, endSec] (endSec ≤ 0 = unbounded). */
+  private def covers(b: Built, src: Map[String, Vector[String]],
+                     startSec: Long, endSec: Long): Boolean =
+    src.forall { case (day, files) =>
+      val overlaps = day.stripPrefix("date=").toLongOption.forall(ds =>
+        (endSec <= 0 || ds <= endSec) && ds + 86400 > startSec)
+      !overlaps || b.dayDigests.get(day).contains(digest(files))
+    }
 
   /** The rollup as a DataFrame — planned from the latest committed
     * manifest (same snapshot-isolation contract as the samples
@@ -468,15 +371,13 @@ object RollupStore {
     * (schema v3) penultimate point t_penult, v_penult (NULL on
     * single-sample buckets), and the (schema v4) exact integer
     * moments sy_e2, syy_e4. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val fs = fsFor(spark, path)
-    latestRollup(fs, new Path(path)) match {
+  def read(spark: SparkSession, path: String): DataFrame =
+    SamplesStore.latestSnapshot(fsFor(spark, path), new Path(path)) match {
       case Some(snap) if snap.files.nonEmpty =>
         spark.read.option("basePath", path)
           .parquet(snap.files.map(f => new Path(new Path(path), f).toString): _*)
       case _ => emptyRollup(spark)
     }
-  }
 
   private def emptyRollup(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
@@ -543,45 +444,8 @@ object RollupStore {
     * the moment the next maintenance pass re-digests its day (until
     * then this gate routes queries over that day back to raw). */
   def freshFor(spark: SparkSession, srcPath: String, rollupPath: String,
-               intervalSec: Long, startSec: Long, endSec: Long): Boolean = {
-    val fs = fsFor(spark, rollupPath)
-    latestRollup(fs, new Path(rollupPath)) match {
-      case Some(r) if r.intervalSec == intervalSec &&
-                      r.schema == SchemaVersion =>
-        val src = sourceDays(fsFor(spark, srcPath), new Path(srcPath))
-        src.forall { case (day, files) =>
-          val overlaps = day.stripPrefix("date=").toLongOption.forall(ds =>
-            (endSec <= 0 || ds <= endSec) && ds + 86400 > startSec)
-          !overlaps || r.dayDigests.get(day).contains(digest(files))
-        }
-      case _ => false
+               intervalSec: Long, startSec: Long, endSec: Long): Boolean =
+    current(spark, rollupPath, Some(intervalSec)).exists { case (_, b) =>
+      covers(b, sourceDays(fsFor(spark, srcPath), new Path(srcPath)), startSec, endSec)
     }
-  }
-
-  /** Grace-window GC for superseded rollup files — keep the latest
-    * manifest plus any younger than `graceMs`, then delete data
-    * files nothing retained references (and stale staging). The
-    * [[SamplesStore.expireSnapshots]] twin. */
-  def expireRollups(spark: SparkSession, path: String,
-                    graceMs: Long = SamplesStore.GcGraceMs): Int = locked(path) {
-    val fs = fsFor(spark, path)
-    val root = new Path(path)
-    latestRollup(fs, root) match {
-      case None => 0
-      case Some(latest) =>
-        val cutoff = System.currentTimeMillis() - graceMs
-        val mdir = new Path(root, ManifestDir)
-        val (kept, droppedM) = fs.listStatus(mdir)
-          .flatMap(s => s.getPath.getName match {
-            case ManifestPattern(g) => Some((g.toLong, s))
-            case _                  => None
-          })
-          .partition { case (g, s) => g == latest.gen || s.getModificationTime > cutoff }
-        droppedM.foreach { case (_, s) => fs.delete(s.getPath, false) }
-        val referenced = kept.flatMap { case (g, _) => readManifest(fs, root, g).files }.toSet
-        SamplesStore.sweep(fs, root,
-          fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName),
-          referenced, cutoff)
-    }
-  }
 }

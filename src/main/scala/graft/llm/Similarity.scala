@@ -112,15 +112,15 @@ object Similarity {
   /** Signature bits [0, nBits): bit j = sign of <vec, r_j>, with
     * r(j, d) the LCG((j·dim + d)) hyperplane component mapped into
     * [-0.5, 0.5) — the codegen'd kernel; dim is taken from the vector
-    * itself (the `dim` parameter is kept for call-site clarity). */
-  def signatureExpr(vecCol: String, nBits: Int, dim: Int): String =
+    * itself. */
+  def signatureExpr(vecCol: String, nBits: Int): String =
     s"graft_hyperplane_sig($vecCol, $nBits)"
 
   /** LSH-bucketed ANN top-k: join queries to candidates within the
     * same nBits-signature bucket, exact cosine inside the bucket. */
-  def lshTopK(embeddings: DataFrame, nQueries: Int, nBits: Int, k: Int, dim: Int = 64): DataFrame = {
+  def lshTopK(embeddings: DataFrame, nQueries: Int, nBits: Int, k: Int): DataFrame = {
     val prep = prepared(embeddings)
-      .withColumn("bucket", expr(signatureExpr("vec", nBits, dim)))
+      .withColumn("bucket", expr(signatureExpr("vec", nBits)))
     val queries = prep.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"),
               col("nrm").as("qnrm"), col("bucket"))
@@ -154,11 +154,11 @@ object Similarity {
     * expensive) hyperplane signature — column pruning drops it, so
     * signatures are computed exactly once, in the band branch. */
   def nearDupPairs(embeddings: DataFrame, nBands: Int, bitsPerBand: Int,
-                   threshold: Double, dim: Int = 64,
+                   threshold: Double,
                    maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
     val nBits = nBands * bitsPerBand
     val prep = prepared(embeddings)
-      .withColumn("sigbits", expr(signatureExpr("vec", nBits, dim)))
+      .withColumn("sigbits", expr(signatureExpr("vec", nBits)))
       .withColumn("bands", expr(
         s"transform(sequence(0, ${nBands - 1}), b -> (sigbits >> (b * $bitsPerBand)) & ${(1 << bitsPerBand) - 1})"))
     val banded = Dedup.capBuckets(
@@ -213,7 +213,7 @@ object Similarity {
     val nBits = nBands * bitsPerBand
     val banded = Dedup.capBuckets(
       prepared(embeddings)
-        .withColumn("sigbits", expr(signatureExpr("vec", nBits, 64)))
+        .withColumn("sigbits", expr(signatureExpr("vec", nBits)))
         .select(col("vec_id"), posexplode(expr(
           s"transform(sequence(0, ${nBands - 1}), b -> (sigbits >> (b * $bitsPerBand)) & ${(1 << bitsPerBand) - 1})"))
           .as(Seq("band", "band_val"))),

@@ -97,7 +97,7 @@ object HttpServe {
     server.setExecutor(pool)
 
     def respond(ex: HttpExchange, status: Int, body: Array[Byte],
-                headers: Seq[(String, String)] = Nil): Unit = {
+                headers: Seq[(String, String)]): Unit = {
       headers.foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
       // sendResponseHeaders uses 0 for "unknown length" — an empty
       // body must pass -1 to mean "no body".
@@ -321,8 +321,11 @@ object HttpServe {
           RemoteRead.serve(SamplesStore.read(spark, storePath),
             reqBody, ignoreLabel, ignoreHints, maxReadSamples,
             transientRetries = 2,
+            // a missing planned file is worth a retry only when the
+            // store exists (another process's GC reclaimed it
+            // mid-scan); a never-written store is a permanent miss
             transientClassifier = e =>
-              RemoteRead.isTransientMiss(e) && storeSwapRecoverable(spark, storePath),
+              RemoteRead.isTransientMiss(e) && SamplesStore.exists(spark, storePath),
             // coarse, shape-exact queries serve from the rollup twin
             // when background rollup maintenance keeps one (and only
             // while its manifest is provably fresh for the window)
@@ -358,11 +361,9 @@ object HttpServe {
       values.map(v => s""""${esc(v)}"""").mkString(
         """{"status":"success","data":[""", ",", "]}").getBytes(UTF_8)
 
-    def storeSamples(): Option[org.apache.spark.sql.DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(storePath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) Some(SamplesStore.read(spark, storePath)) else None
-    }
+    def storeSamples(): Option[org.apache.spark.sql.DataFrame] =
+      if (SamplesStore.exists(spark, storePath)) Some(SamplesStore.read(spark, storePath))
+      else None
 
     server.createContext("/api/v1/labels", (ex: HttpExchange) => guarded(ex) {
       // optional match[] selectors narrow the domain (Prometheus
@@ -907,10 +908,7 @@ object HttpServe {
       val limit = capParam("limit")
       val limitPer = capParam("limit_per_metric")
       val mdPath = RemoteWrite.metadataPath(storePath)
-      val exists = {
-        val p = new org.apache.hadoop.fs.Path(mdPath)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-      }
+      val exists = SamplesStore.exists(spark, mdPath)
       val entries: Seq[(String, String, String, String)] =
         if (!exists || limit <= 0 || limitPer <= 0) Nil
         else {
@@ -1101,25 +1099,21 @@ object HttpServe {
     // (Grafana probes this when exemplar display is on).
     server.createContext("/api/v1/query_exemplars", (ex: HttpExchange) => guarded(ex) {
       val params = reqParams(ex)
-      val qParam = params.collectFirst { case ("query", v) => v }
-      val parsed = qParam.map(PromQL.parse)
+      val parsed = params.collectFirst { case ("query", v) => PromQL.parse(v) }
       val exPath = RemoteWrite.exemplarPath(storePath)
-      val exists = {
-        val p = new org.apache.hadoop.fs.Path(exPath)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-      }
-      (qParam, parsed) match {
-        case (None, _) =>
+      val exists = SamplesStore.exists(spark, exPath)
+      parsed match {
+        case None =>
           respond(ex, 400,
             """{"status":"error","errorType":"bad_data","error":"query parameter is required"}"""
               .getBytes(UTF_8),
             Seq("Content-Type" -> "application/json"))
-        case (_, Some(Left(err))) =>
+        case Some(Left(err)) =>
           respond(ex, 400,
             (s"""{"status":"error","errorType":"bad_data","error":"${esc(err)}"}""")
               .getBytes(UTF_8),
             Seq("Content-Type" -> "application/json"))
-        case (_, Some(Right(expr0))) =>
+        case Some(Right(expr0)) =>
           val sets = PromQL.selectorMatcherSets(expr0)
           val rows =
             if (!exists || sets.isEmpty) Array.empty[org.apache.spark.sql.Row]
@@ -1334,18 +1328,6 @@ object HttpServe {
     val lo = sec("start").map(s => df.filter(col("date") >= s / 86400 * 86400))
       .getOrElse(df)
     sec("end").map(e => lo.filter(col("date") <= e)).getOrElse(lo)
-  }
-
-  /** A missing-path read failure is only worth retrying when the
-    * store exists: then the miss is a planned file that another
-    * process's GC reclaimed mid-scan, and a fresh snapshot plans
-    * around it. A store that was never written — the normal
-    * first-boot state, created by the first /write — is a permanent
-    * miss, and retrying it would just burn the backoff budget on every
-    * probe request. */
-  private[graft] def storeSwapRecoverable(spark: SparkSession, storePath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   final class ProtoTooLargeException(msg: String) extends RuntimeException(msg)

@@ -1383,7 +1383,7 @@ object PromQL {
               case 's' => 1L case 'm' => 60L case 'h' => 3600L
               case 'd' => 86400L case 'w' => 604800L
               case ']' | ':' => -1L // bare seconds, unit omitted
-              case c => -2L
+              case _ => -2L
             }
             mult match {
               case -2L => err = Some(s"unsupported duration unit '$unit'")
@@ -1416,8 +1416,7 @@ object PromQL {
       if (i < s.length && s.charAt(i) == '{') {
         i += 1
         var inStr = false
-        var fine = true
-        while (fine && i < s.length && (inStr || s.charAt(i) != '}')) {
+        while (i < s.length && (inStr || s.charAt(i) != '}')) {
           val c = s.charAt(i)
           if (inStr && c == '\\') i += 1
           else if (c == '"') inStr = !inStr
@@ -1651,8 +1650,8 @@ object PromQL {
                        rollup: Option[RollupGrid],
                        ignoreLabel: Option[String],
                        rec: (Expr, Long, Long) => DataFrame,
-                       nativeHist: Option[DataFrame] = None,
-                       stale: Option[DataFrame] = None): DataFrame = {
+                       nativeHist: Option[DataFrame],
+                       stale: Option[DataFrame]): DataFrame = {
     // `offset o` shifts every window back by o: evaluate the
     // unshifted form on the grid translated to (start-o, end-o), then
     // put the grid timestamps back — exact, and every downstream
@@ -1938,6 +1937,7 @@ object PromQL {
       case '%' => expr("lv % rv")
       // 'A' = the atan2 keyword operator (CORDIC, quadrant-correct)
       case 'A' => atan2E6(col("lv"), col("rv"))
+      case o   => unsupportedArith(o)
     }
     // a zero divisor/modulus drops its row (Prometheus emits
     // +Inf/NaN; neither survives the exact integer value model)
@@ -1946,6 +1946,12 @@ object PromQL {
     filtered.select(lit(null).cast("string").as("metric"),
       outLabels(m).as("labels"), col("t"), v.as("v_e6"))
   }
+
+  /** The parser builds [[Binary]] only for `+ - * / %` and atan2
+    * (`A`) — `^` becomes [[PowInt]]/[[PowFrac]], comparisons [[Cmp]] —
+    * so any other operator reaches eval only from a hand-built tree. */
+  private def unsupportedArith(op: Char): Nothing =
+    throw new IllegalArgumentException(s"unsupported binary arithmetic operator '$op'")
 
   /** vector∘scalar: a per-row projection on the micro-unit integers
     * (deterministic IEEE arithmetic on values both engines share
@@ -1965,6 +1971,7 @@ object PromQL {
       case ('%', true)  => expr(s"${kE6}L % v_e6")
       case ('A', false) => atan2E6(col("v_e6"), lit(kE6))
       case ('A', true)  => atan2E6(lit(kE6), col("v_e6"))
+      case (o, _)       => unsupportedArith(o)
     }
     val base =
       if ((op == '/' || op == '%') && scalarOnLeft)
@@ -2006,6 +2013,7 @@ object PromQL {
       case ('%', true)  => tE6 % col("v_e6")
       case ('A', false) => atan2E6(col("v_e6"), tE6)
       case ('A', true)  => atan2E6(tE6, col("v_e6"))
+      case (o, _)       => unsupportedArith(o)
     }
     val base =
       if ((op == '/' || op == '%') && timeOnLeft)
@@ -2043,6 +2051,7 @@ object PromQL {
       case ('%', true)  => col("sv") % col("v_e6")
       case ('A', false) => atan2E6(col("v_e6"), col("sv"))
       case ('A', true)  => atan2E6(col("sv"), col("v_e6"))
+      case (o, _)       => unsupportedArith(o)
     }
     val base =
       if ((op == '/' || op == '%') && scalarOnLeft)
@@ -2818,7 +2827,7 @@ object PromQL {
                           endSec: Long, stepSec: Long, lookbackSec: Long,
                           ignoreLabel: Option[String],
                           nativeHist: Option[DataFrame],
-                          stale: Option[DataFrame] = None): Option[DataFrame] =
+                          stale: Option[DataFrame]): Option[DataFrame] =
     nativeHistEval(child, graft.ingest.NativeHistogram.quantile(q, _),
       startSec, endSec, stepSec, lookbackSec, ignoreLabel, nativeHist, stale)
 
@@ -2830,7 +2839,7 @@ object PromQL {
                              startSec: Long, endSec: Long, stepSec: Long,
                              lookbackSec: Long, ignoreLabel: Option[String],
                              nativeHist: Option[DataFrame],
-                             stale: Option[DataFrame] = None): Option[DataFrame] =
+                             stale: Option[DataFrame]): Option[DataFrame] =
     nativeHistEval(child, graft.ingest.NativeHistogram.fraction(lo, hi, _),
       startSec, endSec, stepSec, lookbackSec, ignoreLabel, nativeHist, stale)
 
@@ -2843,7 +2852,7 @@ object PromQL {
                              startSec: Long, endSec: Long, stepSec: Long,
                              lookbackSec: Long, ignoreLabel: Option[String],
                              nativeHist: Option[DataFrame],
-                             stale: Option[DataFrame] = None): Option[DataFrame] =
+                             stale: Option[DataFrame]): Option[DataFrame] =
     nativeHist.flatMap { hs =>
       histVec(hs, child, startSec, endSec, stepSec, lookbackSec,
         ignoreLabel, stale).map { vec =>
@@ -3500,7 +3509,7 @@ object PromQL {
                             res: Long, lookbackSec: Long,
                             rollup: Option[RollupGrid],
                             ignoreLabel: Option[String],
-                            stale: Option[DataFrame] = None): DataFrame = {
+                            stale: Option[DataFrame]): DataFrame = {
     val innerStart = (start - d + res - 1) / res * res
     val inner = eval(samples, child, innerStart, end, res, lookbackSec,
       rollup, ignoreLabel, stale = stale)
@@ -3790,7 +3799,7 @@ object PromQL {
                       start: Long, end: Long, step: Long, lookback: Long,
                       ignoreLabel: Option[String],
                       valueIsTime: Boolean = false,
-                      stale: Option[DataFrame] = None): DataFrame = {
+                      stale: Option[DataFrame]): DataFrame = {
     val off = lookback / step + 2
     val kTop = (end - start) / step
     val windowed = dedupedWindow(samples, matchers,
@@ -3980,8 +3989,8 @@ object PromQL {
     * samples), so the window's skew ceiling is series cardinality
     * per step — and a grouped rank only SHRINKS partitions. */
   private def rank(child: DataFrame, bottom: Boolean, k: Int,
-                   by: Seq[String] = Nil,
-                   without: Boolean = false): DataFrame =
+                   by: Seq[String],
+                   without: Boolean): DataFrame =
     rankWindow(child,
       Seq(if (bottom) col("v_e6").asc else col("v_e6").desc), k, by, without)
 
@@ -3991,8 +4000,8 @@ object PromQL {
     * pass through unchanged (a filter, not a transform), so the
     * metric name survives, like topk. */
   private def limitK(child: DataFrame, k: Int,
-                     by: Seq[String] = Nil,
-                     without: Boolean = false): DataFrame =
+                     by: Seq[String],
+                     without: Boolean): DataFrame =
     rankWindow(child, Nil, k, by, without)
 
   /** The ONE place the deterministic rank convention lives: partition

@@ -523,7 +523,7 @@ object RemoteRead {
   private def runQuery(samples: DataFrame, q: graft.operators.ReadQuery,
                        ignoreLabel: Option[String], ignoreHints: Boolean,
                        maxSamples: Long,
-                       rollupRoute: Option[RollupRoute] = None): Seq[PromTimeSeries] = {
+                       rollupRoute: Option[RollupRoute]): Seq[PromTimeSeries] = {
     val sel = rollupRoute
       .flatMap(rollupSelect(_, q, samples, ignoreLabel, ignoreHints)) match {
       case Some(routed) =>

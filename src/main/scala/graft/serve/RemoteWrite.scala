@@ -202,11 +202,9 @@ object RemoteWrite {
             lastExpiry.put(storePath, nowE)
             SamplesStore.expireSnapshots(spark, storePath, gcGraceMs)
             if (rollupIntervalSec > 0)
-              graft.ingest.RollupStore.expireRollups(spark,
-                rollupPathFor(storePath), gcGraceMs)
+              SamplesStore.expireSnapshots(spark, rollupPathFor(storePath), gcGraceMs)
             if (rollupLadderIntervalSec > 0)
-              graft.ingest.RollupStore.expireRollups(spark,
-                ladderPathFor(storePath), gcGraceMs)
+              SamplesStore.expireSnapshots(spark, ladderPathFor(storePath), gcGraceMs)
           }
         } catch {
           // a failed background merge must not be silent — but it must
@@ -231,14 +229,9 @@ object RemoteWrite {
     * classic rows that retention is dropping). */
   private[graft] def maintainSiblings(spark: SparkSession,
                                       storePath: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def exists(p: String): Boolean = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(conf).exists(hp)
-    }
     Seq(exemplarPath(storePath), metadataPath(storePath),
         histPath(storePath), stalePath(storePath)).foreach { p =>
-      if (exists(p)) {
+      if (SamplesStore.exists(spark, p)) {
         SamplesStore.maybeCompact(spark, p, autoCompactFilesPerDay,
           gcGraceMs = gcGraceMs)
         // reclaim superseded files + old manifests like the primary's
@@ -250,7 +243,7 @@ object RemoteWrite {
     // a marker past the horizon suppresses nothing
     Seq(exemplarPath(storePath), histPath(storePath),
         stalePath(storePath)).foreach { p =>
-      if (exists(p)) retentionPass(spark, p, retentionDays)
+      if (SamplesStore.exists(spark, p)) retentionPass(spark, p, retentionDays)
     }
   }
 
@@ -276,7 +269,7 @@ object RemoteWrite {
     * disabled). Configured via `-rule.record` flags. */
   @volatile var recordingRules: Seq[Recording.Rule] = Nil
   /** How many rule steps a cold start (or a long outage) backfills. */
-  @volatile var recordingBackfillSteps: Int = 7
+  private val recordingBackfillSteps = 7
   private val lastRecorded =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -408,8 +401,7 @@ object RemoteWrite {
     * lookback and the /read pass-through. */
   def staleStoreDf(spark: SparkSession, storePath: String): Option[DataFrame] = {
     val sp = stalePath(storePath)
-    val p = new org.apache.hadoop.fs.Path(sp)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    if (!SamplesStore.exists(spark, sp)) None
     else Some(SamplesStore.read(spark, sp))
   }
 
@@ -420,8 +412,7 @@ object RemoteWrite {
     * native-estimator flag. */
   def histStoreDf(spark: SparkSession, storePath: String): Option[DataFrame] = {
     val hp = histPath(storePath)
-    val p = new org.apache.hadoop.fs.Path(hp)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    if (!SamplesStore.exists(spark, hp)) None
     else {
       val df = SamplesStore.read(spark, hp)
       if (df.columns.contains("hist")) Some(df) else None

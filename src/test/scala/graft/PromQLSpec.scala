@@ -1286,6 +1286,30 @@ class PromQLSpec extends SparkSpecBase {
     assert(PromQL.parse("atan2{host=\"a\"}").isRight)
   }
 
+  test("binary arithmetic: the parser builds only + - * / % atan2, eval rejects any other operator") {
+    Seq("+" -> '+', "-" -> '-', "*" -> '*', "/" -> '/', "%" -> '%', "atan2" -> 'A')
+      .foreach { case (src, op) =>
+        assert(parse(s"m $src n") match {
+          case Right(Binary(`op`, _, _, _)) => true
+          case _                            => false
+        }, src)
+      }
+    // `^` and comparisons never build a Binary
+    assert(parse("m ^ n").isLeft)
+    assert(parse("m ^ 2") match { case Right(PowInt(_, 2)) => true; case _ => false })
+    assert(parse("m > n") match { case Right(_: Cmp) => true; case _ => false })
+    // a hand-built tree with any other operator fails with a clear
+    // error on every evaluation path: vector∘literal, vector∘scalar(),
+    // vector∘time() and vector∘vector
+    val m = Instant(Seq(graft.operators.Matchers.eq("__name__", "m")), 0L)
+    Seq(Binary('^', m, ScalarLit(2.0)), Binary('^', ScalarOf(m), m),
+        Binary('^', m, TimeFn), Binary('^', m, m)).foreach { e =>
+      val err = intercept[IllegalArgumentException](
+        PromQL.eval(tinySamples, e, T0 + 60, T0 + 60, 60L))
+      assert(err.getMessage.contains("'^'"), err.getMessage)
+    }
+  }
+
   test("sort/sort_desc pass values through and order the collect") {
     def ordered(q: String): Seq[(Long, Long)] =
       PromQL.eval(tinySamples, parse(q).toOption.get, T0 + 60, T0 + 120, 60L)

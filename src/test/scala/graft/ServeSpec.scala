@@ -2125,8 +2125,8 @@ class ServeSpec extends SparkSpecBase {
         blob, transientRetries = 3))
     assert(once === 1)
 
-    // fresh-server fast-fail: no store and no .old copy → not recoverable
-    assert(!HttpServe.storeSwapRecoverable(spark, "/tmp/graft_test/never_written_store"))
+    // fresh-server fast-fail: a store that was never written is absent
+    assert(!graft.ingest.SamplesStore.exists(spark, "/tmp/graft_test/never_written_store"))
   }
 
   test("soak: rollup-routed serving stays exact under concurrent writes and maintenance") {
@@ -2259,6 +2259,8 @@ class ServeSpec extends SparkSpecBase {
       assert(get(s"$base/api/v1/query_exemplars?query=up") ===
         ((200, """{"status":"success","data":[]}""")))
       assert(get(s"$base/api/v1/query_exemplars")._1 === 400)
+      val (xc, xb) = get(s"$base/api/v1/query_exemplars?query=sum(")
+      assert(xc === 400 && xb.contains(""""errorType":"bad_data""""), xb)
       // scrape targets / alertmanager ring: none, success shapes
       assert(get(s"$base/api/v1/targets") === ((200,
         """{"status":"success","data":{"activeTargets":[],"droppedTargets":[]}}""")))

@@ -628,7 +628,7 @@ class StoreSpec extends SparkSpecBase {
       "rollup-served coarse reads must equal the raw read path")
   }
 
-  test("expireRollups reclaims superseded rollup files and stale staging at grace 0") {
+  test("expireSnapshots reclaims superseded rollup files and stale staging at grace 0") {
     import graft.ingest.RollupStore
     val path = "/tmp/graft_test/store_rollup_expire"
     val rpath = "/tmp/graft_test/store_rollup_expire_roll"
@@ -648,11 +648,11 @@ class StoreSpec extends SparkSpecBase {
       .filter(f => f.isDirectory && f.getName.startsWith("date="))
       .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
     val before = rolled
-    val live = RollupStore.latestRollup(fs, new org.apache.hadoop.fs.Path(rpath)).get.files.size
+    val live = SamplesStore.latestSnapshot(fs, new org.apache.hadoop.fs.Path(rpath)).get.files.size
     val stale = new org.apache.hadoop.fs.Path(rpath, ".staging-crashed")
     fs.mkdirs(stale)
     assert(physical > live, "superseded rollup files are retained until expiry")
-    val reclaimed = RollupStore.expireRollups(spark, rpath, 0L)
+    val reclaimed = SamplesStore.expireSnapshots(spark, rpath, 0L)
     assert(reclaimed > 0 && physical == live, "expiry must reclaim every superseded file")
     assert(!fs.exists(stale), "expiry must sweep a stale staging dir")
     assert(rolled == before, "expiry must never change what the rollup reads")
@@ -799,6 +799,128 @@ class StoreSpec extends SparkSpecBase {
     assert(empty.count() == 0, "every rollup day must follow its deleted source day")
     assert(empty.schema == populated,
       s"empty-rollup schema ${empty.schema} must equal populated $populated")
+  }
+
+  // ---- rollup stores commit through the samples-store manifest ----
+
+  private def manifestGens(path: String): Seq[Long] =
+    new File(path, "_manifests").listFiles().map(_.getName)
+      .collect { case n if n.startsWith("m-") => n.stripPrefix("m-").toLong }.sorted.toSeq
+
+  private def manifestLines(path: String, gen: Long): Seq[String] = {
+    val src = scala.io.Source.fromFile(new File(path, f"_manifests/m-$gen%020d"), "UTF-8")
+    try src.getLines().toVector finally src.close()
+  }
+
+  private def rollupRows(rpath: String): Seq[String] =
+    graft.ingest.RollupStore.read(spark, rpath).drop("date")
+      .collect().map(_.toString).sorted.toSeq
+
+  test("a graft-rollup v1 manifest still serves, fresh, with no rebuild") {
+    import graft.ingest.RollupStore
+    val path = freshStore("/tmp/graft_test/store_rollup_legacy")
+    val rpath = freshStore(path + "_roll")
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SamplesStore.write(Tables.samples(spark, Sf), path)
+    assert(RollupStore.rollup(spark, path, rpath, 3600L) > 0)
+    val before = rollupRows(rpath)
+    val files = SamplesStore.latestSnapshot(fs, new org.apache.hadoop.fs.Path(rpath)).get.files
+    // the pre-header format: its own tag, interval, schema, one md5
+    // digest (first 8 bytes, hex) of each source day's sorted file
+    // list, then the live rollup files
+    def md5(fls: Seq[String]) = java.security.MessageDigest.getInstance("MD5")
+      .digest(fls.sorted.mkString("\n").getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+    val digests = SamplesStore.latestSnapshot(fs, new org.apache.hadoop.fs.Path(path)).get
+      .byDay.toVector.sortBy(_._1).map { case (d, fls) => s"D $d ${md5(fls)}" }
+    val legacy = Vector("graft-rollup v1", "interval 3600",
+      s"schema ${RollupStore.SchemaVersion}") ++ digests ++ files.sorted.map("F " + _)
+    fs.delete(new org.apache.hadoop.fs.Path(rpath, "_manifests"), true)
+    val out = fs.create(new org.apache.hadoop.fs.Path(rpath, f"_manifests/m-${1L}%020d"))
+    out.write(legacy.mkString("\n").getBytes("UTF-8"))
+    out.close()
+    SamplesStore.invalidateSnapshotCache(rpath)
+
+    assert(rollupRows(rpath) == before, "the legacy manifest must read the same rows")
+    assert(RollupStore.freshFor(spark, path, rpath, 3600L, 0L, 0L),
+      "the legacy manifest's digests must gate fresh")
+    assert(RollupStore.rollup(spark, path, rpath, 3600L) == 0,
+      "a legacy rollup must not be rebuilt")
+    assert(manifestGens(rpath) == Seq(1L), "a no-op pass commits nothing")
+  }
+
+  test("a rollup's delta chain keeps interval, schema and digests through expiry's re-checkpoint") {
+    import graft.ingest.RollupStore
+    val path = freshStore("/tmp/graft_test/store_rollup_rechk")
+    val rpath = freshStore(path + "_roll")
+    val samples = Tables.samples(spark, Sf).cache()
+    SamplesStore.write(samples.filter(expr("ts_us % 2 = 0")), path)
+    RollupStore.rollup(spark, path, rpath, 3600L)
+    val day0End = samples.agg(min(expr("ts_us DIV 1000000 DIV 86400 * 86400")))
+      .first().getLong(0) + 86400
+    for (k <- 0 until 2) {
+      SamplesStore.append(samples.filter(expr(s"ts_us % 2 = 1 AND ts_us % 4 = ${2 * k + 1}") &&
+        expr(s"ts_us DIV 1000000 < $day0End")), path)
+      assert(RollupStore.rollup(spark, path, rpath, 3600L) == 1)
+    }
+    val gens = manifestGens(rpath)
+    assert(gens == Seq(1L, 2L, 3L))
+    assert(manifestLines(rpath, 3L).contains("base 2"), "an incremental pass commits a delta")
+    val before = rollupRows(rpath)
+
+    SamplesStore.expireSnapshots(spark, rpath, 0L)
+    assert(manifestGens(rpath) == Seq(4L), "the chain folds into one checkpoint")
+    val rechk = manifestLines(rpath, 4L)
+    assert(!rechk.exists(_.startsWith("base ")), rechk)
+    assert(rechk.contains("interval 3600") &&
+      rechk.contains(s"schema ${RollupStore.SchemaVersion}") &&
+      rechk.exists(_.startsWith("D ")), rechk)
+    SamplesStore.invalidateSnapshotCache(rpath)
+    assert(RollupStore.freshFor(spark, path, rpath, 3600L, 0L, 0L),
+      "the re-checkpointed header must still gate fresh")
+    assert(RollupStore.rollup(spark, path, rpath, 3600L) == 0, "no rebuild after expiry")
+    assert(rollupRows(rpath) == before)
+  }
+
+  test("concurrent rollups on the raw and file: spellings of one path share one lock") {
+    import graft.ingest.RollupStore
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val path = freshStore("/tmp/graft_test/store_rollup_spellings")
+    val rpath = freshStore(path + "_roll")
+    val samples = Tables.samples(spark, Sf).cache()
+    SamplesStore.write(samples.filter(expr("ts_us % 2 = 0")), path)
+    RollupStore.rollup(spark, path, rpath, 3600L)
+    val day0End = samples.agg(min(expr("ts_us DIV 1000000 DIV 86400 * 86400")))
+      .first().getLong(0) + 86400
+    SamplesStore.append(samples.filter(expr("ts_us % 2 = 1") &&
+      expr(s"ts_us DIV 1000000 < $day0End")), path)
+    // Each pass waits (bounded) in its resolve→commit window for the
+    // other. Passes sharing one lock never meet there: the first times
+    // out and commits, the second resolves on top of it and finds
+    // nothing to do. Passes on two locks would both rebuild the day on
+    // the same base generation.
+    val arrived = new CountDownLatch(2)
+    RollupStore.onRollupResolved = () => {
+      arrived.countDown(); arrived.await(3, TimeUnit.SECONDS); ()
+    }
+    val rebuilt = new java.util.concurrent.atomic.AtomicInteger(0)
+    val outcomes =
+      try {
+        val a = spawn("rollup-raw") { rebuilt.addAndGet(RollupStore.rollup(spark, path, rpath)); () }
+        val b = spawn("rollup-qualified") {
+          rebuilt.addAndGet(RollupStore.rollup(spark, path, "file:" + rpath)); ()
+        }
+        Seq(a(), b())
+      } finally RollupStore.onRollupResolved = () => ()
+    outcomes.foreach(o => assert(o.isSuccess, o))
+    assert(rebuilt.get == 1, "exactly one of the two passes rebuilds the appended day")
+    val gens = manifestGens(rpath)
+    assert(gens == (1L to gens.last), s"generations must be contiguous: $gens")
+    gens.tail.foreach { g =>
+      assert(manifestLines(rpath, g).filter(_.startsWith("base ")).forall(_ == s"base ${g - 1}"),
+        s"generation $g must build on ${g - 1}")
+    }
+    assert(RollupStore.freshFor(spark, path, rpath, 3600L, 0L, 0L))
   }
 
   test("an empty snapshot reads with the same schema as a populated one") {
@@ -951,6 +1073,14 @@ class StoreSpec extends SparkSpecBase {
     // n appends = n delta commits on top of the gen-1 bootstrap adopt
     assert(gens.size == n + 1 && gens.last >= SamplesStore.CheckpointEvery,
       s"expected ${n + 1} generations crossing the checkpoint cadence, got $gens")
+    // a samples store's manifests carry no header lines: each line is
+    // the format tag, the batch ledger, a base pointer or a file entry
+    def headerFree(): Unit = manifests.foreach { case (g, _) =>
+      val extra = manifestLines(path, g).filterNot(l => l == "graft-manifest v1" ||
+        Seq("max-batch-id ", "base ", "F ", "A ", "R ").exists(l.startsWith))
+      assert(extra.isEmpty, s"gen $g carries header lines $extra")
+    }
+    headerFree()
 
     // THE scale property: a delta commit's size does not grow with the
     // number of unrelated live files. The store holds ~5x more files
@@ -987,6 +1117,7 @@ class StoreSpec extends SparkSpecBase {
       .collect().toSet == expected)
     assert(manifests.size <= 2,
       s"expiry must drop the superseded chain, kept ${manifests.map(_._1)}")
+    headerFree()
   }
 
   test("a crashed batch's uncommitted files are invisible and never folded") {
