@@ -36,6 +36,12 @@ final class OpsMetrics private (sc: SparkContext) {
   val storeAppends: LongAccumulator   = sc.longAccumulator("store_appends_total")
   val storeAppendCommits: LongAccumulator =
     sc.longAccumulator("store_append_commits_total")
+  // snapshot opens and the schema inferences among them — an open
+  // whose snapshot schema is known runs no Spark job, so inferences
+  // stay near zero on a warm server
+  val storeOpens: LongAccumulator     = sc.longAccumulator("store_opens_total")
+  val storeSchemaInferences: LongAccumulator =
+    sc.longAccumulator("store_schema_inferences_total")
   // reads answered from the materialized rollup instead of raw
   // samples (only ever when shape-exact AND manifest-fresh) — the
   // dashboard signal that the recording-rule path is actually used
@@ -76,6 +82,10 @@ final class OpsMetrics private (sc: SparkContext) {
     ("store_append_commits_total",
       "number of manifest commits that landed store appends (concurrent appends share one)",
       storeAppendCommits),
+    ("store_opens_total", "number of store snapshots opened for reading", storeOpens),
+    ("store_schema_inferences_total",
+      "store opens that ran a parquet schema-inference job (snapshot schema unknown)",
+      storeSchemaInferences),
     ("reads_from_rollup_total", "read queries served from the materialized rollup", readsFromRollup),
     ("write_dropped_histogram_samples_total",
       "remote-write native-histogram samples dropped (float64 store holds no histograms)",

@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import PromRemoteCodec._
 
@@ -315,9 +316,14 @@ object SamplesStore {
 
   /** One committed store snapshot: manifest generation, newest
     * committed stream batch id, the live data files (relative paths,
-    * sorted) and the manifest's opaque header lines. */
+    * sorted) and the manifest's opaque header lines. `dataSchema` is
+    * the files' non-partition columns when this JVM knows them — from
+    * the writer's frame, an ancestor snapshot, or one inference by
+    * [[open]] — and None otherwise. It lives only in memory and is
+    * never written to a manifest. */
   final case class StoreSnapshot(gen: Long, maxBatchId: Long, files: Vector[String],
-                                 header: Vector[String] = Vector.empty) {
+                                 header: Vector[String] = Vector.empty,
+                                 dataSchema: Option[StructType] = None) {
     /** day name (`date=X`) → its live files. */
     lazy val byDay: Map[String, Vector[String]] = files.groupBy(f => f.takeWhile(_ != '/'))
   }
@@ -336,15 +342,15 @@ object SamplesStore {
     * call already does. At 100 TB the manifest is O(total files)
     * lines; without this, every read request would re-read and
     * re-parse megabytes of file list. */
+  private val snapshotCache = scala.collection.concurrent.TrieMap
+    .empty[String, StoreSnapshot]
+
   /** Test/measurement seam: drop the cached parsed snapshot so the
     * next resolution replays the manifest chain cold, as a fresh
     * process would. */
   private[graft] def invalidateSnapshotCache(path: String): Unit = {
     snapshotCache.remove(lockKey(path)); ()
   }
-
-  private val snapshotCache = scala.collection.concurrent.TrieMap
-    .empty[String, StoreSnapshot]
 
   /** Name of the max-generation HINT file inside `_manifests`. The
     * hint is an optimization, never a source of truth: commits rename
@@ -456,7 +462,8 @@ object SamplesStore {
 
   /** Resolve generation `gen` to its full snapshot: walk the delta
     * chain back (base pointers) until a checkpoint — or until
-    * `cached`'s generation, whose resolved file set seeds the replay —
+    * `cached`'s generation, whose resolved file set seeds the replay
+    * and whose data schema the result inherits ([[withSchemaOf]]) —
     * then apply the deltas forward. Chains are ≤ [[CheckpointEvery]]
     * deltas long, and commit history is linear (commits serialize on
     * the store's mutation lock; a rename landing on an occupied slot
@@ -483,8 +490,19 @@ object SamplesStore {
       if (r.base.isEmpty) r.fulls.toSet
       else acc -- r.removes ++ r.adds
     }
-    StoreSnapshot(gen, chain.last.maxBatch, files.toVector.sorted, chain.last.header)
+    val snap = StoreSnapshot(gen, chain.last.maxBatch, files.toVector.sorted, chain.last.header)
+    if (chain.head.base.isEmpty) snap else withSchemaOf(usable, snap)
   }
+
+  /** `snap` with `known`'s data schema when `snap` has none and the
+    * two share a data file. A store's files all carry one schema, and
+    * only a commit that replaces every file may change it (a rollup
+    * rebuilt at a new interval or row schema), so one shared file
+    * proves the schema. */
+  private def withSchemaOf(known: Option[StoreSnapshot], snap: StoreSnapshot): StoreSnapshot =
+    known.filter(k => snap.dataSchema.isEmpty && k.dataSchema.isDefined)
+      .filter(k => { val live = k.files.toSet; snap.files.exists(live) })
+      .fold(snap)(k => snap.copy(dataSchema = k.dataSchema))
 
   /** [[writeManifest]]'s abort: another process claimed the manifest
     * generation this commit was about to take. No retry can fix it,
@@ -532,15 +550,17 @@ object SamplesStore {
     ((FormatLine +: s"max-batch-id $maxBatchId" +: header) ++
       files.map("F " + _)).mkString("\n")
 
-  /** Publish `files` as a full checkpoint on top of `prev`, restating
-    * its batch ledger and header (bootstrap/adopt/rebuild onto
-    * [[NoSnapshot]], compaction, expiry's re-checkpoint). */
+  /** Publish `files`, whose data schema is `dataSchema`, as a full
+    * checkpoint on top of `prev`, restating its batch ledger and
+    * header (bootstrap/adopt/rebuild onto [[NoSnapshot]], compaction,
+    * expiry's re-checkpoint). */
   private def commitSnapshot(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                             prev: StoreSnapshot, files: Seq[String]): StoreSnapshot = {
+                             prev: StoreSnapshot, files: Seq[String],
+                             dataSchema: Option[StructType]): StoreSnapshot = {
     val sorted = files.toVector.sorted
     val gen = writeManifest(fs, root, prev.gen)(_ =>
       checkpointText(prev.maxBatchId, prev.header, sorted))
-    val snap = prev.copy(gen = gen, files = sorted)
+    val snap = prev.copy(gen = gen, files = sorted, dataSchema = dataSchema)
     snapshotCache.put(lockKey(root.toString), snap)
     snap
   }
@@ -550,14 +570,15 @@ object SamplesStore {
     * O(total store files) — the property that keeps /write metadata
     * cost flat as the store grows. Every [[CheckpointEvery]]th
     * generation (and the first) is a full checkpoint instead,
-    * bounding the resolve chain for cold readers. The batch ledger and
-    * header default to `prev`'s. Callers hold the store's mutation
-    * lock and resolved `prev` under it. */
+    * bounding the resolve chain for cold readers. The batch ledger,
+    * header and data schema default to `prev`'s. Callers hold the
+    * store's mutation lock and resolved `prev` under it. */
   private[graft] def commitDelta(fs: org.apache.hadoop.fs.FileSystem, root: Path,
                                  prev: StoreSnapshot, added: Seq[String],
                                  removed: Set[String])(
                                  maxBatchId: Long = prev.maxBatchId,
-                                 header: Vector[String] = prev.header): StoreSnapshot = {
+                                 header: Vector[String] = prev.header,
+                                 dataSchema: Option[StructType] = prev.dataSchema): StoreSnapshot = {
     val files = ((prev.files.toSet -- removed) ++ added).toVector.sorted
     val gen = writeManifest(fs, root, prev.gen) { g =>
       if (prev.gen == 0 || g % CheckpointEvery == 0) checkpointText(maxBatchId, header, files)
@@ -566,7 +587,7 @@ object SamplesStore {
           removed.toVector.sorted.map("R " + _) ++
           added.toVector.sorted.map("A " + _)).mkString("\n")
     }
-    val snap = StoreSnapshot(gen, maxBatchId, files, header)
+    val snap = StoreSnapshot(gen, maxBatchId, files, header, dataSchema)
     snapshotCache.put(lockKey(root.toString), snap)
     snap
   }
@@ -590,7 +611,7 @@ object SamplesStore {
   private def snapshotOrAdopt(fs: org.apache.hadoop.fs.FileSystem,
                               root: Path): StoreSnapshot =
     latestSnapshot(fs, root).getOrElse(
-      commitSnapshot(fs, root, NoSnapshot, listingFiles(fs, root)))
+      commitSnapshot(fs, root, NoSnapshot, listingFiles(fs, root), None))
 
   private def fsFor(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -704,8 +725,11 @@ object SamplesStore {
       else {
         val prefix = batchId.map(id => s"b$id-").getOrElse("")
         val moved = publish(fs, stage(layout(samples), root), root, prefix)
+        // a store's first files carry the writer's schema; later
+        // appends keep the one the store already has
         val snap = commitDelta(fs, root, prev, moved, Set.empty)(
-          maxBatchId = batchId.getOrElse(prev.maxBatchId))
+          maxBatchId = batchId.getOrElse(prev.maxBatchId),
+          dataSchema = if (prev.files.isEmpty) Some(dataSchemaOf(samples)) else prev.dataSchema)
         graft.OpsMetrics(samples.sparkSession).storeAppendCommits.add(1)
         val touched = moved.iterator.map(_.takeWhile(_ != '/')).toSet
         if (touched.isEmpty) 0
@@ -723,7 +747,8 @@ object SamplesStore {
   def write(samples: DataFrame, path: String): Unit = locked(path) {
     val fs = fsFor(samples.sparkSession, path)
     layout(samples).write.mode("overwrite").partitionBy("date").parquet(path)
-    commitSnapshot(fs, new Path(path), NoSnapshot, listingFiles(fs, new Path(path)))
+    commitSnapshot(fs, new Path(path), NoSnapshot, listingFiles(fs, new Path(path)),
+      Some(dataSchemaOf(samples)))
   }
 
   /** One [[append]] caller's frame, queued for a group commit. The
@@ -820,19 +845,53 @@ object SamplesStore {
     * mutation can yank away, because superseded files outlive their
     * manifest by [[GcGraceMs]]. Lock-free and valid from ANY process —
     * this is the atomic-part-visibility contract the reference
-    * delegates to ClickHouse. A manifest-less path (a plain parquet
-    * tree from other tools) falls back to directory listing. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val fs = fsFor(spark, path)
-    val root = new Path(path)
-    latestSnapshot(fs, root) match {
-      case Some(snap) if snap.files.isEmpty => emptySamples(spark)
-      case Some(snap) =>
-        spark.read.option("basePath", path)
-          .parquet(snap.files.map(f => new Path(root, f).toString): _*)
-      case None => spark.read.parquet(path)
+    * delegates to ClickHouse. Opened by [[open]] with the snapshot's
+    * known schema, so a warm read runs no Spark job. A manifest-less
+    * path (a plain parquet tree from other tools) falls back to
+    * directory listing and schema inference. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    latestSnapshot(fsFor(spark, path), new Path(path)) match {
+      case Some(snap) => open(spark, path, snap)
+      case None       => spark.read.parquet(path)
+    }
+
+  /** The one place a snapshot's file list becomes a DataFrame: the
+    * files under store root `path`, with basePath so the `date`
+    * partition column (typed by path inference) and its pruning
+    * survive. A snapshot whose data schema is known opens with it and
+    * runs no Spark job; a file whose columns disagree with it fails
+    * the scan loudly. One without (a generation resolved cold: another
+    * process's commit, a restart) infers once and leaves the schema on
+    * the snapshot-cache entry of that generation, so the next open of
+    * it is warm. An empty snapshot opens as [[emptySamples]]. Counted
+    * on `/metrics` as `store_opens_total` and
+    * `store_schema_inferences_total`. */
+  private[graft] def open(spark: SparkSession, path: String, snap: StoreSnapshot): DataFrame = {
+    val m = graft.OpsMetrics(spark)
+    m.storeOpens.add(1)
+    if (snap.files.isEmpty) emptySamples(spark)
+    else {
+      val files = snap.files.map(f => new Path(new Path(path), f).toString)
+      val reader = spark.read.option("basePath", path)
+      snap.dataSchema match {
+        case Some(schema) => reader.schema(schema).parquet(files: _*)
+        case None =>
+          m.storeSchemaInferences.add(1)
+          val df = reader.parquet(files: _*)
+          val key = lockKey(path)
+          snapshotCache.get(key).filter(c => c.gen == snap.gen && c.dataSchema.isEmpty)
+            .foreach(c => snapshotCache.replace(key, c, c.copy(dataSchema = Some(dataSchemaOf(df)))))
+          df
+      }
     }
   }
+
+  /** The columns a store's data files hold for frame `df` (a writer's
+    * input, or an opened store): all but the `date` partition column.
+    * Nullability is moot: Spark's file source reads every column as
+    * nullable, whatever schema it is given. */
+  private[graft] def dataSchemaOf(df: DataFrame): StructType =
+    StructType(df.schema.filterNot(_.name == "date"))
 
   /** The store AS OF a specific committed generation — time travel.
     * Manifests are immutable and superseded data files outlive them
@@ -844,19 +903,15 @@ object SamplesStore {
     * [[expireSnapshots]] past the job's runtime. An expired or
     * never-committed generation fails loudly. */
   def readAt(spark: SparkSession, path: String, gen: Long): DataFrame = {
-    val fs = fsFor(spark, path)
-    val root = new Path(path)
     val snap =
-      try readManifest(fs, root, gen)
+      try readManifest(fsFor(spark, path), new Path(path), gen)
       catch {
         case _: java.io.FileNotFoundException =>
           throw new IllegalArgumentException(
             s"readAt: snapshot generation $gen of $path does not exist " +
             "(never committed, or reclaimed by expireSnapshots)")
       }
-    if (snap.files.isEmpty) emptySamples(spark)
-    else spark.read.option("basePath", path)
-      .parquet(snap.files.map(f => new Path(root, f).toString): _*)
+    open(spark, path, withSchemaOf(snapshotCache.get(lockKey(path)), snap))
   }
 
   /** The latest committed generation, if any — the handle a pipeline
@@ -864,9 +919,10 @@ object SamplesStore {
   def currentGen(spark: SparkSession, path: String): Option[Long] =
     latestSnapshot(fsFor(spark, path), new Path(path)).map(_.gen)
 
-  /** Schema of an empty-snapshot read, matching the inferred schema
-    * of a non-empty one (the `date` partition value infers as
-    * IntegerType for epoch-day seconds until 2038). */
+  /** What [[open]] returns for an empty snapshot: the samples
+    * store's columns, as a non-empty samples store opens them (the
+    * `date` partition value infers as IntegerType for epoch-day
+    * seconds until 2038). No Spark job runs. */
   private def emptySamples(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -898,9 +954,9 @@ object SamplesStore {
     // cannot drift from the read-side partition values; the source is
     // the SNAPSHOT (via read), so crashed-append garbage is never
     // folded into committed data.
-    val moved = publish(fs, stage(layout(read(spark, path).drop("date")), root),
-      root, s"c${prev.gen + 1}-")
-    commitSnapshot(fs, root, prev, moved)
+    val rows = read(spark, path).drop("date")
+    val moved = publish(fs, stage(layout(rows), root), root, s"c${prev.gen + 1}-")
+    commitSnapshot(fs, root, prev, moved, Some(dataSchemaOf(rows)))
     expireSnapshots(spark, path, 0L)
     val m = graft.OpsMetrics(spark)
     m.compactions.add(1)
@@ -962,16 +1018,16 @@ object SamplesStore {
       // crashed append's unreferenced files neither inflate the
       // fragmentation count nor get folded into committed data.
       // Sizes cost one listing per fragmented day only.
-      val targets: Seq[(String, Set[String], Long)] = locked(path) {
-        if (!fs.exists(root)) Seq.empty
+      val (snap, targets) = locked(path) {
+        if (!fs.exists(root)) (NoSnapshot, Seq.empty)
         else {
           val snap = snapshotOrAdopt(fs, root)
-          snap.byDay.toSeq.collect { case (day, dayFiles) if dayFiles.size > maxFilesPerDay =>
+          (snap, snap.byDay.toSeq.collect { case (day, dayFiles) if dayFiles.size > maxFilesPerDay =>
             val live = dayFiles.toSet
             val bytes = fs.listStatus(new Path(root, day))
               .filter(f => live.contains(day + "/" + f.getPath.getName)).map(_.getLen).sum
             (day, live, bytes)
-          }
+          })
         }
       }
       if (targets.isEmpty) return 0
@@ -987,7 +1043,7 @@ object SamplesStore {
       val nTasks = math.max(targets.length.toLong,
         (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
       val staging = stage(
-        spark.read.parquet(targets.flatMap(_._2).map(f => new Path(root, f).toString): _*)
+        open(spark, path, snap.copy(files = targets.flatMap(_._2).toVector))
           .withColumn("date", expr("ts_us DIV 1000000 DIV 86400 * 86400"))
           .repartitionByRange(nTasks, col("date"), col("metric"), col("labels"), col("ts_us"))
           .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("ts_us")),
@@ -1150,7 +1206,7 @@ object SamplesStore {
         val latest =
           if (chain(latest0.gen).exists(g =>
               g != latest0.gen && all(g).getModificationTime <= cutoff)) {
-            val snap = commitSnapshot(fs, root, latest0, latest0.files)
+            val snap = commitSnapshot(fs, root, latest0, latest0.files, latest0.dataSchema)
             all = listManifests()
             snap
           } else latest0
@@ -1211,9 +1267,9 @@ object SamplesStore {
         dayStartUs(day) < startUs || dayStartUs(day) + dayUs > endUs }
       val added =
         if (boundary.isEmpty) Vector.empty[String]
-        else publish(fs, stage(layout(spark.read
-          .parquet(boundary.values.flatten.map(f => new Path(root, f).toString).toSeq: _*)
-          .filter(col("ts_us") < startUs || col("ts_us") >= endUs)), root),
+        else publish(fs, stage(layout(
+          open(spark, path, prev.copy(files = boundary.values.flatten.toVector))
+            .filter(col("ts_us") < startUs || col("ts_us") >= endUs)), root),
           root, s"d${prev.gen + 1}-")
       if (touched.nonEmpty) {
         commitDelta(fs, root, prev, added, touched.values.flatten.toSet)()

@@ -121,14 +121,13 @@ object RollupStore {
     d.take(8).map(b => f"$b%02x").mkString
   }
 
-  /** The source's day → live-files map: manifest-backed when the
-    * store has one (any [[SamplesStore]] mutation commits one), else
-    * a plain directory listing (a parquet tree built by other
-    * tools). */
-  private def sourceDays(fs: FileSystem, srcRoot: Path): Map[String, Vector[String]] =
-    SamplesStore.latestSnapshot(fs, srcRoot).map(_.files)
-      .getOrElse(SamplesStore.listingFiles(fs, srcRoot))
-      .groupBy(_.takeWhile(_ != '/'))
+  /** The source's live files: its latest snapshot when the store has
+    * one (any [[SamplesStore]] mutation commits one), else a plain
+    * directory listing (a parquet tree built by other tools), which
+    * has no known schema. */
+  private def sourceSnapshot(fs: FileSystem, srcRoot: Path): StoreSnapshot =
+    SamplesStore.latestSnapshot(fs, srcRoot).getOrElse(
+      SamplesStore.NoSnapshot.copy(files = SamplesStore.listingFiles(fs, srcRoot)))
 
   /** The incremental pass [[rollup]] and [[rollupLadder]] share, run
     * under the rollup store's mutation lock: digest `src`'s days,
@@ -136,10 +135,11 @@ object RollupStore {
     * files) only those whose digest differs from the latest rollup's
     * header, and commit ONE delta on top of that latest generation —
     * adding the rebuilt files, removing the invalidated days' files
-    * (every file when the interval or schema differs) and restating
-    * the header. Returns the days re-aggregated. */
+    * (every file, and the rows' schema with them, when the interval or
+    * schema differs) and restating the header. Returns the days
+    * re-aggregated. */
   private def refresh(spark: SparkSession, srcPath: String,
-                      src: Map[String, Vector[String]], path: String,
+                      srcSnap: StoreSnapshot, path: String,
                       intervalSec: Long)
                      (build: (DataFrame, Seq[String]) => DataFrame): Int = {
     val fs = fsFor(spark, path)
@@ -148,28 +148,30 @@ object RollupStore {
     onRollupResolved()
     val prev = Some(built(latest))
       .filter(b => b.intervalSec == intervalSec && b.schema == SchemaVersion)
+    val src = srcSnap.byDay
     val srcDigests = src.map { case (d, fls) => d -> digest(fls) }
     val prevDigests = prev.map(_.dayDigests).getOrElse(Map.empty)
     val changed = srcDigests.filter { case (d, dig) => !prevDigests.get(d).contains(dig) }
     val dropped = prevDigests.keySet -- srcDigests.keySet
     if (changed.isEmpty && dropped.isEmpty && prev.nonEmpty) 0
     else {
-      val moved =
-        if (changed.isEmpty) Vector.empty[String]
+      val (moved, schema) =
+        if (changed.isEmpty) (Vector.empty[String], latest.dataSchema)
         else {
-          val srcFiles = changed.keys.toSeq.flatMap(src(_))
-          val raw = spark.read.option("basePath", srcPath)
-            .parquet(srcFiles.map(f => new Path(new Path(srcPath), f).toString): _*)
-          SamplesStore.publish(fs, SamplesStore.stage(build(raw, srcFiles)
+          val srcFiles = changed.keys.toVector.flatMap(src(_))
+          val rows = build(SamplesStore.open(spark, srcPath, srcSnap.copy(files = srcFiles)),
+            srcFiles)
+          (SamplesStore.publish(fs, SamplesStore.stage(rows
             .repartition(col("date"))
             .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("bucket")),
-            root), root, "r-")
+            root), root, "r-"),
+            if (prev.isEmpty) Some(SamplesStore.dataSchemaOf(rows)) else latest.dataSchema)
         }
       val invalidated = changed.keySet ++ dropped
       val removed = latest.files.filter(f =>
         prev.isEmpty || invalidated.contains(f.takeWhile(_ != '/'))).toSet
       SamplesStore.commitDelta(fs, root, latest, moved, removed)(
-        header = headerOf(intervalSec, srcDigests))
+        header = headerOf(intervalSec, srcDigests), dataSchema = schema)
       log.info(s"rollup($path): rebuilt ${changed.size} day(s), dropped ${dropped.size}")
       changed.size
     }
@@ -192,7 +194,7 @@ object RollupStore {
              intervalSec: Long = 3600L): Int = SamplesStore.locked(rollupPath) {
     require(86400L % intervalSec == 0,
       s"intervalSec=$intervalSec must divide a day: day-partitioned rebuilds depend on bucket alignment")
-    val src = sourceDays(fsFor(spark, srcPath), new Path(srcPath))
+    val src = sourceSnapshot(fsFor(spark, srcPath), new Path(srcPath))
     refresh(spark, srcPath, src, rollupPath, intervalSec) { (raw, srcFiles) =>
       // ONE exchange for the whole rebuild, its width derived
       // from the CHANGED INPUT's bytes (guide §2: scale-adaptive
@@ -298,7 +300,7 @@ object RollupStore {
             coarseIntervalSec > fine.intervalSec,
           s"coarse interval $coarseIntervalSec must be a proper multiple " +
             s"of the fine rollup's ${fine.intervalSec}")
-        refresh(spark, finePath, fineSnap.byDay, coarsePath, coarseIntervalSec) { (fine, _) =>
+        refresh(spark, finePath, fineSnap, coarsePath, coarseIntervalSec) { (fine, _) =>
           fine
             .withColumn("cbucket",
               expr(s"bucket DIV $coarseIntervalSec * $coarseIntervalSec"))
@@ -362,10 +364,11 @@ object RollupStore {
       !overlaps || b.dayDigests.get(day).contains(digest(files))
     }
 
-  /** The rollup as a DataFrame — planned from the latest committed
-    * manifest (same snapshot-isolation contract as the samples
-    * store: a concurrent [[rollup]] never yanks a planned file before
-    * the GC grace). Columns: date, metric, labels, bucket,
+  /** The rollup as a DataFrame — opened by [[SamplesStore.open]] from
+    * the latest committed manifest (same snapshot-isolation contract
+    * and known-schema open as the samples store: a concurrent
+    * [[rollup]] never yanks a planned file before the GC grace).
+    * Columns: date, metric, labels, bucket,
     * min_value, max_value, sum_value, n_points, the (schema v2)
     * bucket edge points t_first, t_last, v_first, v_last, the
     * (schema v3) penultimate point t_penult, v_penult (NULL on
@@ -373,9 +376,7 @@ object RollupStore {
     * moments sy_e2, syy_e4. */
   def read(spark: SparkSession, path: String): DataFrame =
     SamplesStore.latestSnapshot(fsFor(spark, path), new Path(path)) match {
-      case Some(snap) if snap.files.nonEmpty =>
-        spark.read.option("basePath", path)
-          .parquet(snap.files.map(f => new Path(new Path(path), f).toString): _*)
+      case Some(snap) if snap.files.nonEmpty => SamplesStore.open(spark, path, snap)
       case _ => emptyRollup(spark)
     }
 
@@ -446,6 +447,6 @@ object RollupStore {
   def freshFor(spark: SparkSession, srcPath: String, rollupPath: String,
                intervalSec: Long, startSec: Long, endSec: Long): Boolean =
     current(spark, rollupPath, Some(intervalSec)).exists { case (_, b) =>
-      covers(b, sourceDays(fsFor(spark, srcPath), new Path(srcPath)), startSec, endSec)
+      covers(b, sourceSnapshot(fsFor(spark, srcPath), new Path(srcPath)).byDay, startSec, endSec)
     }
 }

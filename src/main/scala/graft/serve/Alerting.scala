@@ -87,12 +87,14 @@ object Alerting {
     val df = SamplesStore.read(spark, storePath)
     val staleDf = RemoteWrite.staleStoreDf(spark, storePath)
     val maxTs = Recording.dataEdgeSec(spark, storePath).getOrElse(return Nil)
-    val plans = rules.map { rule =>
-      val edge = maxTs / rule.stepSec * rule.stepSec
-      alerts(df, rule, edge, edge, stale = staleDf)
-        .select(col("labels"), col("t"))
+    val rows = PromQL.releasing {
+      rules.map { rule =>
+        val edge = maxTs / rule.stepSec * rule.stepSec
+        alerts(df, rule, edge, edge, stale = staleDf)
+          .select(col("labels"), col("t"))
+      }.reduce(_.unionByName(_)).collect()
     }
-    plans.reduce(_.unionByName(_)).collect().toSeq.map { r =>
+    rows.toSeq.map { r =>
       val ls = r.getSeq[String](0)
       val state = ls.find(_.startsWith("alertstate="))
         .map(_.stripPrefix("alertstate=")).getOrElse("pending")

@@ -684,7 +684,9 @@ object HttpServe {
           respond(ex, 200, body.getBytes(UTF_8),
             Seq("Content-Type" -> "application/json"))
         case Right((expr, (startSec, endSec, stepSec), limit)) =>
-          val (rows, histRows) = SamplesStore.readLocked(storePath) {
+          // releasing: the shared subtrees eval persists are dropped
+          // from Spark's cache once this request's collect ran
+          val (rows, histRows) = SamplesStore.readLocked(storePath)(PromQL.releasing {
             // ONE sibling existence probe feeds both legs
             val staleDf = RemoteWrite.staleStoreDf(spark, storePath)
             // the 3.x histogram-valued leg: an expression whose
@@ -737,7 +739,7 @@ object HttpServe {
                 .collect()
             }.getOrElse(Array.empty[org.apache.spark.sql.Row])
             (fl, hl)
-          }
+          })
           if (rows.length + histRows.length > MaxQueryCells) {
             respond(ex, 422,
               s"""{"status":"error","errorType":"execution","error":"query would return more than $MaxQueryCells samples"}"""

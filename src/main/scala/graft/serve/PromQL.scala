@@ -1478,10 +1478,12 @@ object PromQL {
     // case-class tree, so structural equality is `==`; the memo key
     // adds the evaluation window because `@` pins children to other
     // instants. Multiply-referenced results are persisted
-    // (MEMORY_AND_DISK — safe on block loss, LRU-evicted, and
-    // GC-unpersisted by Spark's ContextCleaner) so one action
-    // computes the shared subtree once and every other occurrence
-    // reads cached blocks. Freshness is structural: the store scan
+    // (MEMORY_AND_DISK — safe on block loss, LRU-evicted) so one
+    // action computes the shared subtree once and every other
+    // occurrence reads cached blocks. Spark's CacheManager holds each
+    // persisted plan until it is unpersisted, so a caller inside
+    // [[releasing]] has them unpersisted once its action ran; outside
+    // one they stay cached. Freshness is structural: the store scan
     // plans an EXPLICIT manifest file list (SamplesStore.read), so
     // any append/compaction changes the plan and a later query can
     // never falsely hit a stale cache entry — a hit implies the
@@ -1492,9 +1494,34 @@ object PromQL {
       memo.getOrElseUpdate((e, s, en), {
         val df = evalNode(samples, e, s, en, stepSec, lookbackSec, rollup,
           ignoreLabel, rec, nativeHist, stale)
-        if (shared(e)) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+        if (shared(e)) {
+          Option(persistedInScope.get).foreach(_ += df)
+          df.persist(StorageLevel.MEMORY_AND_DISK)
+        } else df
       })
     rec(expr0, startSec, endSec)
+  }
+
+  /** The shared subtrees [[eval]] persisted on this thread inside the
+    * innermost [[releasing]] scope. */
+  private val persistedInScope = new ThreadLocal[mutable.ArrayBuffer[DataFrame]]
+
+  /** Run `f` — one request's [[eval]] calls and the action that
+    * consumes their result — then unpersist every shared subtree
+    * those evals persisted. The CacheManager would otherwise keep each
+    * entry for the life of the server, and every later query's cache
+    * lookup scans all of them. Scopes nest; each releases its own. A
+    * concurrent request whose plan shares an entry released here stays
+    * correct: Spark recomputes unpersisted blocks from lineage. */
+  def releasing[T](f: => T): T = {
+    val outer = persistedInScope.get
+    val mine = mutable.ArrayBuffer.empty[DataFrame]
+    persistedInScope.set(mine)
+    try f
+    finally {
+      persistedInScope.set(outer)
+      mine.foreach(_.unpersist(blocking = false))
+    }
   }
 
   /** Structural children of an AST node — generic over the

@@ -68,7 +68,7 @@ object Recording {
   def record(spark: SparkSession, storePath: String, rule: Rule,
              startSec: Long, endSec: Long,
              lookbackSec: Long = PromQL.DefaultLookbackSec,
-             rollup: Option[PromQL.RollupGrid] = None): Unit = {
+             rollup: Option[PromQL.RollupGrid] = None): Unit = PromQL.releasing {
     val out = PromQL.eval(SamplesStore.read(spark, storePath), rule.parsed,
         startSec, endSec, rule.stepSec, lookbackSec, rollup,
         stale = RemoteWrite.staleStoreDf(spark, storePath))

@@ -174,6 +174,11 @@ object RemoteWrite {
     },
     new java.util.concurrent.ThreadPoolExecutor.DiscardPolicy)
 
+  /** Test seam: no background maintenance pass runs or waits — lets
+    * specs count store work without a straggling pass in the window. */
+  private[graft] def maintenanceIdle: Boolean =
+    compactPool.getActiveCount == 0 && compactPool.getQueue.isEmpty
+
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private def maybeCompactRateLimited(spark: SparkSession, storePath: String): Unit = {

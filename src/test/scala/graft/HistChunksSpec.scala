@@ -127,7 +127,7 @@ class HistChunksSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("integer-form fuzz: spans, deltas, dods, and window reuse") {
     val rnd = new scala.util.Random(42)
-    (0 until 30).foreach { trial =>
+    (0 until 30).foreach { _ =>
       val nSpans = 1 + rnd.nextInt(3)
       val spans = (0 until nSpans).map(i =>
         (if (i == 0) rnd.nextInt(10) - 5 else 1 + rnd.nextInt(4),

@@ -1185,7 +1185,7 @@ class LlmSpec extends SparkSpecBase {
     }
     val rnd = new scala.util.Random(20240816L)
     def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.length))
-    val urls = (0 until 400).map { i =>
+    val urls = (0 until 400).map { _ =>
       val scheme = pick(Seq("http://", "https://", "HTTPS://", "HtTp://",
         "ftp://", ""))
       val host = pick(Seq("Example.COM", "example.com", "a.b.c.de",

@@ -239,7 +239,6 @@ class PlanSpec extends SparkSpecBase {
 
   test("url dedup: one per-row expression, one exchange, no text shuffled") {
     spark.catalog.clearCache()
-    import spark.implicits._
     val docs = Tables.documents(spark, Sf)
       .select(col("doc_id"),
         concat(lit("https://h"), (col("doc_id") % 10).cast("string"),

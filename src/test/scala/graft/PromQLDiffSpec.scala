@@ -343,7 +343,7 @@ class PromQLDiffSpec extends SparkSpecBase {
 
     case MathFn(fn, child, args) =>
       refEval(child, start, end, step).flatMap { case (_, ls, t, v) =>
-        mathRef(fn, v, args, t).map(nv => ("", ls, t, nv))
+        mathRef(fn, v, args).map(nv => ("", ls, t, nv))
       }
 
     case PowInt(child, n) =>
@@ -715,8 +715,7 @@ class PromQLDiffSpec extends SparkSpecBase {
     out.result()
   }
 
-  private def mathRef(fn: String, v: Long, args: Seq[Double],
-                      t: Long): Option[Long] = fn match {
+  private def mathRef(fn: String, v: Long, args: Seq[Double]): Option[Long] = fn match {
     case "abs"   => Some(math.abs(v))
     case "floor" => Some(math.floor(v.toDouble / 1000000.0d).toLong * 1000000L)
     case "ceil"  => Some(-(math.floor(-v.toDouble / 1000000.0d).toLong * 1000000L))
@@ -825,6 +824,7 @@ class PromQLDiffSpec extends SparkSpecBase {
       case ('%', true)  => if (v == 0L) None else Some(kE6 % v)
       case ('A', false) => Some(refAtan2(v, kE6))
       case ('A', true)  => Some(refAtan2(kE6, v))
+      case (other, _)   => sys.error(s"ref: scalar op $other unsupported")
     }
   }
 
@@ -878,9 +878,7 @@ class PromQLDiffSpec extends SparkSpecBase {
       .cache()
   }
 
-  private def sparkEval(e: Expr,
-                        stale: Option[org.apache.spark.sql.DataFrame] = None)
-      : Set[R] =
+  private def sparkEval(e: Expr, stale: Option[org.apache.spark.sql.DataFrame]): Set[R] =
     PromQL.eval(sparkWorld, e, Start, End, Step, stale = stale)
       .select(coalesce(col("metric"), lit("")),
         array_join(col("labels"), ","), col("t"), col("v_e6"))
@@ -1100,7 +1098,7 @@ class PromQLDiffSpec extends SparkSpecBase {
   }
 
   test("hist instant vector fuzz: lookback + stale ties vs a sequential reference") {
-    import graft.ingest.{NativeHistogram => NH, ProtoWire}
+    import graft.ingest.{NativeHistogram => NH}
     import spark.implicits._
     // the histogram-vector leg under /api/v1/query's JSON surface:
     // the distributed grid-explode lookback (same-second dup → max

@@ -1691,7 +1691,7 @@ class PromQLSpec extends SparkSpecBase {
         case 15 => s"-(${gen(depth - 1)})"
       }
     }
-    (0 until 60).foreach { i =>
+    (0 until 60).foreach { _ =>
       val q = gen(1 + rnd.nextInt(3))
       val parsed = PromQL.parse(q)
       assert(parsed.isRight, s"should parse: $q")

@@ -992,8 +992,8 @@ class ServeSpec extends SparkSpecBase {
       // probe fires per request (interval 0) and merges OFF this thread
       for (i <- 0 until 6) RemoteWrite.serve(spark, store, writeBlob(s"bg_$i", 5))
       def dayFiles: Int = {
-        // polled concurrently with the background merge: a day dir can
-        // vanish for the swap's ms window, making listFiles() null
+        // polled concurrently with the background merge and GC: a day
+        // dir can vanish between listings, making listFiles() null
         val day = Option(new java.io.File(store).listFiles()).getOrElse(Array.empty)
           .filter(f => f.isDirectory && f.getName.startsWith("date="))
         if (day.isEmpty) Int.MaxValue
@@ -1655,7 +1655,6 @@ class ServeSpec extends SparkSpecBase {
   test("background recording passes advance rules to the data's edge, idempotently") {
     import graft.serve.Recording
     val store = tmpStore("recpass")
-    val t0 = 1704412800L
     val prevRules = RemoteWrite.recordingRules
     try {
       // disabled / missing-store / empty cases are clean no-ops
@@ -1664,9 +1663,9 @@ class ServeSpec extends SparkSpecBase {
       RemoteWrite.recordingRules = Seq(
         Recording.Rule("rec:minutely:sum", "sum(rec_m)", 60L))
       assert(RemoteWrite.recordingPass(spark, store) === 0L)
-      // samples at t0, t0+1, t0+2 (writeBlob's spacing): the data
-      // edge t0+2 caps the grid at floor((t0+2)/60)·60 = t0, and the
-      // instant sum at t0 sees the t0 sample in its lookback
+      // samples at t0 = 1704412800, t0+1, t0+2 (writeBlob's spacing):
+      // the data edge t0+2 caps the grid at floor((t0+2)/60)·60 = t0,
+      // and the instant sum at t0 sees the t0 sample in its lookback
       RemoteWrite.serve(spark, store, writeBlob("rec_m", 3))
       assert(RemoteWrite.recordingPass(spark, store) > 0L)
       // the serve() above also triggers the BACKGROUND maintenance
@@ -1972,8 +1971,8 @@ class ServeSpec extends SparkSpecBase {
         (1 to 6).map(i => post(s"$base/write", writeBlob(s"rm_$i", 4))._1)
       }
       // reader: poll /read throughout — every response must decode and
-      // the visible sample count must never regress (swap windows and
-      // background merges stay invisible to the HTTP client)
+      // the visible sample count must never regress (background merges
+      // and their manifest commits stay invisible to the HTTP client)
       var lastSeen = 0
       var observations = 0
       var done = false
@@ -2086,7 +2085,7 @@ class ServeSpec extends SparkSpecBase {
     assert(acc.value === n, s"expected one pass ($n row evals), got ${acc.value}")
   }
 
-  test("/read's retry absorbs compact()'s swap window, nothing else") {
+  test("/read's retry absorbs transient file misses, nothing else") {
     // transient-miss classifier walks the cause chain
     val sparkWrapped = new RuntimeException("job aborted",
       new java.io.FileNotFoundException("/store/date=0/part-0.parquet"))
@@ -2099,12 +2098,13 @@ class ServeSpec extends SparkSpecBase {
       ReadQuery(0L, 0L, Seq(Matchers.eq("__name__", "view")))))
     val m = OpsMetrics(spark)
 
-    // a store resolution that fails mid-swap twice, then resolves:
+    // a store resolution that misses a file twice (another
+    // process's GC reclaimed it mid-scan), then resolves:
     // serve must re-evaluate the by-name samples each attempt (the
     // stale first DataFrame could never succeed) and count ONE
     // request, ZERO errors for the ultimately-successful read
     var calls = 0
-    def flaky = { calls += 1; if (calls < 3) throw new java.io.FileNotFoundException("mid-swap"); real }
+    def flaky = { calls += 1; if (calls < 3) throw new java.io.FileNotFoundException("reclaimed"); real }
     val (reqs0, errs0) = (m.readRequests.value, m.readErrors.value)
     val resp = RemoteRead.serve(flaky, blob, transientRetries = 3)
     assert(PromRemoteCodec.decodeReadResponse(resp).nonEmpty && calls === 3)
@@ -2675,5 +2675,74 @@ class ServeSpec extends SparkSpecBase {
         parts.length == 2 && parts(1).toDoubleOption.isDefined
       }, s"unparseable exposition line: $line")
     }
+  }
+
+  test("query_range opens a fixed generation with no schema inference; a cold cache infers once") {
+    import graft.ingest.SamplesStore
+    import spark.implicits._
+    val store = tmpStore("opens")
+    val t0 = 1704412800L
+    SamplesStore.append(Seq((t0 * 1000000L, "op_total", Seq("k=v"), 1.0),
+      ((t0 + 30) * 1000000L, "op_total", Seq("k=v"), 2.5))
+      .toDF("ts_us", "metric", "labels", "value"), store)
+    val srv = HttpServe.start(spark, store)
+    try {
+      val base = s"http://localhost:${srv.port}"
+      def counters(): (Long, Long) = {
+        val (c, b) = get(s"$base/metrics")
+        assert(c === 200)
+        def v(n: String) = b.linesIterator.collectFirst {
+          case l if l.startsWith(n + " ") => l.stripPrefix(n + " ").toLong }.get
+        (v("store_opens_total"), v("store_schema_inferences_total"))
+      }
+      def query(): Unit = {
+        val (c, b) = get(s"$base/api/v1/query_range?query=" +
+          java.net.URLEncoder.encode("rate(op_total[1m])", "UTF-8") +
+          s"&start=${t0 + 60}&end=${t0 + 60}&step=60")
+        assert(c === 200 && b.contains(s""""values":[[${t0 + 60},"0.05"]]"""), b)
+      }
+      // no straggling background pass of an earlier test in the window
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!RemoteWrite.maintenanceIdle && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      val (o0, i0) = counters()
+      (1 to 3).foreach(_ => query())
+      val (o1, i1) = counters()
+      assert((o1 - o0, i1 - i0) === ((3L, 0L)), "one open per request, none inferring")
+      SamplesStore.invalidateSnapshotCache(store)
+      (1 to 3).foreach(_ => query())
+      val (o2, i2) = counters()
+      assert((o2 - o1, i2 - i1) === ((3L, 1L)), "a cold generation infers once, then opens warm")
+    } finally srv.stop()
+  }
+
+  test("shared PromQL subtrees leave nothing in Spark's cache after the request") {
+    import graft.ingest.SamplesStore
+    import graft.serve.{Alerting, Recording}
+    import spark.implicits._
+    val store = tmpStore("cacheleak")
+    val t0 = 1704412800L
+    SamplesStore.append(Seq((t0 * 1000000L, "cl", Seq("k=v"), 2.0),
+      ((t0 + 30) * 1000000L, "cl", Seq("k=v"), 4.0))
+      .toDF("ts_us", "metric", "labels", "value"), store)
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val srv = HttpServe.start(spark, store)
+    try {
+      // `cl` occurs three times: eval persists it once for all of them
+      val (c, b) = get(s"http://localhost:${srv.port}/api/v1/query_range?query=" +
+        java.net.URLEncoder.encode("cl / (cl + cl)", "UTF-8") +
+        s"&start=${t0 + 60}&end=${t0 + 60}&step=60")
+      assert(c === 200 && b.contains(s""""values":[[${t0 + 60},"0.5"]]"""), b)
+      assert(cache.isEmpty, "query_range left a persisted subtree behind")
+      Recording.record(spark, store, Recording.Rule("cl:ratio", "cl / (cl + cl)", 60L),
+        t0 + 60, t0 + 60)
+      assert(cache.isEmpty, "a recording rule left a persisted subtree behind")
+      assert(SamplesStore.read(spark, store).filter(col("metric") === "cl:ratio").count() === 1)
+      val alerts = Alerting.currentAlerts(spark, store,
+        Seq(Alerting.AlertRule("cl_half", "cl / (cl + cl) > 0.4", forSec = 0L, stepSec = 1L)))
+      assert(alerts.map(_._2) === Seq("firing"))
+      assert(cache.isEmpty, "an alert evaluation left a persisted subtree behind")
+    } finally srv.stop()
   }
 }

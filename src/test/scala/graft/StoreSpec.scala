@@ -362,8 +362,8 @@ class StoreSpec extends SparkSpecBase {
     reader.start()
     try {
       // mutate continuously: append small batches into the hot day,
-      // compact selectively once fragmented — many swap windows
-      for (i <- 0 until 6) {
+      // compact selectively once fragmented — many manifest commits
+      for (_ <- 0 until 6) {
         SamplesStore.append(extra, path)
         SamplesStore.compactFragmentedDays(spark, path, maxFilesPerDay = 1)
       }
@@ -1276,7 +1276,7 @@ class StoreSpec extends SparkSpecBase {
   /** Park the next append's leader inside its commit (after it resolved
     * its base snapshot), run `whileParked` — which queues the followers
     * — then release it. Returns the leader's outcome. */
-  private def withParkedLeader(path: String, leader: => Unit)(
+  private def withParkedLeader(leader: => Unit)(
       whileParked: => Unit): scala.util.Try[Unit] = {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     val inCommit = new CountDownLatch(1)
@@ -1312,7 +1312,7 @@ class StoreSpec extends SparkSpecBase {
     val m = OpsMetrics(spark)
     val (appends0, commits0) = (m.storeAppends.value, m.storeAppendCommits.value)
     var followers = Seq.empty[() => scala.util.Try[Unit]]
-    val a = withParkedLeader(path, SamplesStore.append(groupRows(1), path)) {
+    val a = withParkedLeader(SamplesStore.append(groupRows(1), path)) {
       followers = (2 to 4).map(i => spawn(s"spec-follower-$i")(SamplesStore.append(groupRows(i), path)))
       awaitQueued(path, 3)
     }
@@ -1336,7 +1336,7 @@ class StoreSpec extends SparkSpecBase {
     val bad = groupRows(3).withColumn("value",
       expr("CASE WHEN value >= 0 THEN CAST(raise_error('group-commit boom') AS DOUBLE) ELSE value END"))
     var members = Seq.empty[(Int, () => scala.util.Try[Unit])]
-    val a = withParkedLeader(path, SamplesStore.append(groupRows(1), path)) {
+    val a = withParkedLeader(SamplesStore.append(groupRows(1), path)) {
       members = Seq(2, 3, 4).map { i =>
         i -> spawn(s"spec-member-$i")(SamplesStore.append(if (i == 3) bad else groupRows(i), path))
       }
@@ -1364,7 +1364,7 @@ class StoreSpec extends SparkSpecBase {
     val otherSession = other.createDataFrame(groupRows(2).rdd, groupRows(2).schema)
     val otherSchema = groupRows(3).withColumn("note", lit("x"))
     var queued = Seq.empty[() => scala.util.Try[Unit]]
-    val a = withParkedLeader(path, SamplesStore.append(groupRows(1), path)) {
+    val a = withParkedLeader(SamplesStore.append(groupRows(1), path)) {
       queued = Seq(otherSession, otherSchema, groupRows(4), groupRows(5)).zipWithIndex.map {
         case (df, i) => spawn(s"spec-shape-$i")(SamplesStore.append(df, path))
       }
@@ -1383,7 +1383,7 @@ class StoreSpec extends SparkSpecBase {
     SamplesStore.append(groupRows(0), path)
     val gen0 = SamplesStore.currentGen(spark, path).get
     var others = Seq.empty[() => scala.util.Try[Unit]]
-    val a = withParkedLeader(path, SamplesStore.append(groupRows(1), path)) {
+    val a = withParkedLeader(SamplesStore.append(groupRows(1), path)) {
       others = Seq(
         spawn("spec-batch")(SamplesStore.appendBatch(groupRows(2), path, 5L)),
         spawn("spec-plain-3")(SamplesStore.append(groupRows(3), path)),
@@ -1402,5 +1402,120 @@ class StoreSpec extends SparkSpecBase {
     SamplesStore.appendBatch(groupRows(6), path, 6L)
     assert(SamplesStore.currentGen(spark, path).contains(gen0 + 4))
     assert(SamplesStore.read(spark, path).count() === 18)
+  }
+
+  // ---- opening a snapshot with its known schema -----------------------
+
+  private def inferences: Long = OpsMetrics(spark).storeSchemaInferences.value
+
+  private def freshDir(path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    path
+  }
+
+  private def snapshotOf(path: String): SamplesStore.StoreSnapshot = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    SamplesStore.latestSnapshot(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p).get
+  }
+
+  private val openDay0 = 1704412800L
+  private def openRows(k: String, n: Int = 3) = {
+    import spark.implicits._
+    (0 until n).map(i => ((openDay0 + i * 43200L) * 1000000L, "om", Seq(s"k=$k"), i + 0.5))
+      .toDF("ts_us", "metric", "labels", "value")
+  }
+
+  test("open reads every store kind with the schema inference gives its files") {
+    import graft.ingest.{PromRemoteCodec, RollupStore}
+    import graft.ingest.PromRemoteCodec._
+    import graft.serve.RemoteWrite
+    val store = freshDir("/tmp/graft_test/store_open_kinds")
+    Seq(RemoteWrite.exemplarPath(store), RemoteWrite.metadataPath(store),
+      RemoteWrite.histPath(store), RemoteWrite.stalePath(store)).foreach(freshDir)
+    val bulk = freshDir("/tmp/graft_test/store_open_kinds_bulk")
+    val rollup = freshDir("/tmp/graft_test/store_open_kinds_rollup")
+    // one remote-write request lands every sibling: a sample, a stale
+    // marker, an exemplar, metadata and a native histogram
+    val t0 = openDay0 * 1000L
+    val hist = graft.ingest.NativeHistogram.Hist(t0, 6.0, 4.5, 0, 0.001, 1.0,
+      Seq((0, 2)), Seq(2L, 1L), Nil, Nil, Nil, Nil)
+    val req = PromWriteRequest(Seq(
+      PromTimeSeries(Seq(PromLabel("__name__", "ok"), PromLabel("k", "v")),
+        Seq(PromSample(1.0, t0), PromSample(PromRemoteCodec.staleNaN, t0 + 1000L)),
+        exemplars = Seq(PromExemplar(Seq(PromLabel("trace_id", "t")), 1.0, t0)),
+        metadata = Some(PromMetadata(2, "Help.", ""))),
+      PromTimeSeries(Seq(PromLabel("__name__", "nh"), PromLabel("k", "v")),
+        Nil, histograms = Seq(hist))))
+    RemoteWrite.serveCounted(spark, store, PromRemoteCodec.encodeWriteRequestV2(req),
+      Some("application/x-protobuf;proto=" + PromRemoteCodec.ProtoV2))
+    SamplesStore.write(openRows("b"), bulk)
+    RollupStore.rollup(spark, store, rollup, 3600L)
+    val kinds = Seq(store, bulk, RemoteWrite.stalePath(store), RemoteWrite.metadataPath(store),
+      RemoteWrite.exemplarPath(store), RemoteWrite.histPath(store), rollup)
+    kinds.foreach { path =>
+      val snap = snapshotOf(path)
+      assert(snap.files.nonEmpty && snap.dataSchema.isDefined, s"$path: no files or no schema")
+      val inferred = spark.read.option("basePath", path)
+        .parquet(snap.files.map(f => s"$path/$f"): _*)
+      val before = inferences
+      val opened = if (path == rollup) RollupStore.read(spark, path) else SamplesStore.read(spark, path)
+      assert(inferences === before, s"$path: a warm open must not infer")
+      assert(opened.schema === inferred.schema, path)
+      assert(opened.count() > 0 && opened.exceptAll(inferred).isEmpty &&
+        inferred.exceptAll(opened).isEmpty, path)
+    }
+  }
+
+  test("a read after an append, a fold or a delete sees the new rows with no inference") {
+    val path = freshDir("/tmp/graft_test/store_open_append")
+    SamplesStore.append(openRows("a"), path)
+    val gen0 = SamplesStore.currentGen(spark, path).get
+    val before = inferences
+    assert(SamplesStore.read(spark, path).count() === 3)
+    SamplesStore.append(openRows("b"), path)
+    assert(SamplesStore.read(spark, path).filter(col("labels")(0) === "k=b").count() === 3)
+    SamplesStore.compactFragmentedDays(spark, path, maxFilesPerDay = 1, gcGraceMs = 0L)
+    assert(SamplesStore.read(spark, path).count() === 6)
+    SamplesStore.deleteRange(spark, path, openDay0 * 1000000L, (openDay0 + 1) * 1000000L)
+    assert(SamplesStore.read(spark, path).count() === 4)
+    SamplesStore.compact(spark, path)
+    assert(SamplesStore.read(spark, path).count() === 4)
+    // time travel to a generation that shares files with the latest
+    SamplesStore.append(openRows("c"), path)
+    val gen = SamplesStore.currentGen(spark, path).get
+    assert(gen > gen0)
+    assert(SamplesStore.readAt(spark, path, gen - 1).count() === 4)
+    assert(inferences === before, "every open above had its snapshot's schema")
+  }
+
+  test("a file whose value type disagrees with the pinned schema fails the read loudly") {
+    import spark.implicits._
+    val path = freshDir("/tmp/graft_test/store_open_mismatch")
+    SamplesStore.append(openRows("a"), path)
+    // the append keeps the store's double schema; its file holds strings
+    SamplesStore.append(Seq((openDay0 * 1000000L + 1L, "om", Seq("k=s"), "x"))
+      .toDF("ts_us", "metric", "labels", "value"), path)
+    assert(snapshotOf(path).dataSchema.map(_("value").dataType) ===
+      Some(org.apache.spark.sql.types.DoubleType))
+    val err = intercept[org.apache.spark.SparkException](
+      SamplesStore.read(spark, path).select(col("value")).collect())
+    assert(err.getMessage.contains("value"), err.getMessage)
+  }
+
+  test("a cold snapshot infers its schema once, then opens warm") {
+    val path = freshDir("/tmp/graft_test/store_open_cold")
+    SamplesStore.append(openRows("a"), path)
+    val warm = SamplesStore.read(spark, path).schema
+    SamplesStore.invalidateSnapshotCache(path)
+    val before = inferences
+    assert(SamplesStore.read(spark, path).schema === warm)
+    assert(inferences === before + 1)
+    assert(SamplesStore.read(spark, path).count() === 3)
+    assert(inferences === before + 1, "the inferred schema must be cached for the generation")
+    // an append on top of the cold-learned snapshot keeps it
+    SamplesStore.append(openRows("b"), path)
+    assert(SamplesStore.read(spark, path).count() === 6)
+    assert(inferences === before + 1)
   }
 }

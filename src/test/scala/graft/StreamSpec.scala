@@ -46,7 +46,6 @@ class StreamSpec extends SparkSpecBase {
   }
 
   test("streaming minhash dedup: first crawl wins, state remembers dropped copies") {
-    import spark.implicits._
     val base = "/tmp/graft_test/stream_mh"
     val src = s"$base/src"
     def rmrf(p: java.io.File): Unit = {
@@ -72,7 +71,6 @@ class StreamSpec extends SparkSpecBase {
   }
 
   test("streaming line dedup: df accumulates across crawls, own batch counts") {
-    import spark.implicits._
     val base = "/tmp/graft_test/stream_lines"
     val src = s"$base/src"
     def rmrf(p: java.io.File): Unit = {
@@ -108,7 +106,6 @@ class StreamSpec extends SparkSpecBase {
   }
 
   test("streaming line dedup over ONE crawl equals batch lineDedup") {
-    import spark.implicits._
     val base = "/tmp/graft_test/stream_lines_eq"
     def rmrf(p: java.io.File): Unit = {
       if (p.isDirectory) p.listFiles().foreach(rmrf); p.delete(); ()

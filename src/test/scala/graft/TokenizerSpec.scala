@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.llm.Tokenizer
 
 /** BPE trainer/encoder vs an independent in-memory reference
