@@ -637,12 +637,12 @@ object ScaleSmoke {
       RollupStore.rollupLadder(spark, path + "_1h", path + "_1d", 86400L)
       val e = graft.serve.PromQL.parse("sum_over_time(dense_metric[1d])")
         .fold(err => sys.error(err), identity)
-      val g5m = graft.serve.PromQL.RollupGrid(path, path + "_5m", 300L)
+      val g5m = RollupStore.Ladder(path, path + "_5m", 300L)
       val g1h = g5m.copy(coarser = Some(
-        graft.serve.PromQL.RollupGrid(path + "_5m", path + "_1h", 3600L)))
+        RollupStore.Ladder(path + "_5m", path + "_1h", 3600L)))
       val g1d = g1h.copy(coarser = Some(g1h.coarser.get.copy(coarser = Some(
-        graft.serve.PromQL.RollupGrid(path + "_1h", path + "_1d", 86400L)))))
-      val levels: Seq[(String, Option[graft.serve.PromQL.RollupGrid])] =
+        RollupStore.Ladder(path + "_1h", path + "_1d", 86400L)))))
+      val levels: Seq[(String, Option[RollupStore.Ladder])] =
         Seq(("raw", None), ("5m ", Some(g5m)),
           ("1h ", Some(g1h)), ("1d ", Some(g1d)))
       for ((name, grid) <- levels)

@@ -567,7 +567,7 @@ object SparkEntry {
       val q = ReadQuery(WinStartMs + 900000L, WinEndMs - 901000L,
         Seq(Matchers.eq("__name__", "click")), stepMs = 7200000L)
       val sel = graft.serve.RemoteRead.rollupSelect(
-        graft.serve.RemoteRead.RollupRoute(path, rpath, 3600L), q,
+        RollupStore.Ladder(path, rpath, 3600L), q,
         SamplesStore.read(querySession(s, dir), path))
         .getOrElse(throw new IllegalStateException(
           "an unaligned window with interior buckets must route to the rollup"))
@@ -584,7 +584,7 @@ object SparkEntry {
       promqlStr(PromQL.eval(SamplesStore.read(querySession(s, dir), path),
         parsePromQL("sum_over_time(click[2h])"),
         WinStartSec + 7200, WinEndSec, 7200L,
-        rollup = Some(PromQL.RollupGrid(path, rpath, 3600L))))
+        rollup = Some(RollupStore.Ladder(path, rpath, 3600L))))
     }),
 
     // LADDER ROUTING: the evaluator chains fine (15 m) → coarse (1 h)
@@ -595,8 +595,8 @@ object SparkEntry {
       promqlStr(PromQL.eval(SamplesStore.read(querySession(s, dir), path),
         parsePromQL("sum_over_time(click[2h])"),
         WinStartSec + 7200, WinEndSec, 7200L,
-        rollup = Some(PromQL.RollupGrid(path, fine, 900L,
-          Some(PromQL.RollupGrid(fine, coarse, 3600L))))))
+        rollup = Some(RollupStore.Ladder(path, fine, 900L,
+          Some(RollupStore.Ladder(fine, coarse, 3600L))))))
     }),
 
     // schema-v4 exact integer moments: stdvar over coarse aligned
@@ -606,7 +606,7 @@ object SparkEntry {
       promqlStr(PromQL.eval(SamplesStore.read(querySession(s, dir), path),
         parsePromQL("stdvar_over_time(click[2h])"),
         WinStartSec + 7200, WinEndSec, 7200L,
-        rollup = Some(PromQL.RollupGrid(path, rpath, 3600L))))
+        rollup = Some(RollupStore.Ladder(path, rpath, 3600L))))
     }),
 
     // schema-v2 edge points: the DASHBOARD query (rate over coarse
@@ -616,7 +616,7 @@ object SparkEntry {
       promqlStr(PromQL.eval(SamplesStore.read(querySession(s, dir), path),
         parsePromQL("delta(click[1296000])"), // one 15-day window
         WinEndSec, WinEndSec, 1296000L,
-        rollup = Some(PromQL.RollupGrid(path, rpath, 3600L))))
+        rollup = Some(RollupStore.Ladder(path, rpath, 3600L))))
     }),
 
     // schema-v3 penultimate points: irate (the window's final two
@@ -627,7 +627,7 @@ object SparkEntry {
       promqlStr(PromQL.eval(SamplesStore.read(querySession(s, dir), path),
         parsePromQL("irate(click[1296000])"), // one 15-day window
         WinEndSec, WinEndSec, 1296000L,
-        rollup = Some(PromQL.RollupGrid(path, rpath, 3600L))))
+        rollup = Some(RollupStore.Ladder(path, rpath, 3600L))))
     }),
 
     // The multi-resolution LADDER: the hour rollup builds FROM the

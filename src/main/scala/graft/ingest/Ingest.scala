@@ -699,13 +699,6 @@ object SamplesStore {
     moved.result()
   }
 
-  /** Shared append path: stage + publish + ONE manifest commit. For a
-    * stream batch (`batchId` present) the commit also advances the
-    * batch ledger, and a replayed id ≤ the ledger short-circuits
-    * BEFORE staging — the exactly-once guarantee, a single atomic
-    * commit point. Returns the max live-file count across the
-    * touched days (manifest math, no extra listing) — the caller's
-    * fragmentation signal. */
   /** Test seam: runs after an append resolves its base snapshot but
     * before it stages and commits — the TOCTOU window where a second
     * writer PROCESS (out of contract; mutations only serialize on the
@@ -714,6 +707,13 @@ object SamplesStore {
     * assert the loud [[writeManifest]] abort. */
   private[graft] var onAppendSnapshotResolved: () => Unit = () => ()
 
+  /** Shared append path: stage + publish + ONE manifest commit. For a
+    * stream batch (`batchId` present) the commit also advances the
+    * batch ledger, and a replayed id ≤ the ledger short-circuits
+    * BEFORE staging — the exactly-once guarantee, a single atomic
+    * commit point. Returns the max live-file count across the
+    * touched days (manifest math, no extra listing) — the caller's
+    * fragmentation signal. */
   private def appendSnapshot(samples: DataFrame, path: String,
                              batchId: Option[Long]): Int = {
     val fs = fsFor(samples.sparkSession, path)
@@ -1365,7 +1365,7 @@ object TsvBulk {
     out.result()
   }
 
-  def export(samples: DataFrame, path: String): Unit = {
+  def `export`(samples: DataFrame, path: String): Unit = {
     val spark = samples.sparkSession
     import spark.implicits._
     samples
@@ -1457,7 +1457,7 @@ object Exposition {
       (("\"" + escapeValue(metric) + "\"") +: kvs).mkString("{", ",", "}")
   }
 
-  def export(samples: DataFrame, path: String): Unit = {
+  def `export`(samples: DataFrame, path: String): Unit = {
     val spark = samples.sparkSession
     import spark.implicits._
     samples

@@ -37,6 +37,53 @@ object RollupStore {
 
   private val log = LoggerFactory.getLogger(getClass)
 
+  /** The rollup twin of a store path (kept next to the store so the
+    * pair moves together). */
+  def rollupPathFor(storePath: String): String = storePath + "_rollup"
+
+  /** The ladder (coarse) rollup twin — built FROM [[rollupPathFor]]. */
+  def ladderPathFor(storePath: String): String = storePath + "_rollup_ladder"
+
+  /** A rollup at `rollupPath` with `intervalSec` buckets, built from
+    * `srcPath`: raw samples for the base level, the next finer
+    * rollup for a LADDER level ([[rollupLadder]]). `coarser` chains
+    * the next level; serving routes to the coarsest servable fresh
+    * level — same answer, 1/ratio the rows. */
+  final case class Ladder(srcPath: String, rollupPath: String,
+                          intervalSec: Long,
+                          coarser: Option[Ladder] = None) {
+
+    /** The levels that `fits` a query and whose rows are current over
+      * [startSec, endSec], coarsest first. Freshness composes: the
+      * base needs [[freshFor]] (raw → fine), each coarser level also
+      * [[freshLadder]] from the level below, so a stale coarse twin
+      * falls back to the fine one and a stale fine twin to raw. Each
+      * gate is checked at most once, and only when a caller reaches
+      * a level that fits. */
+    def servableLevels(spark: SparkSession, startSec: Long, endSec: Long)
+                      (fits: Ladder => Boolean): Iterator[Ladder] = {
+      val levels = Vector.unfold(Option(this))(_.map(l => (l, l.coarser)))
+      lazy val fresh: LazyList[Boolean] = LazyList.range(0, levels.size).map { k =>
+        if (k == 0) freshFor(spark, srcPath, rollupPath, intervalSec, startSec, endSec)
+        else fresh(k - 1) && freshLadder(spark, levels(k - 1).rollupPath,
+          levels(k).rollupPath, levels(k).intervalSec, startSec, endSec)
+      }
+      levels.indices.reverseIterator
+        .filter(k => fits(levels(k)) && fresh(k)).map(levels)
+    }
+  }
+
+  /** The ladder background maintenance keeps for `storePath`: the
+    * fine twin when `intervalSec` > 0, chained to the coarse twin
+    * when `ladderSec` is a proper multiple of it; None when rollups
+    * are off. */
+  def ladder(storePath: String, intervalSec: Long,
+             ladderSec: Long): Option[Ladder] =
+    Option.when(intervalSec > 0)(Ladder(storePath, rollupPathFor(storePath),
+      intervalSec,
+      Option.when(ladderSec > intervalSec && ladderSec % intervalSec == 0)(
+        Ladder(rollupPathFor(storePath), ladderPathFor(storePath), ladderSec))))
+
   /** Rollup ROW schema version. v2 added the per-bucket edge points
     * (t_first/v_first/t_last/v_last) that let rate/increase/delta/
     * last_over_time serve from the rollup. v3 adds the bucket's

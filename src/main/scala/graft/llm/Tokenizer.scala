@@ -242,7 +242,7 @@ object Tokenizer {
         }
         vocab = vocab
           .withColumn("syms",
-            applyMerges(col("syms"), batch.map(t => (t._1, t._2))))
+            applyMerges(col("syms"), batch.toSeq.map(t => (t._1, t._2))))
           .localCheckpoint(true) // flat lineage, one plan per round
       }
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ingest.SamplesStore
+import graft.ingest.{RollupStore, SamplesStore}
 
 /** Prometheus alerting rules over the evaluator: a rule's expression
   * (typically a comparison filter — `expr > threshold` emits rows
@@ -52,7 +52,7 @@ object Alerting {
   def alerts(samples: DataFrame, rule: AlertRule, startSec: Long,
              endSec: Long,
              lookbackSec: Long = PromQL.DefaultLookbackSec,
-             rollup: Option[PromQL.RollupGrid] = None,
+             rollup: Option[RollupStore.Ladder] = None,
              stale: Option[DataFrame] = None): DataFrame = {
     val need = rule.forSec / rule.stepSec + 1
     val ev = PromQL.eval(samples, rule.parsed, startSec - rule.forSec,

@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
 import org.slf4j.LoggerFactory
 
 import graft.OpsMetrics
-import graft.ingest.{PromRemoteCodec, SamplesStore}
+import graft.ingest.{PromRemoteCodec, RollupStore, SamplesStore}
 
 /** The reference's HTTP surface bound over the serving twins
   * (reference: main.go:116-166): `POST /write` → [[RemoteWrite.serve]]
@@ -276,16 +276,8 @@ object HttpServe {
       // that simply doesn't exist yet (fresh server before the first
       // /write) fails fast instead — that miss is permanent.
       val reqBody = body(ex)
-      val rollupRoute = Option(RemoteWrite.rollupIntervalSec).filter(_ > 0)
-        .map { iv =>
-          val coarser = Option(RemoteWrite.rollupLadderIntervalSec)
-            .filter(l => l > iv && l % iv == 0)
-            .map(l => RemoteRead.RollupRoute(
-              RemoteWrite.rollupPathFor(storePath),
-              RemoteWrite.ladderPathFor(storePath), l))
-          RemoteRead.RollupRoute(storePath,
-            RemoteWrite.rollupPathFor(storePath), iv, coarser)
-        }
+      val rollupRoute = RollupStore.ladder(storePath,
+        RemoteWrite.rollupIntervalSec, RemoteWrite.rollupLadderIntervalSec)
       // response-type negotiation: accepted_response_types is listed
       // in the CLIENT's preference order, so the first type this
       // server supports wins — a client sending [SAMPLES, CHUNKS]
@@ -708,18 +700,9 @@ object HttpServe {
             val fl = storeSamples().map { df =>
               PromQL.eval(df, expr, startSec, endSec, stepSec,
                   ignoreLabel = ignoreLabel,
-                  rollup = Option(RemoteWrite.rollupIntervalSec)
-                    .filter(_ > 0).map { iv =>
-                      // the ladder chains as the coarser level: the
-                      // evaluator serves the coarsest FRESH grid
-                      val coarser = Option(RemoteWrite.rollupLadderIntervalSec)
-                        .filter(l => l > iv && l % iv == 0)
-                        .map(l => PromQL.RollupGrid(
-                          RemoteWrite.rollupPathFor(storePath),
-                          RemoteWrite.ladderPathFor(storePath), l))
-                      PromQL.RollupGrid(storePath,
-                        RemoteWrite.rollupPathFor(storePath), iv, coarser)
-                    },
+                  rollup = RollupStore.ladder(storePath,
+                    RemoteWrite.rollupIntervalSec,
+                    RemoteWrite.rollupLadderIntervalSec),
                   // opt-in native estimator over the hist sibling —
                   // opened only when the expression actually carries
                   // a histogram_quantile/fraction node, so `up` or

@@ -1434,15 +1434,6 @@ object PromQL {
 
   // ---- Evaluator --------------------------------------------------
 
-  /** A rollup twin the evaluator may serve coarse aligned
-    * *_over_time calls from — same config as RemoteRead.RollupRoute.
-    * `coarser` chains the next LADDER level (built FROM this one by
-    * RollupStore.rollupLadder): the evaluator routes to the
-    * coarsest servable level — same answer, 1/ratio the rows. */
-  final case class RollupGrid(srcPath: String, rollupPath: String,
-                              intervalSec: Long,
-                              coarser: Option[RollupGrid] = None)
-
   /** A label name rendered into a Spark SQL single-quoted literal —
     * quoted-UTF-8 selector/grouping names can hold ANY character, so
     * every interpolation site must escape (an apostrophe in a label
@@ -1464,7 +1455,7 @@ object PromQL {
     * ARRAY<STRING>, t BIGINT, v_e6 BIGINT (micro-units). */
   def eval(samples: DataFrame, expr0: Expr, startSec: Long, endSec: Long,
            stepSec: Long, lookbackSec: Long = DefaultLookbackSec,
-           rollup: Option[RollupGrid] = None,
+           rollup: Option[RollupStore.Ladder] = None,
            ignoreLabel: Option[String] = Some("remote=clickhouse"),
            nativeHist: Option[DataFrame] = None,
            stale: Option[DataFrame] = None): DataFrame = {
@@ -1674,7 +1665,7 @@ object PromQL {
 
   private def evalNode(samples: DataFrame, expr0: Expr, startSec: Long,
                        endSec: Long, stepSec: Long, lookbackSec: Long,
-                       rollup: Option[RollupGrid],
+                       rollup: Option[RollupStore.Ladder],
                        ignoreLabel: Option[String],
                        rec: (Expr, Long, Long) => DataFrame,
                        nativeHist: Option[DataFrame],
@@ -3534,7 +3525,7 @@ object PromQL {
   private def subqueryRange(samples: DataFrame, fn: String, child: Expr,
                             start: Long, end: Long, step: Long, d: Long,
                             res: Long, lookbackSec: Long,
-                            rollup: Option[RollupGrid],
+                            rollup: Option[RollupStore.Ladder],
                             ignoreLabel: Option[String],
                             stale: Option[DataFrame]): DataFrame = {
     val innerStart = (start - d + res - 1) / res * res
@@ -3699,81 +3690,49 @@ object PromQL {
     * partial-sum float noise exactly as it does the raw sum's).
     * O(rollup rows) instead of O(raw samples) — the recording-rule
     * payoff inside the evaluator. */
-  private def rangeFromRollup(spark: SparkSession, r: RollupGrid, fn: String,
-                              matchers: Seq[LabelMatcher], start: Long,
-                              end: Long, step: Long, d: Long,
+  private def rangeFromRollup(spark: SparkSession, r: RollupStore.Ladder,
+                              fn: String, matchers: Seq[LabelMatcher],
+                              start: Long, end: Long, step: Long, d: Long,
                               ignoreLabel: Option[String]): Option[DataFrame] = {
     if (!(RollupServable(fn) && step == d)) return None
     val lo = start - d
-    // LADDER routing: try the coarsest servable level first — the
-    // answer is identical at any level (every field re-aggregates
-    // exactly), the row count is 1/ratio. Each level's freshness
-    // gate COMPOSES: the base grid needs freshFor(raw→fine); every
-    // ladder level additionally needs freshLadder(finer→itself) AND
-    // everything below it, so a stale coarse twin falls back to the
-    // fine one, and a stale fine twin falls back to raw.
-    var levels = List[(RollupGrid, () => Boolean)]()
-    var cur = r
-    var fresh: () => Boolean = () => RollupStore.freshFor(spark,
-      r.srcPath, r.rollupPath, r.intervalSec, lo, end)
-    levels ::= ((cur, fresh))
-    while (cur.coarser.isDefined) {
-      val fine = cur
-      val fineFresh = fresh
-      val c = cur.coarser.get
-      val cFresh = () => fineFresh() && RollupStore.freshLadder(spark,
-        fine.rollupPath, c.rollupPath, c.intervalSec, lo, end)
-      levels ::= ((c, cFresh))
-      cur = c
-      fresh = cFresh
-    }
-    levels.view.flatMap { case (g, ok) =>
-      serveRollupLevel(spark, g, ok, fn, matchers, start, end, d, ignoreLabel)
-    }.headOption
-  }
-
-  private def serveRollupLevel(spark: SparkSession, r: RollupGrid,
-                               freshOk: () => Boolean, fn: String,
-                               matchers: Seq[LabelMatcher], start: Long,
-                               end: Long, d: Long,
-                               ignoreLabel: Option[String]): Option[DataFrame] = {
-    val servable = r.intervalSec > 0 &&
-      d % r.intervalSec == 0 && start % r.intervalSec == 0
-    if (!servable) None
-    else if (!freshOk()) None
-    else Some {
-      OpsMetrics(spark).readsFromRollup.add(1)
-      val lo = start - d
-      val rows = RollupStore.read(spark, r.rollupPath)
-        .filter(col("bucket") >= lo && col("bucket") < end &&
-          col("date") >= lo / 86400 * 86400 && col("date") <= end)
-        .filter(Matchers.compilePromQL(matchers, ignoreLabel))
-        // the unique tiling window [t-d, t) containing bucket b
-        .withColumn("t", expr(s"(bucket - $lo) DIV $d * $d + $start"))
-        .filter(col("t") <= end)
-      if (fn == "irate" || fn == "idelta") pairFromRollup(rows, fn)
-      else {
-        val stats = rows
-          .groupBy(col("metric"), col("labels"), col("t"))
-          .agg(sum(col("n_points")).as("n"),
-            expr("CAST(floor(sum(sum_value) * 100 + 0.5) AS BIGINT)").as("sum_e2"),
-            // v4 integer moments re-aggregate EXACTLY (associative
-            // integer sums — the raw path's very values)
-            sum(col("sy_e2")).as("sy_e2"),
-            sum(col("syy_e4")).as("syy_e4"),
-            min(col("min_value")).as("vmin"), max(col("max_value")).as("vmax"),
-            min(col("t_first")).as("t_first"), max(col("t_last")).as("t_last"),
-            expr("min_by(v_first, t_first)").as("v_first"),
-            expr("max_by(v_last, t_last)").as("v_last"),
-            // v5 argmax timestamps: window argmax = argmax over
-            // buckets of (bucket extremum, its timestamp) — same
-            // tie-to-latest lexicographic rule as the raw path,
-            // comparing the very same deduped doubles, so exact
-            expr("max_by(t_vmax, struct(max_value, t_vmax))").as("t_vmax"),
-            expr("max_by(t_vmin, struct(-min_value, t_vmin))").as("t_vmin"))
-        project(stats, fn)
+    // LADDER routing: the coarsest servable level serves — the answer
+    // is identical at any level (every field re-aggregates exactly),
+    // the row count is 1/ratio
+    r.servableLevels(spark, lo, end)(g => g.intervalSec > 0 &&
+        d % g.intervalSec == 0 && start % g.intervalSec == 0)
+      .nextOption().map { g =>
+        OpsMetrics(spark).readsFromRollup.add(1)
+        val rows = RollupStore.read(spark, g.rollupPath)
+          .filter(col("bucket") >= lo && col("bucket") < end &&
+            col("date") >= lo / 86400 * 86400 && col("date") <= end)
+          .filter(Matchers.compilePromQL(matchers, ignoreLabel))
+          // the unique tiling window [t-d, t) containing bucket b
+          .withColumn("t", expr(s"(bucket - $lo) DIV $d * $d + $start"))
+          .filter(col("t") <= end)
+        if (fn == "irate" || fn == "idelta") pairFromRollup(rows, fn)
+        else {
+          val stats = rows
+            .groupBy(col("metric"), col("labels"), col("t"))
+            .agg(sum(col("n_points")).as("n"),
+              expr("CAST(floor(sum(sum_value) * 100 + 0.5) AS BIGINT)").as("sum_e2"),
+              // v4 integer moments re-aggregate EXACTLY (associative
+              // integer sums — the raw path's very values)
+              sum(col("sy_e2")).as("sy_e2"),
+              sum(col("syy_e4")).as("syy_e4"),
+              min(col("min_value")).as("vmin"), max(col("max_value")).as("vmax"),
+              min(col("t_first")).as("t_first"), max(col("t_last")).as("t_last"),
+              expr("min_by(v_first, t_first)").as("v_first"),
+              expr("max_by(v_last, t_last)").as("v_last"),
+              // v5 argmax timestamps: window argmax = argmax over
+              // buckets of (bucket extremum, its timestamp) — same
+              // tie-to-latest lexicographic rule as the raw path,
+              // comparing the very same deduped doubles, so exact
+              expr("max_by(t_vmax, struct(max_value, t_vmax))").as("t_vmax"),
+              expr("max_by(t_vmin, struct(-min_value, t_vmin))").as("t_vmin"))
+          project(stats, fn)
+        }
       }
-    }
   }
 
   /** irate/idelta from rollup v3 rows: per window, the final two

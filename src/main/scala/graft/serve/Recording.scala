@@ -3,7 +3,7 @@ package graft.serve
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.ingest.SamplesStore
+import graft.ingest.{RollupStore, SamplesStore}
 
 /** Prometheus recording rules over the store: evaluate a PromQL
   * expression on a grid and append the result as FIRST-CLASS samples
@@ -68,7 +68,7 @@ object Recording {
   def record(spark: SparkSession, storePath: String, rule: Rule,
              startSec: Long, endSec: Long,
              lookbackSec: Long = PromQL.DefaultLookbackSec,
-             rollup: Option[PromQL.RollupGrid] = None): Unit = PromQL.releasing {
+             rollup: Option[RollupStore.Ladder] = None): Unit = PromQL.releasing {
     val out = PromQL.eval(SamplesStore.read(spark, storePath), rule.parsed,
         startSec, endSec, rule.stepSec, lookbackSec, rollup,
         stale = RemoteWrite.staleStoreDf(spark, storePath))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
 import graft.OpsMetrics
-import graft.ingest.PromRemoteCodec
+import graft.ingest.{PromRemoteCodec, RollupStore}
 import graft.ingest.PromRemoteCodec.{PromLabel, PromSample, PromTimeSeries}
 import graft.operators.SeriesRead
 
@@ -46,15 +46,16 @@ object RemoteRead {
     * shim maps it to the reference's 500 path. */
   final class ResponseTooLargeException(msg: String) extends RuntimeException(msg)
 
-  /** A rollup twin the read path may serve coarse queries from (see
-    * [[graft.ingest.RollupStore]]). Routing is per query and gated
-    * twice: the SHAPE gate (the effective downsample interval is a
-    * multiple of the rollup's, so complete query buckets are exact
-    * unions of full rollup buckets) and the FRESHNESS gate
-    * ([[graft.ingest.RollupStore.freshFor]] — every overlapping
-    * source day's digest is current, so a write that hasn't been
-    * rolled up yet routes the query back to raw samples; staleness
-    * is impossible by construction, not by timing).
+  /** The split-routing plan: the keyed select for a query the rollup
+    * ladder can serve, or None to route the whole query raw. Routing
+    * is per query and gated twice: the SHAPE gate (the effective
+    * downsample interval is a multiple of the level's, so complete
+    * query buckets are exact unions of full rollup buckets) and the
+    * FRESHNESS gate ([[graft.ingest.RollupStore.Ladder.servableLevels]]
+    * — every overlapping source day's digest is current, so a write
+    * that hasn't been rolled up yet routes the query back to raw
+    * samples; staleness is impossible by construction, not by
+    * timing). The coarsest servable level serves.
     *
     * Time bounds need NOT be bucket-aligned: the real dashboard
     * window ("last 7 days", now-anchored) almost never is, and
@@ -66,23 +67,11 @@ object RemoteRead {
     * the raw answer (a recording rule's interior + raw-edge shape).
     * The edges scan at most one query interval of raw data each, so
     * the raw cost is bounded by the window's EDGE, not its length. */
-  final case class RollupRoute(srcPath: String, rollupPath: String,
-                               intervalSec: Long,
-                               coarser: Option[RollupRoute] = None)
-
-  /** The split-routing plan: the keyed select for a query the rollup
-    * can serve (interior from rollup rows, partial edges unioned in
-    * from raw samples), or None to route the whole query raw —
-    * interval not a multiple, no complete bucket inside the window,
-    * or a stale rollup over the interior days. LADDER routing like
-    * the evaluator's: the coarsest fresh level serves (its
-    * freshness gate composes every finer level's), a stale coarse
-    * twin falls back to the fine one, a stale fine twin to raw. */
-  private[graft] def rollupSelect(r: RollupRoute, q: graft.operators.ReadQuery,
+  private[graft] def rollupSelect(r: RollupStore.Ladder,
+                                  q: graft.operators.ReadQuery,
                                   samples: DataFrame,
                                   ignoreLabel: Option[String] = Some("remote=clickhouse"),
                                   ignoreHints: Boolean = false): Option[DataFrame] = {
-    import graft.ingest.RollupStore
     import graft.operators.Downsample
     val qI = Downsample.hintIntervalSec(q.stepMs, q.rangeMs, ignoreHints)
     val startSec = q.startMs / 1000
@@ -94,25 +83,8 @@ object RemoteRead {
     val hi = endExcl.map(_ / qI * qI)          // first second past the last complete bucket
     if (!hi.forall(_ > lo)) return None        // no complete bucket inside
     val hiSec = hi.map(_ - 1).getOrElse(0L)
-    var levels = List[(RollupRoute, () => Boolean)]()
-    var cur = r
-    var fresh: () => Boolean = () => RollupStore.freshFor(
-      samples.sparkSession, r.srcPath, r.rollupPath, r.intervalSec, lo, hiSec)
-    levels ::= ((cur, fresh))
-    while (cur.coarser.isDefined) {
-      val fine = cur
-      val fineFresh = fresh
-      val c = cur.coarser.get
-      val cFresh = () => fineFresh() && RollupStore.freshLadder(
-        samples.sparkSession, fine.rollupPath, c.rollupPath, c.intervalSec,
-        lo, hiSec)
-      levels ::= ((c, cFresh))
-      cur = c
-      fresh = cFresh
-    }
-    levels.view.flatMap { case (route, freshOk) =>
-      if (qI % route.intervalSec != 0 || !freshOk()) None
-      else Some {
+    r.servableLevels(samples.sparkSession, lo, hiSec)(qI % _.intervalSec == 0)
+      .nextOption().map { route =>
         val interiorQ = q.copy(startMs = lo * 1000L,
           endMs = hi.map(_ * 1000L - 1).getOrElse(0L))
         var sel = RollupStore.selectKeyed(
@@ -130,7 +102,6 @@ object RemoteRead {
             samples, q.copy(startMs = h * 1000L), ignoreLabel, ignoreHints))
         sel
       }
-    }.headOption
   }
 
   /** True when the failure (anywhere in the cause chain) is a missing
@@ -163,7 +134,7 @@ object RemoteRead {
             maxSamples: Long = DefaultMaxReadSamples,
             transientRetries: Int = 0,
             transientClassifier: Throwable => Boolean = isTransientMiss,
-            rollupRoute: Option[RollupRoute] = None,
+            rollupRoute: Option[RollupStore.Ladder] = None,
             histStore: Option[DataFrame] = None,
             staleStore: Option[DataFrame] = None): Array[Byte] = {
     var m: OpsMetrics = null
@@ -282,7 +253,7 @@ object RemoteRead {
                    ignoreLabel: Option[String] = Some("remote=clickhouse"),
                    ignoreHints: Boolean = false,
                    maxSamples: Long = DefaultMaxReadSamples,
-                   rollupRoute: Option[RollupRoute] = None,
+                   rollupRoute: Option[RollupStore.Ladder] = None,
                    histStore: Option[DataFrame] = None,
                    maxFrameBytes: Int = DefaultMaxFrameBytes,
                    staleStore: Option[DataFrame] = None): Array[Byte] = {
@@ -523,7 +494,7 @@ object RemoteRead {
   private def runQuery(samples: DataFrame, q: graft.operators.ReadQuery,
                        ignoreLabel: Option[String], ignoreHints: Boolean,
                        maxSamples: Long,
-                       rollupRoute: Option[RollupRoute]): Seq[PromTimeSeries] = {
+                       rollupRoute: Option[RollupStore.Ladder]): Seq[PromTimeSeries] = {
     val sel = rollupRoute
       .flatMap(rollupSelect(_, q, samples, ignoreLabel, ignoreHints)) match {
       case Some(routed) =>
@@ -565,7 +536,7 @@ object RemoteRead {
 
   private val SeriesKeyOrdering: Ordering[(String, Seq[String])] =
     new Ordering[(String, Seq[String])] {
-      private val labelsOrd = Ordering.Iterable(Utf8Ordering)
+      private val labelsOrd = Ordering.Implicits.seqOrdering[Seq, String](Utf8Ordering)
       def compare(a: (String, Seq[String]), b: (String, Seq[String])): Int = {
         val c = Utf8Ordering.compare(a._1, b._1)
         if (c != 0) c else labelsOrd.compare(a._2, b._2)

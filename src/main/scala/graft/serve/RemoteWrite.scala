@@ -3,7 +3,8 @@ package graft.serve
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.OpsMetrics
-import graft.ingest.{PromRemoteCodec, SamplesStore}
+import graft.ingest.{PromRemoteCodec, RollupStore, SamplesStore}
+import graft.ingest.PromRemoteCodec.IngestedSample
 
 /** The end-to-end remote-write serving loop — the reference's whole
   * `/write` contract in one function (reference: main.go:124-143 +
@@ -15,10 +16,10 @@ import graft.ingest.{PromRemoteCodec, SamplesStore}
   *
   * The blob decodes on the driver — it is one bounded HTTP body, the
   * same place the reference's handler inflates it — and the append is
-  * a distributed day-partitioned store write. Bulk/replay ingestion
-  * of MANY blobs should go through
-  * [[graft.ingest.Ingest.decodeWriteRequestBlobs]] instead, which
-  * decodes inside executors.
+  * a distributed day-partitioned store write. /write, OTLP and the
+  * batched [[serveAll]] share one landing path: decoded rows become a
+  * `Landing`, and `land` appends it to the store and its four
+  * siblings concurrently.
   */
 object RemoteWrite {
 
@@ -118,18 +119,14 @@ object RemoteWrite {
   private val ctSeen = java.util.concurrent.ConcurrentHashMap
     .newKeySet[(String, String, Seq[String], Long)]()
 
-  /** The flagged CT-zero rows this request introduces for the FIRST
-    * time in this process (per store). */
+  /** The CT-zero rows among `candidates` this process lands for the
+    * FIRST time (per store); claims them in the memo. */
   private def freshCtZeroRows(storePath: String,
-                              req: PromRemoteCodec.PromWriteRequest)
-      : Seq[PromRemoteCodec.IngestedSample] =
-    if (!ctZeroIngestion) Nil
-    else {
-      if (ctSeen.size > 1000000) ctSeen.clear()
-      PromRemoteCodec.toCtZeroRows(req)
-        .filter(r => ctSeen.add((storePath, r.metric, r.labels, r.ts_us)))
-        .toSeq
-    }
+                              candidates: Seq[IngestedSample])
+      : Seq[IngestedSample] = {
+    if (ctSeen.size > 1000000) ctSeen.clear()
+    candidates.filter(r => ctSeen.add((storePath, r.metric, r.labels, r.ts_us)))
+  }
 
   /** Roll back [[freshCtZeroRows]]' memo claims when the store
     * append that was meant to land them FAILS — otherwise the
@@ -139,15 +136,8 @@ object RemoteWrite {
     * (another request re-claiming between failure and retry), which
     * the read model's per-second dedup collapses. */
   private def unclaimCtZero(storePath: String,
-                            rows: Seq[PromRemoteCodec.IngestedSample]): Unit =
+                            rows: Seq[IngestedSample]): Unit =
     rows.foreach(r => ctSeen.remove((storePath, r.metric, r.labels, r.ts_us)))
-
-  /** The rollup twin of a store path (kept next to the store so the
-    * pair moves together). */
-  def rollupPathFor(storePath: String): String = storePath + "_rollup"
-
-  /** The ladder (coarse) rollup twin — built FROM [[rollupPathFor]]. */
-  def ladderPathFor(storePath: String): String = storePath + "_rollup_ladder"
 
   private val lastCompactCheck =
     scala.collection.concurrent.TrieMap.empty[String, Long]
@@ -207,9 +197,9 @@ object RemoteWrite {
             lastExpiry.put(storePath, nowE)
             SamplesStore.expireSnapshots(spark, storePath, gcGraceMs)
             if (rollupIntervalSec > 0)
-              SamplesStore.expireSnapshots(spark, rollupPathFor(storePath), gcGraceMs)
+              SamplesStore.expireSnapshots(spark, RollupStore.rollupPathFor(storePath), gcGraceMs)
             if (rollupLadderIntervalSec > 0)
-              SamplesStore.expireSnapshots(spark, ladderPathFor(storePath), gcGraceMs)
+              SamplesStore.expireSnapshots(spark, RollupStore.ladderPathFor(storePath), gcGraceMs)
           }
         } catch {
           // a failed background merge must not be silent — but it must
@@ -257,18 +247,15 @@ object RemoteWrite {
     * changed since the last pass. Returns days re-aggregated. */
   private[graft] def rollupPass(spark: SparkSession, storePath: String,
                                 intervalSec: Long): Int =
-    if (intervalSec <= 0) 0
-    else {
-      val days = graft.ingest.RollupStore.rollup(spark, storePath,
-        rollupPathFor(storePath), intervalSec)
-      // the ladder refreshes AFTER the fine twin, from it — a no-op
-      // when no fine day changed (manifest-digest comparison)
-      val ladder = rollupLadderIntervalSec
-      if (ladder > 0 && ladder % intervalSec == 0 && ladder > intervalSec)
-        graft.ingest.RollupStore.rollupLadder(spark,
-          rollupPathFor(storePath), ladderPathFor(storePath), ladder)
-      days
-    }
+    RollupStore.ladder(storePath, intervalSec, rollupLadderIntervalSec)
+      .fold(0) { l =>
+        val days = RollupStore.rollup(spark, l.srcPath, l.rollupPath, l.intervalSec)
+        // the ladder refreshes AFTER the fine twin, from it — a no-op
+        // when no fine day changed (manifest-digest comparison)
+        l.coarser.foreach(c =>
+          RollupStore.rollupLadder(spark, c.srcPath, c.rollupPath, c.intervalSec))
+        days
+      }
 
   /** Recording rules the background maintenance evaluates (empty =
     * disabled). Configured via `-rule.record` flags. */
@@ -350,12 +337,6 @@ object RemoteWrite {
     anyExpired
   }
 
-  /** WriteRequest blob → store append at `storePath`; returns the
-    * number of samples written. `contentType` selects the wire
-    * format (PRW 2.0 content negotiation: proto=io.prometheus.write
-    * .v2.Request → the symbol-table v2 decode; absent/v1 → classic);
-    * an unrecognized proto= value throws IllegalArgumentException —
-    * the HTTP layer answers it 415 BEFORE calling here. */
   /** Per-request write outcome, in the SENDER's units (what the 2.0
     * response headers confirm): float samples, native-histogram
     * samples, and exemplars accepted — a histogram counts once
@@ -424,14 +405,6 @@ object RemoteWrite {
     }
   }
 
-  private def appendHists(spark: SparkSession, storePath: String,
-                          rows: Seq[(Long, String, Seq[String], Array[Byte])]): Unit =
-    if (rows.nonEmpty) {
-      import spark.implicits._
-      SamplesStore.append(
-        rows.toDF("ts_us", "metric", "labels", "hist"), histPath(storePath))
-    }
-
   /** Last metadata entry written per (store, metric) — PRW 2.0
     * senders attach metadata to EVERY series of EVERY request, so
     * blind appends would grow the metadata table at the sample rate;
@@ -444,8 +417,7 @@ object RemoteWrite {
     scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
 
   private def appendMetadata(spark: SparkSession, storePath: String,
-                             rows: Seq[PromRemoteCodec.IngestedSample]): Unit = {
-    if (rows.isEmpty) return
+                             rows: Seq[IngestedSample]): Unit = {
     // a DELETED metadata table must not inherit the cache (the skip
     // would silently drop first-writes after a wipe — test fixtures
     // and operators both do this); one exists() probe per carrying
@@ -515,69 +487,31 @@ object RemoteWrite {
       errs.headOption.foreach(e => throw e)
     }
 
+  /** WriteRequest blob → store append at `storePath`; returns the
+    * number of samples written. `contentType` selects the wire
+    * format (PRW 2.0 content negotiation: proto=io.prometheus.write
+    * .v2.Request → the symbol-table v2 decode; absent/v1 → classic);
+    * an unrecognized proto= value throws IllegalArgumentException —
+    * the HTTP layer answers it 415 BEFORE calling here. */
   def serve(spark: SparkSession, storePath: String,
             writeRequestBlob: Array[Byte],
             contentType: Option[String] = None): Long =
     serveCounted(spark, storePath, writeRequestBlob, contentType).samples
 
+  /** [[serve]] reporting the request's [[WriteOutcome]]. */
   def serveCounted(spark: SparkSession, storePath: String,
                    writeRequestBlob: Array[Byte],
                    contentType: Option[String] = None): WriteOutcome = {
-    val m = OpsMetrics(spark)
-    m.writeRequests.add(1)
-    val req =
-      try PromRemoteCodec.decodeNegotiated(contentType, writeRequestBlob)
-        .fold(p => throw new IllegalArgumentException(
-          s"unsupported remote-write proto: $p"), identity)
-      catch { case e: Throwable => m.writeErrors.add(1); throw e }
-    if (req.skippedHistograms > 0)
-      m.droppedHistograms.add(req.skippedHistograms)
-    if (req.histogramCount > 0)
-      m.convertedHistograms.add(req.histogramCount)
-    val ctRows = freshCtZeroRows(storePath, req)
-    val rows = (ctRows.iterator ++ PromRemoteCodec.toSamples(req)).toSeq
-    val exRows = PromRemoteCodec.toExemplarRows(req).toSeq
-    val mdRows = PromRemoteCodec.toMetadataRows(req).toSeq
-    val histRows = PromRemoteCodec.toHistRows(req).toSeq
-    val staleRows = PromRemoteCodec.toStaleRows(req).toSeq
-    runParallel(Seq(
-      () => if (rows.nonEmpty) {
-        import spark.implicits._
-        try SamplesStore.append(
-          rows.toDF("ts_us", "metric", "labels", "value"), storePath)
-        catch { case e: Throwable =>
-          unclaimCtZero(storePath, ctRows); throw e }
-        m.samplesWritten.add(rows.size.toLong)
-        // background-merge analogue: each request lands a small file
-        // set in its day partitions; fold once fragmentation crosses
-        // the threshold so a long-running server never needs an
-        // operator
-        maybeCompactRateLimited(spark, storePath)
-      },
-      () => if (exRows.nonEmpty) {
-        import spark.implicits._
-        SamplesStore.append(
-          exRows.toDF("ts_us", "metric", "labels", "value"),
-          exemplarPath(storePath))
-        m.exemplarsWritten.add(exRows.size.toLong)
-      },
-      () => appendMetadata(spark, storePath, mdRows),
-      () => appendHists(spark, storePath, histRows),
-      () => if (staleRows.nonEmpty) {
-        import spark.implicits._
-        SamplesStore.append(
-          staleRows.toDF("ts_us", "metric", "labels", "value"),
-          stalePath(storePath))
-        m.samplesWritten.add(staleRows.size.toLong)
-      }
-    ).zip(Seq(rows.nonEmpty, exRows.nonEmpty, mdRows.nonEmpty,
-      histRows.nonEmpty, staleRows.nonEmpty)).collect { case (t, true) => t })
+    val req = decodeCounted(OpsMetrics(spark), contentType, writeRequestBlob)
+    land(spark, storePath, landing(req))
     WriteOutcome(req.sampleCount, req.histogramCount, req.exemplarCount)
   }
 
   /** OTLP metrics body (raw protobuf, no snappy) → store append —
-    * the /api/v1/otlp/v1/metrics leg. Same counters, same background
-    * maintenance as the prompb path. */
+    * the /api/v1/otlp/v1/metrics leg. The body decodes once, where
+    * the request arrives, and lands like a /write request: same
+    * counters, same background maintenance. Returns the samples
+    * written. */
   def serveOtlp(spark: SparkSession, storePath: String,
                 body: Array[Byte]): Long = {
     val m = OpsMetrics(spark)
@@ -589,129 +523,135 @@ object RemoteWrite {
         promoteScope = otlpPromoteScope)
       catch { case e: Throwable => m.writeErrors.add(1); throw e }
     if (dec.droppedPoints > 0) m.otlpDroppedPoints.add(dec.droppedPoints)
-    val rows = dec.samples
-    // samples leg decodes distributed from the raw body (same §8
-    // reasoning as serveAll): one task re-runs the counted decode on
-    // the shipped bytes instead of the driver round-tripping every
-    // decoded row through a local relation per append. Flags are
-    // captured into locals so the task closure carries the request's
-    // configuration instead of reading driver-side globals.
-    val sampleDf = if (rows.isEmpty) None else {
-      import spark.implicits._
-      val (cd, ts, ps) = (otlpConvertDelta, otlpTranslationSuffixes, otlpPromoteScope)
-      Some(spark.createDataset(
-        spark.sparkContext.parallelize(Seq(body), 1).flatMap { b =>
-          graft.ingest.OtlpCodec.decodeExportMetricsCounted(b,
-            convertDelta = cd, translationSuffixes = ts,
-            promoteScope = ps).samples
-        }).toDF("ts_us", "metric", "labels", "value"))
-    }
-    runParallel(Seq(
-      () => if (rows.nonEmpty) {
-        import spark.implicits._
-        SamplesStore.append(
-          sampleDf.getOrElse(
-            rows.toDF("ts_us", "metric", "labels", "value")), storePath)
-        m.samplesWritten.add(rows.size.toLong)
-        maybeCompactRateLimited(spark, storePath)
-      },
-      () => appendMetadata(spark, storePath, dec.metadata),
-      // exponential-histogram points land their NATIVE form in the
-      // hist sibling too — Prometheus's OTLP receiver makes native
-      // histograms of them, and this is what lets them federate
-      () => appendHists(spark, storePath, dec.hists)
-    ).zip(Seq(rows.nonEmpty, dec.metadata.nonEmpty, dec.hists.nonEmpty))
-      .collect { case (t, true) => t })
-    rows.size.toLong
+    // exponential-histogram points land their NATIVE form in the hist
+    // sibling too — Prometheus's OTLP receiver makes native histograms
+    // of them, and this is what lets them federate
+    land(spark, storePath, Landing(ct = Nil, samples = dec.samples, exemplars = Nil,
+      metadata = dec.metadata, hists = dec.hists, stale = Nil))
   }
 
-  /** Batched form: decode+append MANY blobs as ONE store write (one
-    * Spark job instead of one per request) — the shape a replay or a
-    * buffering front-end uses. Concurrent [[serve]] calls get part of
-    * this on their own: `SamplesStore.append` group-commits the frames
-    * queued on one store, so requests that overlap share one write
-    * job and one manifest commit. This form still batches when the
-    * requests do not overlap, and decodes them in one distributed
-    * pass. Malformed blobs throw; counters as in [[serve]]. */
+  /** Batched form: decode+append MANY blobs as ONE write per store —
+    * the shape a replay or a buffering front-end uses. Concurrent
+    * [[serve]] calls get part of this on their own:
+    * `SamplesStore.append` group-commits the frames queued on one
+    * store, so requests that overlap share one write job and one
+    * manifest commit. This form still batches when the requests do
+    * not overlap, and its samples frame decodes the blobs again
+    * DISTRIBUTED: the blobs RDD ships ~KB of wire bytes per request
+    * once, where a local relation of the decoded rows
+    * re-pays catalyst encoding and task shipping of every row
+    * (measured ~0.7 s of a 1.4 s samples append at sf0.1). Every blob
+    * also decodes locally first — counters, validation and the
+    * sibling legs come from there — so a malformed blob throws before
+    * any store mutation. Returns the samples written. */
   def serveAll(spark: SparkSession, storePath: String,
                blobs: Seq[Array[Byte]],
                contentType: Option[String] = None): Long = {
     val m = OpsMetrics(spark)
-    val rows = blobs.map { b =>
-      m.writeRequests.add(1)
-      val req =
-        try PromRemoteCodec.decodeNegotiated(contentType, b)
-          .fold(p => throw new IllegalArgumentException(
-            s"unsupported remote-write proto: $p"), identity)
-        catch { case e: Throwable => m.writeErrors.add(1); throw e }
-      if (req.skippedHistograms > 0)
-        m.droppedHistograms.add(req.skippedHistograms)
-      if (req.histogramCount > 0)
-        m.convertedHistograms.add(req.histogramCount)
-      (freshCtZeroRows(storePath, req),
-        PromRemoteCodec.toSamples(req).toSeq,
-        PromRemoteCodec.toExemplarRows(req).toSeq,
-        PromRemoteCodec.toMetadataRows(req).toSeq,
-        PromRemoteCodec.toHistRows(req).toSeq,
-        PromRemoteCodec.toStaleRows(req).toSeq)
-    }
-    val ctRows = rows.flatMap(_._1)
-    val (sampleRows, exRows) = (ctRows ++ rows.flatMap(_._2), rows.flatMap(_._3))
-    val (mdRows, histRows) = (rows.flatMap(_._4), rows.flatMap(_._5))
-    val staleRows = rows.flatMap(_._6)
-    // The samples DataFrame decodes DISTRIBUTED from the raw blobs
-    // (guide §8: move the lightweight proxy — ~KB of wire bytes per
-    // request — once, not the decoded rows): a driver-side local
-    // relation of the decoded samples re-pays catalyst encoding and
-    // task-shipping of every row on each append action (measured
-    // ~0.7 s of the 1.4 s samples append at sf0.1), while the blobs
-    // RDD ships the bytes one time and decodes inside the scan tasks.
-    // The driver decode above stays authoritative for validation,
-    // counters, ct-zero claims and the small sibling legs, so a
-    // malformed blob still throws before any store mutation.
-    val sampleDf = if (rows.flatMap(_._2).isEmpty) None else {
+    val l = Landing.concat(blobs.map(b => landing(decodeCounted(m, contentType, b))))
+    val samplesDf = if (l.samples.isEmpty) None else {
       import spark.implicits._
       val n = math.max(1, math.min(spark.sparkContext.defaultParallelism, blobs.size))
-      val blobRdd = spark.sparkContext.parallelize(blobs, n)
-      val dist = spark.createDataset(blobRdd.flatMap { b =>
-        PromRemoteCodec.decodeNegotiated(contentType, b)
-          .fold(p => throw new IllegalArgumentException(
-            s"unsupported remote-write proto: $p"),
-            q => PromRemoteCodec.toSamples(q))
-      }).toDF("ts_us", "metric", "labels", "value")
-      Some(if (ctRows.isEmpty) dist
-           else ctRows.toDF("ts_us", "metric", "labels", "value")
-             .unionByName(dist))
+      Some(spark.createDataset(spark.sparkContext.parallelize(blobs, n)
+        .flatMap(b => PromRemoteCodec.toSamples(negotiated(contentType, b))))
+        .toDF("ts_us", "metric", "labels", "value"))
     }
+    land(spark, storePath, l, samplesDf)
+  }
+
+  /** The negotiated decode, an unsupported proto= value as an
+    * IllegalArgumentException. */
+  private def negotiated(contentType: Option[String],
+                         blob: Array[Byte]): PromRemoteCodec.PromWriteRequest =
+    PromRemoteCodec.decodeNegotiated(contentType, blob)
+      .fold(p => throw new IllegalArgumentException(
+        s"unsupported remote-write proto: $p"), identity)
+
+  /** Decode one WriteRequest blob and count it as the handler does:
+    * every blob counts a write request, a malformed one counts an
+    * error and throws (the HTTP shim maps it to 500), histograms
+    * count as converted or dropped. */
+  private def decodeCounted(m: OpsMetrics, contentType: Option[String],
+                            blob: Array[Byte]): PromRemoteCodec.PromWriteRequest = {
+    m.writeRequests.add(1)
+    val req =
+      try negotiated(contentType, blob)
+      catch { case e: Throwable => m.writeErrors.add(1); throw e }
+    if (req.skippedHistograms > 0)
+      m.droppedHistograms.add(req.skippedHistograms)
+    if (req.histogramCount > 0)
+      m.convertedHistograms.add(req.histogramCount)
+    req
+  }
+
+  /** The rows one or more requests land in the five stores: `ct` are
+    * CT-zero candidates (the memo in [[land]] keeps the fresh ones),
+    * `ct` + `samples` go to the main store, `stale` to the `_stale`
+    * sibling, and the rest to the sibling their name says. */
+  private final case class Landing(
+      ct: Seq[IngestedSample],
+      samples: Seq[IngestedSample],
+      exemplars: Seq[IngestedSample],
+      metadata: Seq[IngestedSample],
+      hists: Seq[(Long, String, Seq[String], Array[Byte])],
+      stale: Seq[IngestedSample])
+
+  private object Landing {
+    def concat(ls: Seq[Landing]): Landing =
+      Landing(ls.flatMap(_.ct), ls.flatMap(_.samples), ls.flatMap(_.exemplars),
+        ls.flatMap(_.metadata), ls.flatMap(_.hists), ls.flatMap(_.stale))
+  }
+
+  private def landing(req: PromRemoteCodec.PromWriteRequest): Landing =
+    Landing(
+      if (ctZeroIngestion) PromRemoteCodec.toCtZeroRows(req).toSeq else Nil,
+      PromRemoteCodec.toSamples(req).toSeq,
+      PromRemoteCodec.toExemplarRows(req).toSeq,
+      PromRemoteCodec.toMetadataRows(req).toSeq,
+      PromRemoteCodec.toHistRows(req).toSeq,
+      PromRemoteCodec.toStaleRows(req).toSeq)
+
+  /** Append `l` to the store and its siblings, one concurrent leg per
+    * store that has rows (see [[siblingEc]]), and count what landed.
+    * The main store's frame is `samplesDf` when given — it must hold
+    * exactly `l.samples` — with the fresh CT-zero rows added; else
+    * the local rows. Returns the main store's rows. */
+  private def land(spark: SparkSession, storePath: String, l: Landing,
+                   samplesDf: Option[DataFrame] = None): Long = {
+    import spark.implicits._
+    val m = OpsMetrics(spark)
+    val ct = freshCtZeroRows(storePath, l.ct)
+    val written = ct.size.toLong + l.samples.size
+    def rowsDf(rows: Seq[IngestedSample]): DataFrame =
+      rows.toDF("ts_us", "metric", "labels", "value")
     runParallel(Seq(
-      () => if (sampleRows.nonEmpty) {
-        import spark.implicits._
-        try SamplesStore.append(
-          sampleDf.getOrElse(
-            sampleRows.toDF("ts_us", "metric", "labels", "value")), storePath)
-        catch { case e: Throwable =>
-          unclaimCtZero(storePath, ctRows); throw e }
-        m.samplesWritten.add(sampleRows.size.toLong)
+      (written > 0) -> (() => {
+        val df = samplesDf match {
+          case None                  => rowsDf(ct ++ l.samples)
+          case Some(d) if ct.isEmpty => d
+          case Some(d)               => rowsDf(ct).unionByName(d)
+        }
+        try SamplesStore.append(df, storePath)
+        catch { case e: Throwable => unclaimCtZero(storePath, ct); throw e }
+        m.samplesWritten.add(written)
+        // background-merge analogue: each request lands a small file
+        // set in its day partitions; fold once fragmentation crosses
+        // the threshold so a long-running server never needs an
+        // operator
         maybeCompactRateLimited(spark, storePath)
-      },
-      () => if (exRows.nonEmpty) {
-        import spark.implicits._
-        SamplesStore.append(
-          exRows.toDF("ts_us", "metric", "labels", "value"),
-          exemplarPath(storePath))
-        m.exemplarsWritten.add(exRows.size.toLong)
-      },
-      () => appendMetadata(spark, storePath, mdRows),
-      () => appendHists(spark, storePath, histRows),
-      () => if (staleRows.nonEmpty) {
-        import spark.implicits._
-        SamplesStore.append(
-          staleRows.toDF("ts_us", "metric", "labels", "value"),
-          stalePath(storePath))
-        m.samplesWritten.add(staleRows.size.toLong)
-      }
-    ).zip(Seq(sampleRows.nonEmpty, exRows.nonEmpty, mdRows.nonEmpty,
-      histRows.nonEmpty, staleRows.nonEmpty)).collect { case (t, true) => t })
-    sampleRows.size.toLong
+      }),
+      l.exemplars.nonEmpty -> (() => {
+        SamplesStore.append(rowsDf(l.exemplars), exemplarPath(storePath))
+        m.exemplarsWritten.add(l.exemplars.size.toLong)
+      }),
+      l.metadata.nonEmpty -> (() => appendMetadata(spark, storePath, l.metadata)),
+      l.hists.nonEmpty -> (() => SamplesStore.append(
+        l.hists.toDF("ts_us", "metric", "labels", "hist"), histPath(storePath))),
+      l.stale.nonEmpty -> (() => {
+        SamplesStore.append(rowsDf(l.stale), stalePath(storePath))
+        m.samplesWritten.add(l.stale.size.toLong)
+      })
+    ).collect { case (true, leg) => leg })
+    written
   }
 }

@@ -29,7 +29,7 @@ class LlmSpec extends SparkSpecBase {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     Dedup.minhashLsh(docs).count()
     Dedup.minhashLsh(docs).count()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
     assert(leaked.isEmpty,
       s"repeated operator calls must not accumulate cached relations, leaked ids: $leaked")
   }

@@ -104,7 +104,7 @@ class PlanSpec extends SparkSpecBase {
     val q = ReadQuery(1704499200000L + 900000L, 1704585599000L - 900000L,
       Seq(Matchers.eq("__name__", "click")), stepMs = 7200000L)
     val sel = RemoteRead.rollupSelect(
-      RemoteRead.RollupRoute(path, rpath, 3600L), q,
+      RollupStore.Ladder(path, rpath, 3600L), q,
       SamplesStore.read(spark, path))
       .getOrElse(fail("the unaligned window must route"))
     val p = plan(sel)

@@ -1717,7 +1717,7 @@ class PromQLSpec extends SparkSpecBase {
     val m = graft.OpsMetrics(spark)
     val before = m.readsFromRollup.value
     val routed = rows(PromQL.eval(stored, e, start, end, step,
-      rollup = Some(RollupGrid(path, rpath, 3600L))))
+      rollup = Some(RollupStore.Ladder(path, rpath, 3600L))))
     assert(m.readsFromRollup.value === before + 1,
       "an aligned fresh tiling query must route to the rollup")
     val raw = rows(PromQL.eval(stored, e, start, end, step))
@@ -1742,7 +1742,7 @@ class PromQLSpec extends SparkSpecBase {
       val eF = parse(s"$fn(click[2h])").toOption.get
       val bF = m.readsFromRollup.value
       val routedF = rows(PromQL.eval(stored, eF, start, end, step,
-        rollup = Some(RollupGrid(path, rpath, 3600L))))
+        rollup = Some(RollupStore.Ladder(path, rpath, 3600L))))
       assert(m.readsFromRollup.value === bF + 1, s"$fn must route to the rollup")
       assert(routedF === rows(PromQL.eval(stored, eF, start, end, step)),
         s"$fn rollup answer must equal the raw answer")
@@ -1761,7 +1761,7 @@ class PromQLSpec extends SparkSpecBase {
       val bD = m.readsFromRollup.value
       val routedD = rows(PromQL.eval(stored, eD, T0 + 1296000,
         T0 + 1296000, 1296000L,
-        rollup = Some(RollupGrid(path, rpath, 3600L))))
+        rollup = Some(RollupStore.Ladder(path, rpath, 3600L))))
       assert(m.readsFromRollup.value === bD + 1,
         s"$fn whole-range windows must route to the rollup")
       assert(routedD === rows(PromQL.eval(stored, eD, T0 + 1296000,
@@ -1773,14 +1773,14 @@ class PromQLSpec extends SparkSpecBase {
     // stale rollup (a write the rollup hasn't digested)
     val b2 = m.readsFromRollup.value
     PromQL.eval(stored, e, start + 60, end, step,
-      rollup = Some(RollupGrid(path, rpath, 3600L))).count()
+      rollup = Some(RollupStore.Ladder(path, rpath, 3600L))).count()
     PromQL.eval(stored, e, start, end, 3600L,
-      rollup = Some(RollupGrid(path, rpath, 3600L))).count()
+      rollup = Some(RollupStore.Ladder(path, rpath, 3600L))).count()
     import spark.implicits._
     SamplesStore.append(Seq((start * 1000000L, "click", Seq("k=1", "user=9"), 1.0))
       .toDF("ts_us", "metric", "labels", "value"), path)
     PromQL.eval(SamplesStore.read(spark, path), e, start, end, step,
-      rollup = Some(RollupGrid(path, rpath, 3600L))).count()
+      rollup = Some(RollupStore.Ladder(path, rpath, 3600L))).count()
     assert(m.readsFromRollup.value === b2,
       "unaligned, non-tiling, or stale queries must not route to the rollup")
   }
@@ -1799,8 +1799,8 @@ class PromQLSpec extends SparkSpecBase {
     val stored = SamplesStore.read(spark, path)
     val e = parse("sum_over_time(click[2h])").toOption.get
     val (start, end, step) = (T0 + 7200, T0 + 86400, 7200L)
-    val grid = RollupGrid(path, fine, 900L,
-      Some(RollupGrid(fine, coarse, 3600L)))
+    val grid = RollupStore.Ladder(path, fine, 900L,
+      Some(RollupStore.Ladder(fine, coarse, 3600L)))
     val raw = rows(PromQL.eval(stored, e, start, end, step))
     // both levels fresh → the COARSE one serves (asserted via its
     // scan: only the coarse path's files appear in the plan; cached
@@ -1850,9 +1850,9 @@ class PromQLSpec extends SparkSpecBase {
     RollupStore.rollup(spark, path, fine, 300L)
     RollupStore.rollupLadder(spark, fine, mid, 3600L)
     RollupStore.rollupLadder(spark, mid, day, 86400L)
-    val grid = RollupGrid(path, fine, 300L,
-      Some(RollupGrid(fine, mid, 3600L,
-        Some(RollupGrid(mid, day, 86400L)))))
+    val grid = RollupStore.Ladder(path, fine, 300L,
+      Some(RollupStore.Ladder(fine, mid, 3600L,
+        Some(RollupStore.Ladder(mid, day, 86400L)))))
     val stored = SamplesStore.read(spark, path)
     // a [1d]-tiling query at 1d steps serves from the DAY level; the
     // same data window at 1h steps can only use the MID level (1d

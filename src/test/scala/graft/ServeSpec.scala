@@ -61,6 +61,99 @@ class ServeSpec extends SparkSpecBase {
     assert(graft.ingest.SamplesStore.read(spark, store).count() === 10)
   }
 
+  test("serveAll lands N blobs as N serve calls do, one generation per store") {
+    import graft.ingest.{NativeHistogram, SamplesStore}
+    import PromRemoteCodec.{PromExemplar, PromMetadata}
+    val v2 = Some("application/x-protobuf;proto=" + PromRemoteCodec.ProtoV2)
+    // between them the blobs carry samples, an exemplar, metadata, a
+    // native histogram, a stale marker and a created timestamp
+    def blobsAt(t0: Long, name: String): Seq[Array[Byte]] = {
+      val key = Seq(PromLabel("__name__", s"${name}_total"), PromLabel("k", "a"))
+      Seq(
+        PromTimeSeries(key, Seq(PromSample(1.0, t0), PromSample(2.0, t0 + 15000L)),
+          exemplars = Seq(PromExemplar(Seq(PromLabel("trace_id", "t1")), 2.0, t0 + 15000L)),
+          metadata = Some(PromMetadata(1, "Requests.", "")),
+          createdTimestampMs = t0 - 60000L),
+        PromTimeSeries(Seq(PromLabel("__name__", s"${name}_hist"), PromLabel("k", "a")), Nil,
+          histograms = Seq(NativeHistogram.Hist(t0 + 30000L, 6.0, 4.5, 0, 0.001, 1.0,
+            Seq((0, 2)), Seq(2L, 1L), Nil, Nil, Nil, Nil))),
+        PromTimeSeries(key, Seq(PromSample(3.0, t0 + 30000L),
+          PromSample(PromRemoteCodec.staleNaN, t0 + 45000L)))
+      ).map(ts => PromRemoteCodec.encodeWriteRequestV2(PromWriteRequest(Seq(ts))))
+    }
+    val blobs = blobsAt(1704412800000L, "sa")
+    val (batched, single) = (tmpStore("serveall_batched"), tmpStore("serveall_single"))
+    def stores(p: String) = Seq(p, RemoteWrite.exemplarPath(p),
+      RemoteWrite.metadataPath(p), RemoteWrite.histPath(p), RemoteWrite.stalePath(p))
+    def gen(p: String): Long = {
+      val root = new org.apache.hadoop.fs.Path(p)
+      SamplesStore.latestSnapshot(
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+        .fold(0L)(_.gen)
+    }
+    def rows(p: String): Seq[String] = {
+      val df = SamplesStore.read(spark, p)
+      (if (df.columns.contains("hist")) df.withColumn("hist", hex(col("hist"))) else df)
+        .collect().map(_.toString).sorted.toSeq
+    }
+    // the /metrics body's counters, less the store_* ones: one append
+    // per store is the point of the batched form
+    def counters(): Map[String, Long] = {
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!RemoteWrite.maintenanceIdle && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      graft.OpsMetrics(spark).render.linesIterator.map(_.split(' ')).collect {
+        case Array(n, v) if n.endsWith("_total") && !n.startsWith("store_") => n -> v.toLong
+      }.toMap
+    }
+    def delta(write: => Unit): Map[String, Long] = {
+      val before = counters()
+      write
+      counters().map { case (n, v) => n -> (v - before(n)) }
+    }
+    RemoteWrite.ctZeroIngestion = true
+    try {
+      // a fresh store's first append commits an empty adoption
+      // generation too; seed both so the measured write is an
+      // ordinary one
+      Seq(batched, single).foreach(
+        RemoteWrite.serveAll(spark, _, blobsAt(1704326400000L, "sa_seed"), v2))
+      val (gens0, main0) = (stores(batched).map(gen), rows(batched).size)
+      var written = 0L
+      val batchedDelta = delta { written = RemoteWrite.serveAll(spark, batched, blobs, v2) }
+      assert(stores(batched).map(gen) === gens0.map(_ + 1),
+        "serveAll must commit each store exactly once")
+      assert(written === rows(batched).size - main0, "serveAll returns the main store's new rows")
+      val singleDelta = delta(blobs.foreach(RemoteWrite.serveCounted(spark, single, _, v2)))
+      assert(batchedDelta === singleDelta)
+      assert(batchedDelta("write_requests_total") === 3)
+      assert(batchedDelta("write_exemplars_total") === 1)
+      assert(batchedDelta("write_converted_histograms_total") === 1)
+      stores(batched).zip(stores(single)).foreach { case (b, s) =>
+        assert(rows(b).nonEmpty, b)
+        assert(rows(b) === rows(s), b)
+      }
+    } finally RemoteWrite.ctZeroIngestion = false
+  }
+
+  test("serveAll with a malformed blob lands nothing and claims no CT zero") {
+    val v2 = Some("application/x-protobuf;proto=" + PromRemoteCodec.ProtoV2)
+    val ct = 1704412800000L
+    val blob = PromRemoteCodec.encodeWriteRequestV2(PromWriteRequest(Seq(PromTimeSeries(
+      Seq(PromLabel("__name__", "ctbatch_total")), Seq(PromSample(5.0, ct + 100000L)),
+      createdTimestampMs = ct))))
+    val store = tmpStore("serveall_malformed")
+    RemoteWrite.ctZeroIngestion = true
+    try {
+      intercept[Throwable](RemoteWrite.serveAll(spark, store, Seq(blob, Array[Byte](1, 2, 3)), v2))
+      assert(!graft.ingest.SamplesStore.exists(spark, store))
+      // the valid blob's zero was never written, so a retry must land it
+      RemoteWrite.serve(spark, store, blob, v2)
+    } finally RemoteWrite.ctZeroIngestion = false
+    assert(graft.ingest.SamplesStore.read(spark, store)
+      .filter(col("value") === 0.0).count() === 1)
+  }
+
   test("/write negotiates remote-write 2.0 by Content-Type proto=") {
     val store = tmpStore("writev2")
     val srv = HttpServe.start(spark, store)
@@ -1613,7 +1706,7 @@ class ServeSpec extends SparkSpecBase {
   test("background rollup passes keep the store's rollup twin fresh") {
     import graft.ingest.RollupStore
     val store = tmpStore("rollpass")
-    val rpath = RemoteWrite.rollupPathFor(store)
+    val rpath = RollupStore.rollupPathFor(store)
     // disabled (interval 0) and missing-store cases: clean no-ops
     assert(RemoteWrite.rollupPass(spark, store, 0L) === 0)
     assert(RemoteWrite.rollupPass(spark, store, 3600L) === 0)
@@ -1633,7 +1726,7 @@ class ServeSpec extends SparkSpecBase {
     val prevLadder = RemoteWrite.rollupLadderIntervalSec
     try {
       RemoteWrite.rollupLadderIntervalSec = 7200L
-      val lpath = RemoteWrite.ladderPathFor(store)
+      val lpath = RollupStore.ladderPathFor(store)
       new org.apache.hadoop.fs.Path(lpath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(lpath), true)
@@ -1758,8 +1851,8 @@ class ServeSpec extends SparkSpecBase {
     RollupStore.rollup(spark, path, fine, 900L)
     RollupStore.rollupLadder(spark, fine, coarse, 3600L)
     val day0 = 1704412800L
-    val route = RemoteRead.RollupRoute(path, fine, 900L,
-      Some(RemoteRead.RollupRoute(fine, coarse, 3600L)))
+    val route = RollupStore.Ladder(path, fine, 900L,
+      Some(RollupStore.Ladder(fine, coarse, 3600L)))
     val q = ReadQuery(day0 * 1000L, (day0 + 10 * 86400) * 1000L,
       Seq(Matchers.eq("__name__", "click")), stepMs = 7200000L)
     val stored = SamplesStore.read(spark, path)
@@ -1801,7 +1894,8 @@ class ServeSpec extends SparkSpecBase {
     write(1.0, day0)
     write(5.0, day0 + 3600)
     RemoteWrite.rollupPass(spark, store, 3600L)
-    val route = Some(RemoteRead.RollupRoute(store, RemoteWrite.rollupPathFor(store), 3600L))
+    val route = Some(graft.ingest.RollupStore.Ladder(store,
+      graft.ingest.RollupStore.rollupPathFor(store), 3600L))
     // stepMs 7200s → effective interval 3600; aligned start and end
     val q = ReadQuery(day0 * 1000L, (day0 + 7199) * 1000L,
       Seq(Matchers.eq("__name__", "route_metric")), stepMs = 7200000L)
@@ -1834,7 +1928,7 @@ class ServeSpec extends SparkSpecBase {
     val qUnaligned = ReadQuery(day0 * 1000L + 1000L, (day0 + 7199) * 1000L,
       Seq(Matchers.eq("__name__", "route_metric")), stepMs = 7200000L)
     val ublob = PromRemoteCodec.encodeReadRequest(Seq(qUnaligned))
-    def servedU(r: Option[RemoteRead.RollupRoute]): Seq[(Long, Double)] =
+    def servedU(r: Option[graft.ingest.RollupStore.Ladder]): Seq[(Long, Double)] =
       PromRemoteCodec.decodeReadResponse(
         RemoteRead.serve(SamplesStore.read(spark, store), ublob, rollupRoute = r))
         .flatMap(_.samples).map(s => (s.timestampMs, s.value)).sorted

@@ -543,13 +543,13 @@ class StoreSpec extends SparkSpecBase {
     SamplesStore.write(big, path)
     RollupStore.rollup(spark, path, rpath, 3600L)
     val q = PromQL.parse("stdvar_over_time(big[2h])").toOption.get
-    def vals(rollup: Option[PromQL.RollupGrid]) =
+    def vals(rollup: Option[RollupStore.Ladder]) =
       PromQL.eval(SamplesStore.read(spark, path), q,
           t0 + 7200, t0 + 7200, 7200L, rollup = rollup)
         .select("t", "v_e6").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val m = graft.OpsMetrics(spark)
     val before = m.readsFromRollup.value
-    val served = vals(Some(PromQL.RollupGrid(path, rpath, 3600L)))
+    val served = vals(Some(RollupStore.Ladder(path, rpath, 3600L)))
     assert(m.readsFromRollup.value === before + 1,
       "the aligned query must actually route to the rollup")
     assert(served === vals(None), "rollup-served stdvar must equal raw")
