@@ -15,12 +15,20 @@ that goes first alternates from pair to pair. A side's first run also builds
 that tree, outside the timed window.
 
 It prints one row per end-to-end metric of BENCHMARK.json: each side's median
-and quartiles, how many pairs the change won, and whether the change's median
-is worse than the parent's by more than the metric's bound. A gain counts as
-clear when the medians differ by more than the parent's interquartile range
-(IQR). The failed-request
-share of each side is printed too. Every raw result line is kept in
-DIR/results.jsonl. The exit code is non-zero when a run fails or a bound is
+and quartiles, how many pairs the change won (ties count for neither side),
+the relative change of the median, and three verdicts:
+
+  >IQR   yes when the change's median is BETTER than the parent's (in the
+         metric's `better` direction) by more than the parent's interquartile
+         range (IQR); a move in the worse direction is never `yes`.
+  gain   yes when the change also won at least nine tenths of the pairs run
+         (a pair missing a side counts as not won) — the rule a claimed gain
+         must meet.
+  verdict  WORSE THAN BOUND when the change's median is worse than the
+         parent's by more than the metric's bound, else ok.
+
+The failed-request share of each side is printed too. Every raw result line
+is kept in DIR/results.jsonl. The exit code is non-zero when a run fails or a bound is
 broken. DIR defaults to a fresh temporary directory; the two trees are removed
 at the end unless --keep is given, the results file is kept.
 """
@@ -128,7 +136,7 @@ def main():
         both = sorted({i for i, _ in runs["parent"]} & {i for i, _ in runs["change"]})
         by = {s: dict(runs[s]) for s in runs}
         print(f"workload {a.workload}: {len(both)} complete pairs at {seconds} s, seeds {a.seed}..{a.seed + a.pairs - 1}")
-        print(f"{'metric':<24} {'parent med (q1-q3)':>26} {'change med (q1-q3)':>26} {'wins':>6} {'Δmed':>8} {'bound':>6}  >IQR  verdict")
+        print(f"{'metric':<24} {'parent med (q1-q3)':>26} {'change med (q1-q3)':>26} {'wins':>6} {'Δmed':>8} {'bound':>6}  >IQR gain verdict")
         for m in metrics:
             name, lower = m["name"], m["better"] == "lower"
             pv = [by["parent"][i]["metrics"][name]["value"] for i in both]
@@ -140,11 +148,13 @@ def main():
             rel = (cq[1] - pq[1]) / pq[1] if pq[1] else 0.0
             worse = rel if lower else -rel
             over = worse > m["bound"]
-            clear = abs(cq[1] - pq[1]) > pq[2] - pq[0]
+            better_by = pq[1] - cq[1] if lower else cq[1] - pq[1]
+            clear = better_by > pq[2] - pq[0]
+            gain = clear and wins * 10 >= 9 * a.pairs
             broken |= over
             print(f"{name:<24} {pq[1]:>10.3f} ({pq[0]:.3f}-{pq[2]:.3f}) {cq[1]:>10.3f} ({cq[0]:.3f}-{cq[2]:.3f})"
                   f" {wins:>3}/{len(both):<2} {rel:>+8.1%} {m['bound']:>6.2f}  {'yes' if clear else 'no ':<4}"
-                  f" {'WORSE THAN BOUND' if over else 'ok'}")
+                  f" {'yes' if gain else 'no ':<4} {'WORSE THAN BOUND' if over else 'ok'}")
         for s in ("parent", "change"):
             att = sum(r["attempted"] for _, r in runs[s])
             fail = sum(r["failed"] for _, r in runs[s])

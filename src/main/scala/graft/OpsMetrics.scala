@@ -36,6 +36,10 @@ final class OpsMetrics private (sc: SparkContext) {
   val storeAppends: LongAccumulator   = sc.longAccumulator("store_appends_total")
   val storeAppendCommits: LongAccumulator =
     sc.longAccumulator("store_append_commits_total")
+  // milliseconds those commits held the store mutation lock: divided
+  // by the commit count, the mean cost of landing one append commit
+  val storeAppendCommitMs: LongAccumulator =
+    sc.longAccumulator("store_append_commit_ms_total")
   // snapshot opens and the schema inferences among them — an open
   // whose snapshot schema is known runs no Spark job, so inferences
   // stay near zero on a warm server
@@ -82,6 +86,9 @@ final class OpsMetrics private (sc: SparkContext) {
     ("store_append_commits_total",
       "number of manifest commits that landed store appends (concurrent appends share one)",
       storeAppendCommits),
+    ("store_append_commit_ms_total",
+      "milliseconds store append commits held the store mutation lock",
+      storeAppendCommitMs),
     ("store_opens_total", "number of store snapshots opened for reading", storeOpens),
     ("store_schema_inferences_total",
       "store opens that ran a parquet schema-inference job (snapshot schema unknown)",

@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -604,14 +605,34 @@ object SamplesStore {
         .map(f => day.getPath.getName + "/" + f.getPath.getName))
       .toVector
 
-  /** The store's snapshot, adopting a manifest-less tree (legacy
-    * store, or a parquet layout produced by [[write]]'s bulk rebuild)
-    * by committing gen 1 from a full listing. Mutation-lock holders
-    * only. */
+  /** What a lock-free reader sees at `root`: the latest committed
+    * snapshot; [[NoSnapshot]] for a store this module claimed whose
+    * first commit has not landed (`_manifests` exists but holds no
+    * manifest, so any data file there belongs to an uncommitted — or
+    * crashed — first mutation); None for a foreign manifest-less tree
+    * or an empty path. */
+  private[graft] def readableSnapshot(fs: org.apache.hadoop.fs.FileSystem,
+                                      root: Path): Option[StoreSnapshot] =
+    latestSnapshot(fs, root).orElse(
+      if (fs.exists(new Path(root, ManifestDir))) Some(NoSnapshot) else None)
+
+  /** The store's snapshot, adopting a manifest-less tree that holds
+    * data files (legacy store, or a parquet layout produced by other
+    * tools) by committing gen 1 from a full listing. A path with no
+    * data files is CLAIMED instead — its `_manifests` dir is created,
+    * no manifest written — and resolves to [[NoSnapshot]], so its
+    * first mutation commits gen 1 itself. The claim lands before that
+    * mutation publishes any file: files a failed first mutation left
+    * behind are never adopted (a retry or a batch replay would land
+    * its rows twice), and readers see the claimed store as empty
+    * until gen 1 commits. Mutation-lock holders only. */
   private def snapshotOrAdopt(fs: org.apache.hadoop.fs.FileSystem,
                               root: Path): StoreSnapshot =
-    latestSnapshot(fs, root).getOrElse(
-      commitSnapshot(fs, root, NoSnapshot, listingFiles(fs, root), None))
+    readableSnapshot(fs, root).getOrElse {
+      val files = listingFiles(fs, root)
+      if (files.nonEmpty) commitSnapshot(fs, root, NoSnapshot, files, None)
+      else { fs.mkdirs(new Path(root, ManifestDir)); NoSnapshot }
+    }
 
   private def fsFor(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -623,37 +644,48 @@ object SamplesStore {
     fsFor(spark, path).exists(new Path(path))
 
 
-  /** `date` leads the within-partition sort so the dynamic-partition
-    * writer's required ordering (partition columns first) is already
-    * satisfied and it does NOT inject its own partition-column-only
-    * sort — which would destroy the (metric, labels, ts_us) file
-    * order this store's row-group pruning depends on.
+  /** The one store write shape: a `date` column derived from ts_us,
+    * rows grouped so each day lands in ONE task, and a within-task
+    * (date, metric, labels, ts_us) sort. `date` leads the sort so the
+    * dynamic-partition writer's required ordering (partition columns
+    * first) is already satisfied and it does NOT inject its own
+    * partition-column-only sort — which would destroy the (metric,
+    * labels, ts_us) file order this store's row-group pruning
+    * depends on. Either shape writes one sorted file per touched day.
     *
-    * The layout exchange's WIDTH derives from the input's planned
-    * size (guide §2: scale-adaptive partitioning, not a constant):
-    * a serving append is one request's rows — fanning those across
-    * the full configured shuffle width is pure task-scheduling tax —
-    * while a bulk (re)build caps at the session's own setting, so a
-    * cluster-scale rewrite keeps its parallelism. The width never
-    * drops below min(cap, 32): the dynamic-partition writer needs
-    * roughly touched-days many tasks to write day files in parallel
-    * (measured: a width-1 layout serialized 30 day files and cost
-    * more than the exchange it saved), so locally (cap ≤ 32) the
-    * width is the session's own — byte-derived sizing only engages
-    * on clusters whose configured width is far above it. Catalyst's
-    * sizeInBytes is an estimate (exact for local rows, file-size
-    * for scans), which is the right fidelity for a width heuristic:
-    * an overestimate degrades to today's behavior. */
-  private def layout(samples: DataFrame): DataFrame = {
-    val spark = samples.sparkSession
-    val cap = spark.sessionState.conf.numShufflePartitions
-    val est = samples.queryExecution.optimizedPlan.stats.sizeInBytes
-    val width = graft.Width.of(Some(est.min(BigInt(Long.MaxValue)).toLong),
-      graft.Width.MaintenanceTarget, 32, cap)
-    samples
-      .withColumn("date", expr("ts_us DIV 1000000 DIV 86400 * 86400"))
-      .repartition(width, col("date"))
-      .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("ts_us"))
+    * How the days reach their task follows where the rows sit:
+    *  - DRIVER-LOCAL input (every leaf of the optimized plan is a
+    *    `LocalRelation`: a /write or OTLP request, a sibling-store
+    *    leg, a group commit's union of them) is one request's rows.
+    *    It runs as ONE task with no exchange (`coalesce(1)`): a
+    *    shuffle would cost a map job plus a width-many write job of
+    *    mostly empty tasks, all under the store's mutation lock,
+    *    for rows that already sit in one place.
+    *  - DISTRIBUTED input (a scan of store files for compaction or a
+    *    boundary-day rewrite, a file-sourced stream batch,
+    *    `serveAll`'s blob RDD, a bulk build) hash-partitions on
+    *    `date`. The width derives from the
+    *    input's planned size (scale-adaptive, [[graft.Width.of]]),
+    *    capped at the session's own setting so a cluster-scale
+    *    rewrite keeps its parallelism, and never below min(cap, 32):
+    *    a multi-day rebuild needs roughly touched-days many tasks to
+    *    write its day files in parallel (measured: a width-1 layout
+    *    serialized 30 day files and cost more than the exchange it
+    *    saved). Catalyst's sizeInBytes is an estimate (file size for
+    *    scans), the right fidelity for a width heuristic: an
+    *    overestimate degrades to the session's width. */
+  private[graft] def layout(samples: DataFrame): DataFrame = {
+    val plan = samples.queryExecution.optimizedPlan
+    val dated = samples.withColumn("date", expr("ts_us DIV 1000000 DIV 86400 * 86400"))
+    val grouped =
+      if (plan.collectLeaves().forall(_.isInstanceOf[LocalRelation])) dated.coalesce(1)
+      else {
+        val cap = samples.sparkSession.sessionState.conf.numShufflePartitions
+        val est = plan.stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong
+        dated.repartition(graft.Width.of(Some(est), graft.Width.MaintenanceTarget, 32, cap),
+          col("date"))
+      }
+    grouped.sortWithinPartitions(col("date"), col("metric"), col("labels"), col("ts_us"))
   }
 
   /** Stage half of every store rewrite (samples and rollup stores
@@ -718,6 +750,7 @@ object SamplesStore {
                              batchId: Option[Long]): Int = {
     val fs = fsFor(samples.sparkSession, path)
     locked(path) {
+      val lockedAt = System.nanoTime()
       val root = new Path(path)
       val prev = snapshotOrAdopt(fs, root)
       onAppendSnapshotResolved()
@@ -730,7 +763,9 @@ object SamplesStore {
         val snap = commitDelta(fs, root, prev, moved, Set.empty)(
           maxBatchId = batchId.getOrElse(prev.maxBatchId),
           dataSchema = if (prev.files.isEmpty) Some(dataSchemaOf(samples)) else prev.dataSchema)
-        graft.OpsMetrics(samples.sparkSession).storeAppendCommits.add(1)
+        val m = graft.OpsMetrics(samples.sparkSession)
+        m.storeAppendCommits.add(1)
+        m.storeAppendCommitMs.add((System.nanoTime() - lockedAt) / 1000000L)
         val touched = moved.iterator.map(_.takeWhile(_ != '/')).toSet
         if (touched.isEmpty) 0
         else touched.iterator.map(d => snap.byDay.getOrElse(d, Vector.empty).size).max
@@ -846,11 +881,12 @@ object SamplesStore {
     * manifest by [[GcGraceMs]]. Lock-free and valid from ANY process —
     * this is the atomic-part-visibility contract the reference
     * delegates to ClickHouse. Opened by [[open]] with the snapshot's
-    * known schema, so a warm read runs no Spark job. A manifest-less
+    * known schema, so a warm read runs no Spark job. A claimed store
+    * whose first commit has not landed reads empty; a manifest-less
     * path (a plain parquet tree from other tools) falls back to
     * directory listing and schema inference. */
   def read(spark: SparkSession, path: String): DataFrame =
-    latestSnapshot(fsFor(spark, path), new Path(path)) match {
+    readableSnapshot(fsFor(spark, path), new Path(path)) match {
       case Some(snap) => open(spark, path, snap)
       case None       => spark.read.parquet(path)
     }
@@ -952,9 +988,9 @@ object SamplesStore {
     val prev = snapshotOrAdopt(fs, root)
     // `date` is re-derived from ts_us inside layout(), so the rewrite
     // cannot drift from the read-side partition values; the source is
-    // the SNAPSHOT (via read), so crashed-append garbage is never
-    // folded into committed data.
-    val rows = read(spark, path).drop("date")
+    // the SNAPSHOT, so crashed-append garbage is never folded into
+    // committed data.
+    val rows = open(spark, path, prev).drop("date")
     val moved = publish(fs, stage(layout(rows), root), root, s"c${prev.gen + 1}-")
     commitSnapshot(fs, root, prev, moved, Some(dataSchemaOf(rows)))
     expireSnapshots(spark, path, 0L)

@@ -169,11 +169,12 @@ object RollupStore {
   }
 
   /** The source's live files: its latest snapshot when the store has
-    * one (any [[SamplesStore]] mutation commits one), else a plain
-    * directory listing (a parquet tree built by other tools), which
-    * has no known schema. */
+    * one (any [[SamplesStore]] mutation commits one; a claimed store
+    * before its first commit has none), else a plain directory
+    * listing (a parquet tree built by other tools), which has no
+    * known schema. */
   private def sourceSnapshot(fs: FileSystem, srcRoot: Path): StoreSnapshot =
-    SamplesStore.latestSnapshot(fs, srcRoot).getOrElse(
+    SamplesStore.readableSnapshot(fs, srcRoot).getOrElse(
       SamplesStore.NoSnapshot.copy(files = SamplesStore.listingFiles(fs, srcRoot)))
 
   /** The incremental pass [[rollup]] and [[rollupLadder]] share, run

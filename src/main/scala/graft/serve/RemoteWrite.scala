@@ -321,7 +321,7 @@ object RemoteWrite {
     // directory lingers physically until grace expiry, and re-deleting
     // it every pass would defeat the skip
     val liveDays: Iterable[String] =
-      SamplesStore.latestSnapshot(fs, root).map(_.byDay.keys)
+      SamplesStore.readableSnapshot(fs, root).map(_.byDay.keys)
         .getOrElse {
           if (!fs.exists(root)) Nil
           else fs.listStatus(root)

@@ -113,9 +113,8 @@ class ServeSpec extends SparkSpecBase {
     }
     RemoteWrite.ctZeroIngestion = true
     try {
-      // a fresh store's first append commits an empty adoption
-      // generation too; seed both so the measured write is an
-      // ordinary one
+      // a fresh store's first append commits its gen-1 checkpoint;
+      // seed both so the measured write is an ordinary delta
       Seq(batched, single).foreach(
         RemoteWrite.serveAll(spark, _, blobsAt(1704326400000L, "sa_seed"), v2))
       val (gens0, main0) = (stores(batched).map(gen), rows(batched).size)
@@ -2121,6 +2120,8 @@ class ServeSpec extends SparkSpecBase {
       val commits = counter("store_append_commits_total") - commits0
       assert(appends >= 4, s"appends counted: $appends")
       assert(commits >= 1 && commits <= appends, s"$commits commits for $appends appends")
+      // and so is the time those commits held the store lock
+      assert(counter("store_append_commit_ms_total") > 0)
     } finally srv.stop()
   }
 

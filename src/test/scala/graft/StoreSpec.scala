@@ -1070,9 +1070,9 @@ class StoreSpec extends SparkSpecBase {
     for (i <- 0 until n) SamplesStore.append(rowsFor(i), path)
     val byGen = manifests.toMap
     val gens = manifests.map(_._1)
-    // n appends = n delta commits on top of the gen-1 bootstrap adopt
-    assert(gens.size == n + 1 && gens.last >= SamplesStore.CheckpointEvery,
-      s"expected ${n + 1} generations crossing the checkpoint cadence, got $gens")
+    // n appends = n commits: the first append's gen-1 checkpoint, then deltas
+    assert(gens.size == n && gens.last >= SamplesStore.CheckpointEvery,
+      s"expected $n generations crossing the checkpoint cadence, got $gens")
     // a samples store's manifests carry no header lines: each line is
     // the format tag, the batch ledger, a base pointer or a file entry
     def headerFree(): Unit = manifests.foreach { case (g, _) =>
@@ -1402,6 +1402,176 @@ class StoreSpec extends SparkSpecBase {
     SamplesStore.appendBatch(groupRows(6), path, 6L)
     assert(SamplesStore.currentGen(spark, path).contains(gen0 + 4))
     assert(SamplesStore.read(spark, path).count() === 18)
+  }
+
+  test("a fresh store's first append commits exactly one generation, gen 1") {
+    val path = freshStore("/tmp/graft_test/store_first_append")
+    SamplesStore.append(groupRows(0), path)
+    val gens = new File(path, "_manifests").listFiles().toSeq.map(_.getName)
+      .filter(_.startsWith("m-")).map(_.stripPrefix("m-").toLong).sorted
+    assert(gens === Seq(1L), "no empty adoption generation before the data")
+    assert(manifestLines(path, 1L).exists(_.startsWith("F ")), "gen 1 is the data's checkpoint")
+    assert(SamplesStore.read(spark, path).count() === 3)
+  }
+
+  test("a crashed first batch on a fresh path is never adopted: its replay lands once") {
+    val path = freshStore("/tmp/graft_test/store_first_orphan")
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val b0 = groupRows(0)
+    // the crash: batch 0's first attempt resolved the fresh path, then
+    // died after publishing its day file and before its commit
+    SamplesStore.onAppendSnapshotResolved = () => throw new IllegalStateException("crash")
+    try intercept[IllegalStateException](SamplesStore.appendBatch(b0, path, 0L))
+    finally SamplesStore.onAppendSnapshotResolved = () => ()
+    val orphan = SamplesStore.publish(fs,
+      SamplesStore.stage(SamplesStore.layout(b0), root), root, "b0-")
+    assert(orphan.size === 1)
+    assert(SamplesStore.currentGen(spark, path) === None)
+    assert(SamplesStore.read(spark, path).count() === 0,
+      "a reader must not see the uncommitted first batch")
+    SamplesStore.appendBatch(b0, path, 0L)
+    assert(SamplesStore.currentGen(spark, path) === Some(1L))
+    assert(SamplesStore.read(spark, path).count() === 3, "the replay lands batch 0 exactly once")
+    SamplesStore.expireSnapshots(spark, path, graceMs = 0L)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(root, orphan.head)),
+      "expiry must reclaim the crashed attempt's file")
+    assert(SamplesStore.read(spark, path).count() === 3)
+  }
+
+  test("a manifest-less tree of data files is adopted by its first mutation") {
+    val path = freshStore("/tmp/graft_test/store_foreign_tree")
+    SamplesStore.layout(groupRows(0)).write.partitionBy("date").parquet(path)
+    assert(SamplesStore.read(spark, path).count() === 3, "a foreign tree reads by listing")
+    SamplesStore.append(groupRows(1), path)
+    assert(SamplesStore.currentGen(spark, path) === Some(2L),
+      "gen 1 adopts the tree, gen 2 is the append")
+    assert(SamplesStore.read(spark, path).count() === 6)
+  }
+
+  test("compact and deleteRange on a never-written path commit no data and leave it readable") {
+    val path = freshStore("/tmp/graft_test/store_never_written")
+    SamplesStore.deleteRange(spark, path, 0L, Long.MaxValue)
+    assert(!SamplesStore.exists(spark, path), "a delete on a missing store creates nothing")
+    SamplesStore.compact(spark, path)
+    assert(SamplesStore.read(spark, path).count() === 0)
+    SamplesStore.append(groupRows(0), path)
+    assert(SamplesStore.read(spark, path).count() === 3)
+  }
+
+  // ---- the append's write shape ----------------------------------------
+
+  /** A session sharing the suite's context, at shuffle width 8: wide
+    * enough that the distributed shape's exchange fans out. */
+  private lazy val wide = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    s
+  }
+
+  /** 20 rows per day over `days` days, metrics and labels out of
+    * order, built on the driver in session `wide`. */
+  private def localRows(off: Int, days: Int) = {
+    import wide.implicits._
+    (for (d <- 0 until days; i <- (0 until 20).reverse) yield
+      ((1704412800L + d * 86400L + off * 20 + i) * 1000000L, s"m${i % 3}", Seq(s"k=${20 - i}"), i.toDouble))
+      .toDF("ts_us", "metric", "labels", "value")
+  }
+
+  /** (jobs, tasks) that `f` runs from this thread and the threads it
+    * starts, counted by a SparkListener on jobs that carry a fresh
+    * local property. A marker job under another tag drains the bus:
+    * the listener sees events in order, and every job of `f` ended
+    * before the marker started. */
+  private def jobsAndTasks(f: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val tag = s"spec-${java.util.UUID.randomUUID()}"
+    val (jobs, tasks) = (new java.util.concurrent.atomic.AtomicInteger,
+      new java.util.concurrent.atomic.AtomicInteger)
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.spec.tag")).orNull match {
+          case `tag` => jobs.incrementAndGet(); e.stageIds.foreach(stages.add)
+          case t if t == tag + "-marker" => drained.countDown()
+          case _ => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) { tasks.incrementAndGet(); () }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.spec.tag", tag)
+      try f finally sc.setLocalProperty("graft.spec.tag", tag + "-marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus drained")
+    } finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      sc.removeSparkListener(listener)
+    }
+    (jobs.get, tasks.get)
+  }
+
+  test("a driver-local one-day append runs one job of one task") {
+    val path = freshStore("/tmp/graft_test/store_shape_one_day")
+    SamplesStore.append(localRows(0, 1), path)
+    val rows = localRows(1, 1)
+    assert(jobsAndTasks(SamplesStore.append(rows, path)) === ((1, 1)),
+      "no exchange: one write job, one task")
+    assert(SamplesStore.read(spark, path).count() === 40)
+  }
+
+  test("a driver-local two-day append lands one sorted file per day") {
+    val path = freshStore("/tmp/graft_test/store_shape_two_days")
+    SamplesStore.append(localRows(0, 2), path)
+    val days = new File(path).listFiles().filter(_.getName.startsWith("date=")).toSeq
+    assert(days.size === 2)
+    days.foreach(d => assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1, d))
+    assert(sortedWithinFiles(path))
+    assert(SamplesStore.read(spark, path).count() === 40)
+  }
+
+  test("a group commit of queued driver-local frames runs one task") {
+    val path = freshStore("/tmp/graft_test/store_shape_group")
+    SamplesStore.append(localRows(0, 1), path)
+    val m = OpsMetrics(spark)
+    val commits0 = m.storeAppendCommits.value
+    val (jobs, tasks) = jobsAndTasks {
+      var followers = Seq.empty[() => scala.util.Try[Unit]]
+      val a = withParkedLeader(SamplesStore.append(localRows(1, 1), path)) {
+        followers = (2 to 4).map(i =>
+          spawn(s"spec-shape-follower-$i")(SamplesStore.append(localRows(i, 1), path)))
+        awaitQueued(path, 3)
+      }
+      assert(a.isSuccess, a)
+      followers.foreach(f => assert(f().isSuccess))
+    }
+    // the leader alone, then the three followers as one union
+    assert(m.storeAppendCommits.value - commits0 === 2L)
+    assert((jobs, tasks) === ((2, 2)), "each commit is one job of one task")
+    assert(SamplesStore.read(spark, path).count() === 100)
+    assert(sortedWithinFiles(path))
+  }
+
+  test("a parquet-backed frame keeps the hash-by-date exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val path = freshStore("/tmp/graft_test/store_shape_scan")
+    SamplesStore.append(localRows(0, 2), path)
+    def exchanges(df: org.apache.spark.sql.DataFrame) =
+      (SamplesStore.layout(df).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case other => other
+      }).collect { case e: ShuffleExchangeExec => e.outputPartitioning }.map {
+        case h: HashPartitioning => (h.expressions.map(_.sql), h.numPartitions)
+        case other => (Seq(other.toString), 0)
+      }
+    // compaction's input: the store's files; the width floors at min(cap, 32)
+    assert(exchanges(SamplesStore.read(wide, path).drop("date")) === Seq((Seq("date"), 8)))
+    assert(exchanges(localRows(0, 2)).isEmpty)
   }
 
   // ---- opening a snapshot with its known schema -----------------------

@@ -396,11 +396,10 @@ class StoreTortureSpec extends SparkSpecBase {
     // exact commit accounting: concurrent appends may share a commit
     // (group commit), so generations count commits, not requests.
     // Every generation the appends added is one counted append commit
-    // (each store's gen 1 adopts the empty tree before its first
-    // append), and every request counted one append per store it
-    // writes: main, hist and exemplars
+    // (each store's first append commits its gen 1), and every request
+    // counted one append per store it writes: main, hist and exemplars
     val stores = Seq(store, store + "_hist", store + "_exemplars")
-    val appendGens = stores.map(p => SamplesStore.currentGen(spark, p).get - 1).sum
+    val appendGens = stores.map(p => SamplesStore.currentGen(spark, p).get).sum
     assert(m.storeAppendCommits.value - commits0 === appendGens,
       "every generation the appends added must be exactly one counted append commit")
     assert(m.storeAppends.value - appends0 === stores.size.toLong * nW * nIt,
