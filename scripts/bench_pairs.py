@@ -2,7 +2,7 @@
 """Alternating parent/change pairs of the serving benchmark.
 
     python3 scripts/bench_pairs.py --rev <parent> --workload ingest --pairs 10 \
-        [--seed 1] [--root DIR] [--keep]
+        [--seed 1] [--root DIR] [--keep] [--trace]
 
 Run from the root of a checkout. The script exports `--rev` with
 `git archive` into DIR/parent and copies the working tree (tracked and
@@ -27,10 +27,18 @@ the relative change of the median, and three verdicts:
   verdict  WORSE THAN BOUND when the change's median is worse than the
          parent's by more than the metric's bound, else ok.
 
+With --trace every run is traced (`--trace 1`), and the rows are the
+`per_layer` metrics of BENCHMARK.json instead: each side's median and
+quartiles, the pairs the change won and the relative change of the median,
+with no >IQR, gain or bound verdict (per-layer numbers are for reading, not
+gating). A metric a run does not report is left out of that pair. Any
+workload servebench knows can be traced, `mixed` included.
+
 The failed-request share of each side is printed too. Every raw result line
-is kept in DIR/results.jsonl. The exit code is non-zero when a run fails or a bound is
-broken. DIR defaults to a fresh temporary directory; the two trees are removed
-at the end unless --keep is given, the results file is kept.
+is kept in DIR/results.jsonl. The exit code is non-zero when a run fails, an
+operation fails, or (untraced only) a bound is broken. DIR defaults to a fresh
+temporary directory; the two trees are removed at the end unless --keep is
+given, the results file is kept.
 """
 import argparse
 import json
@@ -68,12 +76,12 @@ def copy_worktree(dst):
         shutil.copy2(src, os.path.join(dst, rel))
 
 
-def run_once(tree, workload, seed, seconds):
+def run_once(tree, workload, seed, seconds, trace):
     """One servebench run in `tree`; returns its result dict (the last
     stdout line), or None when the run produced no result."""
     proc = subprocess.run(
         [sys.executable, "servebench/run.py", "--workload", workload, "--seed", str(seed),
-         "--seconds", str(seconds), "--trace", "0"],
+         "--seconds", str(seconds), "--trace", "1" if trace else "0"],
         cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = [l for l in proc.stdout.splitlines() if l.strip()]
     if not lines or not lines[-1].startswith("{"):
@@ -97,12 +105,14 @@ def main():
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair; pair i uses seed+i")
     ap.add_argument("--root", help="scratch directory for the two trees (default: a fresh temp dir)")
     ap.add_argument("--keep", action="store_true", help="keep the two trees")
+    ap.add_argument("--trace", action="store_true",
+                    help="traced runs; report the per_layer metrics, with no verdicts")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     seconds = bench["run_seconds"]
-    metrics = bench["end_to_end"]
+    metrics = bench["per_layer" if a.trace else "end_to_end"]
 
     root = a.root or tempfile.mkdtemp(prefix="bench_pairs_")
     parent, change = os.path.join(root, "parent"), os.path.join(root, "change")
@@ -122,7 +132,7 @@ def main():
                 seed = a.seed + i
                 order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
                 for side in order:
-                    r = run_once(trees[side], a.workload, seed, seconds)
+                    r = run_once(trees[side], a.workload, seed, seconds, a.trace)
                     out.write(json.dumps({"pair": i, "seed": seed, "side": side, "result": r}) + "\n")
                     out.flush()
                     if r is None:
@@ -135,17 +145,24 @@ def main():
 
         both = sorted({i for i, _ in runs["parent"]} & {i for i, _ in runs["change"]})
         by = {s: dict(runs[s]) for s in runs}
-        print(f"workload {a.workload}: {len(both)} complete pairs at {seconds} s, seeds {a.seed}..{a.seed + a.pairs - 1}")
-        print(f"{'metric':<24} {'parent med (q1-q3)':>26} {'change med (q1-q3)':>26} {'wins':>6} {'Δmed':>8} {'bound':>6}  >IQR gain verdict")
+        print(f"workload {a.workload}: {len(both)} complete pairs at {seconds} s, seeds {a.seed}..{a.seed + a.pairs - 1}"
+              + (", traced" if a.trace else ""))
+        print(f"{'metric':<{32 if a.trace else 24}} {'parent med (q1-q3)':>26} {'change med (q1-q3)':>26} {'wins':>6} {'Δmed':>8}"
+              + ("" if a.trace else f" {'bound':>6}  >IQR gain verdict"))
         for m in metrics:
             name, lower = m["name"], m["better"] == "lower"
-            pv = [by["parent"][i]["metrics"][name]["value"] for i in both]
-            cv = [by["change"][i]["metrics"][name]["value"] for i in both]
-            if not pv:
+            value = lambda side, i: by[side][i]["metrics"].get(name, {}).get("value")
+            pairs = [pc for pc in ((value("parent", i), value("change", i)) for i in both) if None not in pc]
+            if not pairs:
                 continue
+            pv, cv = [p for p, _ in pairs], [c for _, c in pairs]
             pq, cq = quartiles(pv), quartiles(cv)
             wins = sum((c < p) if lower else (c > p) for p, c in zip(pv, cv))
             rel = (cq[1] - pq[1]) / pq[1] if pq[1] else 0.0
+            if a.trace:
+                print(f"{name:<32} {pq[1]:>10.3f} ({pq[0]:.3f}-{pq[2]:.3f}) {cq[1]:>10.3f} ({cq[0]:.3f}-{cq[2]:.3f})"
+                      f" {wins:>3}/{len(pv):<2} {rel:>+8.1%}")
+                continue
             worse = rel if lower else -rel
             over = worse > m["bound"]
             better_by = pq[1] - cq[1] if lower else cq[1] - pq[1]

@@ -1,10 +1,14 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import PromRemoteCodec._
 
@@ -133,8 +137,9 @@ object Ingest {
   *
   * COMMITTED STATE IS DEFINED BY A SNAPSHOT MANIFEST, not by the
   * directory tree. Every mutation ends by atomically publishing
-  * `_manifests/m-<gen>`: the complete list of live data files plus
-  * the newest committed stream batch id. [[read]] plans from the
+  * `_manifests/m-<gen>`, the store's only metadata: the live data
+  * files with their sizes, their data schema and the newest committed
+  * stream batch id. [[read]] plans from the
   * latest manifest, so EVERY read — in-process or from another JVM —
   * observes exactly one committed snapshot: appends appear atomically,
   * compaction is invisible (same rows, new files), deletes are
@@ -162,8 +167,8 @@ object SamplesStore {
     * parquet files than this, the serving append paths fold the store
     * (the ClickHouse background-merge analogue — without it a
     * long-running server fragments until an operator intervenes).
-    * ~64 files/day keeps the per-request listing cheap and bounds the
-    * read-side footer fan-out; at 100 TB you would tune this per
+    * ~64 files/day bounds a day's manifest entries and the read-side
+    * footer fan-out; at 100 TB you would tune this per
     * store alongside the per-day target file size. */
   val AutoCompactFilesPerDay = 64
 
@@ -279,13 +284,13 @@ object SamplesStore {
 
   // ---- snapshot manifests -----------------------------------------
   // One committed snapshot per mutation: `_manifests/m-<gen>` is
-  // either a CHECKPOINT listing every live data file (relative
-  // `date=X/part-….parquet` path, `F` lines) or a DELTA (`base G` +
-  // `A`/`R` lines) naming only the files this mutation added and
-  // removed on top of snapshot G. Either way the commit is a single
-  // atomic rename of a fully-written temp file, so any reader — this
-  // JVM or another process — either sees gen G or gen G+1, never a
-  // half-state. Deltas are what makes the serving append path scale:
+  // either a CHECKPOINT listing every live data file (`F <bytes>
+  // date=X/part-….parquet`) or a DELTA (`base G` + `A`/`R` lines)
+  // naming only the files this mutation added and removed on top of
+  // snapshot G; both restate the `data-schema <DDL>`. Either way the
+  // commit is a single atomic rename of a fully-written temp file, so
+  // any reader — this JVM or another process — sees gen G or G+1,
+  // never a half-state. Deltas are what makes the serving append path scale:
   // a /write request's commit writes O(its own files) bytes, not
   // O(total store files) — at ~200k live files (100 TB at the 512 MB
   // target) a full list is 10-15 MB per request, a delta tens of
@@ -302,9 +307,10 @@ object SamplesStore {
   // store's owner keeps in its manifest (a rollup store's interval,
   // row schema and `D <day> <digest>` lines); samples stores write
   // none. Each manifest restates its whole header, so a snapshot's
-  // header is its newest manifest's. A pre-header `graft-rollup v1`
-  // manifest parses as a checkpoint (its `F` lines are the file list,
-  // the rest its header), so older rollup stores read unchanged.
+  // header is its newest manifest's. Older manifests still parse: a
+  // `graft-rollup v1` manifest is a checkpoint (its `F` lines the file
+  // list, the rest its header), a size-less entry costs one stat as
+  // its generation resolves, and a schema-less snapshot infers once.
 
   private val ManifestDir = "_manifests"
   private val ManifestPattern = "^m-(\\d{20})$".r
@@ -316,22 +322,23 @@ object SamplesStore {
   private[graft] val CheckpointEvery: Long = 25L
 
   /** One committed store snapshot: manifest generation, newest
-    * committed stream batch id, the live data files (relative paths,
-    * sorted) and the manifest's opaque header lines. `dataSchema` is
-    * the files' non-partition columns when this JVM knows them — from
-    * the writer's frame, an ancestor snapshot, or one inference by
-    * [[open]] — and None otherwise. It lives only in memory and is
-    * never written to a manifest. */
-  final case class StoreSnapshot(gen: Long, maxBatchId: Long, files: Vector[String],
+    * committed stream batch id, the live data files (relative path →
+    * bytes), the manifest's opaque header lines and the files' data
+    * schema ([[dataSchemaOf]]; None only on a pre-schema manifest). */
+  final case class StoreSnapshot(gen: Long, maxBatchId: Long, sizes: Map[String, Long],
                                  header: Vector[String] = Vector.empty,
                                  dataSchema: Option[StructType] = None) {
+    lazy val files: Vector[String] = sizes.keys.toVector.sorted
     /** day name (`date=X`) → its live files. */
     lazy val byDay: Map[String, Vector[String]] = files.groupBy(f => f.takeWhile(_ != '/'))
+    /** This snapshot narrowed to `keep`, a subset of its files. */
+    def only(keep: Iterable[String]): StoreSnapshot =
+      copy(sizes = keep.iterator.map(f => f -> sizes(f)).toMap)
   }
 
   /** The state before a store's first commit: a commit on top of it
     * writes generation 1 as a checkpoint. */
-  private[graft] val NoSnapshot = StoreSnapshot(0L, -1L, Vector.empty)
+  private[graft] val NoSnapshot = StoreSnapshot(0L, -1L, Map.empty)
 
   private def manifestFile(root: Path, gen: Long): Path =
     new Path(new Path(root, ManifestDir), f"m-$gen%020d")
@@ -431,10 +438,19 @@ object SamplesStore {
 
   /** One manifest file, unresolved: a checkpoint carries the full
     * file list (`fulls`, base None); a delta carries its base
-    * generation plus added/removed files. Both carry their header. */
+    * generation plus added/removed files (path, bytes or
+    * [[UnknownSize]]). Both carry their data schema and header. */
   private final case class ManifestRec(base: Option[Long], maxBatch: Long,
-                                       fulls: Vector[String], adds: Vector[String],
-                                       removes: Vector[String], header: Vector[String])
+      fulls: Vector[(String, Long)], adds: Vector[(String, Long)], removes: Vector[String],
+      dataSchema: Option[StructType], header: Vector[String])
+
+  private val UnknownSize = -1L
+
+  /** An `F`/`A` entry: `<bytes> <path>` (the size leads, so a path
+    * holding a space still parses), or a pre-size bare `date=…` path. */
+  private def entry(rest: String): (String, Long) =
+    if (rest.startsWith("date=")) (rest, UnknownSize)
+    else rest.split(" ", 2) match { case Array(n, f) => (f, n.toLong) }
 
   private def readManifestRec(fs: org.apache.hadoop.fs.FileSystem, root: Path,
                               gen: Long): ManifestRec = {
@@ -443,67 +459,62 @@ object SamplesStore {
       val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
       var maxBatch = -1L
       var base: Option[Long] = None
-      val fulls = Vector.newBuilder[String]
-      val adds = Vector.newBuilder[String]
+      var dataSchema: Option[StructType] = None
+      val fulls = Vector.newBuilder[(String, Long)]
+      val adds = Vector.newBuilder[(String, Long)]
       val removes = Vector.newBuilder[String]
       val header = Vector.newBuilder[String]
       lines.foreach { l =>
         if (l == FormatLine) ()
         else if (l.startsWith("max-batch-id ")) maxBatch = l.stripPrefix("max-batch-id ").toLong
         else if (l.startsWith("base ")) base = Some(l.stripPrefix("base ").toLong)
-        else if (l.startsWith("F ")) fulls += l.stripPrefix("F ")
-        else if (l.startsWith("A ")) adds += l.stripPrefix("A ")
+        else if (l.startsWith(SchemaPrefix))
+          dataSchema = Some(StructType.fromDDL(l.drop(SchemaPrefix.length)))
+        else if (l.startsWith("F ")) fulls += entry(l.stripPrefix("F "))
+        else if (l.startsWith("A ")) adds += entry(l.stripPrefix("A "))
         else if (l.startsWith("R ")) removes += l.stripPrefix("R ")
         else header += l
       }
       ManifestRec(base, maxBatch, fulls.result(), adds.result(), removes.result(),
-        header.result())
+        dataSchema, header.result())
     } finally in.close()
   }
 
   /** Resolve generation `gen` to its full snapshot: walk the delta
     * chain back (base pointers) until a checkpoint — or until
-    * `cached`'s generation, whose resolved file set seeds the replay
-    * and whose data schema the result inherits ([[withSchemaOf]]) —
-    * then apply the deltas forward. Chains are ≤ [[CheckpointEvery]]
-    * deltas long, and commit history is linear (commits serialize on
-    * the store's mutation lock; a rename landing on an occupied slot
-    * aborts the commit loudly rather than fork the chain), so a
-    * cached generation on file is always an ancestor of `gen`. */
+    * `cached`'s generation, whose resolved files seed the replay —
+    * then apply the deltas forward; ledger, schema and header are the
+    * newest manifest's, and a pre-size entry costs one stat. Chains
+    * are ≤ [[CheckpointEvery]] deltas long, and commit history is
+    * linear (commits serialize on the store's mutation lock; a rename
+    * landing on an occupied slot aborts the commit loudly rather than
+    * fork the chain), so a cached generation on file is always an
+    * ancestor of `gen`. */
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem, root: Path,
                            gen: Long, cached: Option[StoreSnapshot] = None): StoreSnapshot = {
     val usable = cached.filter(_.gen < gen)
     var chain = List.empty[ManifestRec]
     var rec = readManifestRec(fs, root, gen)
-    var baseFiles: Set[String] = Set.empty
+    var baseFiles = Map.empty[String, Long]
     var done = false
     while (!done) {
       chain ::= rec
       rec.base match {
-        case None => baseFiles = Set.empty; done = true
+        case None => done = true
         case Some(b) if usable.exists(_.gen == b) =>
-          baseFiles = usable.get.files.toSet; done = true
+          baseFiles = usable.get.sizes; done = true
         case Some(b) => rec = readManifestRec(fs, root, b)
       }
     }
     // chain is base-first; the head's fulls seed a checkpoint chain
     val files = chain.foldLeft(baseFiles) { (acc, r) =>
-      if (r.base.isEmpty) r.fulls.toSet
+      if (r.base.isEmpty) r.fulls.toMap
       else acc -- r.removes ++ r.adds
     }
-    val snap = StoreSnapshot(gen, chain.last.maxBatch, files.toVector.sorted, chain.last.header)
-    if (chain.head.base.isEmpty) snap else withSchemaOf(usable, snap)
+    val sized = files.map { case (f, n) =>
+      f -> (if (n != UnknownSize) n else fs.getFileStatus(new Path(root, f)).getLen) }
+    StoreSnapshot(gen, chain.last.maxBatch, sized, chain.last.header, chain.last.dataSchema)
   }
-
-  /** `snap` with `known`'s data schema when `snap` has none and the
-    * two share a data file. A store's files all carry one schema, and
-    * only a commit that replaces every file may change it (a rollup
-    * rebuilt at a new interval or row schema), so one shared file
-    * proves the schema. */
-  private def withSchemaOf(known: Option[StoreSnapshot], snap: StoreSnapshot): StoreSnapshot =
-    known.filter(k => snap.dataSchema.isEmpty && k.dataSchema.isDefined)
-      .filter(k => { val live = k.files.toSet; snap.files.exists(live) })
-      .fold(snap)(k => snap.copy(dataSchema = k.dataSchema))
 
   /** [[writeManifest]]'s abort: another process claimed the manifest
     * generation this commit was about to take. No retry can fix it,
@@ -545,23 +556,29 @@ object SamplesStore {
   }
 
   private val FormatLine = "graft-manifest v1"
+  private val SchemaPrefix = "data-schema "
 
-  private def checkpointText(maxBatchId: Long, header: Vector[String],
-                             files: Vector[String]): String =
-    ((FormatLine +: s"max-batch-id $maxBatchId" +: header) ++
-      files.map("F " + _)).mkString("\n")
+  /** Format tag, batch ledger and data schema: every manifest's first lines. */
+  private def preamble(maxBatchId: Long, dataSchema: Option[StructType]): Vector[String] =
+    Vector(FormatLine, s"max-batch-id $maxBatchId") ++ dataSchema.map(SchemaPrefix + _.toDDL)
 
-  /** Publish `files`, whose data schema is `dataSchema`, as a full
-    * checkpoint on top of `prev`, restating its batch ledger and
-    * header (bootstrap/adopt/rebuild onto [[NoSnapshot]], compaction,
-    * expiry's re-checkpoint). */
+  private def entries(tag: String, files: Map[String, Long]): Vector[String] =
+    files.toVector.sorted.map { case (f, n) => s"$tag $n $f" }
+
+  private def checkpointText(maxBatchId: Long, dataSchema: Option[StructType],
+                             header: Vector[String], files: Map[String, Long]): String =
+    (preamble(maxBatchId, dataSchema) ++ header ++ entries("F", files)).mkString("\n")
+
+  /** Publish `files` (path → bytes) with `dataSchema` as a full
+    * checkpoint on top of `prev`, restating its batch ledger and header
+    * (bootstrap/adopt/rebuild onto [[NoSnapshot]], compaction, expiry's
+    * re-checkpoint). */
   private def commitSnapshot(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                             prev: StoreSnapshot, files: Seq[String],
+                             prev: StoreSnapshot, files: Map[String, Long],
                              dataSchema: Option[StructType]): StoreSnapshot = {
-    val sorted = files.toVector.sorted
     val gen = writeManifest(fs, root, prev.gen)(_ =>
-      checkpointText(prev.maxBatchId, prev.header, sorted))
-    val snap = prev.copy(gen = gen, files = sorted, dataSchema = dataSchema)
+      checkpointText(prev.maxBatchId, dataSchema, prev.header, files))
+    val snap = prev.copy(gen = gen, sizes = files, dataSchema = dataSchema)
     snapshotCache.put(lockKey(root.toString), snap)
     snap
   }
@@ -575,35 +592,33 @@ object SamplesStore {
     * header and data schema default to `prev`'s. Callers hold the
     * store's mutation lock and resolved `prev` under it. */
   private[graft] def commitDelta(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                                 prev: StoreSnapshot, added: Seq[String],
+                                 prev: StoreSnapshot, added: Map[String, Long],
                                  removed: Set[String])(
                                  maxBatchId: Long = prev.maxBatchId,
                                  header: Vector[String] = prev.header,
                                  dataSchema: Option[StructType] = prev.dataSchema): StoreSnapshot = {
-    val files = ((prev.files.toSet -- removed) ++ added).toVector.sorted
+    val files = prev.sizes -- removed ++ added
     val gen = writeManifest(fs, root, prev.gen) { g =>
-      if (prev.gen == 0 || g % CheckpointEvery == 0) checkpointText(maxBatchId, header, files)
+      if (prev.gen == 0 || g % CheckpointEvery == 0) checkpointText(maxBatchId, dataSchema, header, files)
       else
-        (Vector(FormatLine, s"base ${prev.gen}", s"max-batch-id $maxBatchId") ++ header ++
-          removed.toVector.sorted.map("R " + _) ++
-          added.toVector.sorted.map("A " + _)).mkString("\n")
+        ((preamble(maxBatchId, dataSchema) :+ s"base ${prev.gen}") ++ header ++
+          removed.toVector.sorted.map("R " + _) ++ entries("A", added)).mkString("\n")
     }
     val snap = StoreSnapshot(gen, maxBatchId, files, header, dataSchema)
     snapshotCache.put(lockKey(root.toString), snap)
     snap
   }
 
-  /** Full recursive data-file listing (relative paths) — the
-    * O(all days) bootstrap/rebuild path only; incremental mutations
-    * never call this. */
-  private[graft] def listingFiles(fs: org.apache.hadoop.fs.FileSystem, root: Path): Vector[String] =
-    if (!fs.exists(root)) Vector.empty
+  /** Full data-file listing (relative path → bytes) — adoption and
+    * the bulk rebuild only; incremental mutations never call this. */
+  private def listingFiles(fs: org.apache.hadoop.fs.FileSystem, root: Path): Map[String, Long] =
+    if (!fs.exists(root)) Map.empty
     else fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
       .flatMap(day => fs.listStatus(day.getPath)
         .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(f => day.getPath.getName + "/" + f.getPath.getName))
-      .toVector
+        .map(f => (day.getPath.getName + "/" + f.getPath.getName) -> f.getLen))
+      .toMap
 
   /** What a lock-free reader sees at `root`: the latest committed
     * snapshot; [[NoSnapshot]] for a store this module claimed whose
@@ -616,23 +631,37 @@ object SamplesStore {
     latestSnapshot(fs, root).orElse(
       if (fs.exists(new Path(root, ManifestDir))) Some(NoSnapshot) else None)
 
-  /** The store's snapshot, adopting a manifest-less tree that holds
-    * data files (legacy store, or a parquet layout produced by other
-    * tools) by committing gen 1 from a full listing. A path with no
-    * data files is CLAIMED instead — its `_manifests` dir is created,
-    * no manifest written — and resolves to [[NoSnapshot]], so its
-    * first mutation commits gen 1 itself. The claim lands before that
+  /** What a reader plans from: [[readableSnapshot]], None for an
+    * absent path, and a loud failure for a manifest-less tree — reading
+    * it would take a listing and an inference, a second read
+    * semantics. Any mutation adopts such a tree. */
+  private[graft] def committedSnapshot(fs: org.apache.hadoop.fs.FileSystem,
+                                       root: Path): Option[StoreSnapshot] =
+    readableSnapshot(fs, root).orElse(
+      if (!fs.exists(root)) None
+      else throw new IllegalStateException(s"$root has no $ManifestDir, so no snapshot " +
+        "commits its files; any SamplesStore mutation (append, compact, …) adopts the tree first"))
+
+  /** The store's snapshot, with its data schema, adopting a
+    * manifest-less tree that holds data files (legacy store, or a
+    * parquet layout produced by other tools) by committing gen 1 from
+    * a full listing. A path with no data files is CLAIMED instead —
+    * its `_manifests` dir is created, no manifest written — and
+    * resolves to [[NoSnapshot]], so its first mutation commits gen 1
+    * itself. The claim lands before that
     * mutation publishes any file: files a failed first mutation left
     * behind are never adopted (a retry or a batch replay would land
     * its rows twice), and readers see the claimed store as empty
     * until gen 1 commits. Mutation-lock holders only. */
-  private def snapshotOrAdopt(fs: org.apache.hadoop.fs.FileSystem,
-                              root: Path): StoreSnapshot =
-    readableSnapshot(fs, root).getOrElse {
+  private def snapshotOrAdopt(spark: SparkSession, path: String): StoreSnapshot = {
+    val (fs, root) = (fsFor(spark, path), new Path(path))
+    readableSnapshot(fs, root).map(withSchema(spark, path, _)).getOrElse {
       val files = listingFiles(fs, root)
-      if (files.nonEmpty) commitSnapshot(fs, root, NoSnapshot, files, None)
+      if (files.nonEmpty) commitSnapshot(fs, root, NoSnapshot, files,
+        withSchema(spark, path, NoSnapshot.copy(sizes = files)).dataSchema)
       else { fs.mkdirs(new Path(root, ManifestDir)); NoSnapshot }
     }
+  }
 
   private def fsFor(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -705,14 +734,14 @@ object SamplesStore {
     * pure metadata renames; Spark part-file names carry a per-job
     * UUID, so moved names never collide — then drop the staging dir
     * (with whatever `keepDay` rejected). Returns the moved files'
-    * relative `date=X/name` paths. The caller holds its store's
+    * relative `date=X/name` paths → bytes. The caller holds its store's
     * mutation lock and makes them visible with ONE manifest commit;
     * until then they are unreferenced, and a crash leaves only
     * invisible garbage for GC. */
   private[graft] def publish(fs: org.apache.hadoop.fs.FileSystem, staging: Path,
                              root: Path, prefix: String,
-                             keepDay: String => Boolean = _ => true): Vector[String] = {
-    val moved = Vector.newBuilder[String]
+                             keepDay: String => Boolean = _ => true): Map[String, Long] = {
+    val moved = Map.newBuilder[String, Long]
     fs.listStatus(staging)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("date=") &&
         keepDay(s.getPath.getName))
@@ -724,7 +753,7 @@ object SamplesStore {
             val name = prefix + f.getPath.getName
             if (!fs.rename(f.getPath, new Path(dstDay, name)))
               throw new java.io.IOException(s"publish: move ${f.getPath} failed")
-            moved += day.getPath.getName + "/" + name
+            moved += (day.getPath.getName + "/" + name) -> f.getLen
           }
       }
     fs.delete(staging, true)
@@ -752,7 +781,7 @@ object SamplesStore {
     locked(path) {
       val lockedAt = System.nanoTime()
       val root = new Path(path)
-      val prev = snapshotOrAdopt(fs, root)
+      val prev = snapshotOrAdopt(samples.sparkSession, path)
       onAppendSnapshotResolved()
       if (batchId.exists(_ <= prev.maxBatchId)) 0 // checkpoint replay: already committed
       else {
@@ -762,11 +791,11 @@ object SamplesStore {
         // appends keep the one the store already has
         val snap = commitDelta(fs, root, prev, moved, Set.empty)(
           maxBatchId = batchId.getOrElse(prev.maxBatchId),
-          dataSchema = if (prev.files.isEmpty) Some(dataSchemaOf(samples)) else prev.dataSchema)
+          dataSchema = if (prev.sizes.isEmpty) Some(dataSchemaOf(samples)) else prev.dataSchema)
         val m = graft.OpsMetrics(samples.sparkSession)
         m.storeAppendCommits.add(1)
         m.storeAppendCommitMs.add((System.nanoTime() - lockedAt) / 1000000L)
-        val touched = moved.iterator.map(_.takeWhile(_ != '/')).toSet
+        val touched = moved.keysIterator.map(_.takeWhile(_ != '/')).toSet
         if (touched.isEmpty) 0
         else touched.iterator.map(d => snap.byDay.getOrElse(d, Vector.empty).size).max
       }
@@ -875,59 +904,90 @@ object SamplesStore {
   }
 
   /** The store as a DataFrame — planned from the LATEST committed
-    * snapshot: an explicit file list (with basePath, so the `date`
-    * partition column and its pruning survive) that no concurrent
-    * mutation can yank away, because superseded files outlive their
-    * manifest by [[GcGraceMs]]. Lock-free and valid from ANY process —
-    * this is the atomic-part-visibility contract the reference
-    * delegates to ClickHouse. Opened by [[open]] with the snapshot's
-    * known schema, so a warm read runs no Spark job. A claimed store
-    * whose first commit has not landed reads empty; a manifest-less
-    * path (a plain parquet tree from other tools) falls back to
-    * directory listing and schema inference. */
+    * snapshot, whose files no concurrent mutation can yank away:
+    * superseded files outlive their manifest by [[GcGraceMs]].
+    * Lock-free and valid from ANY process — this is the
+    * atomic-part-visibility contract the reference delegates to
+    * ClickHouse. Only `_manifests` is read; [[open]] does the rest. A
+    * claimed store whose first commit has not landed reads empty; an
+    * absent path fails as "Path does not exist" (FileNotFoundException),
+    * a manifest-less tree as [[committedSnapshot]] says. */
   def read(spark: SparkSession, path: String): DataFrame =
-    readableSnapshot(fsFor(spark, path), new Path(path)) match {
+    committedSnapshot(fsFor(spark, path), new Path(path)) match {
       case Some(snap) => open(spark, path, snap)
-      case None       => spark.read.parquet(path)
+      case None => throw new java.io.FileNotFoundException(s"Path does not exist: $path")
     }
 
-  /** The one place a snapshot's file list becomes a DataFrame: the
-    * files under store root `path`, with basePath so the `date`
-    * partition column (typed by path inference) and its pruning
-    * survive. A snapshot whose data schema is known opens with it and
-    * runs no Spark job; a file whose columns disagree with it fails
-    * the scan loudly. One without (a generation resolved cold: another
-    * process's commit, a restart) infers once and leaves the schema on
-    * the snapshot-cache entry of that generation, so the next open of
-    * it is warm. An empty snapshot opens as [[emptySamples]]. Counted
-    * on `/metrics` as `store_opens_total` and
-    * `store_schema_inferences_total`. */
+  /** The one place a snapshot becomes a DataFrame, from its manifest
+    * alone: a file index pre-filled with its paths and sizes, one
+    * `date` partition per day dir (IntegerType, LongType past 2038, as
+    * path inference types it) and its data schema ([[withSchema]]).
+    * Planning makes no listing or stat call and runs no Spark job; a
+    * file whose columns disagree with the schema fails the scan loudly.
+    * An empty snapshot opens as [[emptySamples]]. Counted on `/metrics`
+    * as `store_opens_total`. */
   private[graft] def open(spark: SparkSession, path: String, snap: StoreSnapshot): DataFrame = {
-    val m = graft.OpsMetrics(spark)
-    m.storeOpens.add(1)
+    graft.OpsMetrics(spark).storeOpens.add(1)
     if (snap.files.isEmpty) emptySamples(spark)
     else {
-      val files = snap.files.map(f => new Path(new Path(path), f).toString)
-      val reader = spark.read.option("basePath", path)
-      snap.dataSchema match {
-        case Some(schema) => reader.schema(schema).parquet(files: _*)
-        case None =>
-          m.storeSchemaInferences.add(1)
-          val df = reader.parquet(files: _*)
-          val key = lockKey(path)
-          snapshotCache.get(key).filter(c => c.gen == snap.gen && c.dataSchema.isEmpty)
-            .foreach(c => snapshotCache.replace(key, c, c.copy(dataSchema = Some(dataSchemaOf(df)))))
-          df
+      val schema = withSchema(spark, path, snap).dataSchema.get
+      val (root, statuses) = statusesOf(spark, path, snap)
+      val days = snap.byDay.keys.toVector.map(d => d -> d.stripPrefix("date=").toLong)
+      val wide = days.exists(!_._2.isValidInt)
+      val partitions = PartitionSpec(
+        StructType(Seq(StructField("date", if (wide) LongType else IntegerType))),
+        days.map { case (d, v) =>
+          PartitionPath(InternalRow(if (wide) v else v.toInt), new Path(root, d)) })
+      // the files are the index's roots, so two snapshots' plans are
+      // equal (share a cached plan) only when their file sets are
+      val byPath = statuses.map(st => st.getPath -> Array(st)).toMap
+      val listed = new FileStatusCache {
+        override def getLeafFiles(p: Path): Option[Array[FileStatus]] = byPath.get(p)
+        override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
       }
+      val index = new InMemoryFileIndex(spark, statuses.map(_.getPath), Map.empty, None,
+        listed, Some(partitions))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, partitions.partitionColumns,
+        schema, None, new ParquetFileFormat, Map.empty)(spark))
     }
   }
 
+  /** `snap`'s files as statuses under the qualified store root. */
+  private def statusesOf(spark: SparkSession, path: String,
+                         snap: StoreSnapshot): (Path, Vector[FileStatus]) = {
+    val root = fsFor(spark, path).makeQualified(new Path(path))
+    (root, snap.files.map(f => new FileStatus(snap.sizes(f), false, 0, 0L, 0L, new Path(root, f))))
+  }
+
+  /** `snap` with its data schema: the manifest's, or — on a
+    * pre-schema manifest — inferred once (a Spark job, counted as
+    * `store_schema_inferences_total`) and kept on that generation's
+    * snapshot-cache entry for its next open and commit. */
+  private[graft] def withSchema(spark: SparkSession, path: String,
+                                snap: StoreSnapshot): StoreSnapshot =
+    if (snap.dataSchema.isDefined || snap.sizes.isEmpty) snap
+    else {
+      graft.OpsMetrics(spark).storeSchemaInferences.add(1)
+      val inferred = new ParquetFileFormat()
+        .inferSchema(spark, Map.empty, statusesOf(spark, path, snap)._2).map(dataColumns)
+      val key = lockKey(path)
+      snapshotCache.get(key).filter(c => c.gen == snap.gen && c.dataSchema.isEmpty)
+        .foreach(c => snapshotCache.replace(key, c, c.copy(dataSchema = inferred)))
+      snap.copy(dataSchema = inferred)
+    }
+
   /** The columns a store's data files hold for frame `df` (a writer's
-    * input, or an opened store): all but the `date` partition column.
-    * Nullability is moot: Spark's file source reads every column as
-    * nullable, whatever schema it is given. */
-  private[graft] def dataSchemaOf(df: DataFrame): StructType =
-    StructType(df.schema.filterNot(_.name == "date"))
+    * input, or an opened store): all but the `date` partition column,
+    * as [[dataColumns]] states them. */
+  private[graft] def dataSchemaOf(df: DataFrame): StructType = dataColumns(df.schema)
+
+  /** `schema` as Spark's file source reads it back — no `date`
+    * partition column, every field nullable at every depth, whatever a
+    * writer's frame declared — so a manifest's schema and an inferred
+    * one agree. */
+  private def dataColumns(schema: StructType): StructType =
+    StructType(schema.filterNot(_.name == "date")).toNullable
 
   /** The store AS OF a specific committed generation — time travel.
     * Manifests are immutable and superseded data files outlive them
@@ -947,7 +1007,7 @@ object SamplesStore {
             s"readAt: snapshot generation $gen of $path does not exist " +
             "(never committed, or reclaimed by expireSnapshots)")
       }
-    open(spark, path, withSchemaOf(snapshotCache.get(lockKey(path)), snap))
+    open(spark, path, snap)
   }
 
   /** The latest committed generation, if any — the handle a pipeline
@@ -985,7 +1045,7 @@ object SamplesStore {
   def compact(spark: SparkSession, path: String): Unit = locked(path) {
     val fs = fsFor(spark, path)
     val root = new Path(path)
-    val prev = snapshotOrAdopt(fs, root)
+    val prev = snapshotOrAdopt(spark, path)
     // `date` is re-derived from ts_us inside layout(), so the rewrite
     // cannot drift from the read-side partition values; the source is
     // the SNAPSHOT, so crashed-append garbage is never folded into
@@ -996,7 +1056,7 @@ object SamplesStore {
     expireSnapshots(spark, path, 0L)
     val m = graft.OpsMetrics(spark)
     m.compactions.add(1)
-    m.daysRewritten.add(moved.map(_.takeWhile(_ != '/')).distinct.size.toLong)
+    m.daysRewritten.add(moved.keysIterator.map(_.takeWhile(_ != '/')).toSet.size.toLong)
   }
 
   /** One compaction in flight per store: concurrent probes return
@@ -1053,18 +1113,9 @@ object SamplesStore {
       // and their exact file sets come from the MANIFEST, so a
       // crashed append's unreferenced files neither inflate the
       // fragmentation count nor get folded into committed data.
-      // Sizes cost one listing per fragmented day only.
       val (snap, targets) = locked(path) {
-        if (!fs.exists(root)) (NoSnapshot, Seq.empty)
-        else {
-          val snap = snapshotOrAdopt(fs, root)
-          (snap, snap.byDay.toSeq.collect { case (day, dayFiles) if dayFiles.size > maxFilesPerDay =>
-            val live = dayFiles.toSet
-            val bytes = fs.listStatus(new Path(root, day))
-              .filter(f => live.contains(day + "/" + f.getPath.getName)).map(_.getLen).sum
-            (day, live, bytes)
-          })
-        }
+        val snap = if (fs.exists(root)) snapshotOrAdopt(spark, path) else NoSnapshot
+        (snap, snap.byDay.collect { case (day, fls) if fls.size > maxFilesPerDay => day -> fls.toSet })
       }
       if (targets.isEmpty) return 0
 
@@ -1075,11 +1126,11 @@ object SamplesStore {
       // proceed. `date` is re-derived from ts_us (as in layout()) and
       // leads both the range partitioning and the within-partition
       // sort so the dynamic-partition writer splits cleanly per day.
-      val totalBytes = targets.map(_._3).sum
-      val nTasks = math.max(targets.length.toLong,
-        (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
+      val recorded = snap.only(targets.values.flatten)
+      val nTasks = math.max(targets.size.toLong,
+        (recorded.sizes.values.sum + targetFileBytes - 1) / targetFileBytes).toInt
       val staging = stage(
-        open(spark, path, snap.copy(files = targets.flatMap(_._2).toVector))
+        open(spark, path, recorded)
           .withColumn("date", expr("ts_us DIV 1000000 DIV 86400 * 86400"))
           .repartitionByRange(nTasks, col("date"), col("metric"), col("labels"), col("ts_us"))
           .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("ts_us")),
@@ -1097,16 +1148,15 @@ object SamplesStore {
       // deleted rows — and the next probe re-stages from the
       // post-delete snapshot.
       val rewritten = locked(path) {
-        val prev = snapshotOrAdopt(fs, root)
-        val (ok, deferred) = targets.partition { case (day, recorded, _) =>
-          recorded.subsetOf(prev.byDay.getOrElse(day, Vector.empty).toSet) }
-        deferred.foreach { case (day, _, _) =>
+        val prev = snapshotOrAdopt(spark, path)
+        val (folds, deferred) = targets.partition { case (day, fls) =>
+          fls.subsetOf(prev.byDay.getOrElse(day, Vector.empty).toSet) }
+        deferred.keys.foreach { day =>
           log.info(s"compactFragmentedDays($path): $day lost recorded files " +
             "during staging (concurrent delete) — leaving it for the next probe")
         }
-        val folds = ok.map { case (day, recorded, _) => day -> recorded }.toMap
         val added = publish(fs, staging, root, s"c${prev.gen + 1}-", folds.contains)
-        val replaced = added.map(_.takeWhile(_ != '/')).toSet
+        val replaced = added.keySet.map(_.takeWhile(_ != '/'))
         if (replaced.nonEmpty) {
           commitDelta(fs, root, prev, added, replaced.flatMap(folds))()
           // reclaim the folded days' superseded files once the grace
@@ -1149,7 +1199,7 @@ object SamplesStore {
     * pass instead of being stalled behind it. */
   private def gcDataFiles(fs: org.apache.hadoop.fs.FileSystem, root: Path,
                           days: Iterable[String], graceMs: Long): Int = {
-    val referenced = latestSnapshot(fs, root).map(_.files.toSet).getOrElse(Set.empty)
+    val referenced = latestSnapshot(fs, root).map(_.sizes.keySet).getOrElse(Set.empty[String])
     val cutoff = System.currentTimeMillis() - graceMs
     var removed = 0
     val ok = visibleTry(root.toString, GcLockTimeoutMs) {
@@ -1242,7 +1292,8 @@ object SamplesStore {
         val latest =
           if (chain(latest0.gen).exists(g =>
               g != latest0.gen && all(g).getModificationTime <= cutoff)) {
-            val snap = commitSnapshot(fs, root, latest0, latest0.files, latest0.dataSchema)
+            val snap = commitSnapshot(fs, root, latest0, latest0.sizes,
+              withSchema(spark, path, latest0).dataSchema)
             all = listManifests()
             snap
           } else latest0
@@ -1268,7 +1319,7 @@ object SamplesStore {
         // == union of every kept generation's RESOLVED file set: each
         // resolved set replays exactly these lines, and every chain
         // member is in `needed` by construction.
-        val referenced = needed.iterator.flatMap(g => rec(g).fulls ++ rec(g).adds).toSet
+        val referenced = needed.iterator.flatMap(g => rec(g).fulls ++ rec(g).adds).map(_._1).toSet
         var removed = 0
         val ok = visibleTry(root.toString, GcLockTimeoutMs) {
           removed = sweep(fs, root,
@@ -1292,7 +1343,7 @@ object SamplesStore {
     val fs = fsFor(spark, path)
     val root = new Path(path)
     if (fs.exists(root)) {
-      val prev = snapshotOrAdopt(fs, root)
+      val prev = snapshotOrAdopt(spark, path)
       def dayStartUs(day: String) = day.stripPrefix("date=").toLong * 1000000L
       val dayUs = DaySec * 1000000L
       val touched = prev.byDay.filter { case (day, _) =>
@@ -1302,9 +1353,9 @@ object SamplesStore {
       val boundary = touched.filter { case (day, _) =>
         dayStartUs(day) < startUs || dayStartUs(day) + dayUs > endUs }
       val added =
-        if (boundary.isEmpty) Vector.empty[String]
+        if (boundary.isEmpty) Map.empty[String, Long]
         else publish(fs, stage(layout(
-          open(spark, path, prev.copy(files = boundary.values.flatten.toVector))
+          open(spark, path, prev.only(boundary.values.flatten))
             .filter(col("ts_us") < startUs || col("ts_us") >= endUs)), root),
           root, s"d${prev.gen + 1}-")
       if (touched.nonEmpty) {

@@ -146,41 +146,34 @@ object RollupStore {
         b.schema == SchemaVersion && intervalSec.forall(_ == b.intervalSec) }
 
   /** Input-size-derived shuffle width for a maintenance rebuild
-    * ([[graft.Width]] at 64 MiB of source files per task, floor 1).
-    * The cap keeps a bulk rebuild at the cluster's configured width;
-    * the floor lets the common one-day incremental slice run narrow
-    * instead of fanning tiny row counts across every configured
-    * partition (pure task-scheduling tax — measured 2× on the bench's
-    * 5k-row rebuild). */
-  private[graft] def scaledShuffleParts(spark: SparkSession, root: Path,
-                                        files: Seq[String]): Int =
-    graft.Width.of(
-      graft.Width.dataBytes(spark.sparkContext.hadoopConfiguration,
-        files.map(new Path(root, _))),
-      graft.Width.MaintenanceTarget, 1, spark.sessionState.conf.numShufflePartitions)
+    * ([[graft.Width]] at 64 MiB of source bytes, per the manifest,
+    * per task, floor 1). The cap keeps a bulk rebuild at the cluster's
+    * configured width; the floor lets the common one-day incremental
+    * slice run narrow instead of fanning tiny row counts across every
+    * configured partition (pure task-scheduling tax — measured 2× on
+    * the bench's 5k-row rebuild). */
+  private[graft] def scaledShuffleParts(spark: SparkSession, srcBytes: Long): Int =
+    graft.Width.of(Some(srcBytes), graft.Width.MaintenanceTarget, 1,
+      spark.sessionState.conf.numShufflePartitions)
 
-  /** md5 digest of a day's sorted source-file list — the exact
-    * invalidation key: any append/compact/delete that touches the
-    * day changes its live-file set and therefore the digest. */
+  /** md5 digest of a day's sorted source-file names (not sizes) — the
+    * exact invalidation key: any append/compact/delete that touches
+    * the day changes its live-file set and therefore the digest. */
   private def digest(files: Seq[String]): String = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(files.sorted.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     d.take(8).map(b => f"$b%02x").mkString
   }
 
-  /** The source's live files: its latest snapshot when the store has
-    * one (any [[SamplesStore]] mutation commits one; a claimed store
-    * before its first commit has none), else a plain directory
-    * listing (a parquet tree built by other tools), which has no
-    * known schema. */
-  private def sourceSnapshot(fs: FileSystem, srcRoot: Path): StoreSnapshot =
-    SamplesStore.readableSnapshot(fs, srcRoot).getOrElse(
-      SamplesStore.NoSnapshot.copy(files = SamplesStore.listingFiles(fs, srcRoot)))
+  /** The source's committed snapshot; empty for an absent source. */
+  private def sourceSnapshot(spark: SparkSession, srcPath: String): StoreSnapshot =
+    SamplesStore.committedSnapshot(fsFor(spark, srcPath), new Path(srcPath))
+      .getOrElse(SamplesStore.NoSnapshot)
 
   /** The incremental pass [[rollup]] and [[rollupLadder]] share, run
     * under the rollup store's mutation lock: digest `src`'s days,
     * re-aggregate (`build` over the changed days' source rows and
-    * files) only those whose digest differs from the latest rollup's
+    * their bytes) only those whose digest differs from the latest rollup's
     * header, and commit ONE delta on top of that latest generation —
     * adding the rebuilt files, removing the invalidated days' files
     * (every file, and the rows' schema with them, when the interval or
@@ -189,7 +182,7 @@ object RollupStore {
   private def refresh(spark: SparkSession, srcPath: String,
                       srcSnap: StoreSnapshot, path: String,
                       intervalSec: Long)
-                     (build: (DataFrame, Seq[String]) => DataFrame): Int = {
+                     (build: (DataFrame, Long) => DataFrame): Int = {
     val fs = fsFor(spark, path)
     val root = new Path(path)
     val latest = SamplesStore.latestSnapshot(fs, root).getOrElse(SamplesStore.NoSnapshot)
@@ -203,17 +196,19 @@ object RollupStore {
     val dropped = prevDigests.keySet -- srcDigests.keySet
     if (changed.isEmpty && dropped.isEmpty && prev.nonEmpty) 0
     else {
+      // a rebuild's rows carry the schema; otherwise keep the rollup's own
+      def kept = SamplesStore.withSchema(spark, path, latest).dataSchema
       val (moved, schema) =
-        if (changed.isEmpty) (Vector.empty[String], latest.dataSchema)
+        if (changed.isEmpty) (Map.empty[String, Long], kept)
         else {
-          val srcFiles = changed.keys.toVector.flatMap(src(_))
-          val rows = build(SamplesStore.open(spark, srcPath, srcSnap.copy(files = srcFiles)),
-            srcFiles)
+          val srcSlice = srcSnap.only(changed.keys.flatMap(src(_)))
+          val rows = build(SamplesStore.open(spark, srcPath, srcSlice),
+            srcSlice.sizes.values.sum)
           (SamplesStore.publish(fs, SamplesStore.stage(rows
             .repartition(col("date"))
             .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("bucket")),
             root), root, "r-"),
-            if (prev.isEmpty) Some(SamplesStore.dataSchemaOf(rows)) else latest.dataSchema)
+            if (prev.isEmpty) Some(SamplesStore.dataSchemaOf(rows)) else kept)
         }
       val invalidated = changed.keySet ++ dropped
       val removed = latest.files.filter(f =>
@@ -242,15 +237,15 @@ object RollupStore {
              intervalSec: Long = 3600L): Int = SamplesStore.locked(rollupPath) {
     require(86400L % intervalSec == 0,
       s"intervalSec=$intervalSec must divide a day: day-partitioned rebuilds depend on bucket alignment")
-    val src = sourceSnapshot(fsFor(spark, srcPath), new Path(srcPath))
-    refresh(spark, srcPath, src, rollupPath, intervalSec) { (raw, srcFiles) =>
+    val src = sourceSnapshot(spark, srcPath)
+    refresh(spark, srcPath, src, rollupPath, intervalSec) { (raw, srcBytes) =>
       // ONE exchange for the whole rebuild, its width derived
       // from the CHANGED INPUT's bytes (guide §2: scale-adaptive
       // partitioning, never a constant): the common maintenance
       // slice is one appended day, which must not fan out across
       // the full configured shuffle width — while a bulk rebuild
       // at cluster scale still caps at the session's own setting.
-      val parts = scaledShuffleParts(spark, new Path(srcPath), srcFiles)
+      val parts = scaledShuffleParts(spark, srcBytes)
       // Per-second dedup (the read path's GROUP BY max) computed
       // ON the bucket-keyed partitioning instead of its own
       // t_sec-keyed exchange: within (date, metric, labels,
@@ -495,6 +490,6 @@ object RollupStore {
   def freshFor(spark: SparkSession, srcPath: String, rollupPath: String,
                intervalSec: Long, startSec: Long, endSec: Long): Boolean =
     current(spark, rollupPath, Some(intervalSec)).exists { case (_, b) =>
-      covers(b, sourceSnapshot(fsFor(spark, srcPath), new Path(srcPath)).byDay, startSec, endSec)
+      covers(b, sourceSnapshot(spark, srcPath).byDay, startSec, endSec)
     }
 }

@@ -124,7 +124,7 @@ object RemoteRead {
     * `samples` is by-name and re-evaluated on each retry: a transient
     * miss (per `transientClassifier`: a planned file GC'd mid-scan) retries
     * up to `transientRetries` times with a fresh store resolution —
-    * the first attempt's DataFrame holds a stale file listing, so
+    * the first attempt's DataFrame plans a stale snapshot's files, so
     * re-running it could never succeed. Counters fire once per request
     * regardless of attempts (read_requests on the first resolution,
     * read_errors only when the request ultimately fails). */
@@ -140,7 +140,7 @@ object RemoteRead {
     var m: OpsMetrics = null
     var queries: Seq[graft.operators.ReadQuery] = null
     def attempt(): Array[Byte] = {
-      val df = samples // re-resolves the store's file listing each try
+      val df = samples // re-resolves the store's snapshot each try
       if (m == null) { m = OpsMetrics(df.sparkSession); m.readRequests.add(1) }
       if (queries == null) queries = PromRemoteCodec.decodeReadRequest(readRequestBlob)
       PromRemoteCodec.encodeReadResponseResults(

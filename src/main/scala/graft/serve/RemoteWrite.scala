@@ -15,18 +15,18 @@ import graft.ingest.PromRemoteCodec.IngestedSample
   * HTTP shim maps it to 500), decoded samples count samples_written.
   *
   * The blob decodes on the driver — it is one bounded HTTP body, the
-  * same place the reference's handler inflates it — and the append is
-  * a distributed day-partitioned store write. /write, OTLP and the
-  * batched [[serveAll]] share one landing path: decoded rows become a
-  * `Landing`, and `land` appends it to the store and its four
-  * siblings concurrently.
+  * same place the reference's handler inflates it — and its rows land
+  * as one driver-local append ([[SamplesStore.layout]]: one write
+  * task, no exchange). /write, OTLP and the batched [[serveAll]] share
+  * one landing path: decoded rows become a `Landing`, and `land`
+  * appends it to the store and its four siblings concurrently.
   */
 object RemoteWrite {
 
-  /** Fragmentation checks list every day partition, which is O(days in
-    * store) namenode/object-store calls — too much to pay on EVERY
-    * request at a multi-year store. The serving path probes at most
-    * once per this interval per store; fragmentation between probes is
+  /** The serving path starts a store's background maintenance pass
+    * (folds, retention, rollups, recording rules, expiry — Spark jobs
+    * and GC walks, too much for EVERY request) at most once per this
+    * interval per store. Fragmentation between probes is
     * bounded by the request rate × interval, which the next probe
     * folds. Mutable so specs (and deployments) can tune the cadence. */
   @volatile var compactCheckIntervalMs: Long = 10000L
@@ -39,7 +39,7 @@ object RemoteWrite {
     * clause analogue: the background maintenance pass drops day
     * partitions that end before `now - retentionDays`. The cutoff is
     * day-aligned, so expiry is always whole-day manifest removals —
-    * never a boundary rewrite — and costs one listing plus a commit. */
+    * never a boundary rewrite — and costs one manifest commit. */
   @volatile var retentionDays: Int = 0
 
   /** Snapshot-retention grace handed to the background compaction and
@@ -303,12 +303,12 @@ object RemoteWrite {
 
   /** One background retention pass: drop the day partitions that end
     * before `now - horizonDays` (day-aligned, so expiry is always
-    * whole-directory drops). Consults the day listing FIRST and skips
-    * the deleteRange entirely when nothing can expire — the
+    * whole-directory drops). Consults the snapshot's day set FIRST and
+    * skips the deleteRange entirely when nothing can expire — the
     * steady-state on every pass but the first of a new day, where the
     * unconditional full-range delete would otherwise take the store
     * mutation lock and walk every day's boundary logic each interval
-    * on a multi-year store. The probe itself is one listStatus call.
+    * on a multi-year store. The probe reads only the manifest.
     * Returns whether a delete was actually issued. */
   private[graft] def retentionPass(spark: SparkSession, storePath: String,
                                    horizonDays: Int): Boolean = {
@@ -321,13 +321,7 @@ object RemoteWrite {
     // directory lingers physically until grace expiry, and re-deleting
     // it every pass would defeat the skip
     val liveDays: Iterable[String] =
-      SamplesStore.readableSnapshot(fs, root).map(_.byDay.keys)
-        .getOrElse {
-          if (!fs.exists(root)) Nil
-          else fs.listStatus(root)
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-            .map(_.getPath.getName).toSeq
-        }
+      SamplesStore.committedSnapshot(fs, root).map(_.byDay.keys).getOrElse(Nil)
     val anyExpired = liveDays.exists(
       _.stripPrefix("date=").toLongOption
         .exists(day => (day + 86400L) * 1000000L <= cutoffUs))

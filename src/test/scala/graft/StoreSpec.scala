@@ -1074,10 +1074,11 @@ class StoreSpec extends SparkSpecBase {
     assert(gens.size == n && gens.last >= SamplesStore.CheckpointEvery,
       s"expected $n generations crossing the checkpoint cadence, got $gens")
     // a samples store's manifests carry no header lines: each line is
-    // the format tag, the batch ledger, a base pointer or a file entry
+    // the format tag, the batch ledger, the data schema, a base pointer
+    // or a file entry
     def headerFree(): Unit = manifests.foreach { case (g, _) =>
       val extra = manifestLines(path, g).filterNot(l => l == "graft-manifest v1" ||
-        Seq("max-batch-id ", "base ", "F ", "A ", "R ").exists(l.startsWith))
+        Seq("max-batch-id ", "data-schema ", "base ", "F ", "A ", "R ").exists(l.startsWith))
       assert(extra.isEmpty, s"gen $g carries header lines $extra")
     }
     headerFree()
@@ -1434,7 +1435,7 @@ class StoreSpec extends SparkSpecBase {
     assert(SamplesStore.currentGen(spark, path) === Some(1L))
     assert(SamplesStore.read(spark, path).count() === 3, "the replay lands batch 0 exactly once")
     SamplesStore.expireSnapshots(spark, path, graceMs = 0L)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(root, orphan.head)),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(root, orphan.keys.head)),
       "expiry must reclaim the crashed attempt's file")
     assert(SamplesStore.read(spark, path).count() === 3)
   }
@@ -1442,11 +1443,20 @@ class StoreSpec extends SparkSpecBase {
   test("a manifest-less tree of data files is adopted by its first mutation") {
     val path = freshStore("/tmp/graft_test/store_foreign_tree")
     SamplesStore.layout(groupRows(0)).write.partitionBy("date").parquet(path)
-    assert(SamplesStore.read(spark, path).count() === 3, "a foreign tree reads by listing")
+    // no manifest commits the tree's files: read fails loudly, never lists
+    val err = intercept[IllegalStateException](SamplesStore.read(spark, path))
+    assert(err.getMessage.contains("adopts"), err.getMessage)
+    assert(!graft.serve.RemoteRead.isTransientMiss(err), "a foreign tree is no transient miss")
     SamplesStore.append(groupRows(1), path)
     assert(SamplesStore.currentGen(spark, path) === Some(2L),
       "gen 1 adopts the tree, gen 2 is the append")
     assert(SamplesStore.read(spark, path).count() === 6)
+    // an absent path keeps its path-not-found error, which a fresh
+    // server's /read classifies as a miss
+    val missing = intercept[java.io.FileNotFoundException](
+      SamplesStore.read(spark, freshStore("/tmp/graft_test/store_absent")))
+    assert(missing.getMessage.contains("does not exist") &&
+      graft.serve.RemoteRead.isTransientMiss(missing), missing.getMessage)
   }
 
   test("compact and deleteRange on a never-written path commit no data and leave it readable") {
@@ -1673,19 +1683,147 @@ class StoreSpec extends SparkSpecBase {
     assert(err.getMessage.contains("value"), err.getMessage)
   }
 
-  test("a cold snapshot infers its schema once, then opens warm") {
+  /** Rewrite every manifest of `path` in the format from before
+    * manifests carried sizes and the schema: bare `F`/`A` paths and no
+    * `data-schema` line; then drop the cached snapshot. */
+  private def toPreSizeManifests(path: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    manifestGens(path).foreach { g =>
+      val old = manifestLines(path, g).filterNot(_.startsWith("data-schema ")).map { l =>
+        if (l.startsWith("F ") || l.startsWith("A ")) l.take(2) + l.drop(2).dropWhile(_ != ' ').drop(1)
+        else l
+      }
+      val out = fs.create(new org.apache.hadoop.fs.Path(path, f"_manifests/m-$g%020d"), true)
+      try out.write(old.mkString("\n").getBytes("UTF-8")) finally out.close()
+    }
+    SamplesStore.invalidateSnapshotCache(path)
+  }
+
+  test("a cold open uses the manifest's schema; a pre-schema manifest infers once") {
     val path = freshDir("/tmp/graft_test/store_open_cold")
     SamplesStore.append(openRows("a"), path)
     val warm = SamplesStore.read(spark, path).schema
     SamplesStore.invalidateSnapshotCache(path)
     val before = inferences
     assert(SamplesStore.read(spark, path).schema === warm)
+    assert(SamplesStore.read(spark, path).count() === 3)
+    assert(inferences === before, "the manifest carries the schema: a cold open infers nothing")
+    // a manifest written before the schema line infers once, then opens warm
+    toPreSizeManifests(path)
+    assert(SamplesStore.read(spark, path).schema === warm)
     assert(inferences === before + 1)
     assert(SamplesStore.read(spark, path).count() === 3)
     assert(inferences === before + 1, "the inferred schema must be cached for the generation")
-    // an append on top of the cold-learned snapshot keeps it
+    // the next commit writes the schema: a cold open after it infers nothing
     SamplesStore.append(openRows("b"), path)
+    SamplesStore.invalidateSnapshotCache(path)
     assert(SamplesStore.read(spark, path).count() === 6)
     assert(inferences === before + 1)
   }
+
+  test("old-format manifests read, fold and roll up unchanged, then upgrade") {
+    import graft.ingest.RollupStore
+    val path = freshDir("/tmp/graft_test/store_old_manifests")
+    val rpath = freshDir(path + "_roll")
+    // a checkpoint plus two deltas: three files in each of three days
+    SamplesStore.write(openRows("a", 6), path)
+    SamplesStore.append(openRows("b", 6), path)
+    SamplesStore.append(openRows("c", 6), path)
+    RollupStore.rollup(spark, path, rpath, 3600L)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val (storeRows, rollRows) = (rows(SamplesStore.read(spark, path)), rollupRows(rpath))
+    assert(storeRows.size === 18)
+    Seq(path, rpath).foreach(toPreSizeManifests)
+
+    assert(rows(SamplesStore.read(spark, path)) === storeRows)
+    assert(RollupStore.rollup(spark, path, rpath, 3600L) === 0,
+      "day digests cover file names only: the upgrade rebuilds nothing")
+    assert(rollupRows(rpath) === rollRows)
+    assert(SamplesStore.compactFragmentedDays(spark, path, maxFilesPerDay = 1, gcGraceMs = 0L) === 3)
+    assert(rows(SamplesStore.read(spark, path)) === storeRows)
+    assert(RollupStore.rollup(spark, path, rpath, 3600L) === 3)
+    assert(rollupRows(rpath) === rollRows)
+
+    // each store's next commit wrote sizes and the schema
+    Seq(path, rpath).foreach { p =>
+      val lines = manifestLines(p, manifestGens(p).last)
+      assert(lines.exists(_.startsWith("data-schema ")), s"$p: no schema line")
+      val entries = lines.filter(l => l.startsWith("F ") || l.startsWith("A "))
+      assert(entries.nonEmpty && entries.forall(_.split(" ", 3) match {
+        case Array(_, n, f) => n.toLongOption.exists(_ > 0) && f.startsWith("date=")
+        case _ => false
+      }), s"$p: entries without sizes: $entries")
+    }
+    val before = inferences
+    Seq(path, rpath).foreach(SamplesStore.invalidateSnapshotCache)
+    assert(rows(SamplesStore.read(spark, path)) === storeRows)
+    assert(rollupRows(rpath) === rollRows)
+    assert(inferences === before, "upgraded manifests open with their schema")
+  }
+
+  test("a 100-file open lists nothing, stats nothing, runs no job, warm or cold") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val local = freshDir("/tmp/graft_test/store_fs_calls")
+    SamplesStore.write((0 until 100).map(d =>
+      ((openDay0 + d * 86400L) * 1000000L, "fm", Seq(s"k=$d"), d.toDouble))
+      .toDF("ts_us", "metric", "labels", "value"), local)
+    // the same store through a filesystem that records every call
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl", classOf[CountingFs].getName)
+    val path = "countfs://" + local
+    assert(snapshotOf(path).files.size === 100)
+    val day5 = openDay0 + 5 * 86400L
+    def check(label: String, dataCallsOnly: Boolean)(opened: => org.apache.spark.sql.DataFrame): Unit = {
+      import scala.jdk.CollectionConverters._
+      val before = inferences
+      CountingFs.calls.clear()
+      var q: org.apache.spark.sql.DataFrame = null
+      val (jobs, _) = jobsAndTasks {
+        q = opened.filter(col("date") === day5).select(col("labels"))
+        q.queryExecution.executedPlan; ()
+      }
+      // a read also resolves `_manifests` (the hint and its probes)
+      val calls = CountingFs.calls.asScala.toVector
+        .filterNot(c => dataCallsOnly && c._2.contains("/_manifests"))
+      assert(calls.isEmpty && jobs === 0 && inferences === before,
+        s"$label: calls $calls, $jobs jobs, ${inferences - before} inferences")
+      assert(q.collect().map(_.getSeq[String](0)).toSeq === Seq(Seq("k=5")), label)
+      val scans = (q.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }).collect { case s: FileSourceScanExec => s }
+      assert(scans.map(_.metrics("numFiles").value) === Seq(1L), s"$label: date pruning")
+    }
+    val warm = snapshotOf(path)
+    check("warm open", dataCallsOnly = false)(SamplesStore.open(spark, path, warm))
+    check("warm read", dataCallsOnly = true)(SamplesStore.read(spark, path))
+    SamplesStore.invalidateSnapshotCache(path)
+    val cold = snapshotOf(path)
+    check("cold open", dataCallsOnly = false)(SamplesStore.open(spark, path, cold))
+    SamplesStore.invalidateSnapshotCache(path)
+    check("cold read", dataCallsOnly = true)(SamplesStore.read(spark, path))
+    assert(SamplesStore.read(spark, path).schema("date").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+  }
+}
+
+/** The local filesystem under the `countfs` scheme, recording every
+  * listing and stat call as (operation, path) — StoreSpec's probe for
+  * "a store open makes no filesystem call". */
+class CountingFs extends org.apache.hadoop.fs.FilterFileSystem(
+    new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+    }) {
+  import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path, RemoteIterator}
+  private def record(op: String, f: Path): Unit = { CountingFs.calls.add(op -> f.toString); () }
+  override def getFileStatus(f: Path): FileStatus = { record("getFileStatus", f); super.getFileStatus(f) }
+  override def listStatus(f: Path): Array[FileStatus] = { record("listStatus", f); super.listStatus(f) }
+  override def listLocatedStatus(f: Path): RemoteIterator[LocatedFileStatus] = {
+    record("listLocatedStatus", f); super.listLocatedStatus(f)
+  }
+}
+
+object CountingFs {
+  val calls = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
 }
