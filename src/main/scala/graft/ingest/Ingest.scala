@@ -270,16 +270,22 @@ object SamplesStore {
   }
 
   /** Run `f` (a read's full plan-to-action execution) holding the
-    * store's visibility read lock: concurrent with other reads and
+    * visibility read lock of `path` and of every store in `more` (the
+    * siblings the read also plans): concurrent with other reads and
     * with every mutation, excluded only from GC file deletions. An
     * in-JVM serving read can thus never lose a planned file, even to
-    * a grace-0 expiry. Must never wrap anything that mutates the same
-    * store (GC's write side cannot be taken while a read side is
-    * held on the same thread). */
-  def readLocked[T](path: String)(f: => T): T = {
+    * a grace-0 expiry of any store it reads. Locks are taken in
+    * argument order — the serving handlers pass the main store
+    * first, then its siblings in one fixed order (hist, stale) — and
+    * requests take read sides only while GC takes one write side
+    * through a bounded tryLock, so no cycle can form. Must never wrap
+    * anything that mutates a locked store (GC's write side cannot be
+    * taken while a read side is held on the same thread). */
+  def readLocked[T](path: String, more: String*)(f: => T): T = {
     val l = visibilityFor(path).readLock()
     l.lock()
-    try f finally l.unlock()
+    try { if (more.isEmpty) f else readLocked(more.head, more.tail: _*)(f) }
+    finally l.unlock()
   }
 
   // ---- snapshot manifests -----------------------------------------

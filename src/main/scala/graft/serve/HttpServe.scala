@@ -114,16 +114,27 @@ object HttpServe {
       b
     }
 
-    // URL query + (on POST) form-body parameters, body values after
-    // URL values — Prometheus accepts the metadata/query APIs both
-    // ways and Grafana switches to form-POST once selectors get long
+    def text(ex: HttpExchange, status: Int, body: String): Unit =
+      respond(ex, status, body.getBytes(UTF_8),
+        Seq("Content-Type" -> "text/plain; charset=utf-8"))
+
+    def json(ex: HttpExchange, body: String, status: Int = 200): Unit =
+      respond(ex, status, body.getBytes(UTF_8),
+        Seq("Content-Type" -> "application/json"))
+
+    def urlDecode(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
+
+    // THE request-parameter parser: URL query + (on POST) form-body
+    // parameters, body values after URL values — Prometheus accepts
+    // its HTTP APIs both ways and Grafana switches to form-POST once
+    // selectors get long. `.toMap` lets the body win a collision, like
+    // Go's Request.Form.
     def reqParams(ex: HttpExchange): Seq[(String, String)] = {
       def parse(raw: String): Seq[(String, String)] =
         raw.split("&").iterator.filter(_.nonEmpty)
           .map(_.split("=", 2)).map {
-            case Array(k, v) => java.net.URLDecoder.decode(k, "UTF-8") ->
-              java.net.URLDecoder.decode(v, "UTF-8")
-            case a => java.net.URLDecoder.decode(a(0), "UTF-8") -> ""
+            case Array(k, v) => urlDecode(k) -> urlDecode(v)
+            case a => urlDecode(a(0)) -> ""
           }.toSeq
       val url = parse(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
       val ct = Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
@@ -135,12 +146,15 @@ object HttpServe {
       url ++ form
     }
 
+    // Every malformed client input throws this; `guarded` answers it
+    // with Prometheus's 400 bad_data JSON, built only there.
+    final class BadParam(msg: String) extends RuntimeException(msg)
+
     // Prometheus 2.50+ `limit=` on the metadata endpoints: caps the
     // response below the server's own MetaValuesLimit ceiling.
     // 0/absent = no user cap (Prometheus's convention); a limit the
     // server CANNOT PARSE (or a negative one) is the client's error
     // — 400 bad_data like Prometheus, never a silent full result
-    final class BadParam(msg: String) extends RuntimeException(msg)
     def effLimit(params: Seq[(String, String)]): Int = {
       val user = params.collectFirst { case ("limit", v) => v }
       user.foreach { v =>
@@ -154,10 +168,8 @@ object HttpServe {
     def guarded(ex: HttpExchange)(f: => Unit): Unit =
       try f catch {
         case e: BadParam =>
-          respond(ex, 400,
-            (s"""{"status":"error","errorType":"bad_data","error":"${esc(e.getMessage)}"}""")
-              .getBytes(UTF_8),
-            Seq("Content-Type" -> "application/json"))
+          json(ex, s"""{"status":"error","errorType":"bad_data","error":"${esc(e.getMessage)}"}""",
+            400)
         case e: Throwable if isClientDisconnect(e) =>
           // the CLIENT went away mid-request or mid-response (a
           // dashboard refresh aborting its previous query) — the
@@ -173,14 +185,12 @@ object HttpServe {
           // the reference logs every handler failure (main.go:130/136/149
           // via zap) — without this line a 3 am 500 is invisible
           log.warn(s"${ex.getRequestMethod} ${ex.getRequestURI} -> 500: $msg")
-          respond(ex, 500, (msg + "\n").getBytes(UTF_8),
-            Seq("Content-Type" -> "text/plain; charset=utf-8"))
+          text(ex, 500, msg + "\n")
       }
 
     // main.go:116-120 — unknown paths 404 with the service name body.
     server.createContext("/", (ex: HttpExchange) => guarded(ex) {
-      respond(ex, 404, "graft".getBytes(UTF_8),
-        Seq("Content-Type" -> "text/plain; charset=utf-8"))
+      text(ex, 404, "graft")
     })
 
     server.createContext("/write", (ex: HttpExchange) => guarded(ex) {
@@ -191,9 +201,7 @@ object HttpServe {
       val proto = graft.ingest.PromRemoteCodec.protoParam(ct)
       if (proto.exists(p => p != graft.ingest.PromRemoteCodec.ProtoV1 &&
             p != graft.ingest.PromRemoteCodec.ProtoV2)) {
-        respond(ex, 415,
-          s"unsupported remote-write proto: ${proto.get}\n".getBytes(UTF_8),
-          Seq("Content-Type" -> "text/plain; charset=utf-8"))
+        text(ex, 415, s"unsupported remote-write proto: ${proto.get}\n")
       } else {
         val out = RemoteWrite.serveCounted(spark, storePath, body(ex), ct)
         // 2.0 receivers confirm written counts in response headers —
@@ -220,9 +228,7 @@ object HttpServe {
         val enc = Option(ex.getRequestHeaders.getFirst("Content-Encoding"))
           .map(_.trim.toLowerCase).filter(e => e.nonEmpty && e != "identity")
         if (enc.exists(_ != "gzip")) {
-          respond(ex, 415,
-            s"unsupported Content-Encoding: ${enc.get}\n".getBytes(UTF_8),
-            Seq("Content-Type" -> "text/plain; charset=utf-8"))
+          text(ex, 415, s"unsupported Content-Encoding: ${enc.get}\n")
         } else {
           // a malformed body — including the delta-temporality
           // rejection (OtlpCodec header) — is the SENDER's error:
@@ -255,26 +261,25 @@ object HttpServe {
               Seq("Content-Type" -> "application/x-protobuf"))
           } catch {
             case e: graft.ingest.ProtoWire.WireFormatException =>
-              respond(ex, 400, (e.getMessage + "\n").getBytes(UTF_8),
-                Seq("Content-Type" -> "text/plain; charset=utf-8"))
+              text(ex, 400, e.getMessage + "\n")
             // ZipException = corrupt stream; EOFException = truncated
             // stream (GZIPInputStream.read throws it mid-body). Both
             // are the CLIENT's malformed bytes, not a server fault.
             case _: java.util.zip.ZipException | _: java.io.EOFException =>
-              respond(ex, 400, "malformed gzip body\n".getBytes(UTF_8),
-                Seq("Content-Type" -> "text/plain; charset=utf-8"))
+              text(ex, 400, "malformed gzip body\n")
           }
         }
       })
 
     server.createContext("/read", (ex: HttpExchange) => guarded(ex) {
-      // The store's visibility read lock keeps this query's planned
-      // files safe from this JVM's GC for its whole execution, while
-      // it runs CONCURRENTLY with every append and compaction. The
-      // retry below remains for OUT-of-process mutators (another JVM
-      // expiring the same store), whose GC the lock can't see; a store
-      // that simply doesn't exist yet (fresh server before the first
-      // /write) fails fast instead — that miss is permanent.
+      // Every store this read plans — the main store and its stale and
+      // hist siblings — stays under its own visibility read lock for
+      // the whole execution, so this JVM's GC can't reclaim a planned
+      // file while it runs CONCURRENTLY with every append and
+      // compaction. The retry remains for OUT-of-process mutators
+      // (another JVM expiring the same store), whose GC the lock can't
+      // see; a store that simply doesn't exist yet (fresh server before
+      // the first /write) fails fast instead — that miss is permanent.
       val reqBody = body(ex)
       val rollupRoute = RollupStore.ladder(storePath,
         RemoteWrite.rollupIntervalSec, RemoteWrite.rollupLadderIntervalSec)
@@ -289,45 +294,37 @@ object HttpServe {
         try PromRemoteCodec.decodeAcceptedResponseTypes(reqBody)
           .find(t => t == 0 || t == 1).contains(1)
         catch { case _: Throwable => false }
-      // the native-histogram sibling (when any native write landed
-      // one) answers on BOTH response types: histogram-chunk frames
-      // on the streamed path, TimeSeries field 4 on SAMPLES
-      val histDf = RemoteWrite.histStoreDf(spark, storePath)
-      // staleness markers pass through /read VERBATIM (the
-      // querier-side contract: the CLIENT's engine handles them) —
-      // merged back into each series' sample/chunk stream with the
-      // exact StaleNaN payload
-      val staleDf = RemoteWrite.staleStoreDf(spark, storePath)
-      if (wantsChunks) {
-        val resp = SamplesStore.readLocked(storePath) {
-          RemoteRead.serveChunked(SamplesStore.read(spark, storePath),
-            reqBody, ignoreLabel, ignoreHints, maxReadSamples,
-            rollupRoute = rollupRoute, histStore = histDf,
-            staleStore = staleDf)
-        }
-        respond(ex, 200, resp, Seq(
-          "Content-Type" ->
-            "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse"))
-      } else {
-        val resp = SamplesStore.readLocked(storePath) {
-          RemoteRead.serve(SamplesStore.read(spark, storePath),
-            reqBody, ignoreLabel, ignoreHints, maxReadSamples,
-            transientRetries = 2,
-            // a missing planned file is worth a retry only when the
-            // store exists (another process's GC reclaimed it
-            // mid-scan); a never-written store is a permanent miss
-            transientClassifier = e =>
-              RemoteRead.isTransientMiss(e) && SamplesStore.exists(spark, storePath),
-            // coarse, shape-exact queries serve from the rollup twin
-            // when background rollup maintenance keeps one (and only
-            // while its manifest is provably fresh for the window)
-            rollupRoute = rollupRoute, histStore = histDf,
-            staleStore = staleDf)
-        }
-        respond(ex, 200, resp, Seq(
-          "Content-Type" -> "application/x-protobuf",
-          "Content-Encoding" -> "snappy"))
+      val (encode, headers) =
+        if (wantsChunks)
+          (RemoteRead.chunksEncoder(RemoteRead.DefaultMaxFrameBytes), Seq(
+            "Content-Type" ->
+              "application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse"))
+        else
+          (RemoteRead.samplesEncoder, Seq(
+            "Content-Type" -> "application/x-protobuf",
+            "Content-Encoding" -> "snappy"))
+      val resp = SamplesStore.readLocked(storePath,
+          RemoteWrite.histPath(storePath), RemoteWrite.stalePath(storePath)) {
+        RemoteRead.serveWith(encode)(SamplesStore.read(spark, storePath),
+          reqBody, ignoreLabel, ignoreHints, maxReadSamples,
+          transientRetries = 2,
+          // a missing planned file is worth a retry only when the
+          // store exists (another process's GC reclaimed it
+          // mid-scan); a never-written store is a permanent miss
+          transientClassifier = e =>
+            RemoteRead.isTransientMiss(e) && SamplesStore.exists(spark, storePath),
+          // coarse, shape-exact queries serve from the rollup twin
+          // when background rollup maintenance keeps one (and only
+          // while its manifest is provably fresh for the window)
+          rollupRoute = rollupRoute,
+          // the native-histogram sibling (when any native write
+          // landed one) answers on BOTH response types; staleness
+          // markers pass through VERBATIM with the exact StaleNaN
+          // payload (the querier-side contract)
+          histStore = RemoteWrite.histStoreDf(spark, storePath),
+          staleStore = RemoteWrite.staleStoreDf(spark, storePath))
       }
+      respond(ex, 200, resp, headers)
     })
 
     server.createContext("/metrics", (ex: HttpExchange) => guarded(ex) {
@@ -349,9 +346,47 @@ object HttpServe {
       case c             => c.toString
     }
 
-    def jsonList(values: Seq[String]): Array[Byte] =
+    def jsonList(values: Seq[String]): String =
       values.map(v => s""""${esc(v)}"""").mkString(
-        """{"status":"success","data":[""", ",", "]}").getBytes(UTF_8)
+        """{"status":"success","data":[""", ",", "]}")
+
+    // THE label-set renderer: a stored "k=v" list (plus the metric
+    // name as __name__, when given) as one JSON object
+    def labelsJson(metric: Option[String], labels: Seq[String]): String =
+      (metric.map("__name__" -> _).toSeq ++ labels.map { l =>
+        val c = l.indexOf('=')
+        if (c < 0) (l, "") else (l.substring(0, c), l.substring(c + 1))
+      }).map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
+        .mkString("{", ",", "}")
+
+    // Selector sets OR-compiled into ONE predicate, so the store scans
+    // once for their union (None when there is no set).
+    def anyOf(sets: Seq[Seq[graft.operators.LabelMatcher]])
+        : Option[org.apache.spark.sql.Column] =
+      sets.map(graft.operators.Matchers.compilePromQL(_, ignoreLabel))
+        .reduceOption(_ || _)
+
+    // Every match[] selector, compiled by `anyOf`. A malformed one —
+    // or none at all where the endpoint requires one — is the
+    // client's 400 (the Prometheus behavior), never a silent empty or
+    // unfiltered set.
+    def matchParam(params: Seq[(String, String)], required: Boolean)
+        : Option[org.apache.spark.sql.Column] = {
+      val parsed = params.collect { case ("match[]", v) =>
+        graft.operators.Matchers.parseSelector(v) }
+      if (parsed.exists(_.isEmpty) || (required && parsed.isEmpty))
+        throw new BadParam(
+          if (required) "match[] missing or malformed" else "match[] malformed")
+      anyOf(parsed.flatten)
+    }
+
+    // The required `query=` expression (its first value), parsed; an
+    // absent or unparsable one is the client's 400.
+    def queryParam(params: Seq[(String, String)]): PromQL.Expr = {
+      val q = params.collectFirst { case ("query", v) => v }
+        .getOrElse(throw new BadParam("query parameter is required"))
+      PromQL.parse(q).fold(err => throw new BadParam(err), identity)
+    }
 
     def storeSamples(): Option[org.apache.spark.sql.DataFrame] =
       if (SamplesStore.exists(spark, storePath)) Some(SamplesStore.read(spark, storePath))
@@ -359,24 +394,12 @@ object HttpServe {
 
     server.createContext("/api/v1/labels", (ex: HttpExchange) => guarded(ex) {
       // optional match[] selectors narrow the domain (Prometheus
-      // semantics: label names of the MATCHING series only); URL or
-      // form-POST parameters both work
+      // semantics: label names of the MATCHING series only)
       val params = reqParams(ex)
-      val parsed = params.collect { case ("match[]", v) =>
-        graft.operators.Matchers.parseSelector(v) }
-      if (parsed.exists(_.isEmpty)) {
-        respond(ex, 400,
-          """{"status":"error","errorType":"bad_data","error":"match[] malformed"}"""
-            .getBytes(UTF_8),
-          Seq("Content-Type" -> "application/json"))
-      } else {
-      def narrow(df: org.apache.spark.sql.DataFrame) =
-        if (parsed.isEmpty) df
-        else df.filter(parsed.flatten
-          .map(graft.operators.Matchers.compilePromQL(_, ignoreLabel))
-          .reduce(_ || _))
+      val pred = matchParam(params, required = false)
       val names = SamplesStore.readLocked(storePath) {
-        storeSamples().map(timeBoundedParams(_, params)).map(narrow).map { df =>
+        storeSamples().map(timeBoundedParams(_, params))
+          .map(df => pred.fold(df)(df.filter)).map { df =>
           // __name__ exists iff the bounded window holds any series at
           // all (a labels-empty series still has a metric name). That
           // probe rides the SAME collect as the key list: a NUL-string
@@ -396,183 +419,119 @@ object HttpServe {
           else Seq.empty
         }.getOrElse(Seq.empty)
       }
-      respond(ex, 200, jsonList(names),
-        Seq("Content-Type" -> "application/json"))
-      }
+      json(ex, jsonList(names))
     })
 
     server.createContext("/api/v1/label/", (ex: HttpExchange) => guarded(ex) {
       // /api/v1/label/<key>/values
       val parts = ex.getRequestURI.getPath.split("/").toSeq
-      if (parts.length != 6 || parts(5) != "values") {
-        respond(ex, 404, "graft".getBytes(UTF_8),
-          Seq("Content-Type" -> "text/plain; charset=utf-8"))
-      } else {
-        val key = java.net.URLDecoder.decode(parts(4), "UTF-8")
+      if (parts.length != 6 || parts(5) != "values") text(ex, 404, "graft")
+      else {
+        val key = urlDecode(parts(4))
         // optional match[] narrows the value domain to the matching
-        // series (Prometheus semantics); URL or form-POST params
+        // series (Prometheus semantics)
         val params = reqParams(ex)
-        val parsed = params.collect { case ("match[]", v) =>
-          graft.operators.Matchers.parseSelector(v) }
-        if (parsed.exists(_.isEmpty)) {
-          respond(ex, 400,
-            """{"status":"error","errorType":"bad_data","error":"match[] malformed"}"""
-              .getBytes(UTF_8),
-            Seq("Content-Type" -> "application/json"))
-        } else {
-          def narrow(df: org.apache.spark.sql.DataFrame) =
-            if (parsed.isEmpty) df
-            else df.filter(parsed.flatten
-              .map(graft.operators.Matchers.compilePromQL(_, ignoreLabel))
-              .reduce(_ || _))
-          val values = SamplesStore.readLocked(storePath) {
-            storeSamples().map(timeBoundedParams(_, params)).map(narrow).map { df =>
-              val domain = if (key == "__name__")
-                df.select(org.apache.spark.sql.functions.col("metric").as("v")).distinct()
-              else graft.operators.Meta.labelValues(df, key)
-                .select(org.apache.spark.sql.functions.col("label_value").as("v"))
-              // limit INSIDE the plan (ordered for determinism) — the
-              // cap must bound the collect, not trim after it
-              domain.orderBy("v").limit(effLimit(params))
-                .collect().map(_.getString(0)).toSeq
-            }.getOrElse(Seq.empty)
-          }
-          respond(ex, 200, jsonList(values),
-            Seq("Content-Type" -> "application/json"))
+        val pred = matchParam(params, required = false)
+        val values = SamplesStore.readLocked(storePath) {
+          storeSamples().map(timeBoundedParams(_, params))
+            .map(df => pred.fold(df)(df.filter)).map { df =>
+            val domain = if (key == "__name__")
+              df.select(org.apache.spark.sql.functions.col("metric").as("v")).distinct()
+            else graft.operators.Meta.labelValues(df, key)
+              .select(org.apache.spark.sql.functions.col("label_value").as("v"))
+            // limit INSIDE the plan (ordered for determinism) — the
+            // cap must bound the collect, not trim after it
+            domain.orderBy("v").limit(effLimit(params))
+              .collect().map(_.getString(0)).toSeq
+          }.getOrElse(Seq.empty)
         }
+        json(ex, jsonList(values))
       }
     })
 
     // /api/v1/series?match[]=<selector>&start=&end= — the third leg
     // of the metadata API (the reference delegates it to Prometheus).
-    // Multiple match[] params union, compiled as ONE OR-predicate so
-    // the store scans once; the response is capped in-plan like the
-    // label domains. Malformed selectors answer 400 bad_data (the
-    // Prometheus behavior), not a silent empty set.
+    // Multiple match[] params union on one scan; the response is
+    // capped in-plan like the label domains.
     server.createContext("/api/v1/series", (ex: HttpExchange) => guarded(ex) {
       val params = reqParams(ex)
-      val parsed = params.collect { case ("match[]", v) =>
-        graft.operators.Matchers.parseSelector(v) }
-      if (parsed.isEmpty || parsed.exists(_.isEmpty)) {
-        respond(ex, 400,
-          """{"status":"error","errorType":"bad_data","error":"match[] missing or malformed"}"""
-            .getBytes(UTF_8),
-          Seq("Content-Type" -> "application/json"))
-      } else {
-        val series = SamplesStore.readLocked(storePath) {
-          storeSamples().map(timeBoundedParams(_, params)).map { df =>
-            val pred = parsed.flatten
-              .map(graft.operators.Matchers.compilePromQL(_, ignoreLabel))
-              .reduce(_ || _)
-            df.filter(pred)
-              .select(org.apache.spark.sql.functions.col("metric"),
-                      org.apache.spark.sql.functions.col("labels"))
-              .distinct()
-              .orderBy("metric", "labels")
-              .limit(effLimit(params))
-              .collect()
-              .map(r => (r.getString(0), r.getSeq[String](1).toSeq)).toSeq
-          }.getOrElse(Seq.empty)
-        }
-        val body = series.map { case (metric, labels) =>
-          (("__name__", metric) +: labels.map { l =>
-            val i = l.indexOf('=')
-            if (i < 0) (l, "") else (l.substring(0, i), l.substring(i + 1))
-          }).map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
-            .mkString("{", ",", "}")
-        }.mkString("""{"status":"success","data":[""", ",", "]}")
-        respond(ex, 200, body.getBytes(UTF_8),
-          Seq("Content-Type" -> "application/json"))
+      val pred = matchParam(params, required = true).get
+      val series = SamplesStore.readLocked(storePath) {
+        storeSamples().map(timeBoundedParams(_, params)).map { df =>
+          df.filter(pred)
+            .select(org.apache.spark.sql.functions.col("metric"),
+                    org.apache.spark.sql.functions.col("labels"))
+            .distinct()
+            .orderBy("metric", "labels")
+            .limit(effLimit(params))
+            .collect()
+            .map(r => (r.getString(0), r.getSeq[String](1).toSeq)).toSeq
+        }.getOrElse(Seq.empty)
       }
+      json(ex, series.map { case (metric, labels) => labelsJson(Some(metric), labels) }
+        .mkString("""{"status":"success","data":[""", ",", "]}"))
     })
 
-    // GET /federate?match[]=<selector>[&match[]=…][&time=<sec>] —
-    // the Prometheus federation endpoint: each matching series'
-    // CURRENT value in text exposition format, so a downstream
-    // Prometheus can scrape graft as an ordinary federation source.
-    // Selectors union as ONE OR-predicate on a single scan (the
-    // /api/v1/series shape); per series the latest sample in the
-    // (t-5m, t] instant lookback answers, stamped in milliseconds.
-    // `time` is a graft extension (Prometheus federates at wall-now
-    // only) so scrapes are reproducible against a historical store;
-    // absent, the scrape time is wall-clock now.
+    // /federate?match[]=<selector>[&match[]=…][&time=<sec>] — the
+    // Prometheus federation endpoint: each matching series' CURRENT
+    // value in text exposition format, so a downstream Prometheus can
+    // scrape graft as an ordinary federation source. Selectors union
+    // as ONE OR-predicate on a single scan (the /api/v1/series shape);
+    // per series the latest sample in the (t-5m, t] instant lookback
+    // answers, stamped in milliseconds. `time` is a graft extension
+    // (Prometheus federates at wall-now only) so scrapes are
+    // reproducible against a historical store; absent, the scrape
+    // time is wall-clock now.
     server.createContext("/federate", (ex: HttpExchange) => guarded(ex) {
       import org.apache.spark.sql.functions.{col, expr, max}
-      val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-      val params = raw.split("&").iterator.filter(_.nonEmpty)
-        .map(_.split("=", 2)).map {
-          case Array(k, v) => java.net.URLDecoder.decode(k, "UTF-8") ->
-            java.net.URLDecoder.decode(v, "UTF-8")
-          case a => java.net.URLDecoder.decode(a(0), "UTF-8") -> ""
-        }.toSeq
-      val parsed = params.collect { case ("match[]", v) =>
-        graft.operators.Matchers.parseSelector(v) }
+      val params = reqParams(ex)
+      val pred = matchParam(params, required = true).get
       // absent `time` → wall clock; PRESENT but unparsable `time` →
       // 400 (a typo'd historical scrape must not silently become a
       // live one — same validation rigor as match[])
-      val timeRaw = params.collectFirst { case ("time", v) => v }
-      val timeParsed = timeRaw.map(parseTimeParam)
-      if (parsed.isEmpty || parsed.exists(_.isEmpty)) {
-        respond(ex, 400,
-          """{"status":"error","errorType":"bad_data","error":"match[] missing or malformed"}"""
-            .getBytes(UTF_8),
-          Seq("Content-Type" -> "application/json"))
-      } else if (timeParsed.exists(_.isEmpty)) {
-        respond(ex, 400,
-          """{"status":"error","errorType":"bad_data","error":"time parameter malformed"}"""
-            .getBytes(UTF_8),
-          Seq("Content-Type" -> "application/json"))
+      val t = params.collectFirst { case ("time", v) =>
+        parseTimeParam(v).getOrElse(throw new BadParam("time parameter malformed"))
+      }.getOrElse(System.currentTimeMillis() / 1000L)
+      val lookback = 300L
+      val rows = SamplesStore.readLocked(storePath) {
+        storeSamples().map { df =>
+          df.filter(pred)
+            // (t-L, t] in pushable ts_us bounds + day pruning
+            .filter(col("ts_us") > (t - lookback) * 1000000L &&
+                    col("ts_us") <= t * 1000000L)
+            .filter(col("date") >= (t - lookback) / 86400L * 86400L &&
+                    col("date") <= t)
+            .groupBy(col("metric"), col("labels"))
+            // latest sample; same-µs ties take the max value (the
+            // read path's dedup convention)
+            .agg(max(col("ts_us")).as("ts_us"),
+              expr("max_by(value, struct(ts_us, value))").as("value"))
+            .orderBy("metric", "labels")
+            // limit+1 detects overflow without an unbounded collect
+            .limit(federateSeriesLimit + 1)
+            .collect()
+            .map(r => (r.getString(0), r.getSeq[String](1).toSeq,
+              r.getLong(2), r.getDouble(3)))
+            .toSeq
+        }.getOrElse(Seq.empty)
+      }
+      if (rows.size > federateSeriesLimit) {
+        json(ex, s"""{"status":"error","errorType":"internal","error":""" +
+          s""""federation result exceeds $federateSeriesLimit series; """ +
+          s"""raise HttpServe.federateSeriesLimit or narrow match[]"}""", 500)
       } else {
-        val t = timeParsed.flatten
-          .getOrElse(System.currentTimeMillis() / 1000L)
-        val lookback = 300L
-        val rows = SamplesStore.readLocked(storePath) {
-          storeSamples().map { df =>
-            val pred = parsed.flatten
-              .map(graft.operators.Matchers.compilePromQL(_, ignoreLabel))
-              .reduce(_ || _)
-            df.filter(pred)
-              // (t-L, t] in pushable ts_us bounds + day pruning
-              .filter(col("ts_us") > (t - lookback) * 1000000L &&
-                      col("ts_us") <= t * 1000000L)
-              .filter(col("date") >= (t - lookback) / 86400L * 86400L &&
-                      col("date") <= t)
-              .groupBy(col("metric"), col("labels"))
-              // latest sample; same-µs ties take the max value (the
-              // read path's dedup convention)
-              .agg(max(col("ts_us")).as("ts_us"),
-                expr("max_by(value, struct(ts_us, value))").as("value"))
-              .orderBy("metric", "labels")
-              // limit+1 detects overflow without an unbounded collect
-              .limit(federateSeriesLimit + 1)
-              .collect()
-              .map(r => (r.getString(0), r.getSeq[String](1).toSeq,
-                r.getLong(2), r.getDouble(3)))
-              .toSeq
-          }.getOrElse(Seq.empty)
+        val sb = new StringBuilder
+        rows.foreach { case (metric, labels, tsUs, value) =>
+          // renderHead quotes UTF-8 metric/label names per the
+          // Prometheus 3.x text syntax — a dotted name emitted
+          // bare would be unscrapeable by the downstream
+          val vtxt = PromQL.formatE6(math.floor(value * 1e6 + 0.5).toLong)
+          sb.append(graft.ingest.Exposition.renderHead(metric, labels))
+            .append(' ').append(vtxt)
+            .append(' ').append(tsUs / 1000L).append('\n')
         }
-        if (rows.size > federateSeriesLimit) {
-          respond(ex, 500,
-            (s"""{"status":"error","errorType":"internal","error":""" +
-              s""""federation result exceeds $federateSeriesLimit series; """ +
-              s"""raise HttpServe.federateSeriesLimit or narrow match[]"}""")
-              .getBytes(UTF_8),
-            Seq("Content-Type" -> "application/json"))
-        } else {
-          val sb = new StringBuilder
-          rows.foreach { case (metric, labels, tsUs, value) =>
-            // renderHead quotes UTF-8 metric/label names per the
-            // Prometheus 3.x text syntax — a dotted name emitted
-            // bare would be unscrapeable by the downstream
-            val vtxt = PromQL.formatE6(math.floor(value * 1e6 + 0.5).toLong)
-            sb.append(graft.ingest.Exposition.renderHead(metric, labels))
-              .append(' ').append(vtxt)
-              .append(' ').append(tsUs / 1000L).append('\n')
-          }
-          respond(ex, 200, sb.toString.getBytes(UTF_8),
-            Seq("Content-Type" ->
-              "text/plain; version=0.0.4; charset=utf-8"))
-        }
+        respond(ex, 200, sb.toString.getBytes(UTF_8),
+          Seq("Content-Type" -> "text/plain; version=0.0.4; charset=utf-8"))
       }
     })
 
@@ -584,34 +543,6 @@ object HttpServe {
     // documents grammar + semantics) — Grafana can point at graft as
     // a Prometheus datasource with nothing in between.
 
-    def decodeForm(raw: String): Map[String, String] =
-      raw.split("&").iterator.filter(_.nonEmpty)
-        .map(_.split("=", 2)).map {
-          case Array(k, v) => java.net.URLDecoder.decode(k, "UTF-8") ->
-            java.net.URLDecoder.decode(v, "UTF-8")
-          case a => java.net.URLDecoder.decode(a(0), "UTF-8") -> ""
-        }.toMap
-
-    // Prometheus accepts query-API parameters in the URL or as a
-    // form-encoded POST body (what Grafana sends once expressions get
-    // long); body values win on collision, like Go's Request.Form.
-    def queryParams(ex: HttpExchange): Map[String, String] = {
-      val url = decodeForm(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
-      val form =
-        if (ex.getRequestMethod == "POST" &&
-            Option(ex.getRequestHeaders.getFirst("Content-Type"))
-              .exists(_.startsWith("application/x-www-form-urlencoded")))
-          decodeForm(new String(body(ex), UTF_8))
-        else Map.empty[String, String]
-      url ++ form
-    }
-
-    def badData(ex: HttpExchange, msg: String): Unit =
-      respond(ex, 400,
-        s"""{"status":"error","errorType":"bad_data","error":"${esc(msg)}"}"""
-          .getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
-
     // Prometheus duration ("5m") or plain (float) seconds.
     def parseStep(v: String): Option[Long] =
       scala.util.Try(v.toDouble).toOption.map(d => math.max(1L, d.toLong))
@@ -620,7 +551,7 @@ object HttpServe {
         })
 
     def servePromQuery(ex: HttpExchange, rangeMode: Boolean): Unit = {
-      val params = queryParams(ex)
+      val params = reqParams(ex).toMap
       val exprE = params.get("query").toRight("missing query parameter")
         .flatMap(PromQL.parse)
       // Prometheus 3.x `limit=` on the query APIs: cap the returned
@@ -632,9 +563,9 @@ object HttpServe {
           .toRight(s"limit must be a non-negative integer: $v")
       }
       // `timeout=` parses and validates like Prometheus (a malformed
-      // duration is the client's 400); evaluation here is one Spark
-      // job, already bounded by the in-plan cell cap, so the value
-      // itself carries no additional behavior (documented)
+      // duration is the client's 400) but is not enforced yet:
+      // evaluation is one Spark job bounded by the in-plan cell cap
+      // (README's query-API paragraph says so)
       val timeoutE: Either[String, Unit] = params.get("timeout") match {
         case None => Right(())
         case Some(v) if parseStep(v).isDefined => Right(())
@@ -659,7 +590,7 @@ object HttpServe {
         }
       (for { e <- exprE; b <- boundsE; l <- limitE; _ <- timeoutE }
         yield (e, b, l)) match {
-        case Left(err) => badData(ex, err)
+        case Left(err) => throw new BadParam(err)
         case Right((PromQL.ScalarLit(v), (startSec, endSec, stepSec), _)) =>
           // Prometheus's scalar forms: Grafana health-probes the
           // datasource with `1+1` and expects resultType "scalar";
@@ -673,12 +604,12 @@ object HttpServe {
                 s"""{"metric":{},"values":$vals}]}}"""
             } else
               s"""{"status":"success","data":{"resultType":"scalar","result":[$startSec,"$sv"]}}"""
-          respond(ex, 200, body.getBytes(UTF_8),
-            Seq("Content-Type" -> "application/json"))
+          json(ex, body)
         case Right((expr, (startSec, endSec, stepSec), limit)) =>
           // releasing: the shared subtrees eval persists are dropped
           // from Spark's cache once this request's collect ran
-          val (rows, histRows) = SamplesStore.readLocked(storePath)(PromQL.releasing {
+          val (rows, histRows) = SamplesStore.readLocked(storePath,
+              RemoteWrite.histPath(storePath), RemoteWrite.stalePath(storePath))(PromQL.releasing {
             // ONE sibling existence probe feeds both legs
             val staleDf = RemoteWrite.staleStoreDf(spark, storePath)
             // the 3.x histogram-valued leg: an expression whose
@@ -724,10 +655,8 @@ object HttpServe {
             (fl, hl)
           })
           if (rows.length + histRows.length > MaxQueryCells) {
-            respond(ex, 422,
-              s"""{"status":"error","errorType":"execution","error":"query would return more than $MaxQueryCells samples"}"""
-                .getBytes(UTF_8),
-              Seq("Content-Type" -> "application/json"))
+            json(ex, s"""{"status":"error","errorType":"execution",""" +
+              s""""error":"query would return more than $MaxQueryCells samples"}""", 422)
           } else {
             // sort()/sort_desc()/sort_by_label() roots: the plan
             // already materialized the presentation ORDER BY (and
@@ -752,12 +681,6 @@ object HttpServe {
                 grouped.sortBy { case (k, _) => firstIdx(k) }
               } else grouped
                 .sortBy { case ((m, ls), _) => (m.getOrElse(""), ls.mkString(",")) }
-            def labelsJson(metric: Option[String], ls: Seq[String]): String =
-              (metric.map(m => s""""__name__":"${esc(m)}"""").toSeq ++ ls.map { l =>
-                val c = l.indexOf('=')
-                val (k, v) = if (c < 0) (l, "") else (l.substring(0, c), l.substring(c + 1))
-                s""""${esc(k)}":"${esc(v)}""""
-              }).mkString("{", ",", "}")
             // histogram-leg series: decode each (series, step)'s
             // prompb bytes to the 3.x {"count","sum","buckets"} JSON
             // (driver-side, bounded by the cell cap above); an
@@ -838,8 +761,7 @@ object HttpServe {
               }.mkString(
                 s"""{"status":"success"$warn,"data":{"resultType":"vector","result":[""",
                 ",", "]}}")
-            respond(ex, 200, body.getBytes(UTF_8),
-              Seq("Content-Type" -> "application/json"))
+            json(ex, body)
           }
       }
     }
@@ -848,22 +770,17 @@ object HttpServe {
     // buildinfo; answering a modern version unlocks the standard
     // query editor against graft's query API
     server.createContext("/api/v1/status/buildinfo", (ex: HttpExchange) => guarded(ex) {
-      respond(ex, 200,
-        """{"status":"success","data":{"version":"2.45.0","application":"graft"}}"""
-          .getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
+      json(ex, """{"status":"success","data":{"version":"2.45.0","application":"graft"}}""")
     })
 
     // liveness/readiness (Prometheus's /-/healthy and /-/ready —
     // what k8s probes and load balancers hit). The server being able
     // to run the handler IS the health signal, like Prometheus's.
     server.createContext("/-/healthy", (ex: HttpExchange) => guarded(ex) {
-      respond(ex, 200, "graft is Healthy.\n".getBytes(UTF_8),
-        Seq("Content-Type" -> "text/plain; charset=utf-8"))
+      text(ex, 200, "graft is Healthy.\n")
     })
     server.createContext("/-/ready", (ex: HttpExchange) => guarded(ex) {
-      respond(ex, 200, "graft is Ready.\n".getBytes(UTF_8),
-        Seq("Content-Type" -> "text/plain; charset=utf-8"))
+      text(ex, 200, "graft is Ready.\n")
     })
 
     // /api/v1/metadata: metric TYPE/HELP/UNIT off the sibling
@@ -893,29 +810,31 @@ object HttpServe {
       val limit = capParam("limit")
       val limitPer = capParam("limit_per_metric")
       val mdPath = RemoteWrite.metadataPath(storePath)
-      val exists = SamplesStore.exists(spark, mdPath)
       val entries: Seq[(String, String, String, String)] =
-        if (!exists || limit <= 0 || limitPer <= 0) Nil
-        else {
-          import org.apache.spark.sql.functions.{col, max => fmax}
-          var df = SamplesStore.read(spark, mdPath)
-          metricFilter.foreach(m0 => df = df.filter(col("metric") === m0))
-          // distinct (metric, entry) with the newest stamp — the
-          // aggregation runs distributed; only the distinct metadata
-          // set (small by construction) ever reaches the driver
-          df.groupBy(col("metric"), col("labels"))
-            .agg(fmax(col("ts_us")).as("ts_us"))
-            .limit(MetaValuesLimit)
-            .collect().toSeq
-            .map { r =>
-              val ls = r.getSeq[String](r.fieldIndex("labels"))
-              def part(p: String) =
-                ls.find(_.startsWith(p)).map(_.stripPrefix(p)).getOrElse("")
-              (r.getAs[String]("metric"), part("__type="), part("__help="),
-                part("__unit="), r.getAs[Long]("ts_us"))
-            }
-            .sortBy { case (m, t, h, u, ts) => (m, -ts, t, h, u) }
-            .map { case (m, t, h, u, _) => (m, t, h, u) }
+        if (limit <= 0 || limitPer <= 0) Nil
+        else SamplesStore.readLocked(mdPath) {
+          if (!SamplesStore.exists(spark, mdPath)) Nil
+          else {
+            import org.apache.spark.sql.functions.{col, max => fmax}
+            var df = SamplesStore.read(spark, mdPath)
+            metricFilter.foreach(m0 => df = df.filter(col("metric") === m0))
+            // distinct (metric, entry) with the newest stamp — the
+            // aggregation runs distributed; only the distinct metadata
+            // set (small by construction) ever reaches the driver
+            df.groupBy(col("metric"), col("labels"))
+              .agg(fmax(col("ts_us")).as("ts_us"))
+              .limit(MetaValuesLimit)
+              .collect().toSeq
+              .map { r =>
+                val ls = r.getSeq[String](r.fieldIndex("labels"))
+                def part(p: String) =
+                  ls.find(_.startsWith(p)).map(_.stripPrefix(p)).getOrElse("")
+                (r.getAs[String]("metric"), part("__type="), part("__help="),
+                  part("__unit="), r.getAs[Long]("ts_us"))
+              }
+              .sortBy { case (m, t, h, u, ts) => (m, -ts, t, h, u) }
+              .map { case (m, t, h, u, _) => (m, t, h, u) }
+          }
         }
       val byMetric = entries.distinct.groupBy(_._1).toSeq.sortBy(_._1)
         .take(limit)
@@ -925,69 +844,30 @@ object HttpServe {
         }.mkString(",")
         s""""${esc(m)}":[$items]"""
       }.mkString("""{"status":"success","data":{""", ",", "}}")
-      respond(ex, 200, body.getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
+      json(ex, body)
     })
 
     // /api/v1/format_query: parse + pretty-print (Grafana's "format
-    // query" button). The canonical form round-trips through the
-    // parser by construction (spec-fuzzed).
-    server.createContext("/api/v1/format_query", (ex: HttpExchange) => guarded(ex) {
-      reqParams(ex).collectFirst { case ("query", q) => q } match {
-        case None =>
-          respond(ex, 400,
-            """{"status":"error","errorType":"bad_data","error":"query parameter is required"}"""
-              .getBytes(UTF_8),
-            Seq("Content-Type" -> "application/json"))
-        case Some(q) => PromQL.parse(q) match {
-          case Left(err) =>
-            respond(ex, 400,
-              (s"""{"status":"error","errorType":"bad_data","error":"${esc(err)}"}""")
-                .getBytes(UTF_8),
-              Seq("Content-Type" -> "application/json"))
-          case Right(e) =>
-            respond(ex, 200,
-              (s"""{"status":"success","data":"${esc(PromQL.format(e))}"}""")
-                .getBytes(UTF_8),
-              Seq("Content-Type" -> "application/json"))
-        }
-      }
-    })
-
-    // /api/v1/parse_query (Prometheus 3.x experimental): parse +
-    // AST-as-JSON — Prometheus's translateAST shapes for the shared
-    // node kinds (PromQL.astJson documents the deviations)
-    server.createContext("/api/v1/parse_query", (ex: HttpExchange) => guarded(ex) {
-      reqParams(ex).collectFirst { case ("query", q) => q } match {
-        case None =>
-          respond(ex, 400,
-            """{"status":"error","errorType":"bad_data","error":"query parameter is required"}"""
-              .getBytes(UTF_8),
-            Seq("Content-Type" -> "application/json"))
-        case Some(q) => PromQL.parse(q) match {
-          case Left(err) =>
-            respond(ex, 400,
-              (s"""{"status":"error","errorType":"bad_data","error":"${esc(err)}"}""")
-                .getBytes(UTF_8),
-              Seq("Content-Type" -> "application/json"))
-          case Right(e) =>
-            respond(ex, 200,
-              (s"""{"status":"success","data":${PromQL.astJson(e)}}""")
-                .getBytes(UTF_8),
-              Seq("Content-Type" -> "application/json"))
-        }
-      }
-    })
+    // query" button; the canonical form round-trips through the parser
+    // by construction, spec-fuzzed). /api/v1/parse_query (Prometheus
+    // 3.x experimental): parse + AST-as-JSON — Prometheus's
+    // translateAST shapes for the shared node kinds (PromQL.astJson
+    // documents the deviations).
+    Seq[(String, PromQL.Expr => String)](
+      "/api/v1/format_query" -> (e => s""""${esc(PromQL.format(e))}""""),
+      "/api/v1/parse_query" -> PromQL.astJson
+    ).foreach { case (path, render) =>
+      server.createContext(path, (ex: HttpExchange) => guarded(ex) {
+        json(ex, s"""{"status":"success","data":${render(queryParam(reqParams(ex)))}}""")
+      })
+    }
 
     // The remaining Grafana-datasource probes, answered truthfully
     // empty (success shapes, never 404): graft has no scrape loop →
     // no targets; no alertmanager ring; no exemplar storage (prompb
     // v1 drops exemplars on ingest).
     server.createContext("/api/v1/targets", (ex: HttpExchange) => guarded(ex) {
-      respond(ex, 200,
-        """{"status":"success","data":{"activeTargets":[],"droppedTargets":[]}}"""
-          .getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
+      json(ex, """{"status":"success","data":{"activeTargets":[],"droppedTargets":[]}}""")
     })
     // /api/v1/status/runtimeinfo: process facts Grafana's datasource
     // settings page probes — truthful values, Prometheus's field names
@@ -1000,8 +880,7 @@ object HttpServe {
         s""""storageRetention":"${RemoteWrite.retentionDays}d",""" +
         s""""goroutineCount":${Thread.activeCount()},""" +
         s""""GOMAXPROCS":${Runtime.getRuntime.availableProcessors()}}}"""
-      respond(ex, 200, body.getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
+      json(ex, body)
     })
 
     // /api/v1/status/config: the effective configuration rendered as
@@ -1016,16 +895,13 @@ object HttpServe {
         s"store.rollup-interval: ${RemoteWrite.rollupIntervalSec}",
         s"store.rollup-ladder-interval: ${RemoteWrite.rollupLadderIntervalSec}",
         s"store.retention-days: ${RemoteWrite.retentionDays}").mkString("\n")
-      respond(ex, 200,
-        (s"""{"status":"success","data":{"yaml":"${esc(yaml)}"}}""").getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
+      json(ex, (s"""{"status":"success","data":{"yaml":"${esc(yaml)}"}}"""))
     })
 
     // /api/v1/notifications (Prometheus 3.x): active server
     // notifications — none, truthfully
     server.createContext("/api/v1/notifications", (ex: HttpExchange) => guarded(ex) {
-      respond(ex, 200, """{"status":"success","data":[]}""".getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
+      json(ex, """{"status":"success","data":[]}""")
     })
 
     // /api/v1/targets/metadata: per-TARGET metric metadata. graft
@@ -1037,15 +913,11 @@ object HttpServe {
     // by longest context prefix either way, but keep the pair
     // adjacent so the contract is visible.
     server.createContext("/api/v1/targets/metadata", (ex: HttpExchange) => guarded(ex) {
-      respond(ex, 200, """{"status":"success","data":[]}""".getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
+      json(ex, """{"status":"success","data":[]}""")
     })
 
     server.createContext("/api/v1/alertmanagers", (ex: HttpExchange) => guarded(ex) {
-      respond(ex, 200,
-        """{"status":"success","data":{"activeAlertmanagers":[],"droppedAlertmanagers":[]}}"""
-          .getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
+      json(ex, """{"status":"success","data":{"activeAlertmanagers":[],"droppedAlertmanagers":[]}}""")
     })
     // /api/v1/status/tsdb: Prometheus's head-cardinality stats — the
     // first endpoint anyone opens in a cardinality incident. ONE
@@ -1069,10 +941,8 @@ object HttpServe {
         .take(10).map { case (m, n) =>
           s"""{"name":"${esc(m)}","value":$n}"""
         }.mkString(",")
-      respond(ex, 200,
-        (s"""{"status":"success","data":{"headStats":{"numSeries":$total},""" +
-          s""""seriesCountByMetricName":[$items]}}""").getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
+      json(ex, s"""{"status":"success","data":{"headStats":{"numSeries":$total},""" +
+        s""""seriesCountByMetricName":[$items]}}""")
     })
 
     // /api/v1/query_exemplars: exemplars decoded off remote-write
@@ -1084,73 +954,45 @@ object HttpServe {
     // (Grafana probes this when exemplar display is on).
     server.createContext("/api/v1/query_exemplars", (ex: HttpExchange) => guarded(ex) {
       val params = reqParams(ex)
-      val parsed = params.collectFirst { case ("query", v) => PromQL.parse(v) }
+      val sets = PromQL.selectorMatcherSets(queryParam(params))
       val exPath = RemoteWrite.exemplarPath(storePath)
-      val exists = SamplesStore.exists(spark, exPath)
-      parsed match {
-        case None =>
-          respond(ex, 400,
-            """{"status":"error","errorType":"bad_data","error":"query parameter is required"}"""
-              .getBytes(UTF_8),
-            Seq("Content-Type" -> "application/json"))
-        case Some(Left(err)) =>
-          respond(ex, 400,
-            (s"""{"status":"error","errorType":"bad_data","error":"${esc(err)}"}""")
-              .getBytes(UTF_8),
-            Seq("Content-Type" -> "application/json"))
-        case Some(Right(expr0)) =>
-          val sets = PromQL.selectorMatcherSets(expr0)
-          val rows =
-            if (!exists || sets.isEmpty) Array.empty[org.apache.spark.sql.Row]
-            else {
-              import org.apache.spark.sql.functions.col
-              val m = params.toMap
-              def sec(k: String): Option[Long] = m.get(k).flatMap(parseTimeParam)
-              var df = timeBoundedParams(SamplesStore.read(spark, exPath), params)
-              sec("start").foreach(t0 => df = df.filter(col("ts_us") >= t0 * 1000000L))
-              sec("end").foreach(t1 => df = df.filter(col("ts_us") <= t1 * 1000000L + 999999L))
-              // union of the expression's selectors on ONE scan,
-              // like /api/v1/series; bounded collect like every
-              // metadata endpoint
-              df.filter(sets
-                  .map(ms => graft.operators.Matchers.compilePromQL(ms, ignoreLabel))
-                  .reduce(_ || _))
-                .limit(MetaValuesLimit)
-                .collect()
-            }
-          // group by the SERIES labels (the "__x_" entries are the
-          // exemplar's own labels; split the two spaces back apart)
-          val bySeries = rows.toSeq
-            .map { r =>
-              val all = r.getSeq[String](r.fieldIndex("labels")).toSeq
-              val (exLs, serLs) = all.partition(_.startsWith("__x_"))
-              ((r.getAs[String]("metric"), serLs),
-                (exLs.map(_.stripPrefix("__x_")),
-                  r.getAs[Long]("ts_us"), r.getAs[Double]("value")))
-            }
-            .groupBy(_._1).toSeq
-            .sortBy { case ((mtr, ls), _) => (mtr, ls.mkString(",")) }
-          def kvJson(pairs: Seq[String]): String =
-            pairs.map { l =>
-              val c = l.indexOf('=')
-              val (k, v) = if (c < 0) (l, "") else (l.take(c), l.drop(c + 1))
-              s""""${esc(k)}":"${esc(v)}""""
-            }.mkString(",")
-          val body = bySeries.map { case ((mtr, serLs), exs) =>
-            val series = (s""""__name__":"${esc(mtr)}"""" +:
-              (if (serLs.isEmpty) Nil else Seq(kvJson(serLs)))).mkString(",")
-            val items = exs.sortBy(_._2._2).map { case (_, (exLs, tsUs, v)) =>
-              val tsTxt = "%d.%03d".formatLocal(java.util.Locale.ROOT,
-                tsUs / 1000000L, tsUs % 1000000L / 1000L)
-              s"""{"labels":{${kvJson(exLs)}},"value":"${
-                PromQL.formatE6(math.floor(v * 1e6 + 0.5).toLong)
-              }","timestamp":$tsTxt}"""
-            }.mkString(",")
-            s"""{"seriesLabels":{$series},"exemplars":[$items]}"""
-          }.mkString("""{"status":"success","data":[""", ",", "]}")
-          respond(ex, 200, body.getBytes(UTF_8),
-            Seq("Content-Type" -> "application/json"))
+      val rows = SamplesStore.readLocked(exPath) {
+        anyOf(sets).filter(_ => SamplesStore.exists(spark, exPath)).map { pred =>
+          import org.apache.spark.sql.functions.col
+          val m = params.toMap
+          def sec(k: String): Option[Long] = m.get(k).flatMap(parseTimeParam)
+          var df = timeBoundedParams(SamplesStore.read(spark, exPath), params)
+          sec("start").foreach(t0 => df = df.filter(col("ts_us") >= t0 * 1000000L))
+          sec("end").foreach(t1 => df = df.filter(col("ts_us") <= t1 * 1000000L + 999999L))
+          // union of the expression's selectors on ONE scan, like
+          // /api/v1/series; bounded collect like every metadata
+          // endpoint
+          df.filter(pred).limit(MetaValuesLimit).collect()
+        }.getOrElse(Array.empty[org.apache.spark.sql.Row])
       }
+      // group by the SERIES labels (the "__x_" entries are the
+      // exemplar's own labels; split the two spaces back apart)
+      val bySeries = rows.toSeq
+        .map { r =>
+          val all = r.getSeq[String](r.fieldIndex("labels")).toSeq
+          val (exLs, serLs) = all.partition(_.startsWith("__x_"))
+          ((r.getAs[String]("metric"), serLs),
+            (exLs.map(_.stripPrefix("__x_")),
+              r.getAs[Long]("ts_us"), r.getAs[Double]("value")))
+        }
+        .groupBy(_._1).toSeq
+        .sortBy { case ((mtr, ls), _) => (mtr, ls.mkString(",")) }
+      val body = bySeries.map { case ((mtr, serLs), exs) =>
+        val items = exs.sortBy(_._2._2).map { case (_, (exLs, tsUs, v)) =>
+          val tsTxt = "%d.%03d".formatLocal(java.util.Locale.ROOT,
+            tsUs / 1000000L, tsUs % 1000000L / 1000L)
+          s"""{"labels":${labelsJson(None, exLs)},"value":"${
+            PromQL.formatE6(math.floor(v * 1e6 + 0.5).toLong)
+          }","timestamp":$tsTxt}"""
+        }.mkString(",")
+        s"""{"seriesLabels":${labelsJson(Some(mtr), serLs)},"exemplars":[$items]}"""
+      }.mkString("""{"status":"success","data":[""", ",", "]}")
+      json(ex, body)
     })
 
     // /api/v1/status/flags: the effective serving configuration, in
@@ -1188,9 +1030,7 @@ object HttpServe {
           graft.OpsMetrics(spark).otlpDroppedPoints.value.toString)
         .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
         .mkString(",")
-      respond(ex, 200,
-        s"""{"status":"success","data":{$flags}}""".getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
+      json(ex, s"""{"status":"success","data":{$flags}}""")
     })
 
     // the configured recording + alerting rules, in Prometheus's
@@ -1211,30 +1051,21 @@ object HttpServe {
           s"""{"status":"success","data":{"groups":[{"name":"graft",""" +
             s""""file":"","interval":${RemoteWrite.compactCheckIntervalMs / 1000},""" +
             s""""rules":[$rules]}]}}"""
-      respond(ex, 200, body.getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
+      json(ex, body)
     })
 
     // the current alert set, evaluated on demand at the data edge
     server.createContext("/api/v1/alerts", (ex: HttpExchange) => guarded(ex) {
-      val items = storeSamples() match {
-        case None => Nil
-        case Some(_) =>
-          Alerting.currentAlerts(spark, storePath, HttpServe.alertRules)
-            .map { case (ls, state, t) =>
-              val labelsJson = ls.map { kv =>
-                val i = kv.indexOf('=')
-                s""""${esc(kv.take(i))}":"${esc(kv.drop(i + 1))}""""
-              }.mkString(",")
-              val at = java.time.Instant.ofEpochSecond(t).toString
-              s"""{"labels":{$labelsJson},"annotations":{},""" +
-                s""""state":"$state","activeAt":"$at","value":"1"}"""
-            }
+      val alerts = SamplesStore.readLocked(storePath, RemoteWrite.stalePath(storePath)) {
+        if (!SamplesStore.exists(spark, storePath)) Nil
+        else Alerting.currentAlerts(spark, storePath, HttpServe.alertRules)
       }
-      respond(ex, 200,
-        s"""{"status":"success","data":{"alerts":[${items.mkString(",")}]}}"""
-          .getBytes(UTF_8),
-        Seq("Content-Type" -> "application/json"))
+      val items = alerts.map { case (ls, state, t) =>
+        val at = java.time.Instant.ofEpochSecond(t).toString
+        s"""{"labels":${labelsJson(None, ls)},"annotations":{},""" +
+          s""""state":"$state","activeAt":"$at","value":"1"}"""
+      }
+      json(ex, s"""{"status":"success","data":{"alerts":[${items.mkString(",")}]}}""")
     })
 
     server.createContext("/api/v1/query_range", (ex: HttpExchange) => guarded(ex) {
@@ -1245,8 +1076,7 @@ object HttpServe {
       // own context above; anything else under this prefix that is
       // not exactly /api/v1/query is an unknown path.
       if (ex.getRequestURI.getPath != "/api/v1/query")
-        respond(ex, 404, "graft".getBytes(UTF_8),
-          Seq("Content-Type" -> "text/plain; charset=utf-8"))
+        text(ex, 404, "graft")
       else servePromQuery(ex, rangeMode = false)
     })
 
@@ -1299,12 +1129,7 @@ object HttpServe {
     * partition) while `end` compares raw (`date <= end` already keeps
     * exactly the days that begin inside the bound) — together the
     * kept partitions are precisely those overlapping [start, end].
-    * `query` is the URI's decoded query string. */
-  private[graft] def timeBounded(df: org.apache.spark.sql.DataFrame,
-                                 query: String): org.apache.spark.sql.DataFrame =
-    timeBoundedParams(df, Option(query).getOrElse("").split("&").iterator
-      .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toSeq)
-
+    * `params` are the request's decoded parameters. */
   private[graft] def timeBoundedParams(df: org.apache.spark.sql.DataFrame,
       params: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col

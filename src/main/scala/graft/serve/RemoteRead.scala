@@ -11,7 +11,8 @@ import graft.ingest.PromRemoteCodec.{PromLabel, PromSample, PromTimeSeries}
 import graft.operators.SeriesRead
 
 /** The end-to-end remote-read serving loop — the reference's whole
-  * `/read` contract in one function (reference: main.go:55-74 +
+  * `/read` contract in one function, [[serveWith]], behind both
+  * response types (reference: main.go:55-74 +
   * main.go:145-155, internal/clickhouse/read.go:15-103): ReadRequest
   * blob in → matcher compile → distributed query → ReadResponse blob
   * out, one QueryResult per request query, in request order.
@@ -115,19 +116,27 @@ object RemoteRead {
           m.contains("does not exist") || m.contains("PATH_NOT_FOUND"))
     }
 
-  /** ReadRequest blob → ReadResponse blob over the canonical samples
-    * DataFrame. ignoreLabel/ignoreHints mirror the reference's
-    * -read.ignore-label / -read.ignore-hints flags. An over-limit
-    * query errors like the reference's HTTP-500 path and increments
-    * read_errors.
+  /** A remote-read response type's encoder: each request query's
+    * gathered series, in request order, become the response body. */
+  private[serve] type Encoder = Iterator[Seq[PromTimeSeries]] => Array[Byte]
+
+  /** ReadRequest blob → snappy ReadResponse blob (the SAMPLES response
+    * type, remote-read's protocol default) over the canonical samples
+    * DataFrame: one QueryResult per request query, each series carrying
+    * its float samples (stale markers merged in) and its native
+    * histograms (prompb TimeSeries field 4). ignoreLabel/ignoreHints
+    * mirror the reference's -read.ignore-label / -read.ignore-hints
+    * flags. An over-limit query errors like the reference's HTTP-500
+    * path and increments read_errors.
     *
     * `samples` is by-name and re-evaluated on each retry: a transient
-    * miss (per `transientClassifier`: a planned file GC'd mid-scan) retries
-    * up to `transientRetries` times with a fresh store resolution —
-    * the first attempt's DataFrame plans a stale snapshot's files, so
-    * re-running it could never succeed. Counters fire once per request
-    * regardless of attempts (read_requests on the first resolution,
-    * read_errors only when the request ultimately fails). */
+    * miss (per `transientClassifier`: a planned file GC'd mid-scan)
+    * retries up to `transientRetries` times with a fresh store
+    * resolution — the first attempt's DataFrame plans a stale
+    * snapshot's files, so re-running it could never succeed. Counters
+    * fire once per request regardless of attempts (read_requests on
+    * the first resolution, read_errors only when the request
+    * ultimately fails). */
   def serve(samples: => DataFrame, readRequestBlob: Array[Byte],
             ignoreLabel: Option[String] = Some("remote=clickhouse"),
             ignoreHints: Boolean = false,
@@ -136,69 +145,69 @@ object RemoteRead {
             transientClassifier: Throwable => Boolean = isTransientMiss,
             rollupRoute: Option[RollupStore.Ladder] = None,
             histStore: Option[DataFrame] = None,
-            staleStore: Option[DataFrame] = None): Array[Byte] = {
+            staleStore: Option[DataFrame] = None): Array[Byte] =
+    serveWith(samplesEncoder)(samples, readRequestBlob, ignoreLabel,
+      ignoreHints, maxSamples, transientRetries, transientClassifier,
+      rollupRoute, histStore, staleStore)
+
+  /** Prometheus's streamed remote read caps each frame at ~1 MiB
+    * (storage/remote maxBytesInFrame) — a year-long series must
+    * never materialize one giant message; consecutive frames repeat
+    * the series labels and the client merges them. */
+  val DefaultMaxFrameBytes: Int = 1 << 20
+
+  /** STREAMED_XOR_CHUNKS serving (remote-read response type 1): the
+    * SAME query loop, budget and retry as [[serve]], answered as
+    * framed ChunkedReadResponse messages — one frame per series (split
+    * at `maxFrameBytes`), so a huge range read streams in bounded
+    * pieces instead of one whole-response allocation (the protocol's
+    * purpose; Prometheus itself requests this type when the server
+    * advertises it), with each series' samples Gorilla-XOR-compressed
+    * (~1.37 bytes/sample typical vs 16 raw). Returns the concatenated
+    * frames; the HTTP shim sends them under
+    * `application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse`,
+    * NOT snappy-wrapped (the framing replaces body compression).
+    *
+    * Native-histogram series from the `_hist` sibling (`histStore`)
+    * stream as HISTOGRAM / FLOAT_HISTOGRAM chunks (HistChunks documents
+    * the body layout and its remaining deviations), while their classic
+    * `_bucket`/`_sum`/`_count` expansion in the MAIN store keeps serving
+    * the float surface under its own names. Series stream in one
+    * (metric, labels)-sorted order per query, and a series carrying both
+    * encodings interleaves its XOR and histogram chunks by start time
+    * under one label set — the sorted, contiguous, time-ordered stream
+    * Prometheus's client merge expects. */
+  def serveChunked(samples: => DataFrame, readRequestBlob: Array[Byte],
+                   ignoreLabel: Option[String] = Some("remote=clickhouse"),
+                   ignoreHints: Boolean = false,
+                   maxSamples: Long = DefaultMaxReadSamples,
+                   transientRetries: Int = 0,
+                   transientClassifier: Throwable => Boolean = isTransientMiss,
+                   rollupRoute: Option[RollupStore.Ladder] = None,
+                   histStore: Option[DataFrame] = None,
+                   staleStore: Option[DataFrame] = None,
+                   maxFrameBytes: Int = DefaultMaxFrameBytes): Array[Byte] =
+    serveWith(chunksEncoder(maxFrameBytes))(samples, readRequestBlob,
+      ignoreLabel, ignoreHints, maxSamples, transientRetries,
+      transientClassifier, rollupRoute, histStore, staleStore)
+
+  /** The one remote-read loop behind both response types: decode the
+    * request, [[gather]] each query, and hand the results to `encode`
+    * — retried whole on a transient miss, counted once per request. */
+  private[serve] def serveWith(encode: Encoder)(
+      samples: => DataFrame, readRequestBlob: Array[Byte],
+      ignoreLabel: Option[String], ignoreHints: Boolean, maxSamples: Long,
+      transientRetries: Int, transientClassifier: Throwable => Boolean,
+      rollupRoute: Option[RollupStore.Ladder], histStore: Option[DataFrame],
+      staleStore: Option[DataFrame]): Array[Byte] = {
     var m: OpsMetrics = null
     var queries: Seq[graft.operators.ReadQuery] = null
     def attempt(): Array[Byte] = {
       val df = samples // re-resolves the store's snapshot each try
       if (m == null) { m = OpsMetrics(df.sparkSession); m.readRequests.add(1) }
       if (queries == null) queries = PromRemoteCodec.decodeReadRequest(readRequestBlob)
-      PromRemoteCodec.encodeReadResponseResults(
-        queries.map { q =>
-          val floats0 = runQuery(df, q, ignoreLabel, ignoreHints, maxSamples,
-            rollupRoute)
-          // SHARED budget: the stale and histogram legs spend what
-          // the float leg left, so maxSamples bounds the WHOLE
-          // response — not a per-leg allowance that could compound
-          // to ~3x the nominal limit
-          val afterFloats =
-            maxSamples - floats0.iterator.map(_.samples.size.toLong).sum
-          // staleness markers pass through VERBATIM (querier-side
-          // contract: the receiving engine interprets them) — merged
-          // into each matched series' sample stream in time order,
-          // re-materialized with the exact StaleNaN payload
-          val floats = staleStore match {
-            case None => floats0
-            case Some(ss) =>
-              mergeStaleSamples(floats0,
-                runStaleQuery(ss, q, ignoreLabel, afterFloats))
-          }
-          histStore match {
-            case None => floats
-            case Some(hs) =>
-              // native-histogram series answer on the SAMPLES response
-              // type too (prompb TimeSeries field 4), merged into the
-              // result's (metric, labels) order; a series carrying
-              // both float samples and histograms folds into ONE
-              // TimeSeries, Prometheus's own response shape
-              val afterStale =
-                maxSamples - floats.iterator.map(_.samples.size.toLong).sum
-              val hists = runHistQuery(hs, q, ignoreLabel, afterStale)
-              if (hists.isEmpty) floats
-              else {
-                val byKey = scala.collection.mutable.LinkedHashMap
-                  .empty[Seq[PromRemoteCodec.PromLabel], PromTimeSeries]
-                floats.foreach(ts => byKey.update(ts.labels, ts))
-                hists.foreach { case (labels, hs0) =>
-                  byKey.get(labels) match {
-                    case Some(ts) =>
-                      byKey.update(labels, ts.copy(histograms = hs0))
-                    case None =>
-                      byKey.update(labels,
-                        PromTimeSeries(labels, Nil, histograms = hs0))
-                  }
-                }
-                byKey.values.toSeq
-                  .sortBy { ts =>
-                    val metric = ts.labels.find(_.name == "__name__")
-                      .map(_.value).getOrElse("")
-                    val rest = ts.labels.filter(_.name != "__name__")
-                      .map(l => s"${l.name}=${l.value}")
-                    (metric, rest)
-                  }(SeriesKeyOrdering)
-              }
-          }
-        })
+      encode(queries.iterator.map(q => gather(df, q, ignoreLabel, ignoreHints,
+        maxSamples, rollupRoute, histStore, staleStore)))
     }
     try {
       var left = transientRetries + 1
@@ -217,147 +226,106 @@ object RemoteRead {
     }
   }
 
-  /** STREAMED_XOR_CHUNKS serving (remote-read response type 1): the
-    * SAME distributed query loop as [[serve]], answered as framed
-    * ChunkedReadResponse messages — one frame per series, so a huge
-    * range read streams in bounded pieces instead of one
-    * whole-response allocation (the protocol's purpose; Prometheus
-    * itself requests this type when the server advertises it), with
-    * each series' samples Gorilla-XOR-compressed (~1.37 bytes/sample
-    * typical vs 16 raw). Returns the concatenated frames; the HTTP
-    * shim streams them under
-    * `application/x-streamed-protobuf; proto=prometheus.ChunkedReadResponse`,
-    * NOT snappy-wrapped (the framing replaces body compression).
-    *
-    * Native-histogram series stream as HISTOGRAM / FLOAT_HISTOGRAM
-    * chunks when the store keeps its `_hist` sibling (`histStore`):
-    * the classic `_bucket`/`_sum`/`_count` expansion in the MAIN
-    * store keeps serving the whole float surface (it answers under
-    * its own expanded names), while a selector matching the native
-    * series' OWN name answers from the sibling's raw prompb bytes,
-    * re-framed as histogram chunks (HistChunks documents the body
-    * layout and its remaining deviations). ONE globally
-    * (metric, labels)-sorted emission per query: native series merge
-    * into the float series' order (a series carrying both
-    * interleaves its XOR and histogram chunks by start time under
-    * one label set) — the sorted, contiguous stream Prometheus's
-    * client merge expects. Callers without a sibling store
-    * (histStore = None) keep the float-only behavior. */
-  /** Prometheus's streamed remote read caps each frame at ~1 MiB
-    * (storage/remote maxBytesInFrame) — a year-long series must
-    * never materialize one giant message; consecutive frames repeat
-    * the series labels and the client merges them. */
-  val DefaultMaxFrameBytes: Int = 1 << 20
+  /** The SAMPLES response type: one snappy ReadResponse. */
+  private[serve] val samplesEncoder: Encoder =
+    results => PromRemoteCodec.encodeReadResponseResults(results.toSeq)
 
-  def serveChunked(samples: DataFrame, readRequestBlob: Array[Byte],
-                   ignoreLabel: Option[String] = Some("remote=clickhouse"),
-                   ignoreHints: Boolean = false,
-                   maxSamples: Long = DefaultMaxReadSamples,
-                   rollupRoute: Option[RollupStore.Ladder] = None,
-                   histStore: Option[DataFrame] = None,
-                   maxFrameBytes: Int = DefaultMaxFrameBytes,
-                   staleStore: Option[DataFrame] = None): Array[Byte] = {
-    val m = OpsMetrics(samples.sparkSession)
-    m.readRequests.add(1)
-    try {
-      val queries = PromRemoteCodec.decodeReadRequest(readRequestBlob)
-      val out = new java.io.ByteArrayOutputStream()
-      queries.zipWithIndex.foreach { case (q, qi) =>
-        // ONE globally (metric, labels)-sorted emission per query:
-        // Prometheus's streaming remote-read client merges frames
-        // expecting sorted, CONTIGUOUS series — appending all
-        // histogram frames after all float frames would hand it a
-        // native series whose labels sort before a float series out
-        // of order. A series carrying both float samples and native
-        // histograms interleaves its XOR and histogram chunks by
-        // minTimeMs — one globally time-ordered chunk stream per
-        // series, the monotone order a streamed client's merge
-        // assumes.
-        val floats0 = runQuery(samples, q, ignoreLabel, ignoreHints,
-          maxSamples, rollupRoute)
-        // SHARED budget across the three legs (see serve): maxSamples
-        // bounds the whole response, not each leg independently
-        val afterFloats =
-          maxSamples - floats0.iterator.map(_.samples.size.toLong).sum
-        // stale markers join the float stream BEFORE XOR encoding —
-        // Gorilla is bit-level, so the exact StaleNaN payload rides
-        // a chunk like any other value
-        val floats = staleStore match {
-          case None => floats0
-          case Some(ss) =>
-            mergeStaleSamples(floats0,
-              runStaleQuery(ss, q, ignoreLabel, afterFloats))
+  /** The STREAMED_XOR_CHUNKS response type: per series, its float
+    * samples as Gorilla-XOR chunks and its histograms as histogram
+    * chunks, interleaved by start time (stable: XOR before histogram
+    * on an exact tie), split into ≤maxFrameBytes frames that each
+    * repeat the series labels (Prometheus's own streamer) — split
+    * frames stay contiguous, so sortedness survives. Each query's
+    * frames are written before the next query is gathered. */
+  private[serve] def chunksEncoder(maxFrameBytes: Int): Encoder = { results =>
+    val out = new java.io.ByteArrayOutputStream()
+    results.zipWithIndex.foreach { case (series, qi) =>
+      series.foreach { ts =>
+        val labels = ts.labels
+        val xor = Gorilla.encodeChunks(ts.samples.map(_.timestampMs).toArray,
+          ts.samples.map(_.value).toArray).map { case (mn, mx, d) =>
+          PromRemoteCodec.PromChunk(mn, mx, d)
         }
-        val floatSeries = floats.map { ts =>
-          val t = ts.samples.map(_.timestampMs).toArray
-          val v = ts.samples.map(_.value).toArray
-          val chunks = Gorilla.encodeChunks(t, v).map { case (mn, mx, d) =>
-            PromRemoteCodec.PromChunk(mn, mx, d)
-          }
-          (ts.labels, chunks)
+        val chunks =
+          if (ts.histograms.isEmpty) xor
+          else (xor ++ HistChunks.encodeChunks(ts.histograms)).sortBy(_.minTimeMs)
+        // EVERY frame re-encodes the series label set, so the budget
+        // starts from the labels' encoded size — a series with a large
+        // label set must not overshoot the target by exactly that
+        // many bytes per frame
+        val labelBytes = labels.map { l =>
+          // tag+len for the Label message, tag+len per string
+          l.name.getBytes(java.nio.charset.StandardCharsets.UTF_8).length +
+            l.value.getBytes(java.nio.charset.StandardCharsets.UTF_8).length + 8
+        }.sum + 16
+        var batch = Vector.empty[PromRemoteCodec.PromChunk]
+        var batchBytes = labelBytes
+        def emit(): Unit = if (batch.nonEmpty) {
+          val msg = PromRemoteCodec.encodeChunkedReadResponse(
+            Seq(PromRemoteCodec.PromChunkedSeries(labels, batch)), qi.toLong)
+          val frame = PromRemoteCodec.chunkedFrame(msg)
+          out.write(frame, 0, frame.length)
+          batch = Vector.empty
+          batchBytes = labelBytes
         }
-        val histSeries = histStore.toSeq.flatMap { hs =>
-          val afterStale =
-            maxSamples - floats.iterator.map(_.samples.size.toLong).sum
-          runHistQuery(hs, q, ignoreLabel, afterStale).map {
-            case (labels, hists) => (labels, HistChunks.encodeChunks(hists))
-          }
+        chunks.foreach { c =>
+          // ~24 B of per-chunk framing (bounds, type, tags)
+          val sz = c.data.length + 24
+          if (batch.nonEmpty && batchBytes + sz > maxFrameBytes) emit()
+          batch :+= c
+          batchBytes += sz
         }
-        val byKey = scala.collection.mutable.LinkedHashMap
-          .empty[Seq[PromRemoteCodec.PromLabel], Seq[PromRemoteCodec.PromChunk]]
-        floatSeries.foreach { case (ls, cs) => byKey.update(ls, cs) }
-        histSeries.foreach { case (ls, cs) =>
-          // interleave by chunk start time (stable: XOR before
-          // histogram on an exact tie) — chunks within one series
-          // must be globally time-ordered, not per-encoding
-          byKey.update(ls,
-            (byKey.getOrElse(ls, Nil) ++ cs).sortBy(_.minTimeMs))
-        }
-        byKey.toSeq
-          .sortBy { case (ls, _) =>
-            val metric = ls.find(_.name == "__name__").map(_.value).getOrElse("")
-            val rest = ls.filter(_.name != "__name__")
-              .map(l => s"${l.name}=${l.value}")
-            (metric, rest)
-          }(SeriesKeyOrdering)
-          .foreach { case (labels, chunks) =>
-            // split a long series into ≤maxFrameBytes frames (label
-            // repetition per frame, like Prometheus's own streamer);
-            // sortedness is preserved — split frames stay contiguous.
-            // EVERY frame re-encodes the series label set, so the
-            // budget starts from the labels' encoded size — a series
-            // with a large label set must not overshoot the target
-            // by exactly that many bytes per frame.
-            val labelBytes = labels.map { l =>
-              // tag+len for the Label message, tag+len per string
-              l.name.getBytes(java.nio.charset.StandardCharsets.UTF_8).length +
-                l.value.getBytes(java.nio.charset.StandardCharsets.UTF_8).length + 8
-            }.sum + 16
-            var batch = Vector.empty[PromRemoteCodec.PromChunk]
-            var batchBytes = labelBytes
-            def emit(): Unit = if (batch.nonEmpty) {
-              val msg = PromRemoteCodec.encodeChunkedReadResponse(
-                Seq(PromRemoteCodec.PromChunkedSeries(labels, batch)),
-                qi.toLong)
-              val frame = PromRemoteCodec.chunkedFrame(msg)
-              out.write(frame, 0, frame.length)
-              batch = Vector.empty
-              batchBytes = labelBytes
-            }
-            chunks.foreach { c =>
-              // ~24 B of per-chunk framing (bounds, type, tags)
-              val sz = c.data.length + 24
-              if (batch.nonEmpty && batchBytes + sz > maxFrameBytes) emit()
-              batch :+= c
-              batchBytes += sz
-            }
-            emit()
-          }
+        emit()
       }
-      out.toByteArray
-    } catch {
-      case e: Throwable => m.readErrors.add(1); throw e
     }
+    out.toByteArray
+  }
+
+  /** One query's answer, shared by both response types: every matched
+    * series in the reference's ORDER BY (metric_name, labels), with its
+    * float samples, its staleness markers and its native histograms.
+    * The three legs share ONE maxSamples budget — the stale and
+    * histogram legs spend what the legs before them left — so the
+    * limit bounds the WHOLE response, not a per-leg allowance that
+    * could compound to ~3x the nominal limit.
+    *
+    * Staleness markers pass through VERBATIM (the querier-side
+    * contract: the receiving engine interprets them): each becomes a
+    * sample with the EXACT StaleNaN payload at its second, in time
+    * order, and a second already carrying a float sample keeps the
+    * sample (the read model is one value per series-second); a
+    * marker-only series answers as its own series. Gorilla is
+    * bit-level, so the payload rides an XOR chunk like any other
+    * value. A series carrying both float samples and native
+    * histograms folds into ONE series, Prometheus's own response
+    * shape. */
+  private def gather(samples: DataFrame, q: graft.operators.ReadQuery,
+                     ignoreLabel: Option[String], ignoreHints: Boolean,
+                     maxSamples: Long, rollupRoute: Option[RollupStore.Ladder],
+                     histStore: Option[DataFrame],
+                     staleStore: Option[DataFrame]): Seq[PromTimeSeries] = {
+    val series = scala.collection.mutable.HashMap
+      .empty[(String, Seq[String]), PromTimeSeries]
+    def at(key: (String, Seq[String])) =
+      series.getOrElse(key, PromTimeSeries(promLabelsOf(key._1, key._2), Nil))
+    def left = maxSamples - series.valuesIterator.map(_.samples.size.toLong).sum
+    series ++= runQuery(samples, q, ignoreLabel, ignoreHints, maxSamples, rollupRoute)
+    staleStore.foreach { ss =>
+      val staleV = PromRemoteCodec.staleNaN
+      runStaleQuery(ss, q, ignoreLabel, left).foreach { case (key, secs) =>
+        val cur = at(key)
+        val occupied = cur.samples.map(_.timestampMs / 1000L).toSet
+        val marks = secs.filterNot(occupied).map(s => PromSample(staleV, s * 1000L))
+        if (marks.nonEmpty)
+          series.update(key, cur.copy(samples = (cur.samples ++ marks).sortBy(_.timestampMs)))
+      }
+    }
+    histStore.foreach { hs =>
+      runHistQuery(hs, q, ignoreLabel, left).foreach { case (key, hists) =>
+        series.update(key, at(key).copy(histograms = hists))
+      }
+    }
+    series.toSeq.sortBy(_._1)(SeriesKeyOrdering).map(_._2)
   }
 
   /** Split a stored "k=v" label list into prompb labels with the
@@ -380,7 +348,7 @@ object RemoteRead {
                             q: graft.operators.ReadQuery,
                             ignoreLabel: Option[String],
                             maxSamples: Long)
-      : Seq[(Seq[PromLabel], Seq[Long])] = {
+      : Seq[((String, Seq[String]), Seq[Long])] = {
     val bounded = graft.operators.SeriesRead.timeBound(
       staleStore, q.startMs, q.endMs)
       .filter(graft.operators.Matchers.compile(q.matchers, ignoreLabel))
@@ -398,43 +366,8 @@ object RemoteRead {
           s"query matches more than $maxSamples stale markers, exceeds response limit")
       buf += (((r.getString(0), r.getSeq[String](1).toSeq), r.getLong(2)))
     }
-    buf.result()
-      .groupBy(_._1).toSeq
-      .map { case ((metric, labels), ts) =>
-        (promLabelsOf(metric, labels), ts.map(_._2).sorted)
-      }
-  }
-
-  /** Insert stale markers into the float series stream: each marker
-    * becomes a sample with the EXACT StaleNaN payload at its second,
-    * in time order; a second already carrying a float sample keeps
-    * the sample (the read model is one value per series-second).
-    * Marker-only series (the query window covers only the death)
-    * emit as their own series. Output re-sorted in the response's
-    * series order. */
-  private def mergeStaleSamples(floats: Seq[PromTimeSeries],
-                                marks: Seq[(Seq[PromLabel], Seq[Long])])
-      : Seq[PromTimeSeries] = {
-    if (marks.isEmpty) return floats
-    val staleV = PromRemoteCodec.staleNaN
-    val byKey = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[PromLabel], PromTimeSeries]
-    floats.foreach(ts => byKey.update(ts.labels, ts))
-    marks.foreach { case (labels, tsSecs) =>
-      val cur = byKey.getOrElse(labels, PromTimeSeries(labels, Nil))
-      val occupied = cur.samples.map(_.timestampMs / 1000L).toSet
-      val markerSamples = tsSecs.filterNot(occupied)
-        .map(s => PromSample(staleV, s * 1000L))
-      if (markerSamples.nonEmpty)
-        byKey.update(labels, cur.copy(samples =
-          (cur.samples ++ markerSamples).sortBy(_.timestampMs)))
-    }
-    byKey.values.toSeq.sortBy { ts =>
-      val metric = ts.labels.find(_.name == "__name__").map(_.value).getOrElse("")
-      val rest = ts.labels.filter(_.name != "__name__")
-        .map(l => s"${l.name}=${l.value}")
-      (metric, rest)
-    }(SeriesKeyOrdering)
+    buf.result().groupBy(_._1).toSeq
+      .map { case (key, ts) => (key, ts.map(_._2).sorted) }
   }
 
   /** One query against the native-histogram sibling: matcher filter
@@ -450,14 +383,14 @@ object RemoteRead {
     * Bounded by the same maxSamples guard. */
   private def runHistQuery(histStore: DataFrame, q: graft.operators.ReadQuery,
                            ignoreLabel: Option[String], maxSamples: Long)
-      : Seq[(Seq[PromRemoteCodec.PromLabel], Seq[graft.ingest.NativeHistogram.Hist])] = {
+      : Seq[((String, Seq[String]), Seq[graft.ingest.NativeHistogram.Hist])] = {
     val bounded = graft.operators.SeriesRead.timeBound(
       histStore, q.startMs, q.endMs)
       .filter(graft.operators.Matchers.compile(q.matchers, ignoreLabel))
       .select(col("metric"), col("labels"), col("ts_us"), col("hist"),
         org.apache.spark.sql.functions.input_file_name().as("_file"))
     val it = bounded.toLocalIterator().asScala
-    val bySeries = scala.collection.mutable.LinkedHashMap
+    val bySeries = scala.collection.mutable.HashMap
       .empty[(String, Seq[String]), scala.collection.mutable.TreeMap[Long, (String, Array[Byte])]]
     var points = 0L
     while (it.hasNext) {
@@ -476,25 +409,20 @@ object RemoteRead {
       if (perTs.get(ts).forall { case (f, _) => file >= f })
         perTs.update(ts, (file, r.getAs[Array[Byte]](3)))
     }
-    bySeries.toSeq
-      .sortBy { case ((metric, labels), _) => (metric, labels) }(SeriesKeyOrdering)
-      .map { case ((metric, labels), samples0) =>
-        val promLabels = promLabelsOf(metric, labels)
-        (promLabels, samples0.values.toSeq.map { case (_, b) =>
-          graft.ingest.NativeHistogram.decode(graft.ingest.ProtoWire.reader(b))
-        })
-      }
+    bySeries.toSeq.map { case (key, perTs) =>
+      (key, perTs.values.toSeq.map { case (_, b) =>
+        graft.ingest.NativeHistogram.decode(graft.ingest.ProtoWire.reader(b))
+      })
+    }
   }
 
-  /** One query: distributed select+assemble computed once, streamed to
-    * the driver with the size guard applied as rows arrive. Series are
-    * sorted on the driver (bounded by the guard) in the reference's
-    * ORDER BY (metric_name, labels) — byte-wise UTF-8, matching the
-    * engine's binary string ordering. */
+  /** One query's float leg: distributed select+assemble computed once,
+    * streamed to the driver with the size guard applied as rows
+    * arrive; second buckets go back to wire milliseconds. */
   private def runQuery(samples: DataFrame, q: graft.operators.ReadQuery,
                        ignoreLabel: Option[String], ignoreHints: Boolean,
-                       maxSamples: Long,
-                       rollupRoute: Option[RollupStore.Ladder]): Seq[PromTimeSeries] = {
+                       maxSamples: Long, rollupRoute: Option[RollupStore.Ladder])
+      : Seq[((String, Seq[String]), PromTimeSeries)] = {
     val sel = rollupRoute
       .flatMap(rollupSelect(_, q, samples, ignoreLabel, ignoreHints)) match {
       case Some(routed) =>
@@ -503,19 +431,20 @@ object RemoteRead {
       case None => SeriesRead.selectKeyed(samples, q, ignoreLabel, ignoreHints)
     }
     val it = SeriesRead.assemble(sel).toLocalIterator().asScala
-    val out = Vector.newBuilder[(String, Seq[String], PromTimeSeries)]
+    val out = Vector.newBuilder[((String, Seq[String]), PromTimeSeries)]
     var points = 0L
     while (it.hasNext) {
       val row = it.next()
-      points += row.getSeq[Row](2).size
+      val pts = row.getSeq[Row](2)
+      points += pts.size
       if (points > maxSamples)
         throw new ResponseTooLargeException(
           s"query matches more than $maxSamples samples, exceeds response limit")
-      out += ((row.getString(0), row.getSeq[String](1), rowToSeries(row)))
+      val (metric, labels) = (row.getString(0), row.getSeq[String](1).toSeq)
+      out += (((metric, labels), PromTimeSeries(promLabelsOf(metric, labels),
+        pts.map(p => PromSample(p.getDouble(1), p.getLong(0) * 1000L)))))
     }
     out.result()
-      .sortBy { case (metric, labels, _) => (metric, labels) }(SeriesKeyOrdering)
-      .map(_._3)
   }
 
   /** (metric, labels) ordering over UTF-8 bytes — identical to the
@@ -542,19 +471,4 @@ object RemoteRead {
         if (c != 0) c else labelsOrd.compare(a._2, b._2)
       }
     }
-
-  /** One assembled (metric, labels, points) row → prompb.TimeSeries:
-    * __name__ rejoins the sorted "k=v" labels, second buckets go back
-    * to wire milliseconds. */
-  private def rowToSeries(row: Row): PromTimeSeries = {
-    val metric = row.getString(0)
-    val labels = row.getSeq[String](1)
-    val points = row.getSeq[Row](2)
-    val promLabels = PromLabel("__name__", metric) +: labels.map { kv =>
-      val i = kv.indexOf('=')
-      PromLabel(kv.substring(0, i), kv.substring(i + 1))
-    }
-    PromTimeSeries(promLabels,
-      points.map(p => PromSample(p.getDouble(1), p.getLong(0) * 1000L)))
-  }
 }

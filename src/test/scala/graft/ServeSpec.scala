@@ -1632,6 +1632,55 @@ class ServeSpec extends SparkSpecBase {
     } finally srv.stop()
   }
 
+  test("every malformed serving input answers the exact 400 bad_data body") {
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    def bad(msg: String) =
+      s"""{"status":"error","errorType":"bad_data","error":"$msg"}"""
+    // a parse error's message is the parser's own text, JSON-escaped
+    def parseErr(q: String) = bad(graft.serve.PromQL.parse(q).swap.toOption.get
+      .flatMap {
+        case '"' => "\\\""
+        case '\\' => "\\\\"
+        case c if c < ' ' => f"\\u${c.toInt}%04x"
+        case c => c.toString
+      })
+    val m = enc("match[]")
+    val badQ = enc("sum(rate(")
+    val store = tmpStore("errsurface")
+    val srv = HttpServe.start(spark, store)
+    try {
+      val base = s"http://localhost:${srv.port}"
+      // a live store: /labels validates limit= only once it reads one
+      assert(post(s"$base/write", writeBlob("err_m", 1))._1 === 200)
+      val cases = Seq(
+        s"/api/v1/labels?$m=" + enc("{bad") -> bad("match[] malformed"),
+        s"/api/v1/label/k/values?$m=" + enc("{bad") -> bad("match[] malformed"),
+        "/api/v1/series" -> bad("match[] missing or malformed"),
+        s"/api/v1/series?$m=" + enc("{bad") -> bad("match[] missing or malformed"),
+        "/federate" -> bad("match[] missing or malformed"),
+        s"/federate?$m=" + enc("{bad") -> bad("match[] missing or malformed"),
+        s"/federate?$m=err_m&time=yesterday" -> bad("time parameter malformed"),
+        "/api/v1/format_query" -> bad("query parameter is required"),
+        s"/api/v1/format_query?query=$badQ" -> parseErr("sum(rate("),
+        "/api/v1/parse_query" -> bad("query parameter is required"),
+        s"/api/v1/parse_query?query=$badQ" -> parseErr("sum(rate("),
+        "/api/v1/query_exemplars" -> bad("query parameter is required"),
+        s"/api/v1/query_exemplars?query=$badQ" -> parseErr("sum(rate("),
+        "/api/v1/query" -> bad("missing query parameter"),
+        s"/api/v1/query?query=$badQ" -> parseErr("sum(rate("),
+        "/api/v1/query_range?start=0&end=60&step=15" -> bad("missing query parameter"),
+        s"/api/v1/query_range?query=$badQ&start=0&end=60&step=15" -> parseErr("sum(rate("),
+        "/api/v1/labels?limit=x" -> bad("limit must be a non-negative integer: x"),
+        "/api/v1/labels?limit=-1" -> bad("limit must be a non-negative integer: -1"),
+        "/api/v1/metadata?limit=x" -> bad("limit must be a non-negative integer: x"),
+        "/api/v1/metadata?limit_per_metric=-2" ->
+          bad("limit_per_metric must be a non-negative integer: -2"))
+      cases.foreach { case (path, want) =>
+        assert(get(base + path) === ((400, want)), path)
+      }
+    } finally srv.stop()
+  }
+
   test("/api/v1/series unions match[] selectors with the read path's matcher semantics") {
     def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     val m = enc("match[]")
@@ -1686,14 +1735,15 @@ class ServeSpec extends SparkSpecBase {
     // an RFC3339-bounded query must PRUNE the scan, not just filter —
     // the pre-fix behavior silently dropped the bound and read all of
     // history for Grafana's default time format
-    val bounded = HttpServe.timeBounded(df,
-      "start=2024-01-05T00:00:00Z&end=2024-01-05T23:59:59Z")
+    val bounded = HttpServe.timeBoundedParams(df,
+      Seq("start" -> "2024-01-05T00:00:00Z", "end" -> "2024-01-05T23:59:59Z"))
     assert(scannedPartitions(bounded) === 1,
       "RFC3339 bounds must prune the scan to the queried day partition")
     assert(bounded.select("metric").distinct().collect().map(_.getString(0)).toSeq
       === Seq(s"m_$day0"))
     // numeric and RFC3339 spellings of the same bound agree
-    val numeric = HttpServe.timeBounded(df, s"start=$day0&end=${day0 + 86399}")
+    val numeric = HttpServe.timeBoundedParams(df,
+      Seq("start" -> day0.toString, "end" -> (day0 + 86399).toString))
     assert(numeric.collect().toSeq === bounded.collect().toSeq)
     // the parser itself: floats, zone offsets, garbage
     assert(HttpServe.parseTimeParam("1704412800.5") === Some(1704412800L))
@@ -1819,6 +1869,15 @@ class ServeSpec extends SparkSpecBase {
       assert(b.contains(""""k":"v2""""), b)
       assert(b.contains(""""state":"firing""""), b)
       assert(!b.contains(""""k":"v0""""), b) // value 0 is under threshold
+      // the store probe opens no snapshot: a request opens only what
+      // the rule evaluation reads (the store, once for the data edge
+      // and once for the rule; no stale sibling here)
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!RemoteWrite.maintenanceIdle && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      val opens0 = OpsMetrics(spark).storeOpens.value
+      assert(get(s"$base/api/v1/alerts") === ((c, b)))
+      assert(OpsMetrics(spark).storeOpens.value - opens0 === 2L)
       // the rules listing includes the alerting rule with its for
       val (rc, rb) = get(s"$base/api/v1/rules")
       assert(rc === 200 && rb.contains(""""type":"alerting""""), rb)
@@ -2220,6 +2279,31 @@ class ServeSpec extends SparkSpecBase {
         blob, transientRetries = 3))
     assert(once === 1)
 
+    // the STREAMED_XOR_CHUNKS response type shares the one retry: the
+    // same flaky resolution recovers, counted once, and answers the
+    // same series the direct chunked read does
+    val cblob = PromRemoteCodec.encodeReadRequestWithTypes(Seq(
+      ReadQuery(0L, 0L, Seq(Matchers.eq("__name__", "view")))), Seq(1))
+    calls = 0
+    val (creqs0, cerrs0) = (m.readRequests.value, m.readErrors.value)
+    val cresp = RemoteRead.serveChunked(flaky, cblob, transientRetries = 3)
+    assert(calls === 3 && cresp.nonEmpty)
+    assert(cresp.sameElements(RemoteRead.serveChunked(real, cblob)),
+      "a recovered chunked read answers the same frames")
+    assert(m.readRequests.value === creqs0 + 2 && m.readErrors.value === cerrs0)
+    // … exhausts its budget on a persistent miss …
+    always = 0
+    intercept[java.io.FileNotFoundException](
+      RemoteRead.serveChunked({ always += 1; throw new java.io.FileNotFoundException("gone") },
+        cblob, transientRetries = 2))
+    assert(always === 3)
+    // … and never retries any other failure
+    once = 0
+    intercept[RuntimeException](
+      RemoteRead.serveChunked({ once += 1; throw new RuntimeException("bad matcher") },
+        cblob, transientRetries = 3))
+    assert(once === 1)
+
     // fresh-server fast-fail: a store that was never written is absent
     assert(!graft.ingest.SamplesStore.exists(spark, "/tmp/graft_test/never_written_store"))
   }
@@ -2531,6 +2615,13 @@ class ServeSpec extends SparkSpecBase {
       assert(post(s"$base/write", blob)._1 === 200)
       assert(get(s"$base/federate?$m=$s0&time=1704412900")._2 ===
         "fed_metric{k=\"v0\"} 9.5 1704412860000\n")
+      // form-POST parameters work too (the one request-parameter
+      // parser every API endpoint shares)
+      val (pc, pb, _) = post(s"$base/federate",
+        s"$m=$s0&time=1704412900".getBytes("UTF-8"),
+        Some("application/x-www-form-urlencoded"))
+      assert((pc, new String(pb, "UTF-8")) ===
+        ((200, "fed_metric{k=\"v0\"} 9.5 1704412860000\n")))
       // a scrape time past the lookback sees nothing — 200, empty
       assert(get(s"$base/federate?$m=$s0&time=1704413200") ===
         ((200, "")))

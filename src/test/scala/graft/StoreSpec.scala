@@ -490,6 +490,47 @@ class StoreSpec extends SparkSpecBase {
     assert(sortedWithinFiles(path))
   }
 
+  test("a multi-store read lock defers a grace-0 expiry of each sibling it holds") {
+    import spark.implicits._
+    val main = "/tmp/graft_test/store_sibling_lock"
+    val sib = main + "_stale"
+    val fs = new org.apache.hadoop.fs.Path(main)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(main, sib).foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
+    val day0 = 1704412800L
+    def rowsFor(off: Int) =
+      (0 until 10).map(i => (day0 * 1000000L + (off * 10 + i) * 1000000L,
+        "m", Seq("k=v"), i.toDouble)).toDF("ts_us", "metric", "labels", "value")
+    SamplesStore.append(rowsFor(0), main)
+    for (i <- 0 until 3) SamplesStore.append(rowsFor(i), sib)
+    // fold the sibling's day: its three superseded files stay on disk
+    // until an expiry reclaims them
+    assert(SamplesStore.compactFragmentedDays(spark, sib, maxFilesPerDay = 2) == 1)
+    val dayDir = new File(sib, s"date=$day0")
+    def physicalFiles: Int = dayDir.listFiles().count(_.getName.endsWith(".parquet"))
+    assert(physicalFiles == 4)
+
+    // a serving request's shape: main store first, then the sibling,
+    // both held while the holder is parked on a latch
+    val ready = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val holder = new Thread(() => SamplesStore.readLocked(main, sib) {
+      ready.countDown()
+      release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    }, "spec-sibling-reader")
+    holder.start()
+    try {
+      assert(ready.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(SamplesStore.expireSnapshots(spark, sib, graceMs = 0L) == 0,
+        "a grace-0 expiry of a read-locked sibling must defer")
+      assert(physicalFiles == 4, "a deferred expiry deletes no data file")
+    } finally { release.countDown(); holder.join(60000) }
+    // released: the same expiry reclaims the superseded files
+    assert(SamplesStore.expireSnapshots(spark, sib, graceMs = 0L) == 3)
+    assert(physicalFiles == 1)
+    assert(SamplesStore.read(spark, sib).count() == 30)
+  }
+
   test("time travel: a pinned generation reads its exact corpus across append+compact+delete") {
     val path = "/tmp/graft_test/store_timetravel"
     val fs = new org.apache.hadoop.fs.Path(path)
