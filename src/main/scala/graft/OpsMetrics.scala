@@ -46,6 +46,9 @@ final class OpsMetrics private (sc: SparkContext) {
   val storeOpens: LongAccumulator     = sc.longAccumulator("store_opens_total")
   val storeSchemaInferences: LongAccumulator =
     sc.longAccumulator("store_schema_inferences_total")
+  // opens small enough to plan as one partition (SamplesStore.open)
+  val storeOnePartitionOpens: LongAccumulator =
+    sc.longAccumulator("store_one_partition_opens_total")
   // reads answered from the materialized rollup instead of raw
   // samples (only ever when shape-exact AND manifest-fresh) — the
   // dashboard signal that the recording-rule path is actually used
@@ -93,6 +96,9 @@ final class OpsMetrics private (sc: SparkContext) {
     ("store_schema_inferences_total",
       "store opens that ran a parquet schema-inference job (snapshot schema unknown)",
       storeSchemaInferences),
+    ("store_one_partition_opens_total",
+      "store opens small enough to plan the request as one partition with no exchange",
+      storeOnePartitionOpens),
     ("reads_from_rollup_total", "read queries served from the materialized rollup", readsFromRollup),
     ("write_dropped_histogram_samples_total",
       "remote-write native-histogram samples dropped (float64 store holds no histograms)",

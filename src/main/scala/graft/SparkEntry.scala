@@ -3357,7 +3357,7 @@ object SparkEntry {
     // at the NEXT 7200 boundary (grid origin is 7200-aligned)
     "store_rollup_serve_sum" ->
       s"""$dedupCte
-         |SELECT metric, array_to_string(labels, ',') AS labels_str,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str,
          |       t_sec // 7200 * 7200 + 7200 AS t,
          |       CAST(floor(sum(value) * 100 + 0.5) AS BIGINT) * 10000 AS v_e6
          |FROM deduped
@@ -3368,7 +3368,7 @@ object SparkEntry {
     // the ladder-ROUTED eval answers the same raw recompute
     "store_rollup_serve_ladder_route" ->
       s"""$dedupCte
-         |SELECT metric, array_to_string(labels, ',') AS labels_str,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str,
          |       t_sec // 7200 * 7200 + 7200 AS t,
          |       CAST(floor(sum(value) * 100 + 0.5) AS BIGINT) * 10000 AS v_e6
          |FROM deduped
@@ -3391,7 +3391,7 @@ object SparkEntry {
          |    AND t_sec >= $WinStartSec AND t_sec < $WinEndSec
          |  GROUP BY 1, 2, 3
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |       CAST(floor(greatest(
          |         CAST(syy_e4 AS DOUBLE) / (CAST(n AS DOUBLE) * 10000.0) -
          |         (CAST(sy_e2 AS DOUBLE) / (CAST(n AS DOUBLE) * 100.0)) *
@@ -5806,7 +5806,7 @@ object SparkEntry {
          |    ON s.t_sec >= $WinStartSec + g.k * 86400 - 86400
          |   AND s.t_sec <  $WinStartSec + g.k * 86400
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |       CAST(floor(sum(value) * 100 + 0.5) AS BIGINT) * 10000 AS v_e6
          |FROM j GROUP BY 1, 2, 3""".stripMargin,
 
@@ -5897,7 +5897,7 @@ object SparkEntry {
          |  WHERE s.metric = 'click'
          |    AND s.t_sec >= ${WinStartSec - 86400} AND s.t_sec <= ${WinEndSec - 1}
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |       CAST(floor(quantile_cont(value, 0.9) * 1000000 + 0.5) AS BIGINT) AS v_e6
          |FROM j GROUP BY 1, 2, 3""".stripMargin,
 
@@ -6023,7 +6023,7 @@ object SparkEntry {
       s"""$dedupCte, grid AS (
          |  SELECT $WinStartSec + unnest(range(0, 16)) * 86400 AS t
          |)
-         |SELECT DISTINCT s.metric,
+         |SELECT DISTINCT CAST(NULL AS VARCHAR) AS metric,
          |       array_to_string(s.labels, ',') AS labels_str, g.t,
          |       CAST(1000000 AS BIGINT) AS v_e6
          |FROM deduped s JOIN grid g
@@ -6055,22 +6055,22 @@ object SparkEntry {
          |           ORDER BY t_sec DESC) AS rlast
          |  FROM j
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |       CAST(t_sec AS BIGINT) * 1000000 AS v_e6, 'max' AS fn
          |FROM rk WHERE rmax = 1
          |UNION ALL
-         |SELECT metric, array_to_string(labels, ','), t,
+         |SELECT CAST(NULL AS VARCHAR), array_to_string(labels, ','), t,
          |       CAST(t_sec AS BIGINT) * 1000000, 'min'
          |FROM rk WHERE rmin = 1
          |UNION ALL
-         |SELECT metric, array_to_string(labels, ','), t,
+         |SELECT CAST(NULL AS VARCHAR), array_to_string(labels, ','), t,
          |       CAST(t_sec AS BIGINT) * 1000000, 'last'
          |FROM rk WHERE rlast = 1""".stripMargin,
 
     // the quoted selector answers exactly what the ident form would
     "promql_selector_quoted" ->
       s"""${promqlSotCte("click")}
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t, v_e6
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t, v_e6
          |FROM sot WHERE list_contains(labels, 'user=1')""".stripMargin,
 
     // the first family: earliest sample per [t-1d, t) window — value
@@ -6097,7 +6097,7 @@ object SparkEntry {
          |       'first' AS fn
          |FROM agg
          |UNION ALL
-         |SELECT metric, array_to_string(labels, ','), t,
+         |SELECT CAST(NULL AS VARCHAR), array_to_string(labels, ','), t,
          |       CAST(tf AS BIGINT) * 1000000, 'tsfirst'
          |FROM agg""".stripMargin,
 
@@ -6178,7 +6178,7 @@ object SparkEntry {
          |             array_to_string(labels, ',') ASC) AS rk
          |  FROM sot
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t, v_e6
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t, v_e6
          |FROM rk WHERE rk <= 2""".stripMargin,
 
     // the k first series by (metric, labels) order per step
@@ -6190,15 +6190,15 @@ object SparkEntry {
          |    ORDER BY metric ASC, array_to_string(labels, ',') ASC) AS rk
          |  FROM sot
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t, v_e6
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t, v_e6
          |FROM rk WHERE rk <= 5""".stripMargin,
 
     // the identical md5-derived identity-hash band the evaluator uses
     "promql_limit_ratio" ->
       s"""${promqlSotCte("click")}
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t, v_e6
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t, v_e6
          |FROM sot
-         |WHERE (('0x' || substr(md5(metric || '|' || array_to_string(labels, ',')), 1, 15))::BIGINT
+         |WHERE (('0x' || substr(md5('|' || array_to_string(labels, ',')), 1, 15))::BIGINT
          |       % 1000000007) % 1000000 < 500000""".stripMargin,
 
     // MAD in pure integers: e2 snap → ×10 median (even-n midpoint
@@ -6219,7 +6219,7 @@ object SparkEntry {
          |  SELECT *, list_sort(list_transform(vs, x -> abs(x * 10 - med))) AS devs
          |  FROM m2
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |       (CASE WHEN n % 2 = 1 THEN devs[(n + 1) // 2] * 10
          |             ELSE (devs[n // 2] + devs[n // 2 + 1]) * 5 END) * 100 AS v_e6
          |FROM m3""".stripMargin,
@@ -6321,7 +6321,7 @@ object SparkEntry {
     // is exact in both
     "promql_label_join" ->
       s"""${promqlSotCte("click")}
-         |SELECT metric,
+         |SELECT CAST(NULL AS VARCHAR) AS metric,
          |       array_to_string(list_sort(list_concat(labels,
          |         ['id=' ||
          |          coalesce(substr(list_filter(labels, l -> l LIKE 'k=%')[1], 3), '')

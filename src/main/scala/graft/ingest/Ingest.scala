@@ -335,6 +335,8 @@ object SamplesStore {
                                  header: Vector[String] = Vector.empty,
                                  dataSchema: Option[StructType] = None) {
     lazy val files: Vector[String] = sizes.keys.toVector.sorted
+    /** Total bytes of the live data files. */
+    lazy val bytes: Long = sizes.values.sum
     /** day name (`date=X`) → its live files. */
     lazy val byDay: Map[String, Vector[String]] = files.groupBy(f => f.takeWhile(_ != '/'))
     /** This snapshot narrowed to `keep`, a subset of its files. */
@@ -931,9 +933,20 @@ object SamplesStore {
     * Planning makes no listing or stat call and runs no Spark job; a
     * file whose columns disagree with the schema fails the scan loudly.
     * An empty snapshot opens as [[emptySamples]]. Counted on `/metrics`
-    * as `store_opens_total`. */
+    * as `store_opens_total`.
+    *
+    * A snapshot that fits one query task (`Width.of` at
+    * [[graft.Width.QueryTarget]] says 1) opens as `coalesce(1)`: a
+    * one-partition scan satisfies every distribution, so the request's
+    * aggregates, joins and distincts plan no exchange and the whole
+    * request runs as ONE job of one task — at request scale Spark's
+    * fixed cost per job and per exchange, not the rows, is the price.
+    * [[graft.operators.SeriesRead.seriesMax]] recognises this shape
+    * and drops its series exchange too. A larger snapshot opens
+    * unchanged. Counted as `store_one_partition_opens_total`. */
   private[graft] def open(spark: SparkSession, path: String, snap: StoreSnapshot): DataFrame = {
-    graft.OpsMetrics(spark).storeOpens.add(1)
+    val metrics = graft.OpsMetrics(spark)
+    metrics.storeOpens.add(1)
     if (snap.files.isEmpty) emptySamples(spark)
     else {
       val schema = withSchema(spark, path, snap).dataSchema.get
@@ -954,8 +967,14 @@ object SamplesStore {
       }
       val index = new InMemoryFileIndex(spark, statuses.map(_.getPath), Map.empty, None,
         listed, Some(partitions))
-      spark.baseRelationToDataFrame(HadoopFsRelation(index, partitions.partitionColumns,
-        schema, None, new ParquetFileFormat, Map.empty)(spark))
+      val scan = spark.baseRelationToDataFrame(HadoopFsRelation(index,
+        partitions.partitionColumns, schema, None, new ParquetFileFormat, Map.empty)(spark))
+      val cap = spark.sessionState.conf.numShufflePartitions
+      if (graft.Width.of(Some(snap.bytes), graft.Width.QueryTarget, 1, cap) > 1) scan
+      else {
+        metrics.storeOnePartitionOpens.add(1)
+        scan.coalesce(1)
+      }
     }
   }
 
@@ -1134,7 +1153,7 @@ object SamplesStore {
       // sort so the dynamic-partition writer splits cleanly per day.
       val recorded = snap.only(targets.values.flatten)
       val nTasks = math.max(targets.size.toLong,
-        (recorded.sizes.values.sum + targetFileBytes - 1) / targetFileBytes).toInt
+        (recorded.bytes + targetFileBytes - 1) / targetFileBytes).toInt
       val staging = stage(
         open(spark, path, recorded)
           .withColumn("date", expr("ts_us DIV 1000000 DIV 86400 * 86400"))

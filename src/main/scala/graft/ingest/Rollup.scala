@@ -203,7 +203,7 @@ object RollupStore {
         else {
           val srcSlice = srcSnap.only(changed.keys.flatMap(src(_)))
           val rows = build(SamplesStore.open(spark, srcPath, srcSlice),
-            srcSlice.sizes.values.sum)
+            srcSlice.bytes)
           (SamplesStore.publish(fs, SamplesStore.stage(rows
             .repartition(col("date"))
             .sortWithinPartitions(col("date"), col("metric"), col("labels"), col("bucket")),

@@ -1,6 +1,10 @@
 package graft.operators
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, RebalancePartitions,
+  Repartition, RepartitionOperation, UnaryNode}
 import org.apache.spark.sql.functions._
 
 /** A Prometheus remote-read query against the samples store —
@@ -91,11 +95,16 @@ object SeriesRead {
 
   /** The series-keyed dedup kernel shared by every read shape
     * (/read's [[selectKeyed]], the ts_* family's
-    * RangeOps.dedupPerSecond and PromQL's windowed evaluation):
-    * hash-partition raw rows BY SERIES, then one per-(series, t_sec)
-    * max of `value` named `out`. The caller derives `t_sec`. Every
+    * RangeOps.dedupPerSecond and PromQL's windowed evaluation): one
+    * per-(series, t_sec) max of `value` named `out`, over raw rows
+    * hash-partitioned BY SERIES. The caller derives `t_sec`. Every
     * downstream consumer keys on a superset of (metric, labels), so
     * the whole pipeline plans this ONE exchange.
+    *
+    * When the input is provably one partition ([[onePartition]]: a
+    * small snapshot's open, reached through unary operators only) the
+    * exchange is dropped — one partition already holds every series
+    * whole, so the kernel and every consumer above it plan none.
     *
     * The raw-row exchange trades away the map-side partial aggregate:
     * measured at 16M rows with one series carrying 50% of rows AND 4×
@@ -105,10 +114,29 @@ object SeriesRead {
     * duplication factor ≤2 of a normal remote-write corpus it is the
     * faster shape (one exchange of ~the same bytes instead of two). */
   def seriesMax(keyed: DataFrame, out: String): DataFrame =
-    keyed
-      .repartition(col("metric"), col("labels"))
+    (if (onePartition(keyed)) keyed else keyed.repartition(col("metric"), col("labels")))
       .groupBy(col("metric"), col("labels"), col("t_sec"))
       .agg(max(col("value")).as(out))
+
+  /** True when `df` is provably ONE partition: its logical plan,
+    * walked down through unary operators that are not repartitions,
+    * reaches a one-partition coalesce (`Repartition(1, shuffle =
+    * false)`, what SamplesStore.open returns for a small snapshot).
+    * Any other repartition, any leaf, and any multi-child node — a
+    * Union (RemoteRead's rollup interior plus raw edges is three
+    * partitions however small each store is), a Join — counts as many
+    * partitions. A unary operator above a one-partition child stays
+    * one partition: its required distribution is already satisfied,
+    * so Spark inserts no exchange there. */
+  private[graft] def onePartition(df: DataFrame): Boolean = {
+    @tailrec def walk(p: LogicalPlan): Boolean = p match {
+      case Repartition(1, false, _) => true
+      case _: RepartitionOperation | _: RebalancePartitions => false
+      case u: UnaryNode => walk(u.child)
+      case _ => false
+    }
+    walk(df.queryExecution.analyzed)
+  }
 
   /** selectKeyed with the series key flattened to scalar labels_str —
     * the oracle-facing row shape of the reference's read SQL. */

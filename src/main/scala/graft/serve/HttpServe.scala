@@ -397,6 +397,7 @@ object HttpServe {
       // semantics: label names of the MATCHING series only)
       val params = reqParams(ex)
       val pred = matchParam(params, required = false)
+      val limit = effLimit(params)
       val names = SamplesStore.readLocked(storePath) {
         storeSamples().map(timeBoundedParams(_, params))
           .map(df => pred.fold(df)(df.filter)).map { df =>
@@ -410,12 +411,12 @@ object HttpServe {
           val marker = df.limit(1).select(lit("\u0000").as("label_name"))
           val rows = graft.operators.Meta.labelNames(df)
             .select("label_name").union(marker)
-            .orderBy("label_name").limit(effLimit(params) + 1)
+            .orderBy("label_name").limit(limit + 1)
             .collect().map(_.getString(0)).toSeq
           val keys = rows.filterNot(_ == "\u0000")
           // limit caps the FINAL list, __name__ included
           if (rows.size > keys.size)
-            ("__name__" +: keys).take(effLimit(params))
+            ("__name__" +: keys).take(limit)
           else Seq.empty
         }.getOrElse(Seq.empty)
       }
@@ -432,6 +433,7 @@ object HttpServe {
         // series (Prometheus semantics)
         val params = reqParams(ex)
         val pred = matchParam(params, required = false)
+        val limit = effLimit(params)
         val values = SamplesStore.readLocked(storePath) {
           storeSamples().map(timeBoundedParams(_, params))
             .map(df => pred.fold(df)(df.filter)).map { df =>
@@ -441,7 +443,7 @@ object HttpServe {
               .select(org.apache.spark.sql.functions.col("label_value").as("v"))
             // limit INSIDE the plan (ordered for determinism) — the
             // cap must bound the collect, not trim after it
-            domain.orderBy("v").limit(effLimit(params))
+            domain.orderBy("v").limit(limit)
               .collect().map(_.getString(0)).toSeq
           }.getOrElse(Seq.empty)
         }
@@ -456,6 +458,7 @@ object HttpServe {
     server.createContext("/api/v1/series", (ex: HttpExchange) => guarded(ex) {
       val params = reqParams(ex)
       val pred = matchParam(params, required = true).get
+      val limit = effLimit(params)
       val series = SamplesStore.readLocked(storePath) {
         storeSamples().map(timeBoundedParams(_, params)).map { df =>
           df.filter(pred)
@@ -463,7 +466,7 @@ object HttpServe {
                     org.apache.spark.sql.functions.col("labels"))
             .distinct()
             .orderBy("metric", "labels")
-            .limit(effLimit(params))
+            .limit(limit)
             .collect()
             .map(r => (r.getString(0), r.getSeq[String](1).toSeq)).toSeq
         }.getOrElse(Seq.empty)
@@ -583,10 +586,14 @@ object HttpServe {
           _ <- Either.cond((e - s) / st + 1 <= MaxQuerySteps, (),
             s"exceeded maximum resolution of $MaxQuerySteps points per series")
         } yield (s, e, st)
-        else {
-          val t = params.get("time").flatMap(parseTimeParam)
-            .getOrElse(System.currentTimeMillis() / 1000L)
-          Right((t, t, 1L))
+        else params.get("time") match {
+          // absent → wall clock; present but unparsable → 400, as on
+          // /federate: a typo'd historical query must not answer live
+          case None =>
+            val t = System.currentTimeMillis() / 1000L
+            Right((t, t, 1L))
+          case Some(v) => parseTimeParam(v).map(t => (t, t, 1L))
+            .toRight("time parameter malformed")
         }
       (for { e <- exprE; b <- boundsE; l <- limitE; _ <- timeoutE }
         yield (e, b, l)) match {

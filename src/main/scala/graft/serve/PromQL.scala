@@ -1640,6 +1640,16 @@ object PromQL {
       .newInstance(rebuilt: _*).asInstanceOf[Expr])
   }
 
+  /** A `*_over_time` result without `__name__`, as Prometheus answers
+    * it: every function of the family drops the metric name except
+    * `last_over_time` and `first_over_time`, which answer one of the
+    * window's own samples unchanged (the engine's `dropName`
+    * exemption). Other range functions pass through as they are. */
+  private def overTimeName(fn: String, df: DataFrame): DataFrame =
+    if (fn.endsWith("_over_time") && fn != "last_over_time" && fn != "first_over_time")
+      df.withColumn("metric", lit(null).cast("string"))
+    else df
+
   /** Subtrees occurring more than once in `root` (structural
     * equality) — the set worth persisting. Descent stops at a
     * repeated subtree: its children are computed once inside the
@@ -1699,16 +1709,16 @@ object PromQL {
           stepSec, d, ignoreLabel, horizonSec = None), off)
       case RangeCall("mad_over_time", ms, d, off) =>
         // never rollup-served: MAD doesn't decompose into partials
-        unshift(madRange(samples, ms, startSec - off, endSec - off,
-          stepSec, d, ignoreLabel), off)
+        overTimeName("mad_over_time", unshift(madRange(samples, ms,
+          startSec - off, endSec - off, stepSec, d, ignoreLabel), off))
       case RangeCall(fn, ms, d, off) =>
         val (s0, e0) = (startSec - off, endSec - off)
-        unshift(
+        overTimeName(fn, unshift(
           rollup.flatMap(rangeFromRollup(samples.sparkSession, _, fn, ms,
               s0, e0, stepSec, d, ignoreLabel))
             .getOrElse(rangeRaw(samples, fn, ms, s0, e0, stepSec, d,
               ignoreLabel)),
-          off)
+          off))
       case Predict(ms, d, h, off) =>
         unshift(regressionRange(samples, ms, startSec - off, endSec - off,
           stepSec, d, ignoreLabel, horizonSec = Some(h)), off)
@@ -1727,8 +1737,8 @@ object PromQL {
       case LabelJoin(child, dst, sep, srcs) =>
         labelJoinProject(rec(child, startSec, endSec), dst, sep, srcs)
       case Quantile(q, ms, d, off) =>
-        unshift(quantileRange(samples, q, ms, startSec - off, endSec - off,
-          stepSec, d, ignoreLabel), off)
+        overTimeName("quantile_over_time", unshift(quantileRange(samples, q,
+          ms, startSec - off, endSec - off, stepSec, d, ignoreLabel), off))
       case Agg(op, by, child, without, param) =>
         aggregate(rec(child, startSec, endSec), op, by, without, param)
       case CountValues(dst, child, by, without) =>
@@ -1772,10 +1782,10 @@ object PromQL {
           rec(Instant(LabelMatcher(MatcherType.Eq, Matchers.NameLabel,
             "target_info") +: sel), startSec, endSec), sel)
       case Subquery(fn, child, d, res, off) =>
-        unshift(subqueryRange(samples, fn, child, startSec - off,
-          endSec - off, stepSec, d, res, lookbackSec, rollup, ignoreLabel,
-          stale),
-          off)
+        overTimeName(fn, unshift(subqueryRange(samples, fn, child,
+          startSec - off, endSec - off, stepSec, d, res, lookbackSec, rollup,
+          ignoreLabel, stale),
+          off))
       case LabelReplace(child, dst, rep, src, re) =>
         labelReplaceProject(rec(child, startSec, endSec), dst, rep, src, re)
       case Cmp(op, bool, ScalarLit(k), right, _) =>
@@ -1929,8 +1939,17 @@ object PromQL {
     val rj = r.withColumn("jk", matchKey(m))
       .select(col("jk"), col("t"), col("v_e6").as("rv"),
         col("labels").as("r_labels"))
-    lj.join(rj, Seq("jk", "t"))
+    lj.join(hashBuild(lj, rj), Seq("jk", "t"))
   }
+
+  /** `r` hinted as a shuffled hash join's build side when both join
+    * inputs are one partition ([[SeriesRead.onePartition]]: a small
+    * snapshot's open): the join then runs inside that one task with
+    * no exchange. Left to its size rule, Spark broadcasts the small
+    * side, and a broadcast is a Spark job of its own per request. */
+  private def hashBuild(l: DataFrame, r: DataFrame): DataFrame =
+    if (SeriesRead.onePartition(l) && SeriesRead.onePartition(r)) r.hint("shuffle_hash")
+    else r
 
   /** vector∘vector: inner equi-join on the matched label set + step
     * (full set by default — the result drops the metric name like
@@ -2320,9 +2339,9 @@ object PromQL {
     val rk = r.withColumn("jk", matchKey(m)).select("jk", "t").distinct()
     op match {
       case "and" =>
-        lk.join(rk, Seq("jk", "t"), "left_semi").select(cols: _*)
+        lk.join(hashBuild(lk, rk), Seq("jk", "t"), "left_semi").select(cols: _*)
       case "unless" =>
-        lk.join(rk, Seq("jk", "t"), "left_anti").select(cols: _*)
+        lk.join(hashBuild(lk, rk), Seq("jk", "t"), "left_anti").select(cols: _*)
       case "or" =>
         val lkeys = lk.select("jk", "t").distinct()
         l.select(cols: _*).unionByName(

@@ -139,22 +139,37 @@ class PlanSpec extends SparkSpecBase {
     assert(!p.contains("Join"), s"PromQL plan must be join-free:\n$p")
   }
 
-  test("series-keyed dedup: /read and rate() plan ONE (metric, labels) exchange below the dedup aggregate") {
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    spark.catalog.clearCache()
-    val path = "/tmp/graft_test/plan_dedup_kernel"
+  /** The sf0.001 samples written as a store at `path`, with padding
+    * that pushes the snapshot above Width.QueryTarget when `pad`. */
+  private def dedupStore(path: String, pad: Boolean): String = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    SamplesStore.write(Tables.samples(spark, Sf), path)
+    val rows = Tables.samples(spark, Sf)
+    SamplesStore.write(if (pad) padded(rows, 1704499200L) else rows, path)
+    path
+  }
+
+  private def executed(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+    case other => other
+  }
+
+  private val dedupQuery =
+    ReadQuery(1704499200000L, 1704585599000L, Seq(Matchers.eq("__name__", "click")))
+  private def rateClick(samples: org.apache.spark.sql.DataFrame) = graft.serve.PromQL.eval(
+    samples, graft.serve.PromQL.parse("rate(click[5m])").getOrElse(sys.error("must parse")),
+    1704499200L, 1704585600L, 900L)
+
+  test("series-keyed dedup: /read and rate() plan ONE (metric, labels) exchange below the dedup aggregate") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    spark.catalog.clearCache()
+    // above Width.QueryTarget: a one-partition open would plan none
+    val path = dedupStore("/tmp/graft_test/plan_dedup_kernel", pad = true)
     def exchangeKeys(df: org.apache.spark.sql.DataFrame, what: String): Seq[Seq[String]] = {
-      val p = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case other => other
-      }
+      val p = executed(df)
       // the per-(series, t_sec) max — the dedup kernel's aggregate
       val dedup = p.collect {
         case a: HashAggregateExec
@@ -167,13 +182,31 @@ class PlanSpec extends SparkSpecBase {
         case other => Seq(other.toString)
       }
     }
-    val q = ReadQuery(1704499200000L, 1704585599000L, Seq(Matchers.eq("__name__", "click")))
-    val read = SeriesRead.assemble(SeriesRead.selectKeyed(SamplesStore.read(spark, path), q))
+    val read = SeriesRead.assemble(SeriesRead.selectKeyed(SamplesStore.read(spark, path), dedupQuery))
     assert(exchangeKeys(read, "/read") == Seq(Seq("metric", "labels")))
-    val e = graft.serve.PromQL.parse("rate(click[5m])").getOrElse(sys.error("must parse"))
-    val rate = graft.serve.PromQL.eval(SamplesStore.read(spark, path), e,
-      1704499200L, 1704585600L, 900L)
-    assert(exchangeKeys(rate, "rate(click[5m])") == Seq(Seq("metric", "labels")))
+    assert(exchangeKeys(rateClick(SamplesStore.read(spark, path)), "rate(click[5m])") ==
+      Seq(Seq("metric", "labels")))
+  }
+
+  test("one-partition read: below QueryTarget /read and rate() plan no exchange at all") {
+    import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    spark.catalog.clearCache()
+    val path = dedupStore("/tmp/graft_test/plan_dedup_small", pad = false)
+    val samples = SamplesStore.read(spark, path)
+    assert(SeriesRead.onePartition(samples))
+    for ((what, df) <- Seq(
+        "/read" -> SeriesRead.assemble(SeriesRead.selectKeyed(samples, dedupQuery)),
+        "rate(click[5m])" -> rateClick(samples))) {
+      val p = executed(df)
+      assert(p.collect { case e: ShuffleExchangeExec => e }.isEmpty, s"$what:\n$p")
+      assert(p.collect { case c: CoalesceExec if c.numPartitions == 1 => c }.size == 1,
+        s"$what: one scan coalesced to one partition\n$p")
+      // the metric filter and day pruning still reach the scan
+      val scans = p.collect { case f: FileSourceScanExec => f }
+      assert(scans.size == 1 && scans.head.dataFilters.exists(_.sql.contains("'click'")) &&
+        scans.head.partitionFilters.nonEmpty, s"$what:\n$p")
+    }
   }
 
   test("read path scans only the columns it needs") {

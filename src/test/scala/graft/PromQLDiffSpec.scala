@@ -339,7 +339,7 @@ class PromQLDiffSpec extends SparkSpecBase {
       shift(pairRef(fn, ms, start - off, end - off, step, d), off)
 
     case RangeCall(fn, ms, d, off) =>
-      shift(rangeRef(fn, ms, start - off, end - off, step, d), off)
+      unnamed(fn, shift(rangeRef(fn, ms, start - off, end - off, step, d), off))
 
     case MathFn(fn, child, args) =>
       refEval(child, start, end, step).flatMap { case (_, ls, t, v) =>
@@ -374,7 +374,7 @@ class PromQLDiffSpec extends SparkSpecBase {
           .sortBy(_._3)
         v <- subRef(fn, pts.map(p => (p._3, p._4)))
       } yield (m, ls, t, v)
-      shift(out.toSet, off)
+      unnamed(fn, shift(out.toSet, off))
 
     case Sort(_, child) => refEval(child, start, end, step)
     case SortByLabel(_, child, _) => refEval(child, start, end, step)
@@ -605,6 +605,14 @@ class PromQLDiffSpec extends SparkSpecBase {
         .exists(x => x > t - Lookback && x <= t && x > last._1)
     } yield (metric, ls.mkString(","), t, e6(last._2))).toSet
   }
+
+  /** Prometheus drops `__name__` from every `*_over_time` result but
+    * last_over_time's and first_over_time's (they answer a sample of
+    * the window unchanged). */
+  private def unnamed(fn: String, rows: Set[R]): Set[R] =
+    if (fn.endsWith("_over_time") && fn != "last_over_time" && fn != "first_over_time")
+      rows.map { case (_, ls, t, v) => ("", ls, t, v) }
+    else rows
 
   private def rangeRef(fn: String, ms: Seq[LabelMatcher], start: Long,
                        end: Long, step: Long, d: Long): Set[R] = {

@@ -217,13 +217,42 @@ class PromQLSpec extends SparkSpecBase {
   test("range windows are left-closed [t-d, t): a sample AT t belongs to the next window") {
     val out = rows(PromQL.eval(tinySamples,
       parse("sum_over_time(m[60s])").toOption.get, T0 + 60, T0 + 120, 60L))
-    // window ending t0+60 = [t0, t0+60): 1.0 + 2.5 (the 4.0 AT t0+60 is out)
-    assert(out.contains(("m", "host=a,user=1", T0 + 60, 3500000L)))
+    // window ending t0+60 = [t0, t0+60): 1.0 + 2.5 (the 4.0 AT t0+60 is
+    // out); sum_over_time drops the metric name
+    assert(out.contains(("", "host=a,user=1", T0 + 60, 3500000L)))
     // window ending t0+120 = [t0+60, t0+120): 4.0 + 1.0
-    assert(out.contains(("m", "host=a,user=1", T0 + 120, 5000000L)))
-    assert(out.contains(("m", "host=b,user=2", T0 + 60, 20250000L))) // 10.0 + 10.25
+    assert(out.contains(("", "host=a,user=1", T0 + 120, 5000000L)))
+    assert(out.contains(("", "host=b,user=2", T0 + 60, 20250000L))) // 10.0 + 10.25
     // series b has nothing in [t0+60, t0+120) — no row, not a zero
     assert(!out.exists(r => r._2 == "host=b,user=2" && r._3 == T0 + 120))
+  }
+
+  // Prometheus drops __name__ from every *_over_time result except
+  // last_over_time and first_over_time, which answer one of the
+  // window's own samples unchanged — bare and over a subquery alike
+  private val overTimeNames = Seq(
+    "sum_over_time" -> false, "count_over_time" -> false, "avg_over_time" -> false,
+    "min_over_time" -> false, "max_over_time" -> false, "stddev_over_time" -> false,
+    "stdvar_over_time" -> false, "present_over_time" -> false, "mad_over_time" -> false,
+    "ts_of_first_over_time" -> false, "ts_of_last_over_time" -> false,
+    "ts_of_max_over_time" -> false, "ts_of_min_over_time" -> false,
+    "last_over_time" -> true, "first_over_time" -> true)
+  for ((fn, keeps) <- overTimeNames)
+    test(s"bare $fn ${if (keeps) "keeps" else "drops"} __name__") {
+      val out = rows(PromQL.eval(tinySamples, parse(s"$fn(m[60s])").toOption.get,
+        T0 + 60, T0 + 120, 60L))
+      assert(out.nonEmpty && out.forall(_._1 == (if (keeps) "m" else "")), out)
+    }
+  test("bare quantile_over_time drops __name__") {
+    val out = rows(PromQL.eval(tinySamples,
+      parse("quantile_over_time(0.5, m[60s])").toOption.get, T0 + 60, T0 + 120, 60L))
+    assert(out.nonEmpty && out.forall(_._1 == ""), out)
+  }
+  test("a *_over_time subquery follows the same __name__ rule") {
+    def names(q: String) = rows(PromQL.eval(tinySamples, parse(q).toOption.get,
+      T0 + 120, T0 + 120, 60L)).map(_._1)
+    assert(names("max_over_time(m[120s:30s])") === Set(""))
+    assert(names("last_over_time(m[120s:30s])") === Set("m"))
   }
 
   test("instant lookback is (t-L, t]: the latest sample at or before t") {
@@ -408,11 +437,11 @@ class PromQLSpec extends SparkSpecBase {
     val med = rows(PromQL.eval(tinySamples,
       parse("quantile_over_time(0.5, m[60s])").toOption.get,
       T0 + 60, T0 + 60, 60L))
-    assert(med.contains(("m", "host=a,user=1", T0 + 60, 1750000L)))
+    assert(med.contains(("", "host=a,user=1", T0 + 60, 1750000L)))
     val max = rows(PromQL.eval(tinySamples,
       parse("quantile_over_time(1, m[60s])").toOption.get,
       T0 + 60, T0 + 60, 60L))
-    assert(max.contains(("m", "host=a,user=1", T0 + 60, 2500000L)))
+    assert(max.contains(("", "host=a,user=1", T0 + 60, 2500000L)))
   }
 
   test("topk/bottomk rank per step with deterministic tie-breaks") {
@@ -432,9 +461,10 @@ class PromQLSpec extends SparkSpecBase {
       parse("sum_over_time(m[60s]) * 1 > 5").toOption.get, T0 + 60, T0 + 60, 60L))
     assert(filt === Set(("", "host=b,user=2", T0 + 60, 20250000L)))
     // without an arithmetic wrapper the metric name survives a filter
+    // (last_over_time keeps it: a = 2.5, b = 10.25)
     val keep = rows(PromQL.eval(tinySamples,
-      parse("sum_over_time(m[60s]) <= 5").toOption.get, T0 + 60, T0 + 60, 60L))
-    assert(keep === Set(("m", "host=a,user=1", T0 + 60, 3500000L)))
+      parse("last_over_time(m[60s]) <= 5").toOption.get, T0 + 60, T0 + 60, 60L))
+    assert(keep === Set(("m", "host=a,user=1", T0 + 60, 2500000L)))
     val bool = rows(PromQL.eval(tinySamples,
       parse("sum_over_time(m[60s]) > bool 5").toOption.get, T0 + 60, T0 + 60, 60L))
     assert(bool === Set(
@@ -460,8 +490,8 @@ class PromQLSpec extends SparkSpecBase {
       parse("sum_over_time(m{host=\"a\"}[60s]) or sum_over_time(m[60s])")
         .toOption.get, T0 + 60, T0 + 60, 60L))
     assert(or === Set(
-      ("m", "host=a,user=1", T0 + 60, 3500000L),
-      ("m", "host=b,user=2", T0 + 60, 20250000L)))
+      ("", "host=a,user=1", T0 + 60, 3500000L),
+      ("", "host=b,user=2", T0 + 60, 20250000L)))
   }
 
   test("math functions project per row on exact micro-units") {
@@ -710,11 +740,11 @@ class PromQLSpec extends SparkSpecBase {
     assert(PromQL.parse("""label_replace(x, "dst", "r", "src", "(")""").isLeft)
     // host=a → tier=ha (capture group), metric name kept
     val out = rows(PromQL.eval(tinySamples,
-      parse("""label_replace(sum_over_time(m[60s]), "tier", "h$1", "host", "([a-z])")""")
+      parse("""label_replace(last_over_time(m[60s]), "tier", "h$1", "host", "([a-z])")""")
         .toOption.get, T0 + 60, T0 + 60, 60L))
     assert(out === Set(
-      ("m", "host=a,tier=ha,user=1", T0 + 60, 3500000L),
-      ("m", "host=b,tier=hb,user=2", T0 + 60, 20250000L)))
+      ("m", "host=a,tier=ha,user=1", T0 + 60, 2500000L),
+      ("m", "host=b,tier=hb,user=2", T0 + 60, 10250000L)))
     // a non-matching regex leaves every row untouched
     val none = rows(PromQL.eval(tinySamples,
       parse("""label_replace(sum_over_time(m[60s]), "tier", "x", "host", "[0-9]+")""")
@@ -797,15 +827,15 @@ class PromQLSpec extends SparkSpecBase {
     // [t0, t0+60) for series a holds {1.0, 2.5}: variance 0.5625
     val sv = rows(PromQL.eval(tinySamples,
       parse("stdvar_over_time(m[60s])").toOption.get, T0 + 60, T0 + 60, 60L))
-    assert(sv.contains(("m", "host=a,user=1", T0 + 60, 562500L)))
+    assert(sv.contains(("", "host=a,user=1", T0 + 60, 562500L)))
     val pr = rows(PromQL.eval(tinySamples,
       parse("present_over_time(m[60s])").toOption.get, T0 + 60, T0 + 240, 60L))
     // present only where windows hold samples: both series at t0+60,
     // a at t0+120, nothing after
     assert(pr === Set(
-      ("m", "host=a,user=1", T0 + 60, 1000000L),
-      ("m", "host=b,user=2", T0 + 60, 1000000L),
-      ("m", "host=a,user=1", T0 + 120, 1000000L)))
+      ("", "host=a,user=1", T0 + 60, 1000000L),
+      ("", "host=b,user=2", T0 + 60, 1000000L),
+      ("", "host=a,user=1", T0 + 120, 1000000L)))
   }
 
   test("Prometheus 3.x quoted UTF-8 selectors parse, match, and round-trip") {
@@ -833,7 +863,7 @@ class PromQLSpec extends SparkSpecBase {
     assert(rows(PromQL.eval(corpus,
       parse("""sum_over_time({"http.req.total", "a.b"!="y"}[60s])""")
         .toOption.get, T0 + 60, T0 + 60, 60L))
-      === Set(("http.req.total", "a.b=x,host=a", T0 + 60, 2000000L)))
+      === Set(("", "a.b=x,host=a", T0 + 60, 2000000L)))
     // the canonical formatter quotes non-ident names and round-trips
     val e = parse("""sum_over_time({"http.req.total", "a.b"!="y"}[60s])""")
       .toOption.get
@@ -896,10 +926,10 @@ class PromQLSpec extends SparkSpecBase {
     }.toDF("ts_us", "metric", "labels", "value")
     val sv = rows(PromQL.eval(big,
       parse("stdvar_over_time(big[60s])").toOption.get, T0 + 60, T0 + 60, 60L))
-    assert(sv === Set(("big", "host=x", T0 + 60, 20250000L)))
+    assert(sv === Set(("", "host=x", T0 + 60, 20250000L)))
     val sd = rows(PromQL.eval(big,
       parse("stddev_over_time(big[60s])").toOption.get, T0 + 60, T0 + 60, 60L))
-    assert(sd === Set(("big", "host=x", T0 + 60, 4500000L)))
+    assert(sd === Set(("", "host=x", T0 + 60, 4500000L)))
   }
 
   test("negative offset shifts windows forward (Prometheus 3.x default-on)") {
@@ -908,8 +938,8 @@ class PromQLSpec extends SparkSpecBase {
     val fwd = rows(PromQL.eval(tinySamples,
       parse("sum_over_time(m[60s] offset -60s)").toOption.get, T0, T0, 60L))
     assert(fwd === Set(
-      ("m", "host=a,user=1", T0, 3500000L),
-      ("m", "host=b,user=2", T0, 20250000L)))
+      ("", "host=a,user=1", T0, 3500000L),
+      ("", "host=b,user=2", T0, 20250000L)))
     // the canonical formatter round-trips the sign
     val e = parse("sum_over_time(m[60s] offset -60s)").toOption.get
     assert(parse(PromQL.format(e)).toOption.contains(e))
@@ -923,9 +953,9 @@ class PromQLSpec extends SparkSpecBase {
     ).toDF("ts_us", "metric", "labels", "value"))
     def q(sel: String) = rows(PromQL.eval(world,
       parse(s"sum_over_time(m$sel[60s])").toOption.get, T0 + 60, T0 + 60, 60L))
-    val a = ("m", "host=a,user=1", T0 + 60, 3500000L)
-    val b = ("m", "host=b,user=2", T0 + 60, 20250000L)
-    val c = ("m", "host=c", T0 + 60, 7000000L)
+    val a = ("", "host=a,user=1", T0 + 60, 3500000L)
+    val b = ("", "host=b,user=2", T0 + 60, 20250000L)
+    val c = ("", "host=c", T0 + 60, 7000000L)
     // alternation stays inside the anchors: "1|b" is user∈{1,b} —
     // it may NOT match series b via a loose `b$` on its host label
     assert(q("""{user=~"1|b"}""") === Set(a))
@@ -944,18 +974,18 @@ class PromQLSpec extends SparkSpecBase {
     val mx = one("ts_of_max_over_time")
     // series a's max 4.0 sits at T0+60; b's max 10.25 at T0+45
     assert(mx === Set(
-      ("m", "host=a,user=1", T0 + 120, (T0 + 60) * 1000000L),
-      ("m", "host=b,user=2", T0 + 120, (T0 + 45) * 1000000L)))
+      ("", "host=a,user=1", T0 + 120, (T0 + 60) * 1000000L),
+      ("", "host=b,user=2", T0 + 120, (T0 + 45) * 1000000L)))
     // series a holds 1.0 at BOTH T0 and T0+95 — the value tie must
     // answer the LATEST sample (Prometheus's <= scan order)
     val mn = one("ts_of_min_over_time")
     assert(mn === Set(
-      ("m", "host=a,user=1", T0 + 120, (T0 + 95) * 1000000L),
-      ("m", "host=b,user=2", T0 + 120, T0 * 1000000L)))
+      ("", "host=a,user=1", T0 + 120, (T0 + 95) * 1000000L),
+      ("", "host=b,user=2", T0 + 120, T0 * 1000000L)))
     val lt = one("ts_of_last_over_time")
     assert(lt === Set(
-      ("m", "host=a,user=1", T0 + 120, (T0 + 95) * 1000000L),
-      ("m", "host=b,user=2", T0 + 120, (T0 + 45) * 1000000L)))
+      ("", "host=a,user=1", T0 + 120, (T0 + 95) * 1000000L),
+      ("", "host=b,user=2", T0 + 120, (T0 + 45) * 1000000L)))
   }
 
   test("count_values labels each exact value's decimal text with its count") {
@@ -1399,10 +1429,10 @@ class PromQLSpec extends SparkSpecBase {
     def sub(fn: String) = rows(PromQL.eval(tinySamples,
       parse(s"$fn(sum_over_time(m[60s])[120s:60s])").toOption.get,
       T0 + 180, T0 + 180, 60L))
-    // the metric name passes through, as for every subquery fn
-    assert(sub("rate") === Set(("m", "host=a,user=1", T0 + 180, 25000L)))
-    assert(sub("increase") === Set(("m", "host=a,user=1", T0 + 180, 1500000L)))
-    assert(sub("delta") === Set(("m", "host=a,user=1", T0 + 180, 1500000L)))
+    // rate passes its input's name through; sum_over_time has none
+    assert(sub("rate") === Set(("", "host=a,user=1", T0 + 180, 25000L)))
+    assert(sub("increase") === Set(("", "host=a,user=1", T0 + 180, 1500000L)))
+    assert(sub("delta") === Set(("", "host=a,user=1", T0 + 180, 1500000L)))
     // a decreasing inner pair drops from rate (the counter gate)
     // but answers its signed change through delta
     val dec = rows(PromQL.eval(tinySamples,
@@ -1485,25 +1515,25 @@ class PromQLSpec extends SparkSpecBase {
       parse("max_over_time(sum_over_time(m[60s])[120s:60s])").toOption.get,
       T0 + 120, T0 + 120, 120L))
     assert(mx === Set(
-      ("m", "host=a,user=1", T0 + 120, 3500000L),
-      ("m", "host=b,user=2", T0 + 120, 20250000L)))
+      ("", "host=a,user=1", T0 + 120, 3500000L),
+      ("", "host=b,user=2", T0 + 120, 20250000L)))
     // at t0+180 the window [t0+60, t0+180) holds t0+60 and t0+120:
     // a's max is max(3.5, 5.0), b's is its single point
     val mx2 = rows(PromQL.eval(tinySamples,
       parse("max_over_time(sum_over_time(m[60s])[120s:60s])").toOption.get,
       T0 + 180, T0 + 180, 120L))
     assert(mx2 === Set(
-      ("m", "host=a,user=1", T0 + 180, 5000000L),
-      ("m", "host=b,user=2", T0 + 180, 20250000L)))
+      ("", "host=a,user=1", T0 + 180, 5000000L),
+      ("", "host=b,user=2", T0 + 180, 20250000L)))
     // count/avg over the same inner points
     val cnt = rows(PromQL.eval(tinySamples,
       parse("count_over_time(sum_over_time(m[60s])[120s:60s])").toOption.get,
       T0 + 180, T0 + 180, 120L))
-    assert(cnt.contains(("m", "host=a,user=1", T0 + 180, 2000000L)))
+    assert(cnt.contains(("", "host=a,user=1", T0 + 180, 2000000L)))
     val avg = rows(PromQL.eval(tinySamples,
       parse("avg_over_time(sum_over_time(m[60s])[120s:60s])").toOption.get,
       T0 + 180, T0 + 180, 120L))
-    assert(avg.contains(("m", "host=a,user=1", T0 + 180, 4250000L)))
+    assert(avg.contains(("", "host=a,user=1", T0 + 180, 4250000L)))
   }
 
   test("recording rules append evaluator output as queryable first-class series") {
@@ -2319,18 +2349,18 @@ class PromQLSpec extends SparkSpecBase {
     val even = rows(PromQL.eval(tinySamples,
       parse("mad_over_time(m[120s])").toOption.get, T0 + 120, T0 + 120, 120L))
     assert(even === Set(
-      ("m", "host=a,user=1", T0 + 120, 750000L),
-      ("m", "host=b,user=2", T0 + 120, 125000L)))
+      ("", "host=a,user=1", T0 + 120, 750000L),
+      ("", "host=b,user=2", T0 + 120, 125000L)))
     // odd n: series a window [T0, T0+90) holds 1.0, 2.5, 4.0 →
     // median 2.5, deviations {1.5, 0, 1.5} → MAD 1.5
     val odd = rows(PromQL.eval(tinySamples,
       parse("mad_over_time(m[90s])").toOption.get, T0 + 90, T0 + 90, 90L))
-    assert(odd.contains(("m", "host=a,user=1", T0 + 90, 1500000L)))
+    assert(odd.contains(("", "host=a,user=1", T0 + 90, 1500000L)))
     // a single-point window has zero MAD: [T0+30, T0+45) holds only
     // the 2.5 sample
     val one = rows(PromQL.eval(tinySamples,
       parse("mad_over_time(m[15s])").toOption.get, T0 + 45, T0 + 45, 15L))
-    assert(one === Set(("m", "host=a,user=1", T0 + 45, 0L)))
+    assert(one === Set(("", "host=a,user=1", T0 + 45, 0L)))
   }
 
   test("unary minus negates vectors with Prometheus precedence") {
@@ -2379,12 +2409,12 @@ class PromQLSpec extends SparkSpecBase {
       parse("topk by (host) (1, sum_over_time(m[60s]))").toOption.get,
       T0 + 60, T0 + 60, 60L))
     assert(grouped === Set(
-      ("m", "host=a,user=1", T0 + 60, 3500000L),
-      ("m", "host=b,user=2", T0 + 60, 20250000L)))
+      ("", "host=a,user=1", T0 + 60, 3500000L),
+      ("", "host=b,user=2", T0 + 60, 20250000L)))
     val global = rows(PromQL.eval(tinySamples,
       parse("topk(1, sum_over_time(m[60s]))").toOption.get,
       T0 + 60, T0 + 60, 60L))
-    assert(global === Set(("m", "host=b,user=2", T0 + 60, 20250000L)))
+    assert(global === Set(("", "host=b,user=2", T0 + 60, 20250000L)))
     // suffix grouping parses too; limitk accepts grouping the same way
     assert(parse("bottomk(1, m) by (host)").isRight)
     assert(parse("limitk by (host) (1, m)").isRight)
@@ -2400,9 +2430,9 @@ class PromQLSpec extends SparkSpecBase {
     // host=a,user=1 sorts before host=b,user=2 — with the metric
     // name preserved (a filter, not a transform)
     val k1 = rows(PromQL.eval(tinySamples,
-      parse("limitk(1, sum_over_time(m[60s]))").toOption.get,
+      parse("limitk(1, last_over_time(m[60s]))").toOption.get,
       T0 + 60, T0 + 60, 60L))
-    assert(k1 === Set(("m", "host=a,user=1", T0 + 60, 3500000L)))
+    assert(k1 === Set(("m", "host=a,user=1", T0 + 60, 2500000L)))
     // k ≥ series count passes everything through
     val k9 = rows(PromQL.eval(tinySamples,
       parse("limitk(9, sum_over_time(m[60s]))").toOption.get,

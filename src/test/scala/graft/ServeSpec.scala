@@ -1650,7 +1650,14 @@ class ServeSpec extends SparkSpecBase {
     val srv = HttpServe.start(spark, store)
     try {
       val base = s"http://localhost:${srv.port}"
-      // a live store: /labels validates limit= only once it reads one
+      // a fresh server with no store yet validates limit= all the same
+      val fresh = Seq(
+        "/api/v1/labels?limit=x" -> bad("limit must be a non-negative integer: x"),
+        "/api/v1/label/k/values?limit=x" -> bad("limit must be a non-negative integer: x"),
+        s"/api/v1/series?$m=err_m&limit=-1" -> bad("limit must be a non-negative integer: -1"))
+      fresh.foreach { case (path, want) =>
+        assert(get(base + path) === ((400, want)), s"fresh server: $path")
+      }
       assert(post(s"$base/write", writeBlob("err_m", 1))._1 === 200)
       val cases = Seq(
         s"/api/v1/labels?$m=" + enc("{bad") -> bad("match[] malformed"),
@@ -1668,6 +1675,7 @@ class ServeSpec extends SparkSpecBase {
         s"/api/v1/query_exemplars?query=$badQ" -> parseErr("sum(rate("),
         "/api/v1/query" -> bad("missing query parameter"),
         s"/api/v1/query?query=$badQ" -> parseErr("sum(rate("),
+        "/api/v1/query?query=err_m&time=yesterday" -> bad("time parameter malformed"),
         "/api/v1/query_range?start=0&end=60&step=15" -> bad("missing query parameter"),
         s"/api/v1/query_range?query=$badQ&start=0&end=60&step=15" -> parseErr("sum(rate("),
         "/api/v1/labels?limit=x" -> bad("limit must be a non-negative integer: x"),
@@ -2695,13 +2703,13 @@ class ServeSpec extends SparkSpecBase {
               PromSample(4.0, (t0 + 60) * 1000L))))))
       assert(post(s"$base/write", blob)._1 === 200)
 
-      // sum_over_time on tiling [t-60, t) windows
+      // sum_over_time on tiling [t-60, t) windows (the name drops)
       val (c1, b1) = get(s"$base/api/v1/query_range?query=" +
         java.net.URLEncoder.encode("sum_over_time(qr_total[60s])", "UTF-8") +
         s"&start=${t0 + 60}&end=${t0 + 120}&step=60")
       assert(c1 === 200)
       assert(b1 === s"""{"status":"success","data":{"resultType":"matrix","result":[""" +
-        s"""{"metric":{"__name__":"qr_total","k":"v"},""" +
+        s"""{"metric":{"k":"v"},""" +
         s""""values":[[${t0 + 60},"3.5"],[${t0 + 120},"4"]]}]}}""")
 
       // rate over the same window: (2.5-1.0)/30s = 0.05
@@ -2750,13 +2758,13 @@ class ServeSpec extends SparkSpecBase {
       }
 
       // the round-13 grammar over HTTP: a comparison filter keeps the
-      // passing row with its metric name...
+      // passing row with its labels...
       val (fc, fb) = get(s"$base/api/v1/query_range?query=" +
         java.net.URLEncoder.encode("sum_over_time(qr_total[60s]) > 3.6", "UTF-8") +
         s"&start=${t0 + 60}&end=${t0 + 120}&step=60")
       assert(fc === 200)
       assert(fb === s"""{"status":"success","data":{"resultType":"matrix","result":[""" +
-        s"""{"metric":{"__name__":"qr_total","k":"v"},""" +
+        s"""{"metric":{"k":"v"},""" +
         s""""values":[[${t0 + 120},"4"]]}]}}""", fb)
       // ...and a subquery windows the inner evaluation: max of the
       // two tiling sums over [t-120, t)
