@@ -4,7 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.util.{AccumulatorV2, LongAccumulator}
 
 /** Operational counters — the twin of the reference's `/metrics`
   * endpoint (reference: main.go:19-53 counter definitions,
@@ -20,39 +20,45 @@ import org.apache.spark.util.LongAccumulator
   * accepted semantics for throughput/error counters.
   */
 final class OpsMetrics private (sc: SparkContext) {
-  val samplesWritten: LongAccumulator = sc.longAccumulator("samples_written_total")
-  val writeRequests: LongAccumulator  = sc.longAccumulator("write_requests_total")
-  val writeErrors: LongAccumulator    = sc.longAccumulator("write_errors_total")
-  val readRequests: LongAccumulator   = sc.longAccumulator("read_requests_total")
-  val readErrors: LongAccumulator     = sc.longAccumulator("read_errors_total")
+  private def counter(name: String): LongAccumulator = {
+    val c = new DriverCounter
+    sc.register(c, name)
+    c
+  }
+
+  val samplesWritten: LongAccumulator = counter("samples_written_total")
+  val writeRequests: LongAccumulator  = counter("write_requests_total")
+  val writeErrors: LongAccumulator    = counter("write_errors_total")
+  val readRequests: LongAccumulator   = counter("read_requests_total")
+  val readErrors: LongAccumulator     = counter("read_errors_total")
   // store-maintenance counters — the ClickHouse system.merges
   // analogue, incremented by SamplesStore's compaction paths so a
   // dashboard can see whether the background merge is keeping up
-  val compactions: LongAccumulator    = sc.longAccumulator("store_compactions_total")
-  val daysRewritten: LongAccumulator  = sc.longAccumulator("store_compacted_days_total")
+  val compactions: LongAccumulator    = counter("store_compactions_total")
+  val daysRewritten: LongAccumulator  = counter("store_compacted_days_total")
   // store appends and the manifest commits that landed them — plain
   // appends group-commit under the store lock, so appends/commits is
   // the coalescing factor behind /write latency
-  val storeAppends: LongAccumulator   = sc.longAccumulator("store_appends_total")
+  val storeAppends: LongAccumulator   = counter("store_appends_total")
   val storeAppendCommits: LongAccumulator =
-    sc.longAccumulator("store_append_commits_total")
+    counter("store_append_commits_total")
   // milliseconds those commits held the store mutation lock: divided
   // by the commit count, the mean cost of landing one append commit
   val storeAppendCommitMs: LongAccumulator =
-    sc.longAccumulator("store_append_commit_ms_total")
+    counter("store_append_commit_ms_total")
   // snapshot opens and the schema inferences among them — an open
   // whose snapshot schema is known runs no Spark job, so inferences
   // stay near zero on a warm server
-  val storeOpens: LongAccumulator     = sc.longAccumulator("store_opens_total")
+  val storeOpens: LongAccumulator     = counter("store_opens_total")
   val storeSchemaInferences: LongAccumulator =
-    sc.longAccumulator("store_schema_inferences_total")
+    counter("store_schema_inferences_total")
   // opens small enough to plan as one partition (SamplesStore.open)
   val storeOnePartitionOpens: LongAccumulator =
-    sc.longAccumulator("store_one_partition_opens_total")
+    counter("store_one_partition_opens_total")
   // reads answered from the materialized rollup instead of raw
   // samples (only ever when shape-exact AND manifest-fresh) — the
   // dashboard signal that the recording-rule path is actually used
-  val readsFromRollup: LongAccumulator = sc.longAccumulator("reads_from_rollup_total")
+  val readsFromRollup: LongAccumulator = counter("reads_from_rollup_total")
   // wire-format drops the float64 store cannot avoid: Prometheus 3.x
   // native-histogram samples on remote-write (v1 field 4 / v2 field
   // 3) and OTLP histogram/summary points. Skipped field-safe at the
@@ -60,22 +66,22 @@ final class OpsMetrics private (sc: SparkContext) {
   // silent (a sender can alert on them; the flags endpoint mirrors
   // the totals)
   val droppedHistograms: LongAccumulator =
-    sc.longAccumulator("write_dropped_histogram_samples_total")
+    counter("write_dropped_histogram_samples_total")
   val otlpDroppedPoints: LongAccumulator =
-    sc.longAccumulator("otlp_dropped_points_total")
+    counter("otlp_dropped_points_total")
   // native-histogram samples accepted by CONVERSION to classic
   // _bucket/_sum/_count series (NativeHistogram) — the parity signal
   // that Prometheus 3.x histogram traffic is being represented
   val convertedHistograms: LongAccumulator =
-    sc.longAccumulator("write_converted_histograms_total")
+    counter("write_converted_histograms_total")
   // exemplars decoded off remote-write into the sibling exemplar
   // store (served back on /api/v1/query_exemplars)
   val exemplarsWritten: LongAccumulator =
-    sc.longAccumulator("write_exemplars_total")
+    counter("write_exemplars_total")
   // intervals Joins.range's sanity filters removed (inverted bounds
   // or runaway length) — bad upstream data surfaced, never silent
   val rangeDroppedIntervals: LongAccumulator =
-    sc.longAccumulator("range_join_dropped_intervals_total")
+    counter("range_join_dropped_intervals_total")
 
   private def all: Seq[(String, String, LongAccumulator)] = Seq(
     ("samples_written_total", "number of samples written into the store", samplesWritten),
@@ -137,6 +143,25 @@ final class OpsMetrics private (sc: SparkContext) {
     counters + gauges.map { case (name, help, v) =>
       s"# HELP $name $help\n# TYPE $name gauge\n$name $v\n"
     }.mkString
+  }
+}
+
+/** A LongAccumulator whose `add` and `merge` are atomic. Spark's are
+  * plain read-modify-writes, and request threads add to the same
+  * counter concurrently (and the scheduler merges task updates
+  * meanwhile), so a plain one loses increments. Copies (what a task
+  * deserializes) are DriverCounters too, so a closure that captures
+  * one by its own type still deserializes. */
+private[graft] final class DriverCounter extends LongAccumulator {
+  override def add(v: Long): Unit = synchronized(super.add(v))
+  override def add(v: java.lang.Long): Unit = synchronized(super.add(v))
+  override def merge(other: AccumulatorV2[java.lang.Long, java.lang.Long]): Unit =
+    synchronized(super.merge(other))
+  override def copyAndReset(): DriverCounter = new DriverCounter
+  override def copy(): DriverCounter = {
+    val c = new DriverCounter
+    c.merge(this)
+    c
   }
 }
 

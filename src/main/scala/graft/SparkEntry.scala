@@ -684,7 +684,7 @@ object SparkEntry {
     }),
 
     // Day-selective compaction — the serving store's actual merge
-    // path (maybeCompact): only day partitions over the file-count
+    // path (compactFragmentedDays): only day partitions over the file-count
     // threshold rewrite, published by one atomic manifest commit;
     // results invariant. At 100 TB this is O(fragmented days), never the
     // whole-store rewrite above.
@@ -3410,7 +3410,7 @@ object SparkEntry {
          |    AND t_sec >= $WinStartSec AND t_sec < $WinEndSec
          |  GROUP BY 1, 2
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str,
          |       CAST($WinEndSec AS BIGINT) AS t,
          |       CAST(floor((vl - vf) * 100 + 0.5) AS BIGINT) * 10000 AS v_e6
          |FROM st WHERE n >= 2""".stripMargin,
@@ -3433,7 +3433,7 @@ object SparkEntry {
          |         max(CASE WHEN rn = 2 THEN value END) AS pv
          |  FROM rk WHERE rn <= 2 GROUP BY 1, 2
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str,
          |       CAST($WinEndSec AS BIGINT) AS t,
          |       CAST(floor((CASE WHEN lv >= pv THEN lv - pv ELSE lv END)
          |            / CAST(lt - pt AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS v_e6
@@ -5695,7 +5695,7 @@ object SparkEntry {
          |         arg_min(value, t_sec) AS vf, arg_max(value, t_sec) AS vl
          |  FROM j GROUP BY 1, 2, 3
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |       CAST(floor((2.0 * (CAST(floor((vl - vf) * 100 + 0.5) AS BIGINT) * 10000)
          |            + (tl - tf)) / (2.0 * (tl - tf))) AS BIGINT) AS v_e6
          |FROM st
@@ -5910,7 +5910,7 @@ object SparkEntry {
          |  FROM j WHERE prev_t IS NOT NULL AND prev_t >= t - 604800
          |  GROUP BY 1, 2, 3
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |       CAST(floor((CASE WHEN lv >= pv THEN lv - pv ELSE lv END)
          |            / CAST(lt - pt AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS v_e6
          |FROM last""".stripMargin,
@@ -5922,13 +5922,13 @@ object SparkEntry {
          |  FROM j WHERE prev_t IS NOT NULL AND prev_t >= t - 604800
          |  GROUP BY 1, 2, 3
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |       CAST(floor((lv - pv) * 1000000 + 0.5) AS BIGINT) AS v_e6
          |FROM last""".stripMargin,
 
     "promql_changes" ->
       s"""${promqlPairCte("click", 604800L)}
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |       CAST(sum(CASE WHEN prev_t IS NOT NULL AND prev_t >= t - 604800
          |                      AND value != prev_v THEN 1 ELSE 0 END)
          |            * 1000000 AS BIGINT) AS v_e6
@@ -5936,7 +5936,7 @@ object SparkEntry {
 
     "promql_resets" ->
       s"""${promqlPairCte("click", 604800L)}
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |       CAST(sum(CASE WHEN prev_t IS NOT NULL AND prev_t >= t - 604800
          |                      AND value < prev_v THEN 1 ELSE 0 END)
          |            * 1000000 AS BIGINT) AS v_e6
@@ -5944,7 +5944,7 @@ object SparkEntry {
 
     "promql_deriv" ->
       s"""${promqlRegCte("click", 604800L)}
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |       CAST(floor(CAST(numer AS DOUBLE) / CAST(denom AS DOUBLE)
          |            * 10000 + 0.5) AS BIGINT) AS v_e6
          |FROM fin WHERE denom > 0""".stripMargin,
@@ -5952,7 +5952,7 @@ object SparkEntry {
     // the fitted line read at t' = d + h = 604800 + 86400 = 691200
     "promql_predict" ->
       s"""${promqlRegCte("click", 604800L)}
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |       CAST(floor((CAST(s_v AS DOUBLE) / n
          |            + CAST(numer AS DOUBLE) / CAST(denom AS DOUBLE)
          |            * (691200 - CAST(s_t AS DOUBLE) / n)) * 10000 + 0.5) AS BIGINT) AS v_e6
@@ -6305,7 +6305,7 @@ object SparkEntry {
          |  SELECT metric, labels, t, list(value ORDER BY t_sec) AS vs
          |  FROM j GROUP BY 1, 2, 3
          |)
-         |SELECT metric, array_to_string(labels, ',') AS labels_str, t,
+         |SELECT CAST(NULL AS VARCHAR) AS metric, array_to_string(labels, ',') AS labels_str, t,
          |  CAST(floor(
          |    list_reduce(
          |      list_concat([[vs[1], vs[2] - vs[1]]],

@@ -908,7 +908,7 @@ object SamplesStore {
     // own next microbatch proceeds during the rewrite instead of
     // stalling behind it.
     if (maxTouchedDayFiles > autoCompactFilesPerDay)
-      maybeCompact(samples.sparkSession, path, autoCompactFilesPerDay)
+      compactFragmentedDays(samples.sparkSession, path, autoCompactFilesPerDay)
   }
 
   /** The store as a DataFrame — planned from the LATEST committed
@@ -1121,6 +1121,8 @@ object SamplesStore {
     *     GC) is the only visibility-lock consumer left, and it defers
     *     on a bounded tryLock rather than stalling behind a
     *     long-running reader.
+    * Callers take no lock around it: wrapping it in `locked(path)`
+    * would stall every concurrent /write for the rewrite's duration.
     * Single-flight per store; `afterStage` is a test seam invoked
     * between phases 2 and 3. Returns the number of days rewritten. */
   def compactFragmentedDays(spark: SparkSession, path: String,
@@ -1196,25 +1198,6 @@ object SamplesStore {
       rewritten
     } finally flag.set(false)
   }
-
-  /** Opportunistic compaction for the serving append paths: folds any
-    * day partition whose live-file count exceeds `maxFilesPerDay` via
-    * [[compactFragmentedDays]] (day-selective — a serving store never
-    * pays an O(all history) rewrite). Deliberately takes NO lock of
-    * its own: the compaction locks only its ms-scale SNAPSHOT and
-    * PUBLISH phases internally, so the distributed STAGE rewrite runs
-    * while concurrent appends and reads proceed — wrapping this in
-    * `locked(path)` would stall every concurrent /write for the
-    * rewrite's duration, the exact failure the snapshot/stage/publish
-    * design exists to prevent. `afterStage` is the same phase-2/3
-    * test seam as [[compactFragmentedDays]]'s. Returns whether any
-    * day was rewritten. */
-  def maybeCompact(spark: SparkSession, path: String,
-                   maxFilesPerDay: Int = AutoCompactFilesPerDay,
-                   afterStage: () => Unit = () => (),
-                   gcGraceMs: Long = GcGraceMs): Boolean =
-    compactFragmentedDays(spark, path, maxFilesPerDay, afterStage = afterStage,
-      gcGraceMs = gcGraceMs) > 0
 
   /** Delete data files in `days` that the LATEST manifest no longer
     * references and whose age exceeds `graceMs`, then drop day dirs

@@ -1640,15 +1640,31 @@ object PromQL {
       .newInstance(rebuilt: _*).asInstanceOf[Expr])
   }
 
-  /** A `*_over_time` result without `__name__`, as Prometheus answers
-    * it: every function of the family drops the metric name except
-    * `last_over_time` and `first_over_time`, which answer one of the
-    * window's own samples unchanged (the engine's `dropName`
-    * exemption). Other range functions pass through as they are. */
-  private def overTimeName(fn: String, df: DataFrame): DataFrame =
-    if (fn.endsWith("_over_time") && fn != "last_over_time" && fn != "first_over_time")
-      df.withColumn("metric", lit(null).cast("string"))
-    else df
+  /** A range-vector function's result as Prometheus answers it:
+    * every one drops `__name__` except `last_over_time` and
+    * `first_over_time`, which answer one of the window's own samples
+    * unchanged (the engine's `dropName` exemption). */
+  private def rangeName(fn: String, df: DataFrame): DataFrame =
+    if (fn == "last_over_time" || fn == "first_over_time") df
+    else df.withColumn("metric", lit(null).cast("string"))
+
+  /** The evaluation grid t = start + k·step, 0 ≤ k ≤ (end − start)/step,
+    * one row per step. */
+  private def stepGrid(spark: SparkSession, start: Long, end: Long,
+                       step: Long): DataFrame = {
+    val kTop = (end - start) / step
+    spark.range(0, kTop + 1).select((lit(start) + col("id") * step).as("t"))
+  }
+
+  /** `scalar(x)`: x's value `sv` at each step where x holds exactly
+    * one series; every other step drops. */
+  private def scalarSteps(x: DataFrame): DataFrame =
+    x.groupBy(col("t"))
+      .agg(count(lit(1)).as("n"), max(col("v_e6")).as("sv"))
+      .filter(col("n") === 1).select(col("t"), col("sv"))
+
+  /** A value on the micro-unit lattice, half-up. */
+  private def snapE6(v: Double): Long = math.floor(v * 1e6 + 0.5).toLong
 
   /** Subtrees occurring more than once in `root` (structural
     * equality) — the set worth persisting. Descent stops at a
@@ -1685,60 +1701,69 @@ object PromQL {
     // put the grid timestamps back — exact, and every downstream
     // shape (pushdown, rollup route) applies to the shifted window
     // unchanged.
-    def unshift(df: DataFrame, off: Long): DataFrame =
+    def shifted(off: Long)(f: (Long, Long) => DataFrame): DataFrame = {
+      val df = f(startSec - off, endSec - off)
       if (off == 0) df else df.withColumn("t", col("t") + off)
+    }
+    // every range-vector function answers through the one name rule
+    def ranged(fn: String, off: Long)(f: (Long, Long) => DataFrame): DataFrame =
+      rangeName(fn, shifted(off)(f))
+    // the scalar side of a binary node, its vector side's frame, and
+    // whether the scalar sits on the left
+    def scalarSide(l: Expr, r: Expr, cmp: Boolean): Option[(Operand, DataFrame, Boolean)] =
+      operandOnLeft(l, r, cmp).map { left =>
+        val (o, v) = if (left) (l, r) else (r, l)
+        val operand = o match {
+          case ScalarLit(k) => Operand(lit(snapE6(k)), lit(k), literal = Some(k))
+          case TimeFn => Operand(col("t") * 1000000L, col("t").cast("double"))
+          case ScalarOf(c) => Operand(col("sv"), col("sv").cast("double") / lit(1000000.0),
+            steps = Some(scalarSteps(rec(c, startSec, endSec))))
+          case other => throw new IllegalStateException(s"not a scalar operand: $other")
+        }
+        (operand, rec(v, startSec, endSec), left)
+      }
+    // a scalar-valued node on the grid: no metric, no labels
+    def unlabeled(df: DataFrame, v: Column): DataFrame =
+      df.select(lit(null).cast("string").as("metric"),
+        expr("CAST(array() AS ARRAY<STRING>)").as("labels"), col("t"), v.as("v_e6"))
+    def grid: DataFrame = stepGrid(samples.sparkSession, startSec, endSec, stepSec)
     expr0 match {
-      case Instant(ms, off) => unshift(instant(samples, ms, startSec - off,
-        endSec - off, stepSec, lookbackSec, ignoreLabel, stale = stale), off)
-      case TimestampOf(ms, off) => unshift(instant(samples, ms,
-        startSec - off, endSec - off, stepSec, lookbackSec, ignoreLabel,
-        valueIsTime = true, stale = stale), off)
-      case RangeCall(fn, ms, d, off) if PairFns(fn) =>
-        val (s0, e0) = (startSec - off, endSec - off)
-        unshift(
-          // irate/idelta serve from rollup v3 penultimate points
-          // when the gate holds; changes/resets never roll up (the
-          // full per-pair sequence doesn't decompose into partials)
-          rollup.flatMap(rangeFromRollup(samples.sparkSession, _, fn, ms,
-              s0, e0, stepSec, d, ignoreLabel))
-            .getOrElse(pairRange(samples, fn, ms, s0, e0, stepSec, d,
-              ignoreLabel)),
-          off)
-      case RangeCall("deriv", ms, d, off) =>
-        unshift(regressionRange(samples, ms, startSec - off, endSec - off,
-          stepSec, d, ignoreLabel, horizonSec = None), off)
-      case RangeCall("mad_over_time", ms, d, off) =>
-        // never rollup-served: MAD doesn't decompose into partials
-        overTimeName("mad_over_time", unshift(madRange(samples, ms,
-          startSec - off, endSec - off, stepSec, d, ignoreLabel), off))
-      case RangeCall(fn, ms, d, off) =>
-        val (s0, e0) = (startSec - off, endSec - off)
-        overTimeName(fn, unshift(
-          rollup.flatMap(rangeFromRollup(samples.sparkSession, _, fn, ms,
-              s0, e0, stepSec, d, ignoreLabel))
-            .getOrElse(rangeRaw(samples, fn, ms, s0, e0, stepSec, d,
-              ignoreLabel)),
-          off))
-      case Predict(ms, d, h, off) =>
-        unshift(regressionRange(samples, ms, startSec - off, endSec - off,
-          stepSec, d, ignoreLabel, horizonSec = Some(h)), off)
-      case HoltWinters(ms, d, sf, tf, off) =>
-        unshift(holtWintersRange(samples, ms, startSec - off, endSec - off,
-          stepSec, d, sf, tf, ignoreLabel), off)
-      case Absent(ms, d, off) =>
-        unshift(absentRange(samples, ms, startSec - off, endSec - off,
-          stepSec, d, ignoreLabel), off)
-      case AbsentI(ms, off) =>
-        val (s0, e0) = (startSec - off, endSec - off)
-        val present = instant(samples, ms, s0, e0, stepSec, lookbackSec,
+      case Instant(ms, off) => shifted(off)((s, e) =>
+        instant(samples, ms, s, e, stepSec, lookbackSec, ignoreLabel, stale = stale))
+      case TimestampOf(ms, off) => shifted(off)((s, e) =>
+        instant(samples, ms, s, e, stepSec, lookbackSec, ignoreLabel,
+          valueIsTime = true, stale = stale))
+      case RangeCall(fn, ms, d, off) => ranged(fn, off) { (s, e) =>
+        // the rollup answers the functions that decompose into bucket
+        // partials (RollupServable); the rest always read raw samples
+        rollup.flatMap(rangeFromRollup(samples.sparkSession, _, fn, ms, s, e,
+            stepSec, d, ignoreLabel))
+          .getOrElse(fn match {
+            case _ if PairFns(fn) => pairRange(samples, fn, ms, s, e, stepSec, d, ignoreLabel)
+            case "deriv" => regressionRange(samples, ms, s, e, stepSec, d, ignoreLabel,
+              horizonSec = None)
+            case "mad_over_time" => madRange(samples, ms, s, e, stepSec, d, ignoreLabel)
+            case _ => rangeRaw(samples, fn, ms, s, e, stepSec, d, ignoreLabel)
+          })
+      }
+      case Predict(ms, d, h, off) => ranged("predict_linear", off)((s, e) =>
+        regressionRange(samples, ms, s, e, stepSec, d, ignoreLabel, horizonSec = Some(h)))
+      case HoltWinters(ms, d, sf, tf, off) => ranged("holt_winters", off)((s, e) =>
+        holtWintersRange(samples, ms, s, e, stepSec, d, sf, tf, ignoreLabel))
+      case Absent(ms, d, off) => ranged("absent_over_time", off)((s, e) =>
+        absentRange(samples, ms, s, e, stepSec, d, ignoreLabel))
+      case Quantile(q, ms, d, off) => ranged("quantile_over_time", off)((s, e) =>
+        quantileRange(samples, q, ms, s, e, stepSec, d, ignoreLabel))
+      case Subquery(fn, child, d, res, off) => ranged(fn, off)((s, e) =>
+        subqueryRange(samples, fn, child, s, e, stepSec, d, res, lookbackSec, rollup,
+          ignoreLabel, stale))
+      case AbsentI(ms, off) => shifted(off) { (s, e) =>
+        val present = instant(samples, ms, s, e, stepSec, lookbackSec,
           ignoreLabel, stale = stale).select(col("t")).distinct()
-        unshift(absentGrid(samples.sparkSession, ms, s0,
-          (e0 - s0) / stepSec, stepSec, present), off)
+        absentGrid(samples.sparkSession, ms, s, e, stepSec, present)
+      }
       case LabelJoin(child, dst, sep, srcs) =>
         labelJoinProject(rec(child, startSec, endSec), dst, sep, srcs)
-      case Quantile(q, ms, d, off) =>
-        overTimeName("quantile_over_time", unshift(quantileRange(samples, q,
-          ms, startSec - off, endSec - off, stepSec, d, ignoreLabel), off))
       case Agg(op, by, child, without, param) =>
         aggregate(rec(child, startSec, endSec), op, by, without, param)
       case CountValues(dst, child, by, without) =>
@@ -1750,11 +1775,7 @@ object PromQL {
         // one evaluation at the pinned instant, replicated onto the
         // grid — the single-point side is tiny, so the cross join
         // broadcasts
-        val single = rec(child, ts, ts).drop("t")
-        val kTop = (endSec - startSec) / stepSec
-        val grid = samples.sparkSession.range(0, kTop + 1)
-          .select((lit(startSec) + col("id") * stepSec).as("t"))
-        single.crossJoin(grid)
+        rec(child, ts, ts).drop("t").crossJoin(grid)
           .select(col("metric"), col("labels"), col("t"), col("v_e6"))
       case MathFn(fn, child, args) =>
         mathProject(rec(child, startSec, endSec), fn, args)
@@ -1781,33 +1802,12 @@ object PromQL {
         infoJoin(rec(child, startSec, endSec),
           rec(Instant(LabelMatcher(MatcherType.Eq, Matchers.NameLabel,
             "target_info") +: sel), startSec, endSec), sel)
-      case Subquery(fn, child, d, res, off) =>
-        overTimeName(fn, unshift(subqueryRange(samples, fn, child,
-          startSec - off, endSec - off, stepSec, d, res, lookbackSec, rollup,
-          ignoreLabel, stale),
-          off))
       case LabelReplace(child, dst, rep, src, re) =>
         labelReplaceProject(rec(child, startSec, endSec), dst, rep, src, re)
-      case Cmp(op, bool, ScalarLit(k), right, _) =>
-        scalarCmp(rec(right, startSec, endSec), op, bool, k, scalarOnLeft = true)
-      case Cmp(op, bool, left, ScalarLit(k), _) =>
-        scalarCmp(rec(left, startSec, endSec), op, bool, k, scalarOnLeft = false)
-      case Cmp(op, bool, left, TimeFn, _) =>
-        timeCmp(rec(left, startSec, endSec), op, bool, timeOnLeft = false)
-      case Cmp(op, bool, TimeFn, right, _) =>
-        timeCmp(rec(right, startSec, endSec), op, bool, timeOnLeft = true)
-      case Cmp(op, bool, left, ScalarOf(c), _) =>
-        scalarOfCmp(
-          rec(c, startSec, endSec),
-          rec(left, startSec, endSec), op, bool, scalarOnLeft = false)
-      case Cmp(op, bool, ScalarOf(c), right, _) =>
-        scalarOfCmp(
-          rec(c, startSec, endSec),
-          rec(right, startSec, endSec), op, bool, scalarOnLeft = true)
-      case Cmp(op, bool, left, right, m) =>
-        vectorCmp(
-          rec(left, startSec, endSec),
-          rec(right, startSec, endSec), op, bool, m)
+      case Cmp(op, bool, l, r, m) => scalarSide(l, r, cmp = true) match {
+        case Some((o, v, left)) => operandCmp(v, op, bool, o, left)
+        case None => vectorCmp(rec(l, startSec, endSec), rec(r, startSec, endSec), op, bool, m)
+      }
       case SetOp(op, left, right, m) =>
         setOp(
           rec(left, startSec, endSec),
@@ -1850,49 +1850,13 @@ object PromQL {
         c.orderBy(col("t").asc +: keys :+
           coalesce(col("metric"), lit("")).asc :+
           array_join(col("labels"), ",").asc: _*)
-      case Binary(op, ScalarLit(k), right, _) =>
-        scalarArith(rec(right, startSec, endSec), op, k, scalarOnLeft = true)
-      case Binary(op, left, ScalarLit(k), _) =>
-        scalarArith(rec(left, startSec, endSec), op, k, scalarOnLeft = false)
-      case Binary(op, ScalarOf(c), right, _) =>
-        scalarOfArith(
-          rec(c, startSec, endSec),
-          rec(right, startSec, endSec), op, scalarOnLeft = true)
-      case Binary(op, left, ScalarOf(c), _) =>
-        scalarOfArith(
-          rec(c, startSec, endSec),
-          rec(left, startSec, endSec), op, scalarOnLeft = false)
-      case Binary(op, TimeFn, right, _) =>
-        timeArith(rec(right, startSec, endSec), op, timeOnLeft = true)
-      case Binary(op, left, TimeFn, _) =>
-        timeArith(rec(left, startSec, endSec), op, timeOnLeft = false)
-      case Binary(op, left, right, m) =>
-        vectorArith(
-          rec(left, startSec, endSec),
-          rec(right, startSec, endSec), op, m)
-      case TimeFn =>
-        val kTop = (endSec - startSec) / stepSec
-        samples.sparkSession.range(0, kTop + 1)
-          .select(lit(null).cast("string").as("metric"),
-            expr("CAST(array() AS ARRAY<STRING>)").as("labels"),
-            (lit(startSec) + col("id") * stepSec).as("t"),
-            ((lit(startSec) + col("id") * stepSec) * 1000000L).as("v_e6"))
-      case VectorLit(v) =>
-        val kE6 = math.floor(v * 1e6 + 0.5).toLong
-        val kTop = (endSec - startSec) / stepSec
-        samples.sparkSession.range(0, kTop + 1)
-          .select(lit(null).cast("string").as("metric"),
-            expr("CAST(array() AS ARRAY<STRING>)").as("labels"),
-            (lit(startSec) + col("id") * stepSec).as("t"),
-            lit(kE6).as("v_e6"))
-      case ScalarOf(child) =>
-        rec(child, startSec, endSec)
-          .groupBy(col("t"))
-          .agg(count(lit(1)).as("n"), max(col("v_e6")).as("sv"))
-          .filter(col("n") === 1)
-          .select(lit(null).cast("string").as("metric"),
-            expr("CAST(array() AS ARRAY<STRING>)").as("labels"),
-            col("t"), col("sv").as("v_e6"))
+      case Binary(op, l, r, m) => scalarSide(l, r, cmp = false) match {
+        case Some((o, v, left)) => operandArith(v, op, o, left)
+        case None => vectorArith(rec(l, startSec, endSec), rec(r, startSec, endSec), op, m)
+      }
+      case TimeFn => unlabeled(grid, col("t") * 1000000L)
+      case VectorLit(v) => unlabeled(grid, lit(snapE6(v)))
+      case ScalarOf(child) => unlabeled(scalarSteps(rec(child, startSec, endSec)), col("sv"))
       case ScalarLit(_) =>
         throw new IllegalArgumentException("scalar-only expressions are not queries")
     }
@@ -1990,112 +1954,73 @@ object PromQL {
   private def unsupportedArith(op: Char): Nothing =
     throw new IllegalArgumentException(s"unsupported binary arithmetic operator '$op'")
 
-  /** vector∘scalar: a per-row projection on the micro-unit integers
-    * (deterministic IEEE arithmetic on values both engines share
-    * exactly). Division by a zero vector value drops the row, like
-    * [[vectorArith]]. */
-  private def scalarArith(child: DataFrame, op: Char, k: Double,
-                          scalarOnLeft: Boolean): DataFrame = {
-    val kE6 = math.floor(k * 1e6 + 0.5).toLong
-    val v = (op, scalarOnLeft) match {
-      case ('+', _)     => expr(s"v_e6 + ${kE6}L")
-      case ('-', false) => expr(s"v_e6 - ${kE6}L")
-      case ('-', true)  => expr(s"${kE6}L - v_e6")
-      case ('*', _)     => expr(s"CAST(floor(CAST(v_e6 AS DOUBLE) * ${k}D + 0.5) AS BIGINT)")
-      case ('/', false) => expr(s"CAST(floor(CAST(v_e6 AS DOUBLE) / ${k}D + 0.5) AS BIGINT)")
-      case ('/', true)  => expr(s"CAST(floor(${k}D * 1.0e12D / CAST(v_e6 AS DOUBLE) + 0.5) AS BIGINT)")
-      case ('%', false) => expr(s"v_e6 % ${kE6}L")
-      case ('%', true)  => expr(s"${kE6}L % v_e6")
-      case ('A', false) => atan2E6(col("v_e6"), lit(kE6))
-      case ('A', true)  => atan2E6(lit(kE6), col("v_e6"))
-      case (o, _)       => unsupportedArith(o)
+  /** The scalar side of a binary operator — a literal, `time()` or
+    * `scalar(x)` — as one value per step. `e6` is its micro-unit
+    * integer (kE6, t·1e6 or sv); `real` the double the `*` and `/`
+    * formulas read (the literal k, t or sv/1e6); `steps` the per-step
+    * (t, sv) frame a `scalar(x)` joins on t; `literal` the literal's
+    * value, whose zero rejects the query instead of dropping rows. */
+  private final case class Operand(e6: Column, real: Column,
+                                   steps: Option[DataFrame] = None,
+                                   literal: Option[Double] = None)
+
+  /** Which side of `l ∘ r` is the scalar operand (true = left), if
+    * either is one: a literal first, left before right. Between
+    * `time()` and `scalar(x)`, arithmetic takes `scalar(x)` and
+    * prefers the left side; a comparison takes `time()` and prefers
+    * the right side, so a filter keeps the other side's value. */
+  private def operandOnLeft(l: Expr, r: Expr, cmp: Boolean): Option[Boolean] = {
+    def rank(e: Expr): Int = e match {
+      case ScalarLit(_) => 0
+      case TimeFn => if (cmp) 1 else 2
+      case ScalarOf(_) => if (cmp) 2 else 1
+      case _ => 3
     }
-    val base =
-      if ((op == '/' || op == '%') && scalarOnLeft)
-        child.filter(col("v_e6") =!= 0L)
-      else if (op == '/' && k == 0.0)
-        throw new IllegalArgumentException("/ by literal zero")
-      // % runs on the SNAPPED kE6 — a scalar under half a µ snaps to
-      // 0 and would evaluate v_e6 % 0 (NULL rows → 500), so the
-      // guard must test the value the expression actually uses
-      else if (op == '%' && kE6 == 0L)
-        throw new IllegalArgumentException("% by (effectively) zero literal")
-      else child
-    // like every Prometheus binary op, arithmetic drops __name__
-    base.select(lit(null).cast("string").as("metric"), col("labels"),
-      col("t"), v.as("v_e6"))
+    val (rl, rr) = (rank(l), rank(r))
+    if (rl == 3 && rr == 3) None else Some(if (rl != rr) rl < rr else !cmp)
   }
 
-  /** vector∘time(): [[scalarArith]] with the per-step timestamp as
-    * the scalar — same formulas, the literal replaced by the row's
-    * own t (exact below 2^52 seconds). Enables the staleness idiom
-    * `time() - last_over_time(sel[d])`. */
-  private def timeArith(child: DataFrame, op: Char,
-                        timeOnLeft: Boolean): DataFrame = {
-    val tE6 = col("t") * 1000000L
-    val v: Column = (op, timeOnLeft) match {
-      case ('+', _)     => col("v_e6") + tE6
-      case ('-', true)  => tE6 - col("v_e6")
-      case ('-', false) => col("v_e6") - tE6
-      case ('*', _)     =>
-        floor(col("v_e6").cast("double") * col("t").cast("double") + lit(0.5))
-          .cast("long")
-      case ('/', false) =>
-        floor(col("v_e6").cast("double") / col("t").cast("double") + lit(0.5))
-          .cast("long")
-      case ('/', true)  =>
-        floor(col("t").cast("double") * lit(1.0e12) /
-          col("v_e6").cast("double") + lit(0.5)).cast("long")
-      case ('%', false) => col("v_e6") % tE6
-      case ('%', true)  => tE6 % col("v_e6")
-      case ('A', false) => atan2E6(col("v_e6"), tE6)
-      case ('A', true)  => atan2E6(tE6, col("v_e6"))
-      case (o, _)       => unsupportedArith(o)
+  /** vector∘scalar arithmetic, the operand on either side: a per-row
+    * projection on the micro-unit integers (deterministic IEEE
+    * arithmetic on values both engines share exactly). A `scalar(x)`
+    * operand joins the vector on t alone (labels ignored — Prometheus's
+    * scalar semantics; ≤ |grid| rows, so the join broadcasts). A zero
+    * divisor or modulus drops its row, like [[vectorArith]]; a literal
+    * one rejects the query. Like every Prometheus binary op,
+    * arithmetic drops __name__. */
+  private def operandArith(child: DataFrame, op: Char, o: Operand,
+                           onLeft: Boolean): DataFrame = {
+    val x = col("v_e6")
+    def halfUp(d: Column): Column = floor(d + lit(0.5)).cast("long")
+    val v = (op, onLeft) match {
+      case ('+', _)     => x + o.e6
+      case ('-', false) => x - o.e6
+      case ('-', true)  => o.e6 - x
+      case ('*', _)     => halfUp(x.cast("double") * o.real)
+      case ('/', false) => halfUp(x.cast("double") / o.real)
+      case ('/', true)  => halfUp(o.real * lit(1.0e12) / x.cast("double"))
+      case ('%', false) => x % o.e6
+      case ('%', true)  => o.e6 % x
+      case ('A', false) => atan2E6(x, o.e6)
+      case ('A', true)  => atan2E6(o.e6, x)
+      case (other, _)   => unsupportedArith(other)
     }
-    val base =
-      if ((op == '/' || op == '%') && timeOnLeft)
-        child.filter(col("v_e6") =!= 0L)
-      else child
-    base.select(lit(null).cast("string").as("metric"), col("labels"),
-      col("t"), v.as("v_e6"))
-  }
-
-  /** vector∘scalar(child): the child's per-step single-series value
-    * joins the other side on t alone (labels ignored — Prometheus's
-    * scalar semantics) and applies the [[scalarArith]] formulas with
-    * that value as the scalar. Steps where the child has ≠ 1 series
-    * drop. Scale shape: the scalar side is ≤ |grid| rows, so the
-    * join broadcasts. */
-  private def scalarOfArith(scDf: DataFrame, child: DataFrame, op: Char,
-                            scalarOnLeft: Boolean): DataFrame = {
-    val sc = scDf.groupBy(col("t"))
-      .agg(count(lit(1)).as("n"), max(col("v_e6")).as("sv"))
-      .filter(col("n") === 1).select(col("t"), col("sv"))
-    val j = child.join(sc, Seq("t"))
-    val k = col("sv").cast("double") / lit(1000000.0)
-    val v: Column = (op, scalarOnLeft) match {
-      case ('+', _)     => col("v_e6") + col("sv")
-      case ('-', false) => col("v_e6") - col("sv")
-      case ('-', true)  => col("sv") - col("v_e6")
-      case ('*', _)     =>
-        floor(col("v_e6").cast("double") * k + lit(0.5)).cast("long")
-      case ('/', false) =>
-        floor(col("v_e6").cast("double") / k + lit(0.5)).cast("long")
-      case ('/', true)  =>
-        floor(k * lit(1.0e12) / col("v_e6").cast("double") + lit(0.5))
-          .cast("long")
-      case ('%', false) => col("v_e6") % col("sv")
-      case ('%', true)  => col("sv") % col("v_e6")
-      case ('A', false) => atan2E6(col("v_e6"), col("sv"))
-      case ('A', true)  => atan2E6(col("sv"), col("v_e6"))
-      case (o, _)       => unsupportedArith(o)
-    }
-    val base =
-      if ((op == '/' || op == '%') && scalarOnLeft)
-        j.filter(col("v_e6") =!= 0L)
-      else if (op == '/' || op == '%') j.filter(col("sv") =!= 0L)
-      else j
-    base.select(lit(null).cast("string").as("metric"), col("labels"),
+    val j = o.steps.fold(child)(child.join(_, Seq("t")))
+    val kept =
+      if (op != '/' && op != '%') j
+      else if (onLeft) j.filter(x =!= 0L)
+      else o.literal match {
+        case Some(k) if op == '/' && k == 0.0 =>
+          throw new IllegalArgumentException("/ by literal zero")
+        // % runs on the SNAPPED kE6 — a literal under half a µ snaps
+        // to 0 and would evaluate v_e6 % 0, so the guard tests the
+        // value the expression actually uses
+        case Some(k) if op == '%' && snapE6(k) == 0L =>
+          throw new IllegalArgumentException("% by (effectively) zero literal")
+        case Some(_) => j
+        case None => j.filter(o.e6 =!= 0L)
+      }
+    kept.select(lit(null).cast("string").as("metric"), col("labels"),
       col("t"), v.as("v_e6"))
   }
 
@@ -2234,7 +2159,7 @@ object PromQL {
   private[graft] def powScalarFold(a: Double, y: Double): Option[Double] = {
     val isIntY = y == math.floor(y) && !y.isInfinity
     val negOdd = isIntY && math.abs(y % 2.0d) == 1.0d
-    val aE6 = math.floor(a * 1e6 + 0.5d).toLong // µ-snap like a vector row
+    val aE6 = snapE6(a) // µ-snap like a vector row
     if (aE6 == 0L) { if (y > 0) Some(0.0d) else None }
     else if (aE6 < 0L && !isIntY) None
     else {
@@ -2258,18 +2183,22 @@ object PromQL {
     case ">=" => l >= r
   }
 
-  /** vector∘scalar comparison. Prometheus filter semantics: without
-    * `bool` the passing rows survive untouched (metric name kept);
-    * with `bool` every row becomes 1/0 and the name drops. Exact on
-    * the micro-unit integers — no float compare anywhere. */
-  private def scalarCmp(child: DataFrame, op: String, bool: Boolean,
-                        k: Double, scalarOnLeft: Boolean): DataFrame = {
-    val kE6 = lit(math.floor(k * 1e6 + 0.5).toLong)
-    val pred = if (scalarOnLeft) cmpCol(op, kE6, col("v_e6"))
-               else cmpCol(op, col("v_e6"), kE6)
-    if (!bool) child.filter(pred)
-    else child.select(lit(null).cast("string").as("metric"), col("labels"),
-      col("t"), when(pred, 1000000L).otherwise(0L).as("v_e6"))
+  /** vector∘scalar comparison, the operand on either side (a
+    * `scalar(x)` operand joins on t, like [[operandArith]]).
+    * Prometheus filter semantics: without `bool` the passing rows
+    * survive untouched (metric name kept); with `bool` every row
+    * becomes 1/0 and the name drops. Exact on the micro-unit
+    * integers — no float compare anywhere. */
+  private def operandCmp(child: DataFrame, op: String, bool: Boolean,
+                         o: Operand, onLeft: Boolean): DataFrame = {
+    val j = o.steps.fold(child)(child.join(_, Seq("t")))
+    val pred = if (onLeft) cmpCol(op, o.e6, col("v_e6"))
+               else cmpCol(op, col("v_e6"), o.e6)
+    if (!bool)
+      j.filter(pred).select(col("metric"), col("labels"), col("t"), col("v_e6"))
+    else
+      j.select(lit(null).cast("string").as("metric"), col("labels"),
+        col("t"), when(pred, 1000000L).otherwise(0L).as("v_e6"))
   }
 
   /** vector∘vector comparison: matched equi-join (same keying as
@@ -2289,41 +2218,6 @@ object PromQL {
       j.select(lit(null).cast("string").as("metric"),
         outLabels(m).as("labels"), col("t"),
         when(pred, 1000000L).otherwise(0L).as("v_e6"))
-  }
-
-  /** vector∘time() comparison: the per-step timestamp as the scalar.
-    * Filter semantics keep the row (metric included); `bool` answers
-    * 1/0 with the name dropped — the `x < time() - 3600` alert shape
-    * (with the subtraction on the time side folded first). */
-  private def timeCmp(child: DataFrame, op: String, bool: Boolean,
-                      timeOnLeft: Boolean): DataFrame = {
-    val tE6 = col("t") * 1000000L
-    val pred = if (timeOnLeft) cmpCol(op, tE6, col("v_e6"))
-               else cmpCol(op, col("v_e6"), tE6)
-    if (!bool) child.filter(pred)
-    else child.select(lit(null).cast("string").as("metric"), col("labels"),
-      col("t"), when(pred, 1000000L).otherwise(0L).as("v_e6"))
-  }
-
-  /** vector∘scalar(child) comparison: the scalar side reduces to its
-    * per-step single-series value and joins on the step alone (labels
-    * ignored, like [[scalarOfArith]]); steps where the scalar child
-    * has ≠ 1 series drop. Filter semantics keep the vector side's
-    * rows; `bool` answers 1/0, name dropped. */
-  private def scalarOfCmp(scDf: DataFrame, child: DataFrame, op: String,
-                          bool: Boolean, scalarOnLeft: Boolean): DataFrame = {
-    val sc = scDf.groupBy(col("t"))
-      .agg(count(lit(1)).as("n"), max(col("v_e6")).as("sv"))
-      .filter(col("n") === 1).select(col("t"), col("sv"))
-    val j = child.join(sc, Seq("t"))
-    val pred = if (scalarOnLeft) cmpCol(op, col("sv"), col("v_e6"))
-               else cmpCol(op, col("v_e6"), col("sv"))
-    if (!bool)
-      j.filter(pred).select(col("metric"), col("labels"), col("t"),
-        col("v_e6"))
-    else
-      j.select(lit(null).cast("string").as("metric"), col("labels"),
-        col("t"), when(pred, 1000000L).otherwise(0L).as("v_e6"))
   }
 
   /** and | or | unless on the matched label set per step (full set by
@@ -2644,7 +2538,6 @@ object PromQL {
   private def mathProject(child: DataFrame, fn: String,
                           args: Seq[Double]): DataFrame = {
     if (TrigFns(fn)) return trigProject(child, fn)
-    def e6(x: Double): Long = math.floor(x * 1e6 + 0.5).toLong
     val asDate =
       "date_add(DATE'1970-01-01', CAST((v_e6 DIV 1000000) DIV 86400 AS INT))"
     val v: Column = fn match {
@@ -2658,12 +2551,12 @@ object PromQL {
       case "round" =>
         // Prometheus rounds half UP (toward +Inf) to the nearest
         // multiple of to_nearest (default 1)
-        val n = e6(args.headOption.getOrElse(1.0))
+        val n = snapE6(args.headOption.getOrElse(1.0))
         expr(s"CAST(floor(CAST(v_e6 AS DOUBLE) / ${n}D + 0.5D) AS BIGINT) * ${n}L")
       case "clamp" =>
-        expr(s"least(greatest(v_e6, ${e6(args(0))}L), ${e6(args(1))}L)")
-      case "clamp_min" => expr(s"greatest(v_e6, ${e6(args(0))}L)")
-      case "clamp_max" => expr(s"least(v_e6, ${e6(args(0))}L)")
+        expr(s"least(greatest(v_e6, ${snapE6(args(0))}L), ${snapE6(args(1))}L)")
+      case "clamp_min" => expr(s"greatest(v_e6, ${snapE6(args(0))}L)")
+      case "clamp_max" => expr(s"least(v_e6, ${snapE6(args(0))}L)")
       // sqrt is IEEE correctly-rounded — the one transcendental-ish
       // function every engine computes bit-identically
       case "sqrt" =>
@@ -2964,60 +2857,24 @@ object PromQL {
     e match {
       case Instant(ms, off) =>
         val s = startSec - off; val en = endSec - off
-        histSel(hs, ms, (s - lookbackSec + 1) * 1000L, en * 1000L,
-            ignoreLabel).map { pruned =>
-          val offK = lookbackSec / stepSec + 2
-          val kTop = (en - s) / stepSec
-          val base = dedupSec(pruned)
-            .filter(col("t_sec") >= s - lookbackSec + 1 && col("t_sec") <= en)
-            .withColumn("dead", lit(0))
-          val events = stale match {
-            case None => base
-            case Some(st) =>
-              val marks = SeriesRead.timeBound(st,
-                  (s - lookbackSec + 1) * 1000L, en * 1000L)
-                .filter(Matchers.compilePromQL(ms, ignoreLabel))
-                .select(col("metric"), col("labels"),
-                  expr("ts_us DIV 1000000").as("t_sec"),
-                  lit(null).cast("binary").as("hb"))
-                .distinct()
-                .filter(col("t_sec") >= s - lookbackSec + 1 &&
-                  col("t_sec") <= en)
-                .withColumn("dead", lit(1))
-              base.unionByName(marks)
-          }
-          events
-            .withColumn("kmin", greatest(lit(0L),
-              expr(s"(t_sec - $s + ${offK * stepSec} + $stepSec - 1) " +
-                s"DIV $stepSec - $offK")))
-            .withColumn("kmax", least(lit(kTop),
-              expr(s"(t_sec + $lookbackSec - 1 - $s) DIV $stepSec")))
-            .filter(col("kmax") >= col("kmin"))
-            .withColumn("k", explode(expr("sequence(kmin, kmax)")))
-            .withColumn("t", expr(s"$s + k * $stepSec"))
-            .groupBy(col("metric"), col("labels"), col("t"))
-            .agg(expr("max_by(named_struct('hb', hb, 'dead', dead), " +
-              "named_struct('t_sec', t_sec, 'alive', 1 - dead))").as("w"))
-            .filter(col("w.dead") === 0)
-            .select(col("metric"), col("labels"),
-              (col("t") + off).as("t"), col("w.hb").as("hb"))
+        val lo = s - lookbackSec + 1
+        histSel(hs, ms, lo * 1000L, en * 1000L, ignoreLabel).map { pruned =>
+          val marks = stale.map(st =>
+            SeriesRead.timeBound(st, lo * 1000L, en * 1000L)
+              .filter(Matchers.compilePromQL(ms, ignoreLabel))
+              .select(col("metric"), col("labels"),
+                expr("ts_us DIV 1000000").as("t_sec"),
+                lit(null).cast("binary").as("hb"))
+              .distinct())
+          latestLive(dedupSec(pruned), marks, "hb", s, en, stepSec, lookbackSec)
+            .select(col("metric"), col("labels"), (col("t") + off).as("t"),
+              col("v").as("hb"))
         }
       case RangeCall("rate", ms, d, off) =>
         val s = startSec - off; val en = endSec - off
         histSel(hs, ms, (s - d) * 1000L, (en - 1) * 1000L, ignoreLabel)
           .map { pruned =>
-            val offK = d / stepSec + 2
-            val kTop = (en - s) / stepSec
-            val paired = dedupSec(pruned)
-              .filter(col("t_sec") >= s - d && col("t_sec") <= en - 1)
-              // window [t-d, t) ∋ t_sec — gridExplode's k-math
-              .withColumn("kmin", greatest(lit(0L),
-                expr(s"(t_sec - $s + ${offK * stepSec}) DIV $stepSec - $offK + 1")))
-              .withColumn("kmax", least(lit(kTop),
-                expr(s"(t_sec + $d - $s) DIV $stepSec")))
-              .filter(col("kmax") >= col("kmin"))
-              .withColumn("k", explode(expr("sequence(kmin, kmax)")))
-              .withColumn("t", expr(s"$s + k * $stepSec"))
+            val paired = onGrid(dedupSec(pruned), "t_sec", s, en, stepSec, 1, d)
               .groupBy(col("metric"), col("labels"), col("t"))
               .agg(min_by(col("hb"), col("t_sec")).as("hb0"),
                 max_by(col("hb"), col("t_sec")).as("hb1"),
@@ -3227,29 +3084,37 @@ object PromQL {
       .filter(Matchers.compilePromQL(matchers, ignoreLabel))
       .withColumn("t_sec", expr("ts_us DIV 1000000")), "value")
 
-  /** Explode each deduped sample onto the grid steps whose window
-    * holds it, then one (series, t) aggregate. k-bound arithmetic is
-    * offset to stay non-negative so integer DIV is floor division in
-    * every engine. */
-  /** Deduped samples exploded onto the grid steps whose [t-d, t)
-    * window holds them: one row per (sample, containing step), ready
-    * for a (series, t) aggregate. */
-  private def gridExplode(samples: DataFrame, matchers: Seq[LabelMatcher],
-                          start: Long, end: Long, step: Long, d: Long,
-                          ignoreLabel: Option[String]): DataFrame = {
-    val off = d / step + 2
-    val kTop = (end - start) / step
-    dedupedWindow(samples, matchers, start - d, end, ignoreLabel)
-      .filter(col("t_sec") >= start - d && col("t_sec") <= end - 1)
-      // window [t-d, t) ∋ t_sec  ⇔  t_sec < t ≤ t_sec + d
+  /** The step-window kernel: which grid steps see a sample. Keeps
+    * the rows whose `ts` second some step t = start + k·step
+    * (0 ≤ k ≤ (end − start)/step) holds in the window
+    * lo ≤ t − ts ≤ hi, i.e. ts ∈ [start − hi, end − lo], and explodes
+    * each onto every such step as `t` (with its index `k`). A range
+    * window [t−d, t) is (lo, hi) = (1, d); the instant lookback
+    * (t−L, t] is (0, L−1). k runs from ceil((ts + lo − start)/step)
+    * to floor((ts + hi − start)/step); the `off·step` term keeps each
+    * DIV numerator non-negative, so integer DIV floors alike in every
+    * engine. */
+  private[graft] def onGrid(df: DataFrame, ts: String, start: Long, end: Long,
+                            step: Long, lo: Long, hi: Long): DataFrame = {
+    val off = hi / step + 2
+    df.filter(col(ts) >= start - hi && col(ts) <= end - lo)
       .withColumn("kmin", greatest(lit(0L),
-        expr(s"(t_sec - $start + ${off * step}) DIV $step - $off + 1")))
-      .withColumn("kmax", least(lit(kTop),
-        expr(s"(t_sec + $d - $start) DIV $step")))
+        expr(s"($ts - $start + ${off * step + lo - 1}) DIV $step - $off + 1")))
+      .withColumn("kmax", least(lit((end - start) / step),
+        expr(s"($ts + $hi - $start) DIV $step")))
       .filter(col("kmax") >= col("kmin"))
       .withColumn("k", explode(expr("sequence(kmin, kmax)")))
       .withColumn("t", expr(s"$start + k * $step"))
   }
+
+  /** Deduped samples on the grid steps whose [t-d, t) window holds
+    * them: one row per (sample, containing step), ready for a
+    * (series, t) aggregate. */
+  private def gridExplode(samples: DataFrame, matchers: Seq[LabelMatcher],
+                          start: Long, end: Long, step: Long, d: Long,
+                          ignoreLabel: Option[String]): DataFrame =
+    onGrid(dedupedWindow(samples, matchers, start - d, end, ignoreLabel),
+      "t_sec", start, end, step, 1, d)
 
   private def rangeRaw(samples: DataFrame, fn: String,
                        matchers: Seq[LabelMatcher], start: Long, end: Long,
@@ -3445,19 +3310,10 @@ object PromQL {
                         ignoreLabel: Option[String]): DataFrame = {
     val w = Window.partitionBy(col("metric"), col("labels"))
       .orderBy(col("t_sec"))
-    val off = d / step + 2
-    val kTop = (end - start) / step
-    val paired = dedupedWindow(samples, matchers, start - d, end, ignoreLabel)
+    val lagged = dedupedWindow(samples, matchers, start - d, end, ignoreLabel)
       .withColumn("prev_t", lag(col("t_sec"), 1).over(w))
       .withColumn("prev_v", lag(col("value"), 1).over(w))
-      .filter(col("t_sec") >= start - d && col("t_sec") <= end - 1)
-      .withColumn("kmin", greatest(lit(0L),
-        expr(s"(t_sec - $start + ${off * step}) DIV $step - $off + 1")))
-      .withColumn("kmax", least(lit(kTop),
-        expr(s"(t_sec + $d - $start) DIV $step")))
-      .filter(col("kmax") >= col("kmin"))
-      .withColumn("k", explode(expr("sequence(kmin, kmax)")))
-      .withColumn("t", expr(s"$start + k * $step"))
+    val paired = onGrid(lagged, "t_sec", start, end, step, 1, d)
       .withColumn("pair_ok",
         col("prev_t").isNotNull && col("prev_t") >= col("t") - d)
     val base = Seq(col("metric"), col("labels"), col("t"))
@@ -3550,18 +3406,7 @@ object PromQL {
     val innerStart = (start - d + res - 1) / res * res
     val inner = eval(samples, child, innerStart, end, res, lookbackSec,
       rollup, ignoreLabel, stale = stale)
-    val off2 = d / step + 2
-    val kTop = (end - start) / step
-    val g = inner
-      .withColumnRenamed("t", "tv")
-      .filter(col("tv") <= end - 1) // outer windows are right-open
-      .withColumn("kmin", greatest(lit(0L),
-        expr(s"(tv - $start + ${off2 * step}) DIV $step - $off2 + 1")))
-      .withColumn("kmax", least(lit(kTop),
-        expr(s"(tv + $d - $start) DIV $step")))
-      .filter(col("kmax") >= col("kmin"))
-      .withColumn("k", explode(expr("sequence(kmin, kmax)")))
-      .withColumn("t", expr(s"$start + k * $step"))
+    val g = onGrid(inner.withColumnRenamed("t", "tv"), "tv", start, end, step, 1, d)
       .groupBy(col("metric"), col("labels"), col("t"))
       .agg(sum(col("v_e6")).as("s"), count(lit(1)).as("n"),
         min(col("v_e6")).as("mn"), max(col("v_e6")).as("mx"),
@@ -3658,21 +3503,19 @@ object PromQL {
                           ignoreLabel: Option[String]): DataFrame = {
     val present = gridExplode(samples, matchers, start, end, step, d,
       ignoreLabel).select(col("t")).distinct()
-    absentGrid(samples.sparkSession, matchers, start, (end - start) / step,
-      step, present)
+    absentGrid(samples.sparkSession, matchers, start, end, step, present)
   }
 
   /** The shared absent tail: generated grid anti-joined against the
     * present steps, labeled from the equality matchers. */
   private def absentGrid(spark: SparkSession, matchers: Seq[LabelMatcher],
-                         start: Long, kTop: Long, step: Long,
+                         start: Long, end: Long, step: Long,
                          present: DataFrame): DataFrame = {
     val lbls = matchers
       .filter(m => m.mtype == graft.operators.MatcherType.Eq &&
         m.name != Matchers.NameLabel)
       .map(m => s"${m.name}=${m.value}").sorted
-    spark.range(0, kTop + 1)
-      .select((lit(start) + col("id") * step).as("t"))
+    stepGrid(spark, start, end, step)
       .join(present, Seq("t"), "left_anti")
       .select(lit(null).cast("string").as("metric"),
         typedLit(lbls).as("labels"), col("t"), lit(1000000L).as("v_e6"))
@@ -3786,70 +3629,26 @@ object PromQL {
   }
 
   /** Instant vector: the latest sample in (t-L, t] per series per
-    * grid step — same explode shape with the Prometheus lookback
-    * convention.
+    * grid step ([[latestLive]]).
     *
     * `stale` is the store's `_stale` sibling (explicit staleness
     * markers, PromRemoteCodec.StaleNaNBits): a marker participates
     * in the lookback like a sample, and when it WINS (it is the
     * series' latest event in the window) the step produces no point
     * — the series ENDS there, exactly prometheus/tsdb's behavior —
-    * while a newer real sample revives the series. A marker and a
-    * real sample at the same second break deterministically to the
-    * SAMPLE (a real value at that second proves the series alive;
-    * the /read pass-through and the differential fuzzer use the same
-    * rule, so all surfaces agree — see the max_by key below). `None`
-    * keeps the sibling-free plan bit-identical to the classic one. */
+    * while a newer real sample revives the series. */
   private def instant(samples: DataFrame, matchers: Seq[LabelMatcher],
                       start: Long, end: Long, step: Long, lookback: Long,
                       ignoreLabel: Option[String],
                       valueIsTime: Boolean = false,
                       stale: Option[DataFrame]): DataFrame = {
-    val off = lookback / step + 2
-    val kTop = (end - start) / step
-    val windowed = dedupedWindow(samples, matchers,
-        start - lookback + 1, end, ignoreLabel)
-      .filter(col("t_sec") >= start - lookback + 1 && col("t_sec") <= end)
-    val events = stale match {
-      case None => windowed.withColumn("dead", lit(0))
-      case Some(st) =>
-        // markers ride the SAME matcher filter + per-second dedup as
-        // samples (a regex selector must only end the series it
-        // selects); value is presence-only
-        val marks = dedupedWindow(st, matchers, start - lookback + 1, end,
-            ignoreLabel)
-          .filter(col("t_sec") >= start - lookback + 1 && col("t_sec") <= end)
-          .withColumn("dead", lit(1))
-        windowed.withColumn("dead", lit(0)).unionByName(marks)
-    }
-    val ranked = events
-      // (t-L, t] ∋ t_sec  ⇔  t_sec ≤ t < t_sec + L
-      .withColumn("kmin", greatest(lit(0L),
-        expr(s"(t_sec - $start + ${off * step} + $step - 1) DIV $step - $off")))
-      .withColumn("kmax", least(lit(kTop),
-        expr(s"(t_sec + $lookback - 1 - $start) DIV $step")))
-      .filter(col("kmax") >= col("kmin"))
-      .withColumn("k", explode(expr("sequence(kmin, kmax)")))
-      .withColumn("t", expr(s"$start + k * $step"))
-      .groupBy(col("metric"), col("labels"), col("t"))
-    val agged =
-      if (stale.isEmpty)
-        ranked.agg(max_by(col("value"), col("t_sec")).as("v"),
-          max(col("t_sec")).as("ts"))
-      else
-        // winner by (t_sec, alive): the latest event; a SAMPLE beats a
-        // same-second marker — a real value at that second proves the
-        // series alive, and the /read pass-through keeps the sample
-        // on the same tie, so the two surfaces agree. A winning
-        // marker drops the step. ts is still max(t_sec).
-        ranked.agg(
-            expr("max_by(named_struct('v', value, 'dead', dead), " +
-              "named_struct('t_sec', t_sec, 'alive', 1 - dead))").as("w"),
-            max(col("t_sec")).as("ts"))
-          .filter(col("w.dead") === 0)
-          .select(col("metric"), col("labels"), col("t"),
-            col("w.v").as("v"), col("ts"))
-    agged
+    val lo = start - lookback + 1
+    // markers ride the SAME matcher filter + per-second dedup as
+    // samples (a regex selector must only end the series it selects);
+    // value is presence-only
+    latestLive(dedupedWindow(samples, matchers, lo, end, ignoreLabel),
+        stale.map(dedupedWindow(_, matchers, lo, end, ignoreLabel)), "value",
+        start, end, step, lookback)
       .select(
         // timestamp() is a value-transforming function: the metric
         // name drops, like abs() or every arithmetic op
@@ -3858,6 +3657,32 @@ object PromQL {
         col("labels"), col("t"),
         (if (valueIsTime) expr("ts * 1000000")
          else expr("CAST(floor(v * 1000000 + 0.5) AS BIGINT)")).as("v_e6"))
+  }
+
+  /** Instant selection: per (series, step) the latest event in the
+    * (t-L, t] lookback — its `value` column as `v`, its second as
+    * `ts`. With `marks` (staleness markers, same columns) a winning
+    * marker drops the step, and a sample beats a same-second marker:
+    * a real value at that second proves the series alive, and the
+    * /read pass-through keeps the sample on the same tie, so the two
+    * surfaces agree. Without marks the plan is a plain
+    * max_by(value, t_sec). */
+  private def latestLive(live: DataFrame, marks: Option[DataFrame],
+                         value: String, start: Long, end: Long, step: Long,
+                         lookback: Long): DataFrame = {
+    val events = marks.fold(live)(m =>
+      live.withColumn("dead", lit(0)).unionByName(m.withColumn("dead", lit(1))))
+    val steps = onGrid(events, "t_sec", start, end, step, 0, lookback - 1)
+      .groupBy(col("metric"), col("labels"), col("t"))
+    if (marks.isEmpty)
+      steps.agg(max_by(col(value), col("t_sec")).as("v"), max(col("t_sec")).as("ts"))
+    else
+      steps.agg(
+          expr(s"max_by(named_struct('v', $value, 'dead', dead), " +
+            "named_struct('t_sec', t_sec, 'alive', 1 - dead))").as("w"),
+          max(col("t_sec")).as("ts"))
+        .filter(col("w.dead") === 0)
+        .select(col("metric"), col("labels"), col("t"), col("w.v").as("v"), col("ts"))
   }
 
   /** info(): v's rows left-join the target_info instant vector on
@@ -4034,7 +3859,7 @@ object PromQL {
     val bucket = expr(
       s"(${graft.llm.Portable.hash60SqlSpark(
         "concat(coalesce(metric, ''), '|', array_join(labels, ','))")}) % 1000000")
-    val thr = math.floor(math.abs(r) * 1e6 + 0.5).toLong
+    val thr = snapE6(math.abs(r))
     val keep =
       if (r >= 0) bucket < lit(thr)
       else bucket >= lit(1000000L - thr)

@@ -32,7 +32,7 @@ object RemoteWrite {
   @volatile var compactCheckIntervalMs: Long = 10000L
 
   /** Per-day file-count threshold the serving probe hands to
-    * [[SamplesStore.maybeCompact]]; an ops knob like the interval. */
+    * [[SamplesStore.compactFragmentedDays]]; an ops knob like the interval. */
   @volatile var autoCompactFilesPerDay: Int = SamplesStore.AutoCompactFilesPerDay
 
   /** Retention horizon in days; 0 disables. The ClickHouse `TTL`
@@ -179,7 +179,7 @@ object RemoteWrite {
         lastCompactCheck.putIfAbsent(storePath, now).isEmpty)
       compactPool.execute { () =>
         try {
-          SamplesStore.maybeCompact(spark, storePath, autoCompactFilesPerDay,
+          SamplesStore.compactFragmentedDays(spark, storePath, autoCompactFilesPerDay,
             gcGraceMs = gcGraceMs)
           retentionPass(spark, storePath, retentionDays)
           maintainSiblings(spark, storePath)
@@ -227,7 +227,7 @@ object RemoteWrite {
     Seq(exemplarPath(storePath), metadataPath(storePath),
         histPath(storePath), stalePath(storePath)).foreach { p =>
       if (SamplesStore.exists(spark, p)) {
-        SamplesStore.maybeCompact(spark, p, autoCompactFilesPerDay,
+        SamplesStore.compactFragmentedDays(spark, p, autoCompactFilesPerDay,
           gcGraceMs = gcGraceMs)
         // reclaim superseded files + old manifests like the primary's
         // expiry leg — the fold alone leaves the physical footprint

@@ -336,7 +336,7 @@ class PromQLDiffSpec extends SparkSpecBase {
       shift(instantRef(ms, start - off, end - off, step), off)
 
     case RangeCall(fn, ms, d, off) if PairFns(fn) =>
-      shift(pairRef(fn, ms, start - off, end - off, step, d), off)
+      unnamed(fn, shift(pairRef(fn, ms, start - off, end - off, step, d), off))
 
     case RangeCall(fn, ms, d, off) =>
       unnamed(fn, shift(rangeRef(fn, ms, start - off, end - off, step, d), off))
@@ -606,11 +606,11 @@ class PromQLDiffSpec extends SparkSpecBase {
     } yield (metric, ls.mkString(","), t, e6(last._2))).toSet
   }
 
-  /** Prometheus drops `__name__` from every `*_over_time` result but
-    * last_over_time's and first_over_time's (they answer a sample of
-    * the window unchanged). */
+  /** Prometheus drops `__name__` from every range-vector function's
+    * result but last_over_time's and first_over_time's (they answer a
+    * sample of the window unchanged). */
   private def unnamed(fn: String, rows: Set[R]): Set[R] =
-    if (fn.endsWith("_over_time") && fn != "last_over_time" && fn != "first_over_time")
+    if (fn != "last_over_time" && fn != "first_over_time")
       rows.map { case (_, ls, t, v) => ("", ls, t, v) }
     else rows
 

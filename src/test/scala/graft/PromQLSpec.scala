@@ -243,6 +243,18 @@ class PromQLSpec extends SparkSpecBase {
         T0 + 60, T0 + 120, 60L))
       assert(out.nonEmpty && out.forall(_._1 == (if (keeps) "m" else "")), out)
     }
+  // ... and so does every other range-vector function, bare and over
+  // a subquery
+  for (q <- Seq("rate(m[60s])", "increase(m[60s])", "delta(m[60s])",
+      "irate(m[60s])", "idelta(m[60s])", "deriv(m[60s])", "changes(m[60s])",
+      "resets(m[60s])", "predict_linear(m[60s], 60)",
+      "holt_winters(m[60s], 0.5, 0.5)", "rate(m[120s:30s])",
+      "increase(m[120s:30s])", "delta(m[120s:30s])"))
+    test(s"$q drops __name__") {
+      val out = rows(PromQL.eval(tinySamples, parse(q).toOption.get,
+        T0 + 60, T0 + 120, 60L))
+      assert(out.nonEmpty && out.forall(_._1 == ""), out)
+    }
   test("bare quantile_over_time drops __name__") {
     val out = rows(PromQL.eval(tinySamples,
       parse("quantile_over_time(0.5, m[60s])").toOption.get, T0 + 60, T0 + 120, 60L))
@@ -253,6 +265,48 @@ class PromQLSpec extends SparkSpecBase {
       T0 + 120, T0 + 120, 60L)).map(_._1)
     assert(names("max_over_time(m[120s:30s])") === Set(""))
     assert(names("last_over_time(m[120s:30s])") === Set("m"))
+  }
+
+  test("onGrid assigns each sample exactly the grid steps whose window holds it") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    // random grids (negative starts included — where `offset` puts
+    // them), windows shorter and longer than the step and not a
+    // multiple of it, samples on and next to every window edge
+    val cases = for {
+      step <- Gen.choose(1L, 120L)
+      w <- Gen.choose(1L, 400L)
+      start <- Gen.choose(-2000L, 2000L)
+      k <- Gen.choose(0L, 12L)
+      extra <- Gen.choose(0L, step - 1)
+      lookback <- Gen.oneOf(false, true)
+      noise <- Gen.listOfN(20, Gen.choose(start - w - 50, start + k * step + extra + 50))
+    } yield (step, w, start, start + k * step + extra, lookback, noise)
+    val prop = Prop.forAllNoShrink(cases) { case (step, w, start, end, lookback, noise) =>
+      // a range window [t-w, t) is (lo, hi) = (1, w); the instant
+      // lookback (t-w, t] is (0, w-1)
+      val (lo, hi) = if (lookback) (0L, w - 1) else (1L, w)
+      val grid = start to end by step
+      val tss = (noise ++ grid.flatMap(t => Seq(t - w - 1, t - w, t - 1, t, t + 1))).distinct
+      val got = PromQL.onGrid(tss.toDF("ts"), "ts", start, end, step, lo, hi)
+        .select("ts", "t").as[(Long, Long)].collect().toSet
+      val want = for {
+        ts <- tss.toSet[Long]
+        t <- grid
+        if (if (lookback) t - w < ts && ts <= t else t - w <= ts && ts < t)
+      } yield (ts, t)
+      got == want
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(80)
+      .withInitialSeed(Seed(20261020L)), prop)
+    assert(res.passed, res.status)
+  }
+
+  test("time() as a zero divisor drops its step instead of failing the query") {
+    def q(e: String) = rows(PromQL.eval(tinySamples, parse(e).toOption.get, -60L, 60L, 60L))
+    assert(q("vector(1) / time()") === Set(("", "", -60L, -16667L), ("", "", 60L, 16667L)))
+    assert(q("vector(1) % time()") === Set(("", "", -60L, 1000000L), ("", "", 60L, 1000000L)))
   }
 
   test("instant lookback is (t-L, t]: the latest sample at or before t") {
@@ -357,12 +411,13 @@ class PromQLSpec extends SparkSpecBase {
   test("rate is the observed-span Δv/Δt, half-up in micro-units; resets drop the window") {
     val out = rows(PromQL.eval(tinySamples, parse("rate(m[60s])").toOption.get,
       T0 + 60, T0 + 120, 60L))
-    // [t0, t0+60): points 1.0@t0, 2.5@t0+30 → 1.5/30 = 0.05
-    assert(out.contains(("m", "host=a,user=1", T0 + 60, 50000L)))
+    // [t0, t0+60): points 1.0@t0, 2.5@t0+30 → 1.5/30 = 0.05; like
+    // every range function but last/first_over_time, rate drops the name
+    assert(out.contains(("", "host=a,user=1", T0 + 60, 50000L)))
     // [t0+60, t0+120): 4.0@t0+60 → 1.0@t0+95 is a reset → dropped
     assert(!out.exists(r => r._2 == "host=a,user=1" && r._3 == T0 + 120))
     // series b: 0.25 over 45s = 0.005555... → half-up 5556 µ
-    assert(out.contains(("m", "host=b,user=2", T0 + 60, 5556L)))
+    assert(out.contains(("", "host=b,user=2", T0 + 60, 5556L)))
   }
 
   test("offset shifts every window back; last_over_time takes the window's newest point") {
@@ -514,26 +569,26 @@ class PromQLSpec extends SparkSpecBase {
     def one(q: String): Set[(String, String, Long, Long)] =
       rows(PromQL.eval(tinySamples, parse(q).toOption.get, T0 + 120, T0 + 120, 120L))
     // window [t0, t0+120): a = 1.0, 2.5, 4.0, 1.0 (3 changes, 1 reset);
-    // b = 10.0, 10.25 (1 change, 0 resets)
+    // b = 10.0, 10.25 (1 change, 0 resets); each drops the name
     assert(one("changes(m[120s])") === Set(
-      ("m", "host=a,user=1", T0 + 120, 3000000L),
-      ("m", "host=b,user=2", T0 + 120, 1000000L)))
+      ("", "host=a,user=1", T0 + 120, 3000000L),
+      ("", "host=b,user=2", T0 + 120, 1000000L)))
     assert(one("resets(m[120s])") === Set(
-      ("m", "host=a,user=1", T0 + 120, 1000000L),
-      ("m", "host=b,user=2", T0 + 120, 0L)))
+      ("", "host=a,user=1", T0 + 120, 1000000L),
+      ("", "host=b,user=2", T0 + 120, 0L)))
     // irate: a's last pair 4.0@+60 → 1.0@+95 is a reset → post-reset
     // value over 35 s = 1/35; b: 0.25/45
     assert(one("irate(m[120s])") === Set(
-      ("m", "host=a,user=1", T0 + 120, 28571L),
-      ("m", "host=b,user=2", T0 + 120, 5556L)))
+      ("", "host=a,user=1", T0 + 120, 28571L),
+      ("", "host=b,user=2", T0 + 120, 5556L)))
     assert(one("idelta(m[120s])") === Set(
-      ("m", "host=a,user=1", T0 + 120, -3000000L),
-      ("m", "host=b,user=2", T0 + 120, 250000L)))
+      ("", "host=a,user=1", T0 + 120, -3000000L),
+      ("", "host=b,user=2", T0 + 120, 250000L)))
     // a window whose only pair straddles the edge answers 0 changes:
     // [t0+90, t0+120) holds just 1.0@+95 (predecessor at +60 outside)
     val edge = rows(PromQL.eval(tinySamples,
       parse("changes(m[30s])").toOption.get, T0 + 120, T0 + 120, 30L))
-    assert(edge.contains(("m", "host=a,user=1", T0 + 120, 0L)))
+    assert(edge.contains(("", "host=a,user=1", T0 + 120, 0L)))
     // and irate has no in-window pair there → no row at all
     val ir = rows(PromQL.eval(tinySamples,
       parse("irate(m[30s])").toOption.get, T0 + 120, T0 + 120, 30L))
@@ -546,10 +601,10 @@ class PromQLSpec extends SparkSpecBase {
     // the window end (t' = 180) the line reads exactly 11.0
     val d = rows(PromQL.eval(tinySamples,
       parse("deriv(m[120s])").toOption.get, T0 + 120, T0 + 120, 120L))
-    assert(d.contains(("m", "host=b,user=2", T0 + 120, 5556L)))
+    assert(d.contains(("", "host=b,user=2", T0 + 120, 5556L)))
     val p = rows(PromQL.eval(tinySamples,
       parse("predict_linear(m[120s], 60)").toOption.get, T0 + 120, T0 + 120, 120L))
-    assert(p.contains(("m", "host=b,user=2", T0 + 120, 11000000L)))
+    assert(p.contains(("", "host=b,user=2", T0 + 120, 11000000L)))
     // single-point windows emit nothing (no slope from one point)
     val single = rows(PromQL.eval(tinySamples,
       parse("deriv(m[30s])").toOption.get, T0 + 120, T0 + 120, 30L))
@@ -1429,16 +1484,15 @@ class PromQLSpec extends SparkSpecBase {
     def sub(fn: String) = rows(PromQL.eval(tinySamples,
       parse(s"$fn(sum_over_time(m[60s])[120s:60s])").toOption.get,
       T0 + 180, T0 + 180, 60L))
-    // rate passes its input's name through; sum_over_time has none
     assert(sub("rate") === Set(("", "host=a,user=1", T0 + 180, 25000L)))
     assert(sub("increase") === Set(("", "host=a,user=1", T0 + 180, 1500000L)))
     assert(sub("delta") === Set(("", "host=a,user=1", T0 + 180, 1500000L)))
     // a decreasing inner pair drops from rate (the counter gate)
-    // but answers its signed change through delta
+    // but answers its signed change through delta, name dropped
     val dec = rows(PromQL.eval(tinySamples,
       parse("delta(last_over_time(m[60s])[120s:60s])").toOption.get,
       T0 + 180, T0 + 180, 60L))
-    assert(dec === Set(("m", "host=a,user=1", T0 + 180, -1500000L)))
+    assert(dec === Set(("", "host=a,user=1", T0 + 180, -1500000L)))
     val rdec = rows(PromQL.eval(tinySamples,
       parse("rate(last_over_time(m[60s])[120s:60s])").toOption.get,
       T0 + 180, T0 + 180, 60L))
@@ -1461,10 +1515,10 @@ class PromQLSpec extends SparkSpecBase {
     val hw = rows(PromQL.eval(tinySamples,
       parse("holt_winters(m[120s], 0.5, 0.5)").toOption.get,
       T0 + 120, T0 + 120, 120L))
-    assert(hw.contains(("m", "host=a,user=1", T0 + 120, 3250000L)))
+    assert(hw.contains(("", "host=a,user=1", T0 + 120, 3250000L)))
     // two-point windows answer the second value (the recurrence's
     // first step lands exactly on it)
-    assert(hw.contains(("m", "host=b,user=2", T0 + 120, 10250000L)))
+    assert(hw.contains(("", "host=b,user=2", T0 + 120, 10250000L)))
     // single-point windows drop
     val single = rows(PromQL.eval(tinySamples,
       parse("holt_winters(m[30s], 0.5, 0.5)").toOption.get,

@@ -321,7 +321,7 @@ class StoreSpec extends SparkSpecBase {
     fs.mkdirs(p(s"$path/.rewrite_$day"))
     assert(SamplesStore.read(spark, path).count() == total,
       "uncommitted rewrite remnants must be invisible to readers")
-    SamplesStore.maybeCompact(spark, path) // mutations don't trip on remnants
+    SamplesStore.compactFragmentedDays(spark, path) // mutations don't trip on remnants
     assert(SamplesStore.read(spark, path).count() == total)
 
     // snapshot expiry reclaims both remnants by age (grace 0 = now)
@@ -389,16 +389,16 @@ class StoreSpec extends SparkSpecBase {
     val baseCount = SamplesStore.read(spark, path).count()
 
     // park the compaction between STAGE and SWAP via the seam, THROUGH
-    // the serving-path entry point maybeCompact — the regression this
-    // guards is maybeCompact (or its appendBatch caller) holding the
+    // the serving-path entry point compactFragmentedDays — the regression
+    // this guards is the compaction (or its appendBatch caller) holding the
     // store mutation lock across the distributed STAGE rewrite, which
     // would block every concurrent /write for the rewrite's duration
     val staged = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     var rewrote = false
     val compactor = new Thread(() => {
-      rewrote = SamplesStore.maybeCompact(spark, path, maxFilesPerDay = 2,
-        afterStage = () => { staged.countDown(); release.await(60, TimeUnit.SECONDS); () })
+      rewrote = SamplesStore.compactFragmentedDays(spark, path, maxFilesPerDay = 2,
+        afterStage = () => { staged.countDown(); release.await(60, TimeUnit.SECONDS); () }) > 0
     }, "spec-compactor")
     compactor.start()
     assert(staged.await(60, TimeUnit.SECONDS), "compaction must reach the staging seam")
@@ -1185,7 +1185,7 @@ class StoreSpec extends SparkSpecBase {
       "an uncommitted batch file must be invisible to readers")
     // selective compaction folds from the manifest only — the orphan
     // is neither an input nor a fragmentation signal
-    SamplesStore.maybeCompact(spark, path, maxFilesPerDay = 0, gcGraceMs = 0L)
+    SamplesStore.compactFragmentedDays(spark, path, maxFilesPerDay = 0, gcGraceMs = 0L)
     assert(SamplesStore.read(spark, path).count() == committed)
     // the replay of batch 1 stages fresh files and commits; the stale
     // orphan ages out via snapshot expiry
@@ -1369,6 +1369,18 @@ class StoreSpec extends SparkSpecBase {
     assert(m.storeAppends.value - appends0 === 4L)
     assert(m.storeAppendCommits.value - commits0 === 2L)
     assert(sortedWithinFiles(path))
+  }
+
+  test("an ops counter loses no increment to concurrent request threads") {
+    // every appending request thread adds to store_appends_total at
+    // once, while the scheduler merges task-side updates into counters
+    val c = new DriverCounter
+    spark.sparkContext.register(c, "spec_concurrent_counter")
+    val adders = (0 until 8).map(i =>
+      spawn(s"spec-adder-$i")((0 until 100000).foreach(_ => c.add(1L))))
+    spark.range(0, 1000, 1, 4).foreach(_ => c.add(1L))
+    adders.foreach(a => assert(a().isSuccess))
+    assert(c.value === 801000L)
   }
 
   test("a group member whose frame fails at execution fails alone; its group-mates land") {

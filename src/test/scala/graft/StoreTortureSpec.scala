@@ -89,7 +89,7 @@ class StoreTortureSpec extends SparkSpecBase {
           SamplesStore.deleteRange(spark, path, t0, t1)
           model = model.filterNot(r => r._1 >= t0 && r._1 < t1)
         case _ =>
-          SamplesStore.maybeCompact(spark, path, maxFilesPerDay = 2)
+          SamplesStore.compactFragmentedDays(spark, path, maxFilesPerDay = 2)
       }
       if (step % 4 == 3) verify(s"after step $step")
     }
@@ -244,7 +244,7 @@ class StoreTortureSpec extends SparkSpecBase {
             SamplesStore.deleteRange(spark, path, t0, t1)
             model = after
           case _ =>
-            SamplesStore.maybeCompact(spark, path, maxFilesPerDay = 2)
+            SamplesStore.compactFragmentedDays(spark, path, maxFilesPerDay = 2)
         }
       }
     } finally { stop = true; reader.join(60000) }
@@ -310,7 +310,7 @@ class StoreTortureSpec extends SparkSpecBase {
       while (proc.isAlive && i < 300) {
         SamplesStore.append(batch(i), path)
         if (i % 7 == 0)
-          SamplesStore.maybeCompact(spark, path, maxFilesPerDay = 2,
+          SamplesStore.compactFragmentedDays(spark, path, maxFilesPerDay = 2,
             gcGraceMs = 60000L)
         if (i % 11 == 0) SamplesStore.expireSnapshots(spark, path, graceMs = 60000L)
         i += 1
