@@ -34,6 +34,12 @@ with no >IQR, gain or bound verdict (per-layer numbers are for reading, not
 gating). A metric a run does not report is left out of that pair. Any
 workload servebench knows can be traced, `mixed` included.
 
+Below the end-to-end rows, untraced runs also print per-route rows read from
+each run's `REPORT` line (`query_range_p50_ms`, `remote_read_p50_ms`,
+`series_p50_ms`, `write_p50_ms`, whichever the workload reports): medians,
+quartiles, pairs won and the relative change, with no verdict. They let a move
+in the geometric-mean `latency_p50_ms` be attributed to a route.
+
 The failed-request share of each side is printed too. Every raw result line
 is kept in DIR/results.jsonl. The exit code is non-zero when a run fails, an
 operation fails, or (untraced only) a bound is broken. DIR defaults to a fresh
@@ -76,9 +82,13 @@ def copy_worktree(dst):
         shutil.copy2(src, os.path.join(dst, rel))
 
 
+ROUTES = ("query_range_p50_ms", "remote_read_p50_ms", "series_p50_ms", "write_p50_ms")
+
+
 def run_once(tree, workload, seed, seconds, trace):
     """One servebench run in `tree`; returns its result dict (the last
-    stdout line), or None when the run produced no result."""
+    stdout line) with the `REPORT` line's per-route p50s added under
+    "routes", or None when the run produced no result."""
     proc = subprocess.run(
         [sys.executable, "servebench/run.py", "--workload", workload, "--seed", str(seed),
          "--seconds", str(seconds), "--trace", "1" if trace else "0"],
@@ -87,7 +97,11 @@ def run_once(tree, workload, seed, seconds, trace):
     if not lines or not lines[-1].startswith("{"):
         log(proc.stderr[-3000:])
         return None
-    return json.loads(lines[-1])
+    result = json.loads(lines[-1])
+    report = next((json.loads(l[len("REPORT "):]) for l in reversed(lines) if l.startswith("REPORT ")), {})
+    details = report.get("details", {})
+    result["routes"] = {k: details[k]["value"] for k in ROUTES if isinstance(details.get(k), dict)}
+    return result
 
 
 def quartiles(xs):
@@ -149,9 +163,14 @@ def main():
               + (", traced" if a.trace else ""))
         print(f"{'metric':<{32 if a.trace else 24}} {'parent med (q1-q3)':>26} {'change med (q1-q3)':>26} {'wins':>6} {'Δmed':>8}"
               + ("" if a.trace else f" {'bound':>6}  >IQR gain verdict"))
-        for m in metrics:
+        # per-route rows (untraced): read-only, no verdict
+        routes = [] if a.trace else [{"name": k, "better": "lower", "route": True} for k in ROUTES]
+        for m in metrics + routes:
             name, lower = m["name"], m["better"] == "lower"
-            value = lambda side, i: by[side][i]["metrics"].get(name, {}).get("value")
+            if m.get("route"):
+                value = lambda side, i: by[side][i].get("routes", {}).get(name)
+            else:
+                value = lambda side, i: by[side][i]["metrics"].get(name, {}).get("value")
             pairs = [pc for pc in ((value("parent", i), value("change", i)) for i in both) if None not in pc]
             if not pairs:
                 continue
@@ -159,8 +178,8 @@ def main():
             pq, cq = quartiles(pv), quartiles(cv)
             wins = sum((c < p) if lower else (c > p) for p, c in zip(pv, cv))
             rel = (cq[1] - pq[1]) / pq[1] if pq[1] else 0.0
-            if a.trace:
-                print(f"{name:<32} {pq[1]:>10.3f} ({pq[0]:.3f}-{pq[2]:.3f}) {cq[1]:>10.3f} ({cq[0]:.3f}-{cq[2]:.3f})"
+            if a.trace or m.get("route"):
+                print(f"{name:<{32 if a.trace else 24}} {pq[1]:>10.3f} ({pq[0]:.3f}-{pq[2]:.3f}) {cq[1]:>10.3f} ({cq[0]:.3f}-{cq[2]:.3f})"
                       f" {wins:>3}/{len(pv):<2} {rel:>+8.1%}")
                 continue
             worse = rel if lower else -rel

@@ -3,6 +3,7 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.{AccumulatorV2, LongAccumulator}
 
@@ -128,8 +129,13 @@ final class OpsMetrics private (sc: SparkContext) {
     * to its counters, and dashboards ported from it expect live
     * process panels, so the JVM analogues ride along. */
   def render: String = {
-    val counters = all.map { case (name, help, acc) =>
-      s"# HELP $name $help\n# TYPE $name counter\n$name ${acc.value}\n"
+    // Spark's own codegen compile count (JVM-wide) rides with the
+    // counters: request windows bind as parameters, so a steady
+    // dashboard adds none, and a climbing count is compile churn
+    val counters = (all.map { case (name, help, acc) => (name, help, acc.value.longValue) } :+
+      (("codegen_compilations_total", "Spark generated-code compilations in this JVM",
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount))).map { case (name, help, v) =>
+      s"# HELP $name $help\n# TYPE $name counter\n$name $v\n"
     }.mkString
     import java.lang.management.ManagementFactory
     val heap = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.slf4j.LoggerFactory
 
+import graft.functions.Param
+
 /** Incrementally-maintained time rollups over a [[SamplesStore]] —
   * the ClickHouse-materialized-view / Prometheus-recording-rule
   * analogue the reference leans on ClickHouse for. A rollup store
@@ -440,6 +442,13 @@ object RollupStore {
         StructField("date", IntegerType))))
   }
 
+  /** The grain of the literal that rides next to a parameter `bucket`
+    * bound ([[graft.functions.Param.atLeast]]): a day. A query served
+    * from a rollup steps by at least its interval, so an hour grain
+    * would change on every shifted window; the `date` filter already
+    * prunes to whole days, so the day grain costs no pruning. */
+  private[graft] val BoundGrainSec = 86400L
+
   /** Serve a read-path query from the rollup: matchers compile over
     * the same (metric, labels) columns, time bounds prune on the
     * bucket (and the `date` partition), and a coarser hint interval
@@ -459,10 +468,14 @@ object RollupStore {
     // scan (the bucket bounds alone only prune row groups inside
     // already-opened files) — on a multi-year rollup the query lists
     // exactly its days, like the raw store's read path
-    var df = rollup.filter(col("bucket") >= startBucket &&
+    // the bucket bounds are request values, bound as Params (see
+    // SeriesRead.timeBound) next to coarse pushable literals
+    val spark = rollup.sparkSession
+    var df = rollup.filter(Param.atLeast(spark, col("bucket"), startBucket, BoundGrainSec) &&
       col("date") >= startBucket / 86400 * 86400)
     if (q.endMs > 0)
-      df = df.filter(col("bucket") <= q.endMs / 1000 && col("date") <= q.endMs / 1000)
+      df = df.filter(Param.below(spark, col("bucket"), q.endMs / 1000 + 1, BoundGrainSec) &&
+        col("date") <= q.endMs / 1000)
     df.filter(graft.operators.Matchers.compile(q.matchers, ignoreLabel))
       .withColumn("t_sec", expr(s"bucket DIV $queryIntervalSec * $queryIntervalSec"))
       .groupBy(col("metric"), col("labels"), col("t_sec"))

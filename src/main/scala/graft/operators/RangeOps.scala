@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Param
+
 /** PromQL-style range/instant analytics over the canonical samples
   * schema — the query surface a reference user reaches through
   * Prometheus/Grafana on top of the adapter (reference: README.md:89-140
@@ -501,11 +503,15 @@ object RangeOps {
                      startSec: Long, endSec: Long): DataFrame = {
     val b0 = startSec / intervalSec * intervalSec
     val b1 = (endSec - 1) / intervalSec * intervalSec
+    // the window is a request value: bound as Params, so shifted
+    // windows share generated code (see SeriesRead.timeBound)
+    val spark = deduped.sparkSession
+    def p(v: Long): Column = Param.column(spark, v)
     val grid = deduped.select(col("metric")).distinct()
       .select(col("metric"),
-        explode(sequence(lit(b0), lit(b1), lit(intervalSec))).as("bucket"))
+        explode(sequence(p(b0), p(b1), lit(intervalSec))).as("bucket"))
     val present = deduped
-      .filter(col("t_sec") >= b0 && col("t_sec") < endSec)
+      .filter(col("t_sec") >= p(b0) && col("t_sec") < p(endSec))
       .withColumn("bucket", expr(s"t_sec DIV $intervalSec * $intervalSec"))
       .groupBy(col("metric"), col("bucket"))
       .agg(count(lit(1)).as("n_points"))

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, RebalancePartit
   Repartition, RepartitionOperation, UnaryNode}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Param
+
 /** A Prometheus remote-read query against the samples store —
   * mirrors prompb.Query (start/end ms, matchers, step/range hints). */
 final case class ReadQuery(
@@ -55,13 +57,24 @@ object SeriesRead {
     * list one day, not all of history. (`date` is each partition's
     * day START, so the start bound floors to its own day and the end
     * bound compares raw — the kept days are exactly those overlapping
-    * the window.) */
+    * the window.)
+    *
+    * The exact `ts_us` bounds are request values, so they reach the
+    * plan as [[Param]]s: a refresh of the same panel then reuses the
+    * generated code. Each keeps a literal twin rounded outward to the
+    * hour, which is what parquet pushdown prunes on (a Param is not a
+    * data-source filter value); it changes at most once an hour. The
+    * `date` bounds stay literals: they prune partitions at planning
+    * and never reach generated code. */
   private[graft] def timeBound(samples: DataFrame, startMs: Long,
                                endMs: Long): DataFrame = {
+    val spark = samples.sparkSession
     val startSec = startMs / 1000
-    var df = samples.filter(col("ts_us") >= startSec * 1000000L)
+    var df = samples.filter(
+      Param.atLeast(spark, col("ts_us"), startSec * 1000000L, Param.HourUs))
     if (endMs > 0)
-      df = df.filter(col("ts_us") < (endMs / 1000 + 1) * 1000000L)
+      df = df.filter(
+        Param.below(spark, col("ts_us"), (endMs / 1000 + 1) * 1000000L, Param.HourUs))
     if (samples.columns.contains("date")) {
       df = df.filter(col("date") >= startSec / 86400 * 86400)
       if (endMs > 0) df = df.filter(col("date") <= endMs / 1000)

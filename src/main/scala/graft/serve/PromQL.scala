@@ -8,6 +8,7 @@ import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
 
 import graft.OpsMetrics
+import graft.functions.Param
 import graft.ingest.RollupStore
 import graft.operators.{LabelMatcher, Matchers, MatcherType, SeriesRead}
 
@@ -186,6 +187,18 @@ import graft.operators.{LabelMatcher, Matchers, MatcherType, SeriesRead}
   * shuffle. Aggregation/rank nodes reuse the same keys. A coarse
   * aligned *_over_time goes to the rollup instead: O(rollup rows)
   * with the same output.
+  *
+  * Request values are parameters: `start`, `end`, and every bound
+  * and grid origin derived from them reach the plan as
+  * [[graft.functions.Param]]s, never as literals, so a dashboard
+  * refresh (the same expression on a shifted window) generates
+  * byte-identical code and Spark's codegen cache serves it with no
+  * compile. Values that come from the expression text — range,
+  * offset, lookback and the step constants — stay literals (an `@`
+  * timestamp pins its child's window, which then binds like any).
+  * The sites: [[SeriesRead.timeBound]] (every selector's scan, which
+  * keeps an hour-rounded literal twin for parquet pushdown),
+  * [[onGrid]], [[stepGrid]] and [[rangeFromRollup]].
   */
 object PromQL {
 
@@ -583,6 +596,18 @@ object PromQL {
 
     private val CmpOps = Seq("==", "!=", "<=", ">=", "<", ">")
 
+    /** Whether `e` is scalar-typed in Prometheus's type system: a
+      * literal, `time()`, `scalar(x)`, or arithmetic or a `bool`
+      * comparison over those. */
+    private def scalarTyped(e: Expr): Boolean = e match {
+      case ScalarLit(_) | TimeFn | ScalarOf(_) => true
+      case Binary(_, l, r, _) => scalarTyped(l) && scalarTyped(r)
+      case Cmp(_, true, l, r, None) => scalarTyped(l) && scalarTyped(r)
+      case PowInt(c, _) => scalarTyped(c)
+      case PowFrac(c, _) => scalarTyped(c)
+      case _ => false
+    }
+
     private def cmpExpr(): Either[String, Expr] = {
       def peekCmp(): Option[String] = {
         ws()
@@ -596,17 +621,15 @@ object PromQL {
             matchingClause(allowGroup = true).flatMap { m =>
               addExpr().flatMap { right =>
                 (left, right, m) match {
+                  case _ if !bool && scalarTyped(left) && scalarTyped(right) =>
+                    Left("comparisons between scalars must use the bool modifier")
                   case (ScalarLit(a), ScalarLit(b), None) =>
-                    if (!bool)
-                      Left("comparisons between scalars must use the bool modifier")
-                    else {
-                      val ok = op match {
-                        case "==" => a == b case "!=" => a != b
-                        case "<" => a < b case "<=" => a <= b
-                        case ">" => a > b case ">=" => a >= b
-                      }
-                      loop(ScalarLit(if (ok) 1.0 else 0.0))
+                    val ok = op match {
+                      case "==" => a == b case "!=" => a != b
+                      case "<" => a < b case "<=" => a <= b
+                      case ">" => a > b case ">=" => a >= b
                     }
+                    loop(ScalarLit(if (ok) 1.0 else 0.0))
                   case (ScalarLit(_), _, Some(_)) | (_, ScalarLit(_), Some(_)) =>
                     Left("vector matching requires two vectors")
                   case _ => loop(Cmp(op, bool, left, right, m))
@@ -1653,7 +1676,7 @@ object PromQL {
   private def stepGrid(spark: SparkSession, start: Long, end: Long,
                        step: Long): DataFrame = {
     val kTop = (end - start) / step
-    spark.range(0, kTop + 1).select((lit(start) + col("id") * step).as("t"))
+    spark.range(0, kTop + 1).select((Param.column(spark, start) + col("id") * step).as("t"))
   }
 
   /** `scalar(x)`: x's value `sv` at each step where x holds exactly
@@ -3097,14 +3120,17 @@ object PromQL {
   private[graft] def onGrid(df: DataFrame, ts: String, start: Long, end: Long,
                             step: Long, lo: Long, hi: Long): DataFrame = {
     val off = hi / step + 2
-    df.filter(col(ts) >= start - hi && col(ts) <= end - lo)
+    val spark = df.sparkSession
+    def p(v: Long): Column = Param.column(spark, v)
+    val origin = Param.sql(spark, start)
+    df.filter(col(ts) >= p(start - hi) && col(ts) <= p(end - lo))
       .withColumn("kmin", greatest(lit(0L),
-        expr(s"($ts - $start + ${off * step + lo - 1}) DIV $step - $off + 1")))
-      .withColumn("kmax", least(lit((end - start) / step),
-        expr(s"($ts + $hi - $start) DIV $step")))
+        expr(s"($ts - $origin + ${off * step + lo - 1}) DIV $step - $off + 1")))
+      .withColumn("kmax", least(p((end - start) / step),
+        expr(s"($ts + $hi - $origin) DIV $step")))
       .filter(col("kmax") >= col("kmin"))
       .withColumn("k", explode(expr("sequence(kmin, kmax)")))
-      .withColumn("t", expr(s"$start + k * $step"))
+      .withColumn("t", expr(s"$origin + k * $step"))
   }
 
   /** Deduped samples on the grid steps whose [t-d, t) window holds
@@ -3566,12 +3592,14 @@ object PromQL {
       .nextOption().map { g =>
         OpsMetrics(spark).readsFromRollup.add(1)
         val rows = RollupStore.read(spark, g.rollupPath)
-          .filter(col("bucket") >= lo && col("bucket") < end &&
+          .filter(Param.atLeast(spark, col("bucket"), lo, RollupStore.BoundGrainSec) &&
+            Param.below(spark, col("bucket"), end, RollupStore.BoundGrainSec) &&
             col("date") >= lo / 86400 * 86400 && col("date") <= end)
           .filter(Matchers.compilePromQL(matchers, ignoreLabel))
           // the unique tiling window [t-d, t) containing bucket b
-          .withColumn("t", expr(s"(bucket - $lo) DIV $d * $d + $start"))
-          .filter(col("t") <= end)
+          .withColumn("t", expr(s"(bucket - ${Param.sql(spark, lo)}) DIV $d * $d + " +
+            Param.sql(spark, start)))
+          .filter(col("t") <= Param.column(spark, end))
         if (fn == "irate" || fn == "idelta") pairFromRollup(rows, fn)
         else {
           val stats = rows

@@ -164,6 +164,11 @@ object RemoteWrite {
     },
     new java.util.concurrent.ThreadPoolExecutor.DiscardPolicy)
 
+  /** The Spark job tag every job of a background maintenance pass
+    * carries (job tags ride the submitting thread), so a listener or
+    * `cancelJobsWithTag` can tell maintenance from request work. */
+  val MaintenanceJobTag = "graft-maintenance"
+
   /** Test seam: no background maintenance pass runs or waits — lets
     * specs count store work without a straggling pass in the window. */
   private[graft] def maintenanceIdle: Boolean =
@@ -171,13 +176,15 @@ object RemoteWrite {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private def maybeCompactRateLimited(spark: SparkSession, storePath: String): Unit = {
+  private[graft] def maybeCompactRateLimited(spark: SparkSession, storePath: String): Unit = {
     val now = System.currentTimeMillis()
     val last = lastCompactCheck.getOrElse(storePath, 0L)
     if (now - last >= compactCheckIntervalMs &&
         lastCompactCheck.replace(storePath, last, now) ||
         lastCompactCheck.putIfAbsent(storePath, now).isEmpty)
       compactPool.execute { () =>
+        val sc = spark.sparkContext
+        sc.addJobTag(MaintenanceJobTag)
         try {
           SamplesStore.compactFragmentedDays(spark, storePath, autoCompactFilesPerDay,
             gcGraceMs = gcGraceMs)
@@ -206,7 +213,7 @@ object RemoteWrite {
           // also never take the serving loop down; the next probe retries
           case scala.util.control.NonFatal(e) =>
             log.warn(s"background store maintenance of $storePath failed: ${e.getMessage}")
-        }
+        } finally sc.removeJobTag(MaintenanceJobTag)
       }
   }
 

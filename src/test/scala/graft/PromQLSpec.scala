@@ -181,6 +181,25 @@ class PromQLSpec extends SparkSpecBase {
     ).foreach { q => assert(PromQL.parse(q).isLeft, s"should reject: $q") }
   }
 
+  test("every scalar-scalar comparison needs bool; the bool form answers 1/0") {
+    Seq("time() > 5", "5 < time()", "scalar(a) > time()", "time() == scalar(a)",
+      "scalar(a) != 1", "time() * 2 >= 3", "(time()) <= scalar(b)",
+      "(time() > bool 5) == 1")
+      .foreach { q =>
+        assert(PromQL.parse(q) === Left("comparisons between scalars must use the bool modifier"),
+          s"should reject: $q")
+      }
+    // a vector side keeps the filter form
+    assert(PromQL.parse("vector(1) > time()").isRight)
+    assert(PromQL.parse("a > scalar(b)").isRight)
+    assert(PromQL.parse("time() > bool 5") ===
+      Right(Cmp(">", true, TimeFn, ScalarLit(5.0), None)))
+    val t = 1704412800L
+    val out = PromQL.eval(spark.emptyDataFrame, PromQL.parse(s"time() > bool ${t + 30}").toOption.get,
+      t, t + 60, 30L).select("t", "v_e6").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(out === Set((t, 0L), (t + 30, 0L), (t + 60, 1000000L)))
+  }
+
   test("formatE6 prints exact micro-unit decimals") {
     assert(PromQL.formatE6(1500000L) === "1.5")
     assert(PromQL.formatE6(1000000L) === "1")

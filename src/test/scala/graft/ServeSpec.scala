@@ -40,6 +40,15 @@ class ServeSpec extends SparkSpecBase {
     p
   }
 
+  /** Wait (up to a minute) until no background maintenance pass runs
+    * or waits, so a count taken next sees no straggler. */
+  private def awaitMaintenanceIdle(): Unit = {
+    val deadline = System.currentTimeMillis() + 60000L
+    while (!RemoteWrite.maintenanceIdle && System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
+    assert(RemoteWrite.maintenanceIdle, "a maintenance pass outlived a minute")
+  }
+
   private def writeBlob(metric: String, n: Int): Array[Byte] = {
     val series = (0 until n).map { i =>
       PromTimeSeries(
@@ -99,9 +108,7 @@ class ServeSpec extends SparkSpecBase {
     // the /metrics body's counters, less the store_* ones: one append
     // per store is the point of the batched form
     def counters(): Map[String, Long] = {
-      val deadline = System.currentTimeMillis() + 60000L
-      while (!RemoteWrite.maintenanceIdle && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
+      awaitMaintenanceIdle()
       graft.OpsMetrics(spark).render.linesIterator.map(_.split(' ')).collect {
         case Array(n, v) if n.endsWith("_total") && !n.startsWith("store_") => n -> v.toLong
       }.toMap
@@ -1110,6 +1117,64 @@ class ServeSpec extends SparkSpecBase {
     }
   }
 
+  /** The job tags of every Spark job that starts, on any thread,
+    * while `f` runs — drained by a marker job. */
+  private def jobTagsDuring(f: => Unit): Seq[Set[String]] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = s"spec-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("graft.spec.marker") == marker)) drained.countDown()
+        else seen.add(props.flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(',').toSet))
+        ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setLocalProperty("graft.spec.marker", marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.spec.marker", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus drained")
+    } finally sc.removeSparkListener(listener)
+    seen.toArray(Array.empty[Set[String]]).toSeq
+  }
+
+  test("every job of a maintenance pass carries the maintenance job tag; a /write's none") {
+    val store = tmpStore("jobtags")
+    val saved = (RemoteWrite.compactCheckIntervalMs, RemoteWrite.autoCompactFilesPerDay)
+    try {
+      // a store's first write always probes; later ones wait out the
+      // (here: unreachable) check interval
+      RemoteWrite.compactCheckIntervalMs = Long.MaxValue / 4
+      RemoteWrite.autoCompactFilesPerDay = 2
+      RemoteWrite.serve(spark, store, writeBlob("tag_0", 5))
+      awaitMaintenanceIdle()
+      val writeJobs = jobTagsDuring(RemoteWrite.serve(spark, store, writeBlob("tag_1", 5)))
+      assert(writeJobs.nonEmpty && writeJobs.forall(!_.contains(RemoteWrite.MaintenanceJobTag)),
+        s"a /write ran maintenance-tagged jobs: $writeJobs")
+      RemoteWrite.serve(spark, store, writeBlob("tag_2", 5))
+      // three files in the day, past the threshold: a forced pass folds
+      RemoteWrite.compactCheckIntervalMs = 0L
+      val folds = OpsMetrics(spark).compactions.value
+      val passJobs = jobTagsDuring {
+        RemoteWrite.maybeCompactRateLimited(spark, store)
+        awaitMaintenanceIdle()
+      }
+      assert(OpsMetrics(spark).compactions.value > folds, "the forced pass did not fold")
+      assert(passJobs.nonEmpty && passJobs.forall(_.contains(RemoteWrite.MaintenanceJobTag)),
+        s"a maintenance job ran untagged: $passJobs")
+    } finally {
+      RemoteWrite.compactCheckIntervalMs = saved._1
+      RemoteWrite.autoCompactFilesPerDay = saved._2
+    }
+  }
+
   test("sibling exemplar/metadata stores fold and age with the maintenance pass") {
     val store = tmpStore("sibmaint")
     val saved = (RemoteWrite.autoCompactFilesPerDay, RemoteWrite.gcGraceMs,
@@ -1367,6 +1432,44 @@ class ServeSpec extends SparkSpecBase {
       assert(mc === 200)
       assert(mbody.contains("samples_written_total"))
       assert(mbody.contains("write_errors_total"))
+    } finally srv.stop()
+  }
+
+  test("/metrics counts codegen compilations; a refreshed panel adds none") {
+    val store = tmpStore("codegen")
+    val srv = HttpServe.start(spark, store)
+    try {
+      val base = s"http://localhost:${srv.port}"
+      val t0 = 1704412800L
+      val counter = PromTimeSeries(
+        Seq(PromLabel("__name__", "cg_total"), PromLabel("k", "x")),
+        (0 until 240).map(i => PromSample(i * 2.0, (t0 + i * 15L) * 1000L)))
+      assert(post(s"$base/write",
+        PromRemoteCodec.encodeWriteRequest(PromWriteRequest(Seq(counter))))._1 === 200)
+      def compilations(): Long = {
+        awaitMaintenanceIdle()
+        val (code, body) = get(s"$base/metrics")
+        assert(code === 200)
+        val lines = body.linesIterator.toSeq
+        assert(lines.contains("# TYPE codegen_compilations_total counter"))
+        val n = lines.collect { case l if l.startsWith("codegen_compilations_total ") =>
+          l.stripPrefix("codegen_compilations_total ") }
+        assert(n.size === 1 && n.head.matches("[0-9]+"), s"malformed line: $n")
+        n.head.toLong
+      }
+      // one 20-minute panel, refreshed five times, one step later each
+      // time (all inside one hour, so the pushdown literals agree)
+      def panel(k: Int): Unit = {
+        val start = t0 + 1200L + k * 60L
+        val (code, body) = get(s"$base/api/v1/query_range?query=" +
+          java.net.URLEncoder.encode("sum(rate(cg_total[5m]))", "UTF-8") +
+          s"&start=$start&end=${start + 1200L}&step=60")
+        assert(code === 200 && body.contains("\"values\""), body)
+      }
+      panel(0)
+      val before = compilations()
+      (1 to 5).foreach(panel)
+      assert(compilations() - before === 0L, "a shifted window compiled new classes")
     } finally srv.stop()
   }
 
@@ -1678,6 +1781,8 @@ class ServeSpec extends SparkSpecBase {
         "/api/v1/query?query=err_m&time=yesterday" -> bad("time parameter malformed"),
         "/api/v1/query_range?start=0&end=60&step=15" -> bad("missing query parameter"),
         s"/api/v1/query_range?query=$badQ&start=0&end=60&step=15" -> parseErr("sum(rate("),
+        s"/api/v1/query_range?query=${enc("time() > 5")}&start=0&end=60&step=15" ->
+          bad("comparisons between scalars must use the bool modifier"),
         "/api/v1/labels?limit=x" -> bad("limit must be a non-negative integer: x"),
         "/api/v1/labels?limit=-1" -> bad("limit must be a non-negative integer: -1"),
         "/api/v1/metadata?limit=x" -> bad("limit must be a non-negative integer: x"),
@@ -1880,9 +1985,7 @@ class ServeSpec extends SparkSpecBase {
       // the store probe opens no snapshot: a request opens only what
       // the rule evaluation reads (the store, once for the data edge
       // and once for the rule; no stale sibling here)
-      val deadline = System.currentTimeMillis() + 60000L
-      while (!RemoteWrite.maintenanceIdle && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
+      awaitMaintenanceIdle()
       val opens0 = OpsMetrics(spark).storeOpens.value
       assert(get(s"$base/api/v1/alerts") === ((c, b)))
       assert(OpsMetrics(spark).storeOpens.value - opens0 === 2L)
@@ -2896,9 +2999,7 @@ class ServeSpec extends SparkSpecBase {
         assert(c === 200 && b.contains(s""""values":[[${t0 + 60},"0.05"]]"""), b)
       }
       // no straggling background pass of an earlier test in the window
-      val deadline = System.currentTimeMillis() + 60000L
-      while (!RemoteWrite.maintenanceIdle && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
+      awaitMaintenanceIdle()
       val (o0, i0) = counters()
       (1 to 3).foreach(_ => query())
       val (o1, i1) = counters()
